@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.pipeline.{AnnIndex, TxTable}
@@ -32,13 +31,8 @@ object AnnSoak {
     // postings commit dies in spill at 32 partitions on this box
     // (SPILL_OUT_OF_MEMORY, 64g heap); 128 quarters the task state
     val parts = sys.env.getOrElse("SPARK_GRAFT_SOAK_PARTS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master("local[32]")
+    val spark = GraftSession.builder(32)
       .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

@@ -1,18 +1,62 @@
 package graft
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.spark.sql.SparkSession
+import scala.jdk.CollectionConverters._
 object Bench {
+  private val mapper = new ObjectMapper()
+
+  /** The parsed JSON of `path`, None when the file is absent. A present
+    * file that does not parse fails the run, naming the path: a gate
+    * file silently read as empty would disarm its gate. */
+  private def readJson(path: String): Option[JsonNode] = {
+    val f = new java.io.File(path)
+    if (!f.canRead) None
+    else {
+      val node =
+        try mapper.readTree(f)
+        catch { case e: java.io.IOException =>
+          throw new IllegalArgumentException(s"$path is not valid JSON: ${e.getMessage}", e) }
+      if (node == null || node.isMissingNode)
+        throw new IllegalArgumentException(s"$path is not valid JSON: empty file")
+      Some(node)
+    }
+  }
+
+  /** The numeric members of a JSON object (empty for anything else). */
+  private def numbers(node: JsonNode): Map[String, Double] =
+    node.properties().asScala.iterator
+      .filter(_.getValue.isNumber)
+      .map(e => e.getKey -> e.getValue.asDouble).toMap
+
+  /** A floor file's per-query floors (its `queries` object) and its
+    * `calibration_sec`; None when the file is absent. A file without a
+    * `queries` object yields no floors, which the verdict reports as
+    * floor_parse_error. */
+  private[graft] def readFloor(path: String): Option[(Map[String, Double], Option[Double])] =
+    readJson(path).map { j =>
+      (numbers(j.path("queries")),
+        Some(j.path("calibration_sec")).filter(_.isNumber).map(_.asDouble))
+    }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // Per-query clean-run references (flat {"name": sec} JSON, committed
+    // as bench_reference.json and refreshed from each round's clean
+    // run). A query far above its reference is only CONTENTION if the
+    // host is provably busy at that moment — which the trigger probe
+    // below tests directly — so the references gate when the probe even
+    // fires, keeping a genuinely-regressed query from hiding behind a
+    // retry: on a quiet host the trigger probe reads fast and the slow
+    // first measurement STANDS.
+    val reference: Map[String, Double] =
+      readJson(sys.env.getOrElse("SPARK_GRAFT_BENCH_REF", "bench_reference.json"))
+        .fold(Map.empty[String, Double])(numbers)
+    // the floor file (gate described at its use below); both files are
+    // read before the session starts, so a broken one fails fast
+    val floorPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_FLOOR", "bench_floor_r16.json")
+    val floorFile = readFloor(floorPath)
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // JVM/codegen/file-index warm-up outside the timed region, so the
     // first query doesn't carry ~3s of session start-up in its number
@@ -63,23 +107,6 @@ object Bench {
     // attributable probe-by-probe.
     val midProbes = scala.collection.mutable.ArrayBuffer.empty[Double]
     var sinceProbe = 0
-    // Per-query clean-run references (flat {"name": sec} JSON, committed
-    // as bench_reference.json and refreshed from each round's clean
-    // run). A query far above its reference is only CONTENTION if the
-    // host is provably busy at that moment — which the trigger probe
-    // below tests directly — so the references gate when the probe even
-    // fires, keeping a genuinely-regressed query from hiding behind a
-    // retry: on a quiet host the trigger probe reads fast and the slow
-    // first measurement STANDS.
-    val reference: Map[String, Double] = {
-      val p = java.nio.file.Paths.get(
-        sys.env.getOrElse("SPARK_GRAFT_BENCH_REF", "bench_reference.json"))
-      if (java.nio.file.Files.isReadable(p)) {
-        val s = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-        "\"([^\"]+)\"\\s*:\\s*([0-9.eE+-]+)".r.findAllMatchIn(s)
-          .map(m => m.group(1) -> m.group(2).toDouble).toMap
-      } else Map.empty
-    }
     def runOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()
       // noop sink, NOT count(): count() lets Catalyst prune every
@@ -176,18 +203,8 @@ object Bench {
     //      The clamp keeps a genuinely slow host from legitimizing a
     //      real >3.2× regression; the plan gate + per-round quiet A/B
     //      remain the precision instruments.
-    val floorPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_FLOOR", "bench_floor_r16.json")
-    val floorReadable = java.nio.file.Files.isReadable(java.nio.file.Paths.get(floorPath))
-    val (floor: Map[String, Double], floorCal: Option[Double]) =
-      if (floorReadable) {
-        val s = new String(
-          java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(floorPath)), "UTF-8")
-        val m = "\"queries\"\\s*:\\s*\\{([^}]*)\\}".r.findFirstMatchIn(s).map(_.group(1)).getOrElse("")
-        ("\"([^\"]+)\"\\s*:\\s*([0-9.eE+-]+)".r.findAllMatchIn(m)
-          .map(mm => mm.group(1) -> mm.group(2).toDouble).toMap,
-          "\"calibration_sec\"\\s*:\\s*([0-9.eE+-]+)".r.findFirstMatchIn(s)
-            .map(_.group(1).toDouble))
-      } else (Map.empty[String, Double], None)
+    val floorReadable = floorFile.isDefined
+    val (floor, floorCal) = floorFile.getOrElse((Map.empty[String, Double], None))
     // WARM probes only (r15 measurement fix): the FIRST calibration is
     // JIT-cold and measures the JVM, not the host — it reads 1.5–2.0 s
     // on provably quiet hosts (every committed run's before_sec vs its

@@ -53,12 +53,8 @@ object ChaosIngestChild {
     */
   def main(args: Array[String]): Unit = {
     val Array(srcDir, corpusRoot, indexRoot, ckpt, markerDir) = args
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master("local[4]")
+    val spark = GraftSession.builder(4)
       .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     run(spark, srcDir, corpusRoot, indexRoot, ckpt, Some(markerDir))

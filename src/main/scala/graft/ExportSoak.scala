@@ -60,14 +60,9 @@ object ExportSoak {
     val nBatches = if (args.length > 1) args(1).toInt else 10
     val parts = sys.env.getOrElse("SPARK_GRAFT_SOAK_PARTS", "32")
     val offheap = sys.env.get("SPARK_GRAFT_SOAK_OFFHEAP")
-    val b = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master("local[32]")
+    val b = GraftSession.builder(32)
       .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
       .config("spark.cleaner.periodicGC.interval", "60s")
-      .config("spark.ui.enabled", "false")
     val spark = offheap.fold(b) { sz =>
       b.config("spark.memory.offHeap.enabled", "true")
         .config("spark.memory.offHeap.size", sz)

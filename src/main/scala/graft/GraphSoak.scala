@@ -66,12 +66,8 @@ object GraphSoak {
     // box (e.g. SPARK_DRIVER_MEM=80g + offheap 32g on 128 GiB)
     val parts = sys.env.getOrElse("SPARK_GRAFT_SOAK_PARTS", "32")
     val offheap = sys.env.get("SPARK_GRAFT_SOAK_OFFHEAP") // e.g. "32g"
-    val b = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master("local[32]")
+    val b = GraftSession.builder(32)
       .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
       // long iterative loops dereference a round's shuffle files
       // immediately but the ContextCleaner only reclaims them after a
       // driver GC — at 400M edges the default 30min periodicGC let ~10
@@ -79,7 +75,6 @@ object GraphSoak {
       // space (measured: ENOSPC mid-PPR). One minute keeps steady-state
       // disk at ~2 rounds of live shuffle.
       .config("spark.cleaner.periodicGC.interval", "60s")
-      .config("spark.ui.enabled", "false")
     val spark = offheap.fold(b) { sz =>
       b.config("spark.memory.offHeap.enabled", "true")
         .config("spark.memory.offHeap.size", sz)

@@ -59,14 +59,9 @@ object LearnedOpqSoak {
     val m = sys.env.getOrElse("SPARK_GRAFT_ADC_M", (dim / 4).toString).toInt
     val nBatches = sys.env.getOrElse("SPARK_GRAFT_SOAK_SGNS_BATCHES", "2").toInt
     val parts = sys.env.getOrElse("SPARK_GRAFT_SOAK_PARTS", "32")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master("local[32]")
+    val spark = GraftSession.builder(32)
       .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
       .config("spark.cleaner.periodicGC.interval", "60s")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

@@ -132,15 +132,7 @@ object Soak {
   def main(args: Array[String]): Unit = {
     val n = if (args.nonEmpty) args(0).toLong else 50000L
     val nlist = if (args.length > 1) args(1).toInt else 16
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(32).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val meter = new PhaseMeter(spark)
     val root = s"/tmp/graft_soak_$n"

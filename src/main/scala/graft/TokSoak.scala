@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.ops.UnigramLmOps
@@ -37,14 +36,7 @@ object TokSoak {
     val nDocs = if (args.nonEmpty) args(0).toLong else 2000000L
     val wordsPerDoc = if (args.length > 1) args(1).toInt else 50
     val rankCap = if (args.length > 2) args(2).toLong else 200000L
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(32).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     def t[T](name: String)(body: => T): T = {

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare — and (r12
@@ -42,24 +41,7 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // r16 fingerprint hardening: explain truncates FileScan metadata
-      // (DataFilters/PushedFilters) at spark.sql.maxMetadataStringLength
-      // (default 100) BEFORE canonicalPlan strips exprIds, so a global
-      // exprId-counter drift that changes id DIGIT COUNTS moves the
-      // truncation point and flips fingerprints of UNTOUCHED queries
-      // (observed r16: 4 false CHANGED rows whose diffs were only the
-      // "..." cut position). Untruncated metadata makes the fingerprint
-      // a pure function of the canonicalized plan again.
-      .config("spark.sql.maxMetadataStringLength", "10000")
+    val builder = GraftSession.builder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     // extra conf overrides (k=v;k2=v2) — exists so the plan gate can be
     // DEMONSTRATED to fire (e.g. flip the broadcast threshold locally
     // and watch fingerprints change); never set by the driver

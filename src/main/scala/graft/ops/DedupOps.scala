@@ -408,20 +408,7 @@ object DedupOps {
     // private conf, nothing to restore. Plans cross sessions zero-copy
     // through a uniquely-named global temp view; the checkpointed
     // result is re-bound to the caller's session the same way.
-    val loopSession = spark.newSession()
-    // newSession() inherits SparkContext confs but NOT runtime session
-    // confs the caller set via spark.conf.set (ANSI mode, timezone, …).
-    // Today's loop body is conf-insensitive (xxhash64, bit_xor, long
-    // joins), but copy the caller's runtime confs anyway so a future
-    // edit to the loop can never silently run under different SQL
-    // semantics than the caller's session. Static/immutable entries in
-    // getAll throw on set — skip them (they are context-level and thus
-    // already shared).
-    spark.conf.getAll.foreach { case (k, v) =>
-      try loopSession.conf.set(k, v)
-      catch { case scala.util.control.NonFatal(_) => () }
-    }
-    loopSession.conf.set("spark.sql.shuffle.partitions", loopParts.toString)
+    //
     // With partitions already sized to the data, AQE's per-exchange
     // materialize-and-replan is pure scheduling overhead on the ~6
     // tiny sequential exchanges each round chains — turn it off for
@@ -429,7 +416,7 @@ object DedupOps {
     // sizing is exactly what the formula above provides; skew in a
     // star graph is absorbed map-side by the partial min aggregation,
     // so AQE's skew-join rescue has nothing to do here either.)
-    loopSession.conf.set("spark.sql.adaptive.enabled", "false")
+    //
     // Whole-stage codegen gated on the SAME size evidence as loopParts
     // (the GraphOps.rankLoop finding, SCALE.md §12): every star round
     // is a distinct plan (fresh exprIds), so codegen compiles unique
@@ -438,8 +425,10 @@ object DedupOps {
     // the threshold the rounds do real per-row work and codegen pays
     // for itself, so it stays ON — at 100 TB edge volumes this branch
     // never triggers.
-    if (eSig._1 < 250000L)
-      loopSession.conf.set("spark.sql.codegen.wholeStage", "false")
+    val loopSession = graft.GraftSession.derived(spark,
+      Map("spark.sql.shuffle.partitions" -> loopParts.toString,
+        "spark.sql.adaptive.enabled" -> "false") ++
+        (if (eSig._1 < 250000L) Map("spark.sql.codegen.wholeStage" -> "false") else Map.empty))
     val tag = java.util.UUID.randomUUID().toString.replace("-", "")
     val (inView, outView) = (s"graft_cc_in_$tag", s"graft_cc_out_$tag")
     val out =

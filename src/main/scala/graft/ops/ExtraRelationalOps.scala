@@ -277,7 +277,7 @@ object ExtraRelationalOps {
       // range exchange + sort. Ordering the 5 raw columns and
       // projecting after is row-identical — (l_orderkey, l_linenumber)
       // is lineitem's unique composite key, so the total order can't
-      // differ — and measured 2.0-2.2 s → 0.7-0.8 s warm (ProfileMath,
+      // differ — and measured 2.0-2.2 s → 0.7-0.8 s warm (r16 A/B,
       // interleaved reps). Catalyst does not reorder Project/Sort on
       // its own, so the query states the cheap order explicitly.
       Tables.lineitem(s, d).select(

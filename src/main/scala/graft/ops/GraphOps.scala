@@ -93,30 +93,6 @@ object GraphOps {
     * views.
     */
   private[ops] val loopCodegenMinRows = 4000000L
-  /** `statePerPartRows` > 0 lifts the session-partition cap when the
-    * loop's PER-TASK aggregation state is pair-shaped rather than
-    * node-shaped (LPA's (src,lbl) vote counting — §12j attribution):
-    * partitions are then sized so each task's agg map holds at most
-    * that many rows, even if that means MORE partitions than the
-    * session default. Sum-shaped loops keep the cap: their state
-    * collapses to node cardinality map-side and extra partitions are
-    * pure scheduling overhead. */
-  /** Loop-session cache (r15): the rank family resolves to the SAME
-    * effective config (loopParts, codegen gate) for a given graph
-    * size, and a Verify/Bench process runs pagerank + hits + ppr +
-    * lpa back-to-back — one clone per distinct config amortizes the
-    * per-query SessionState build (analyzer/optimizer/planner rule
-    * stacks, conf copy) across the family. Keyed by the PARENT
-    * session too: a cloned conf snapshot must never leak across
-    * parents (tests spin up differently-configured sessions). Safe
-    * because every loop communicates through global temp views (shared
-    * across sessions by construction) and sets nothing session-local
-    * beyond the keyed confs. Callers must not mutate the returned
-    * session's conf. */
-  private val loopSessionCache = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, Long, Boolean),
-    org.apache.spark.sql.SparkSession]()
-
   /** The loop's shuffle-partition count for a working set of
     * `workingRows` — scale-adaptive (guide §2.2): ~250k rows per
     * partition, floored at 1, capped at the session default unless
@@ -134,34 +110,30 @@ object GraphOps {
     math.max(1L, math.min(cap, workingRows / 250000L))
   }
 
+  /** The loop-session clone: AQE off, shuffle partitions from
+    * [[loopPartsFor]], codegen gated at [[loopCodegenMinRows]].
+    * The rank family resolves to the same settings for a given graph
+    * size, so a Verify/Bench process running pagerank + hits + ppr +
+    * lpa back-to-back reuses one cached clone ([[graft.GraftSession.derived]]).
+    *
+    * `statePerPartRows` > 0 lifts the session-partition cap when the
+    * loop's PER-TASK aggregation state is pair-shaped rather than
+    * node-shaped (LPA's (src,lbl) vote counting — §12j attribution):
+    * partitions are then sized so each task's agg map holds at most
+    * that many rows, even if that means MORE partitions than the
+    * session default. Sum-shaped loops keep the cap: their state
+    * collapses to node cardinality map-side and extra partitions are
+    * pure scheduling overhead. */
   private[ops] def loopSession(
       spark: org.apache.spark.sql.SparkSession, workingRows: Long,
       statePerPartRows: Long = 0L) = {
     val loopParts = loopPartsFor(spark, workingRows, statePerPartRows)
     val codegenOff = workingRows < loopCodegenMinRows
-    loopSessionCache.computeIfAbsent((spark, loopParts, codegenOff), { key =>
-      val loop = spark.newSession()
-      spark.conf.getAll.foreach { case (k, v) =>
-        try loop.conf.set(k, v)
-        catch { case scala.util.control.NonFatal(_) => () }
-      }
-      loop.conf.set("spark.sql.shuffle.partitions", loopParts.toString)
-      loop.conf.set("spark.sql.adaptive.enabled", "false")
-      if (codegenOff) loop.conf.set("spark.sql.codegen.wholeStage", "false")
-      loop
-    })
+    graft.GraftSession.derived(spark,
+      Map("spark.sql.shuffle.partitions" -> loopParts.toString,
+        "spark.sql.adaptive.enabled" -> "false") ++
+        (if (codegenOff) Map("spark.sql.codegen.wholeStage" -> "false") else Map.empty))
   }
-
-  /** A/B knobs for the r15 small-graph loop-shape experiment — flipped
-    * ONLY by ProfileRank (interleaved within one JVM so ambient host
-    * drift cancels); production code never touches them. Defaults are
-    * the shipped configuration. */
-  private[ops] var rankLoopCoalesceE = true
-  private[ops] var rankLoopMergeMassJoin = true
-  /** r16 hits-loop experiment knob (ProfileHits): small-path half-round
-    * joins as in-job merge joins over dual-pinned edges instead of
-    * per-round broadcast builds. */
-  private[ops] var hitsMergeRounds = true
 
   private def rankLoop(
       e0: DataFrame, base0: DataFrame,
@@ -193,7 +165,7 @@ object GraphOps {
       // partition count (32 locally); the per-round e-pass then
       // schedules a full task wave per round for a few MB of cached
       // blocks — at 10 rounds that task-count overhead is most of the
-      // loop's job wall (ProfileRank r15: ~30 jobs of 0.13–0.3 s,
+      // loop's job wall (measured r15: ~30 jobs of 0.13–0.3 s,
       // jobWall ≈ wall). Coalesce the cached blocks to the loop's own
       // scale-adaptive geometry (narrow dependency — no shuffle, no
       // re-materialization; floor 4 keeps a compute wave for the
@@ -203,7 +175,7 @@ object GraphOps {
       val eParts = math.max(4L, loopPartsFor(spark, nEdges)).toInt
       val e = {
         val t = loop.table(s"global_temp.$ev")
-        if (small && rankLoopCoalesceE) t.coalesce(eParts) else t
+        if (small) t.coalesce(eParts) else t
       }
       val base = loop.table(s"global_temp.$bv")
       var ranks = base.withColumn("pr", init)
@@ -218,14 +190,11 @@ object GraphOps {
         // mass ⋈ base stays a SHUFFLE join on both paths (r15): on the
         // small path both sides are node-cardinality frames, and a
         // broadcast here costs a separate broadcast-build JOB per
-        // round — the second of two, ProfileRank measured the pair at
+        // round — the second of two, an r15 A/B measured the pair at
         // ~2/3 of the query's job wall — where the merge join is two
         // tiny in-job exchanges. The hint pins the strategy against
         // auto-broadcast so the loop's job count is deterministic.
-        val massJ =
-          if (!small) mass
-          else if (rankLoopMergeMassJoin) mass.hint("merge")
-          else broadcast(mass)
+        val massJ = if (small) mass.hint("merge") else mass
         val next = base
           .join(massJ, col("node") === col("dst"))
           .withColumn("pr", update)
@@ -680,18 +649,11 @@ object GraphOps {
       // twin already absorbs (the summation order was never pinned —
       // DuckDB sums in its own order). Big path unchanged: the 1B-node
       // shape keeps the hub-pinned shuffle joins and eager cuts.
-      val mergeRounds = small && hitsMergeRounds
-      val eH = {
-        val t = loop.table(s"global_temp.$ev")
-        if (mergeRounds) t // hub-partitioned + hub-sorted (the e0 layout)
-        else if (small && rankLoopCoalesceE)
-          t.coalesce(math.max(4L, loopPartsFor(spark, nEdges)).toInt)
-        else t
-      }
+      val eH = loop.table(s"global_temp.$ev") // hub-partitioned + hub-sorted (the e0 layout)
       // the auth-side pin: one extra exchange+sort over the cached
       // blocks, materialized by the loop's first action
       val eA =
-        if (mergeRounds)
+        if (small)
           eH.repartition(col("auth")).sortWithinPartitions("auth").localCheckpoint(false)
         else eH
       // eager per-half-round cuts above the size gate (the rankLoop
@@ -703,13 +665,11 @@ object GraphOps {
       var auth: DataFrame = null
       for (_ <- 1 to iters) {
         val h = hub.select(col("node").as("ht_h"), col("score"))
-        auth = (if (mergeRounds) eH.join(h.hint("merge"), col("hub") === col("ht_h"))
-                else eH.join(if (small) broadcast(h) else h, col("hub") === col("ht_h")))
+        auth = eH.join(if (small) h.hint("merge") else h, col("hub") === col("ht_h"))
           .groupBy(col("auth").as("node")).agg(sum(col("score")).as("score"))
           .localCheckpoint(eager)
         val a = auth.select(col("node").as("ht_a"), col("score"))
-        hub = (if (mergeRounds) eA.join(a.hint("merge"), col("auth") === col("ht_a"))
-               else eA.join(if (small) broadcast(a) else a, col("auth") === col("ht_a")))
+        hub = eA.join(if (small) a.hint("merge") else a, col("auth") === col("ht_a"))
           .groupBy(col("hub").as("node")).agg(sum(col("score")).as("score"))
           .localCheckpoint(eager)
       }
@@ -1032,7 +992,7 @@ object GraphOps {
     // broadcast hop join never reads the lost hash-partitioning. The
     // big-frontier co-partitioned path keeps the src-partitioned pin.
     val adj =
-      if (small && rankLoopCoalesceE)
+      if (small)
         adj0.coalesce(math.max(4L, loopPartsFor(edges.sparkSession, nAdj)).toInt)
       else adj0
     var frontier = seeds.select(col("node").as("seed"), col("node"))
@@ -1136,7 +1096,7 @@ object GraphOps {
     // the candidate fan-out and the prev-mark join both re-pass the
     // pinned adjacency every hop
     val adj =
-      if (small && rankLoopCoalesceE)
+      if (small)
         adj0.coalesce(math.max(4L, loopPartsFor(edges.sparkSession, nAdj)).toInt)
       else adj0
     var frontier = seeds.select(

@@ -375,19 +375,16 @@ object PretrainExportOps {
       // increment-sized batches through 32-way exchanges are pure
       // scheduling overhead — run the pipeline on a low-partition
       // session clone (the GraphOps loop-session discipline; results
-      // are partition-count-independent, blocks shared via the context)
-      val incr = s.newSession()
-      s.conf.getAll.foreach { case (k, v) =>
-        try incr.conf.set(k, v)
-        catch { case scala.util.control.NonFatal(_) => () }
-      }
-      incr.conf.set("spark.sql.shuffle.partitions", "8")
-      // the GraphOps loop-session gates, same rationale: ~45 small
-      // jobs per run, each paying whole-stage codegen compile and AQE
-      // re-planning that tiny frames never amortize. At production
-      // increment sizes run the pipeline on the plain session instead.
-      incr.conf.set("spark.sql.codegen.wholeStage", "false")
-      incr.conf.set("spark.sql.adaptive.enabled", "false")
+      // are partition-count-independent, blocks shared via the context).
+      // Codegen and AQE off are the GraphOps loop-session gates, same
+      // rationale: ~45 small jobs per run, each paying whole-stage
+      // codegen compile and AQE re-planning that tiny frames never
+      // amortize. At production increment sizes run the pipeline on
+      // the plain session instead.
+      val incr = graft.GraftSession.derived(s, Map(
+        "spark.sql.shuffle.partitions" -> "8",
+        "spark.sql.codegen.wholeStage" -> "false",
+        "spark.sql.adaptive.enabled" -> "false"))
       val docs = Tables.documents(incr, d)
       // a fresh export per run (deterministic root, rebuilt in place):
       // the query IS the pipeline's lifecycle, so stale state from a

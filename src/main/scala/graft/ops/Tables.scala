@@ -93,7 +93,7 @@ object Tables {
     * every scan is one task and a query's heavy per-row first-stage
     * compute (shingling, minhash, tokenizer rendering, rolling hashes)
     * runs single-threaded regardless of cluster width — measured ~2×
-    * on the heavy renderers at sf0.1 (ProfileSpread, interleaved A/B).
+    * on the heavy renderers at sf0.1 (r16, interleaved A/B).
     * When the frame's physical layout has fewer partitions than the
     * session's effective width, hash-repartition on `key`
     * (deterministic assignment; the shuffled bytes are the raw rows,

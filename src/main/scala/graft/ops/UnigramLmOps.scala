@@ -130,13 +130,6 @@ object UnigramLmOps {
     top.union(chars).groupBy("piece").agg(max(col("weight")).as("weight"))
   }
 
-  /** A/B knob for the r16 train-shape experiment (the ProfileRank
-    * convention): flipped ONLY by [[graft.ops.ProfileUnigram]], which
-    * interleaves variants within one JVM so ambient host drift cancels;
-    * production code never touches it. Default is the shipped
-    * configuration (fused one-job EM + loop-session re-homing). */
-  private[ops] var trainLoopShape = true
-
   /** One hard-EM iteration: Viterbi-segment every distinct word under
     * the current model, count pieces weighted by word frequency
     * (distributed partial-agg groupBy), renormalize driver-side over
@@ -150,7 +143,7 @@ object UnigramLmOps {
     * TWO jobs over a persisted intermediate (a reduce for the LL, a
     * groupBy+collect for the counts) plus the cache round-trip; per-job
     * driver latency — not compute — dominates the vocabulary-sized
-    * train (ProfileIncr r15: 25 jobs, wall ≈ 2× jobWall). Here each
+    * train (measured r15: 25 jobs, wall ≈ 2× jobWall). Here each
     * partition Viterbi-segments its words once, pre-combines piece
     * counts in a local map, sums its LL locally, and emits the count
     * rows plus ONE ("", 0, partitionLl) sentinel — "" can never be a
@@ -163,11 +156,6 @@ object UnigramLmOps {
     * trajectory tolerance (never bit-stable, header note).
     */
   private def emStep(
-      wf: DataFrame, model: UnigramModel, maxLen: Int): (UnigramModel, Double) =
-    if (trainLoopShape) emStepFused(wf, model, maxLen)
-    else emStepTwoJob(wf, model, maxLen)
-
-  private def emStepFused(
       wf: DataFrame, model: UnigramModel, maxLen: Int): (UnigramModel, Double) = {
     val spark = wf.sparkSession
     import spark.implicits._
@@ -197,33 +185,9 @@ object UnigramLmOps {
     mStep(model, counts, totalLl)
   }
 
-  /** The pre-r16 two-job shape, kept verbatim for the interleaved A/B
-    * ([[trainLoopShape]] = false). */
-  private def emStepTwoJob(
-      wf: DataFrame, model: UnigramModel, maxLen: Int): (UnigramModel, Double) = {
-    val spark = wf.sparkSession
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(model.logp)
-    val segged = wf.as[(String, Long)].mapPartitions { it =>
-      val lp = bc.value
-      it.map { case (w, n) =>
-        val segs = viterbi(w, lp, maxLen).getOrElse(
-          throw new IllegalStateException(s"unsegmentable word under char-closed vocab: $w"))
-        val ll = segs.map(lp).sum * n
-        (segs.map(s => (s, n)), ll)
-      }
-    }.persist()
-    val totalLl = segged.map(_._2).reduce(_ + _)
-    val counts = segged.flatMap(_._1).toDF("piece", "n")
-      .groupBy("piece").agg(sum(col("n")).as("c"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    segged.unpersist()
-    mStep(model, counts, totalLl)
-  }
-
-  /** Driver-side M-step shared by both EM shapes: renormalize the kept
-    * vocab (multi-char zero-count pieces drop; single chars are the
-    * coverage floor) with a +1 Laplace floor. */
+  /** Driver-side M-step: renormalize the kept vocab (multi-char
+    * zero-count pieces drop; single chars are the coverage floor) with
+    * a +1 Laplace floor. */
   private def mStep(
       model: UnigramModel, counts: Map[String, Long],
       totalLl: Double): (UnigramModel, Double) = {
@@ -290,7 +254,7 @@ object UnigramLmOps {
     // EM + prune are tens of vocabulary-sized jobs; on the caller's
     // full session geometry each pays a session-width task wave plus
     // fresh per-round codegen and AQE replanning for a few MB
-    // (ProfileIncr r15: the pinned v800 train = 25 jobs, wall ≈ 2×
+    // (measured r15: the pinned v800 train = 25 jobs, wall ≈ 2×
     // jobWall — driver latency, not compute). Re-home the loop onto
     // the scale-adaptive loop-session clone (GraphOps.loopSession: AQE
     // off, shuffle partitions ~rows/250k capped at the session's own,
@@ -304,18 +268,11 @@ object UnigramLmOps {
     // crosses back. The model is a pure function of the corpus
     // multiset either way (counts are exact longs; partition-count
     // invariance is UnigramLmSpec's 1-vs-8 case).
-    val viewTag =
-      if (trainLoopShape)
-        Some("graft_ulm_wf_" + java.util.UUID.randomUUID().toString.replace("-", ""))
-      else None
-    val wf = viewTag match {
-      case Some(tag) =>
-        wf0.createOrReplaceGlobalTempView(tag)
-        GraphOps.loopSession(spark, nWords)
-          .table(s"global_temp.$tag")
-          .coalesce(math.max(4L, GraphOps.loopPartsFor(spark, nWords)).toInt)
-      case None => wf0
-    }
+    val viewTag = "graft_ulm_wf_" + java.util.UUID.randomUUID().toString.replace("-", "")
+    wf0.createOrReplaceGlobalTempView(viewTag)
+    val wf = GraphOps.loopSession(spark, nWords)
+      .table(s"global_temp.$viewTag")
+      .coalesce(math.max(4L, GraphOps.loopPartsFor(spark, nWords)).toInt)
     try {
       var model = resume match {
         case Some(stored) =>
@@ -363,7 +320,7 @@ object UnigramLmOps {
       val (finalModel, _) = emStep(wf, model, maxLen)
       (finalModel, lls.toSeq)
     } finally {
-      viewTag.foreach(t => spark.catalog.dropGlobalTempView(t))
+      spark.catalog.dropGlobalTempView(viewTag)
       wf0.unpersist()
       ()
     }

@@ -190,7 +190,7 @@ object DedupIndex {
     if (ranges.isEmpty) lit(false) else build(ranges)
   }
 
-  /** Probe-session cache: one config clone per parent session, holding
+  /** Probe session: a config clone of the caller's session holding
     * the raised parquet In-pushdown threshold the pruned probe needs
     * (default 10 would collapse a 100-point predicate to a useless
     * [min, max] range at the parquet layer). Session-scoped so the
@@ -200,19 +200,9 @@ object DedupIndex {
     * HadoopFsRelation carries its creating session, so the pushdown
     * translation reads THIS session's conf at every later evaluation,
     * whichever session runs the action). */
-  private val probeSessionCache = new java.util.concurrent.ConcurrentHashMap[
-    SparkSession, SparkSession]()
-
   private def probeSession(spark: SparkSession): SparkSession =
-    probeSessionCache.computeIfAbsent(spark, { parent =>
-      val s = parent.newSession()
-      parent.conf.getAll.foreach { case (k, v) =>
-        try s.conf.set(k, v)
-        catch { case scala.util.control.NonFatal(_) => () }
-      }
-      s.conf.set("spark.sql.parquet.pushdown.inFilterThreshold", (1 << 20).toString)
-      s
-    })
+    graft.GraftSession.derived(spark,
+      Map("spark.sql.parquet.pushdown.inFilterThreshold" -> (1 << 20).toString))
 
   /** The r15 two-phase STATS-PRUNED probe view — the fix for the r14
     * weak mark ("the index SCAN remains O(index) per ingest", the old

@@ -1,6 +1,5 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Micro A/B for the DedupIndex probe regimes (r15): builds a real
@@ -15,14 +14,7 @@ object ProbeAbSoak {
   def main(args: Array[String]): Unit = {
     val nDocs = if (args.nonEmpty) args(0).toLong else 1000000L
     val per = if (args.length > 1) args(1).toLong else 125000L
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.builder(32).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     def tw[T](name: String)(body: => T): T = {
       val t0 = System.nanoTime()

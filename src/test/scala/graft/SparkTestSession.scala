@@ -5,18 +5,10 @@ import org.apache.spark.sql.SparkSession
 /** One shared local session for the whole test run (getOrCreate). */
 object SparkTestSession {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      // the ONE install point for the graft extension (SQL functions +
-      // optimizer rules) — same configuration Verify/Bench run under
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master("local[4]")
+    // the same session recipe Verify/Bench run under
+    val s = GraftSession.builder(4)
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir",
-        graft.TestTmp.dir("graft-warehouse"))
-      .config("spark.ui.enabled", "false")
+      .config("spark.sql.warehouse.dir", graft.TestTmp.dir("graft-warehouse"))
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -612,30 +612,27 @@ class GraphOpsSpec extends AnyFunSuite {
     assert(viaSql === viaLoop)
   }
 
-  test("r15 loop-shape knobs are pure layout: identical rank and walk output under every combination") {
-    // the small-graph edge-pin coalesce and the mass-side merge join
-    // change job structure only; rank values and walk paths must be
-    // BIT-identical across all four knob combinations (the shipped
-    // default is (true, true))
+  test("loop-shape golden output: pagerank, hits and walks pinned bit-for-bit") {
+    // values taken from the shipped loop shapes (coalesced small-graph
+    // edge pin, merge-joined mass and hits rounds); any change to a
+    // loop's layout must leave rank values and walk paths identical
     val edges = sym((1L, 2L), (2L, 3L), (3L, 4L), (4L, 1L), (1L, 3L), (4L, 5L))
     val seeds = Seq(1L, 3L).toDF("node")
-    val (ce0, mm0) = (GraphOps.rankLoopCoalesceE, GraphOps.rankLoopMergeMassJoin)
-    try {
-      val outs = for (ce <- Seq(true, false); mm <- Seq(true, false)) yield {
-        GraphOps.rankLoopCoalesceE = ce
-        GraphOps.rankLoopMergeMassJoin = mm
-        (GraphOps.pagerank(edges).collect().map(r => (r.getLong(0), r.getDouble(1))).sortBy(_._1).toSeq,
-         GraphOps.hits(edges.toDF("hub", "auth")).collect()
-           .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).sorted.toSeq,
-         GraphOps.randomWalksXx(edges, seeds, steps = 3).collect()
-           .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).sorted.toSeq,
-         GraphOps.node2vecWalks(edges, seeds, steps = 3).collect()
-           .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).sorted.toSeq)
-      }
-      outs.tail.foreach(o => assert(o === outs.head))
-    } finally {
-      GraphOps.rankLoopCoalesceE = ce0
-      GraphOps.rankLoopMergeMassJoin = mm0
-    }
+    assert(GraphOps.pagerank(edges).collect().map(r => (r.getLong(0), r.getDouble(1))).sortBy(_._1).toSeq ===
+      Seq((1L, 0.24043049325035665), (2L, 0.16573742081904946), (3L, 0.24043049325035665),
+        (4L, 0.2516061043087632), (5L, 0.10179548837147408)))
+    assert(GraphOps.hits(edges.toDF("hub", "auth")).collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).sorted.toSeq ===
+      Seq(("auth", 1L, 1.256925), ("auth", 2L, 0.953082), ("auth", 3L, 1.256925),
+        ("auth", 4L, 1.112806), ("auth", 5L, 0.420261), ("hub", 1L, 1.258032),
+        ("hub", 2L, 0.951755), ("hub", 3L, 1.258032), ("hub", 4L, 1.110868), ("hub", 5L, 0.421313)))
+    assert(GraphOps.randomWalksXx(edges, seeds, steps = 3).collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).sorted.toSeq ===
+      Seq((1L, 0, 1L), (1L, 1, 3L), (1L, 2, 4L), (1L, 3, 1L),
+        (3L, 0, 3L), (3L, 1, 1L), (3L, 2, 4L), (3L, 3, 1L)))
+    assert(GraphOps.node2vecWalks(edges, seeds, steps = 3).collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).sorted.toSeq ===
+      Seq((1L, 0, 1L), (1L, 1, 4L), (1L, 2, 5L), (1L, 3, 4L),
+        (3L, 0, 3L), (3L, 1, 1L), (3L, 2, 3L), (3L, 3, 4L)))
   }
 }
