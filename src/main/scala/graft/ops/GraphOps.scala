@@ -47,12 +47,11 @@ object GraphOps {
     * Spark estimates from the full lineage, not the ~n rows it has).
     */
   /** Broadcast-vs-shuffle gate for the rank loops' per-round node
-    * frames. Env-overridable for cluster tuning; the default was
-    * re-A/B'd r15 on sf0.1 (broadcast: pagerank/hits/ppr warm
-    * 3.2/4.0/3.3 s; shuffle-join forced via =0: 3.7/5.2/4.1 s) —
-    * broadcast stands, its per-round build jobs are cheaper than two
+    * frames. Re-A/B'd r15 on sf0.1 (broadcast: pagerank/hits/ppr warm
+    * 3.2/4.0/3.3 s; shuffle join forced by a zero gate: 3.7/5.2/4.1 s)
+    * — broadcast stands, its per-round build jobs are cheaper than two
     * extra exchanges per round at every measured size below the gate. */
-  private[graft] val broadcastRanksMaxNodes = sys.env.get("SPARK_GRAFT_RANKS_BCAST_MAX").map(_.toLong).getOrElse(4000000L)
+  private[graft] val broadcastRanksMaxNodes = 4000000L
 
   /** The shared fixed-iteration mass-push loop behind [[pagerank]] and
     * [[personalizedPagerank]]. `base0` carries (node, deg, …constants)
@@ -788,7 +787,6 @@ object GraphOps {
     * boundaries are spec-pinned in GraphOpsSpec.
     */
   def labelPropagation(edges: DataFrame, iters: Int = 5,
-      oneExchange: Boolean = sys.env.get("SPARK_GRAFT_LPA_ONE_EXCHANGE").contains("1"),
       distinctEdges: Boolean = true,
       symmetricEdges: Boolean = false): DataFrame = {
     val spark = edges.sparkSession
@@ -839,21 +837,15 @@ object GraphOps {
         val lb = (if (small) broadcast(labels) else labels)
           .select(col("node").as("lp_n"), col("lbl"))
         val votes = e.join(lb, col("dst") === col("lp_n"))
-        // The vote-mode aggregation, two plan shapes (value-identical —
-        // spec-pinned; integer-only state, so bit-exact):
-        //  - two-phase (default): groupBy(src,lbl) → groupBy(src) lets
-        //    each agg pick its own exchange — TWO exchanges per round,
-        //    and the (src,lbl) partial state is PAIR-cardinality
-        //    (labels start all-distinct, so map-side combine reduces
-        //    nothing early — the HITS comparison's missing 2×: sum
-        //    aggs collapse to NODE-cardinality state immediately).
-        //  - oneExchange: repartition(src) first — hash(src) satisfies
-        //    both groupings (subset rule), so BOTH aggs run
-        //    partition-local complete: one edge-volume exchange per
-        //    round, no partial/final duplication of the pair-state
-        //    hash map. A/B'd at soak scale (SCALE.md §12h).
-        val counted =
-          (if (oneExchange) votes.repartition(col("src")) else votes)
+        // The vote-mode aggregation: groupBy(src,lbl) → groupBy(src)
+        // lets each agg pick its own exchange — TWO exchanges per
+        // round, and the (src,lbl) partial state is PAIR-cardinality
+        // (labels start all-distinct, so map-side combine reduces
+        // nothing early — the HITS comparison's missing 2×: sum aggs
+        // collapse to NODE-cardinality state immediately). A one-
+        // exchange shape (repartition(src) first) measured a wash at
+        // soak scale and was removed (SCALE.md §12j).
+        val counted = votes
           .groupBy(col("src"), col("lbl"))
           .agg(count(lit(1)).as("lp_c"))
           // argmax by (count, then SMALLEST label): max of (c, -lbl)

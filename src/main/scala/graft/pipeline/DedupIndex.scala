@@ -140,12 +140,12 @@ object DedupIndex {
     * (gap interiors a pushed range predicate also admits) is the
     * minimum possible for that range budget. Driver-side, O(n log n).
     *
-    * NOT on the probe's hot path (r15, measured via ProbeAbSoak): a
+    * NOT on the probe's hot path (r15, measured; SCALE.md §17a): a
     * fresh OR-of-ranges Column per ingest recompiles superlinearly in
     * the leaf count (14 s first-eval at 96 leaves, paid per consumer
     * per batch) — the probe pushes an In point set instead, whose
     * InSet form compiles once per JVM. Kept as the range toolkit for
-    * stable (compile-once) predicates and for the A/B instrument.
+    * stable (compile-once) predicates.
     */
   private[pipeline] def coalesceRanges(
       sortedPoints: Array[Long], maxRanges: Int): Seq[(Long, Long)] = {
@@ -219,7 +219,7 @@ object DedupIndex {
     * unsorted and read in full; they are bounded by the maintenance
     * cadence, never by the corpus.
     *
-    * WHY In-points and not OR-of-ranges (measured, ProbeAbSoak r15):
+    * WHY In-points and not OR-of-ranges (measured r15, SCALE.md §17a):
     * a fresh OR-of-N-ranges Column per ingest is new generated source
     * per batch, and whole-stage compile cost is superlinear in the
     * leaf count — first evaluation measured 0.33 s at 8 leaves, 1.1 s

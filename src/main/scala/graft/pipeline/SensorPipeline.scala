@@ -143,8 +143,7 @@ object Merge {
   }
 
   /** Logical merge: rows of `target` whose key has no update, plus the
-    * deduped updates. Caller writes the result (see [[Incremental]] for the
-    * partition-overwrite variant used at scale).
+    * deduped updates. Caller commits the result through [[TxTable]].
     */
   def merge(target: DataFrame, updates: DataFrame, keys: Seq[String], order: Seq[Column]): DataFrame = {
     val deduped = dedupeLatest(updates, keys, order)
@@ -157,8 +156,8 @@ object Merge {
   * (stg_readings.sql:32-38) and affected-day reselect for Gold
   * (mart_daily_power.sql:36-46). Both are application-level in the
   * reference and stay application-level here; the physical win at scale is
-  * that silver/gold are written partitioned by reading_date, so the
-  * affected-day recompute + dynamic partition overwrite touches only the
+  * that silver/gold are [[TxTable]]s partitioned by reading_date, so the
+  * affected-day recompute reads, and its commit rewrites, only the
   * changed partitions.
   */
 object Incremental {
@@ -196,10 +195,9 @@ object Incremental {
 
   /** The recomputed affected-day Gold rows only — the FULL new content
     * of every day that received new silver since the target's watermark.
-    * This is the partition-granular unit both merge styles consume:
-    * [[goldIncrement]] anti-join-merges it into a flat table, and the
-    * TxTable path publishes it as an atomic partition commit (gold's
-    * unique_key = reading_date IS its partition key).
+    * This is the gold merge: `TxTable.commit(..., "reading_date")`
+    * publishes it as one atomic partition override, which is exactly the
+    * dbt merge on gold's unique_key = reading_date.
     */
   def goldAffectedDays(
       silver: DataFrame,
@@ -215,20 +213,6 @@ object Incremental {
     // reading_date just to drop most of it.
     val affected = silver.join(broadcast(affectedDays), Seq("reading_date"), "left_semi")
     silverToGold(affected, calculatedAt)
-  }
-
-  /** One Gold increment: recompute whole days that received new silver
-    * rows (semi-join reselect, F4/J1) and merge on reading_date.
-    */
-  def goldIncrement(
-      silver: DataFrame,
-      goldTarget: Option[DataFrame],
-      calculatedAt: Column = current_timestamp()): DataFrame = {
-    val fresh = goldAffectedDays(silver, goldTarget, calculatedAt)
-    goldTarget match {
-      case None => fresh
-      case Some(t) => Merge.merge(t, fresh, Seq("reading_date"), Seq(col("calculated_at").desc))
-    }
   }
 }
 

@@ -39,21 +39,26 @@ object Serve {
           else Left("unparseable line") // all-or-nothing, data.py:55-59
       }
 
+  /** The GET /data parameter handling (data.py:92-102), shared by
+    * [[range]] and [[ServeCache.range]]: both parameters present and
+    * parseable, normalized to the half-open day range [from, toBound)
+    * ([[LineParser.normalizeRange]]). */
+  private[pipeline] def parseRange(
+      fromStr: Option[String],
+      toStr: Option[String]): Either[String, (java.time.LocalDate, java.time.LocalDate)] =
+    (fromStr, toStr) match {
+      case (Some(f), Some(t)) =>
+        LineParser.normalizeRange(f, t).toRight("Invalid date format") // data.py:98-102
+      case _ => Left("Missing required parameters: from, to") // data.py:92-96
+    }
+
   def range(
       silver: DataFrame,
       gold: DataFrame,
       fromStr: Option[String],
       toStr: Option[String]): Either[String, DataFrame] =
-    (fromStr, toStr) match {
-      case (None, _) | (_, None) =>
-        Left("Missing required parameters: from, to") // data.py:92-96
-      case (Some(f), Some(t)) =>
-        LineParser.normalizeRange(f, t) match {
-          case None => Left(s"Invalid date format") // data.py:98-102
-          case Some((fromDay, toBound)) =>
-            Right(
-              SensorPipeline.formatResponse(
-                SensorPipeline.serve(silver, gold, fromDay.toString, toBound.toString)))
-        }
+    parseRange(fromStr, toStr).map { case (fromDay, toBound) =>
+      SensorPipeline.formatResponse(
+        SensorPipeline.serve(silver, gold, fromDay.toString, toBound.toString))
     }
 }

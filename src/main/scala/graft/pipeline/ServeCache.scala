@@ -3,8 +3,6 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.parse.LineParser
-
 /** Driver-side pinned-snapshot serve tier — the sub-10 ms path in
   * front of [[Serve.range]].
   *
@@ -48,10 +46,22 @@ import graft.parse.LineParser
   * refresh, never serves misordered ranges.
   */
 final class ServeCache private (
-    loadSnapshot: () => ServeCache.Snapshot,
-    latestVersions: () => (Long, Long)) {
+    spark: SparkSession, silverRoot: String, goldRoot: String, maxRows: Long) {
 
   import ServeCache._
+
+  private def latestVersions: (Long, Long) =
+    (TxTable.latest(spark, silverRoot)._1, TxTable.latest(spark, goldRoot)._1)
+
+  /** Reads BOTH tables at the exact versions the manifest listing
+    * returned ([[TxTable.readAt]]): a commit racing the rebuild cannot
+    * bleed half-new rows into a snapshot stamped with the old version. */
+  private def loadSnapshot(): Snapshot = {
+    val (vs, vg) = latestVersions
+    buildSnapshot(
+      TxTable.readAt(spark, silverRoot, vs),
+      TxTable.readAt(spark, goldRoot, vg), vs, vg, maxRows)
+  }
 
   @volatile private var snap: Snapshot = loadSnapshot()
 
@@ -62,29 +72,22 @@ final class ServeCache private (
     * pair. Returns true when a new snapshot was installed. */
   def refreshIfStale(): Boolean = synchronized {
     val cur = (snap.vSilver, snap.vGold)
-    if (latestVersions() == cur) false
+    if (latestVersions == cur) false
     else { snap = loadSnapshot(); true }
   }
 
   /** [[Serve.range]] semantics off the pinned snapshot: same parameter
-    * parsing ([[LineParser.normalizeRange]]), same half-open
-    * normalized day range, same response rows in the same order —
-    * (time ISO-ms string, name, value) — with no Spark job. */
+    * parsing ([[Serve.parseRange]]), same half-open normalized day
+    * range, same response rows in the same order — (time ISO-ms string,
+    * name, value) — with no Spark job. */
   def range(
       fromStr: Option[String],
       toStr: Option[String]): Either[String, Seq[(String, String, Double)]] =
-    (fromStr, toStr) match {
-      case (None, _) | (_, None) =>
-        Left("Missing required parameters: from, to")
-      case (Some(f), Some(t)) =>
-        LineParser.normalizeRange(f, t) match {
-          case None => Left("Invalid date format")
-          case Some((fromDay, toBound)) =>
-            val s = snap
-            val lo = lowerBound(s.dates, fromDay.toString)
-            val hi = lowerBound(s.dates, toBound.toString)
-            Right((lo until hi).map(i => (s.iso(i), s.name(i), s.value(i))))
-        }
+    Serve.parseRange(fromStr, toStr).map { case (fromDay, toBound) =>
+      val s = snap
+      val lo = lowerBound(s.dates, fromDay.toString)
+      val hi = lowerBound(s.dates, toBound.toString)
+      (lo until hi).map(i => (s.iso(i), s.name(i), s.value(i)))
     }
 }
 
@@ -160,30 +163,9 @@ object ServeCache {
       rows.map(_.getString(3)), rows.map(_.getDouble(4)))
   }
 
-  /** Version-consistent cache over committed silver/gold [[TxTable]]s:
-    * each snapshot reads BOTH tables at the exact versions its
-    * manifest listing returned ([[TxTable.readAt]]) — a commit racing
-    * the rebuild cannot bleed half-new rows into a snapshot stamped
-    * with the old version. */
+  /** Version-consistent cache over committed silver/gold [[TxTable]]s. */
   def fromTxTables(
       spark: SparkSession, silverRoot: String, goldRoot: String,
       maxRows: Long = 2000000L): ServeCache =
-    new ServeCache(
-      () => {
-        val vs = TxTable.latest(spark, silverRoot)._1
-        val vg = TxTable.latest(spark, goldRoot)._1
-        buildSnapshot(
-          TxTable.readAt(spark, silverRoot, vs),
-          TxTable.readAt(spark, goldRoot, vg), vs, vg, maxRows)
-      },
-      () => (TxTable.latest(spark, silverRoot)._1, TxTable.latest(spark, goldRoot)._1))
-
-  /** Cache over plain frames (no manifest — version pinned at 0 and
-    * [[ServeCache.refreshIfStale]] always rebuilds): the latency-probe
-    * and ad-hoc shape. */
-  def fromFrames(
-      silver: DataFrame, gold: DataFrame, maxRows: Long = 2000000L): ServeCache =
-    new ServeCache(
-      () => buildSnapshot(silver, gold, 0L, 0L, maxRows),
-      () => (-1L, -1L))
+    new ServeCache(spark, silverRoot, goldRoot, maxRows)
 }

@@ -6,11 +6,10 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * design that replaces the reference's btree indexes
   * (stg_readings.sql:18-21, mart_daily_power.sql:20-22):
   *
-  *   - Silver partitioned by `reading_date`: the serve range scan and the
+  *   - Silver partitioned by `reading_date` (a [[TxTable]] commit
+  *     partitioned on that column): the serve range scan and the
   *     affected-day recompute read only the touched date dirs (partition
-  *     pruning ≙ the reference's `(reading_date)` index); dynamic
-  *     partition overwrite makes the day-level merge an atomic
-  *     dir swap instead of a full rewrite.
+  *     pruning ≙ the reference's `(reading_date)` index).
   *   - Bucketing by join key: two tables bucketed the same way join with
   *     ZERO shuffle (SortMergeJoin over co-located buckets) — this is the
   *     co-location the reference gets for free from a single Postgres
@@ -20,76 +19,6 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * rounded to a multiple of executor cores; the demo tests use 4.
   */
 object TableLayout {
-
-  /** Write silver partitioned by day, atomically overwriting only the
-    * partitions present in `df` (dynamic overwrite). Rows are sorted
-    * within each file by (metric_name, reading_time) so parquet row-group
-    * min/max stats skip by metric — the translation of the reference's
-    * `(reading_date, metric_name)` composite index (stg_readings.sql:21).
-    */
-  def writeSilverPartitioned(df: DataFrame, path: String): Unit = {
-    df.sparkSession.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    df.sortWithinPartitions("reading_date", "metric_name", "reading_time")
-      .write
-      .mode(SaveMode.Overwrite)
-      .partitionBy("reading_date")
-      .parquet(path)
-  }
-
-  /** Small-file compaction: rewrite a parquet path to ~targetFileMB
-    * files. The maintenance pass an append-heavy Bronze/Silver needs at
-    * scale — streaming drains and per-hour increments otherwise accrete
-    * thousands of KB-sized files whose open/footer costs dominate scans.
-    *
-    * `partitionCols` MUST name the path's partition columns (if any) —
-    * compaction preserves the directory layout by repartitioning on them
-    * and re-writing with the same partitionBy; omitting them on a
-    * partitioned table would silently flatten it. The temp dir is
-    * removed afterwards.
-    */
-  def compact(
-      spark: SparkSession,
-      path: String,
-      targetFileMB: Int = 256,
-      partitionCols: Seq[String] = Nil): Unit = {
-    import graft.streaming.PathIO
-    val df = spark.read.parquet(path)
-    // scheme-aware size (java.io.File would report 0 for hdfs/s3 paths,
-    // collapsing the table to one giant file)
-    val totalBytes = PathIO.sizeBytes(spark, path)
-    val nFiles = math.max(1, (totalBytes / (targetFileMB * 1024L * 1024L)).toInt)
-    val tmp = path + ".compact"
-    // partitioned tables: still honor targetFileMB. repartition(cols)
-    // alone hashes ONLY the partition columns, so every row of a hot
-    // partition value funnels into ONE task/file — a 50 GB hot day would
-    // become one 50 GB file written by one task. Spread hot values with a
-    // bounded row-hash salt: salt buckets = how many target-size files
-    // the LARGEST partition value needs (estimated by row counts), so a
-    // hot day fans out over that many tasks/files while typical values
-    // keep ~1 file and don't fragment.
-    import org.apache.spark.sql.functions.{col, lit, count, max, sum}
-    val repartitioned =
-      if (partitionCols.isEmpty) df.repartition(nFiles)
-      else {
-        val stats = df.groupBy(partitionCols.map(col): _*)
-          .agg(count(lit(1)).as("n"))
-          .agg(sum("n"), max("n")).collect()(0)
-        if (stats.isNullAt(0)) df.repartition(nFiles) // empty table
-        else {
-          val rowsPerFile = math.max(1L, stats.getLong(0) / nFiles)
-          val saltBuckets = math.max(1L,
-            math.ceil(stats.getLong(1).toDouble / rowsPerFile).toLong)
-          // map-safe row salt (xxhash64 on a MapType column fails analysis)
-          val salt = graft.ops.SkewOps.rowSalt(df, saltBuckets.toInt)
-          df.repartition(nFiles, partitionCols.map(col) :+ salt: _*)
-        }
-      }
-    val writer = repartitioned.write.mode(SaveMode.Overwrite)
-    (if (partitionCols.isEmpty) writer else writer.partitionBy(partitionCols: _*)).parquet(tmp)
-    // delete+rename (metadata op): a crash between the two leaves the
-    // compacted copy in .compact for recovery
-    PathIO.replace(spark, tmp, path)
-  }
 
   /** Linearly scale a column into `bits`-bit integer cell codes using
     * [lo, hi] bounds (out-of-range clamps). Shared by the Morton and

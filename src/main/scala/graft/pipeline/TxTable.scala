@@ -5,10 +5,11 @@ import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 
 /** Crash-safe multi-partition commits without a table-format jar — the
   * transactional twin of the reference's Postgres MERGE atomicity
-  * (stg_readings.sql:15-17), which plain dir-swap merges
-  * ([[graft.streaming.PathIO.replace]], dynamic partition overwrite)
-  * cannot give across MULTIPLE partitions: a crash mid-swap leaves half
-  * the days new and half old.
+  * (stg_readings.sql:15-17), which a plain delete-then-rename dir swap
+  * cannot give: a crash between the two steps leaves no table at all,
+  * and a swap across MULTIPLE partitions can leave half the days new
+  * and half old. Every sensor-store table (silver, gold, the streaming
+  * sessions table and its mart) is written through this log.
   *
   * Design (a miniature of the Delta/Iceberg log):
   *   - data files are IMMUTABLE, written once under `root/v<N>/<col>=<val>/`;
@@ -197,9 +198,17 @@ object TxTable {
     * no manifest names it — and collected by [[vacuum]]), and a
     * concurrent stager writes elsewhere, so there is no exists-check/
     * delete race on a shared path.
+    *
+    * The first version of a table refuses a root that already holds a
+    * FLAT parquet table (the pre-TxTable on-disk format), before any
+    * dir is written: a `_txlog` beside it would shadow the flat files
+    * forever while `spark.read.parquet(root)` readers keep consuming
+    * them. Every TxTable writer stages through here, so every writer
+    * gets the guard.
     */
   def stage(spark: SparkSession, root: String, data: DataFrame, partitionCol: String): String = {
     val next = latest(spark, root)._1 + 1
+    if (next == 1) requireNotFlatTable(spark, root, partitionCol)
     val dir = s"v$next-${java.util.UUID.randomUUID().toString.take(8)}"
     data.write
       .mode(SaveMode.ErrorIfExists)
@@ -593,22 +602,17 @@ object TxTable {
     }))
   }
 
-  /** Migration guard: a pre-existing FLAT parquet table at `root` (the
-    * pre-TxTable on-disk format) must not be silently shadowed — writing
-    * a `_txlog` beside it would freeze the flat files forever while
-    * legacy `spark.read.parquet(root)` readers keep consuming them.
-    * Call before the FIRST commit of any path that may hold legacy data.
-    */
-  def requireNotFlatTable(spark: SparkSession, root: String): Unit = {
+  /** The first-version guard of [[stage]]: fail, naming the migration,
+    * when `root` holds flat parquet files or flat partition dirs. */
+  private def requireNotFlatTable(spark: SparkSession, root: String, partitionCol: String): Unit = {
     val f = fs(spark, root)
     val rp = new Path(root)
-    val hasLog = f.exists(new Path(logDir(root)))
-    if (!hasLog && f.exists(rp) &&
-        f.listStatus(rp).map(_.getPath.getName)
-          .exists(n => n.startsWith("part-") || n == "_SUCCESS"))
+    if (f.exists(rp) &&
+        f.listStatus(rp).map(_.getPath.getName).exists(n =>
+          n.startsWith("part-") || n == "_SUCCESS" || n.startsWith(partitionCol + "=")))
       throw new IllegalStateException(
         s"$root holds a flat parquet table (pre-TxTable format); migrate it first " +
-          "(e.g. TxTable.commit(spark, root+\".tx\", spark.read.parquet(root), <partitionCol>)) " +
+          s"(e.g. TxTable.commit(spark, root + \".tx\", spark.read.parquet(root), \"$partitionCol\")) " +
           "or point the writer at a fresh root")
   }
 

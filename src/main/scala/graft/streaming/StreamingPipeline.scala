@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
-import graft.pipeline.{Incremental, Merge, SensorPipeline}
+import graft.pipeline.{Incremental, Merge, SensorPipeline, TxTable}
 
 /** Streaming variants of the pipeline (SURVEY §2.9, §7.4).
   *
@@ -28,8 +28,9 @@ object StreamingPipeline {
     StructField("value", StringType)))
 
   /** Tier 1: drain all available Bronze text files into the Silver
-    * parquet target via the batch merge — exactly-once per file thanks to
-    * the source's checkpointed file log, idempotent re-merge on raw_id.
+    * [[TxTable]] via the batch merge — exactly-once per file thanks to
+    * the source's checkpointed file log, idempotent re-merge on raw_id,
+    * and one atomic manifest commit per micro-batch.
     *
     * Each micro-batch: assign raw_ids from a monotonic base (batchId
     * captured in the closure), parse+validate with the SAME plan builder
@@ -68,6 +69,12 @@ object StreamingPipeline {
     * Silver target (and optionally Gold) — the single merge body shared
     * by the checkpointed file tier ([[runBronzeToSilverAvailableNow]])
     * and the socket connector tier ([[runSocketToSilver]]).
+    *
+    * Silver is a [[TxTable]] partitioned by reading_date (read it with
+    * `TxTable.read`): the merged table is staged invisibly and published
+    * by one manifest rename, so a batch killed before the publish leaves
+    * the previous version live and its replay from the checkpoint
+    * converges to the same rows.
     */
   def mergeBatchToSilver(
       batch: DataFrame,
@@ -120,34 +127,22 @@ object StreamingPipeline {
           .withColumn("ingested_at", current_timestamp())
           .withColumnRenamed("value", "raw_line")
         val fresh = SensorPipeline.bronzeToSilver(bronze)
-        // ONLY a missing path means "no target yet" — any other read
-        // failure must propagate, or a transient IO error would silently
-        // replace the accumulated silver with just this batch. Existence
-        // via the Hadoop FS of the path's scheme (java.io.File would
-        // report hdfs://... as absent and cause exactly that loss).
+        // a batch without one valid reading changes neither silver nor
+        // gold (and a TxTable has no empty version to publish)
+        if (fresh.isEmpty) return
         val spark = batch.sparkSession
-        val target =
-          if (PathIO.exists(spark, silverPath)) Some(spark.read.parquet(silverPath))
-          else None
-        val merged = target match {
-          case None => fresh
-          case Some(t) =>
-            // dbt-merge on raw_id — SAME key as the batch path, so the
-            // two tiers keep identical semantics (duplicate identical
-            // readings stay distinct rows, exactly like distinct
-            // reference raw_ids); batch replays are idempotent because
-            // the ids above are replay-stable
-            Merge.merge(
-              t, fresh,
-              Seq("raw_id"),
-              Seq(col("processed_at").desc, col("reading_time").desc))
-        }
-        // write-to-temp then RENAME: one full write instead of two, and a
-        // crash between delete and rename leaves the .tmp dir intact for
-        // manual recovery (a second full rewrite had the same window but
-        // no surviving copy)
-        merged.write.mode("overwrite").parquet(silverPath + ".tmp")
-        PathIO.replace(spark, silverPath + ".tmp", silverPath)
+        // dbt-merge on raw_id — SAME key as the batch path, so the two
+        // tiers keep identical semantics (duplicate identical readings
+        // stay distinct rows, exactly like distinct reference raw_ids);
+        // batch replays are idempotent because the ids above are
+        // replay-stable
+        val merged =
+          if (TxTable.latest(spark, silverPath)._1 == 0) fresh
+          else Merge.merge(
+            TxTable.read(spark, silverPath), fresh,
+            Seq("raw_id"),
+            Seq(col("processed_at").desc, col("reading_time").desc))
+        commitWholeTable(spark, silverPath, merged, "reading_date")
         // gold increment inside the SAME batch (reference: staging >>
         // marts ordering per hourly run, sensor_data_pipeline.py:88)
         goldPath.foreach(gp => goldTxCommit(spark, silverPath, gp))
@@ -192,13 +187,24 @@ object StreamingPipeline {
     * override). Read the mart with `TxTable.read(spark, goldRoot)`.
     */
   def goldTxCommit(spark: SparkSession, silverPath: String, goldRoot: String): Unit = {
-    import graft.pipeline.TxTable
-    val silver = spark.read.parquet(silverPath)
-    val hasLog = TxTable.latest(spark, goldRoot)._1 > 0
-    TxTable.requireNotFlatTable(spark, goldRoot)
-    val target = if (hasLog) Some(TxTable.read(spark, goldRoot)) else None
-    val fresh = Incremental.goldAffectedDays(silver, target)
+    val target =
+      if (TxTable.latest(spark, goldRoot)._1 > 0) Some(TxTable.read(spark, goldRoot)) else None
+    val fresh = Incremental.goldAffectedDays(TxTable.read(spark, silverPath), target)
     if (!fresh.isEmpty) TxTable.commit(spark, goldRoot, fresh, "reading_date")
+  }
+
+  /** Publish a whole-table merge result as one TxTable commit. The merge
+    * keys fix each row's partition (reading_date derives from the line a
+    * raw_id names, session_date from the session_start key), so the
+    * staged dir restages every live partition and the previous version
+    * dirs are superseded whole; [[TxTable.vacuum]] reclaims them once
+    * past its reader-retention horizon, so the sink keeps about one copy
+    * of the table rather than one per micro-batch.
+    */
+  private def commitWholeTable(
+      spark: SparkSession, root: String, data: DataFrame, partitionCol: String): Unit = {
+    TxTable.commit(spark, root, data, partitionCol)
+    TxTable.vacuum(spark, root)
   }
 
   /** Tier 2: idiomatic event-time streaming aggregate — 1-day tumbling
@@ -221,14 +227,6 @@ object StreamingPipeline {
         col("w.start").cast(DateType).as("reading_date"),
         col("w.start").as("reading_time"))
 
-  /** Gold increment driven after a streaming silver drain — same batch
-    * code, scheduled by the caller (the reference's hourly DAG is a loop
-    * here, not a scheduler). Commits through the TxTable manifest log;
-    * read the result with `TxTable.read(spark, goldRoot)`.
-    */
-  def goldAfterDrain(spark: SparkSession, silverPath: String, goldRoot: String): Unit =
-    goldTxCommit(spark, silverPath, goldRoot)
-
   /** Tier-2 gold maintained INCREMENTALLY through the TxTable manifest
     * log: the update-mode daily window emits, per micro-batch, the
     * CURRENT full content of every day the batch changed — exactly the
@@ -244,17 +242,12 @@ object StreamingPipeline {
       goldRoot: String,
       checkpointDir: String,
       lateness: String = "1 day"): Unit = {
-    import graft.pipeline.TxTable
     val q = dailyPowerStreaming(parsed, lateness).writeStream
       .outputMode("update")
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          val s = batch.sparkSession
-          TxTable.requireNotFlatTable(s, goldRoot)
-          TxTable.commit(s, goldRoot, batch, "reading_date")
-        }
+        if (!batch.isEmpty) TxTable.commit(batch.sparkSession, goldRoot, batch, "reading_date")
         ()
       }
       .start()
@@ -295,7 +288,8 @@ object StreamingPipeline {
     * mart: closed sessions stream out of
     * [[StatefulSessions.closedSessions]] (flatMapGroupsWithState,
     * Append), and each micro-batch (1) merges them idempotently into a
-    * durable sessions table — session identity (user_id, session_start)
+    * durable sessions [[TxTable]] partitioned by `session_date` =
+    * date(session_start) — session identity (user_id, session_start)
     * dedups foreachBatch's at-least-once replays, the raw_id pattern —
     * then (2) recomputes the per-day session summary for exactly the
     * days this batch's sessions touch and publishes those days through
@@ -310,7 +304,6 @@ object StreamingPipeline {
       goldRoot: String,
       checkpointDir: String,
       gapSeconds: Long = 1800L): Unit = {
-    import graft.pipeline.TxTable
     val spark = events.sparkSession
     val closed = StatefulSessions.closedSessions(spark, events, gapSeconds)
     val q = closed.writeStream
@@ -322,27 +315,20 @@ object StreamingPipeline {
           if (!batch.isEmpty) {
             val s = batch.sparkSession
             val b = batch.toDF().localCheckpoint(true) // consumed twice below
-            val target =
-              if (PathIO.exists(s, sessionsPath)) Some(s.read.parquet(sessionsPath)) else None
-            val merged = target match {
-              case None => b
-              case Some(t) =>
-                Merge.merge(t, b, Seq("user_id", "session_start"), Seq(col("session_end").desc))
-            }
-            merged.write.mode("overwrite").parquet(sessionsPath + ".tmp")
-            PathIO.replace(s, sessionsPath + ".tmp", sessionsPath)
-            val days = b.select(to_date(col("session_start")).as("session_date")).distinct()
-            val fresh = s.read.parquet(sessionsPath)
               .withColumn("session_date", to_date(col("session_start")))
+            val merged =
+              if (TxTable.latest(s, sessionsPath)._1 == 0) b
+              else Merge.merge(TxTable.read(s, sessionsPath), b,
+                Seq("user_id", "session_start"), Seq(col("session_end").desc))
+            commitWholeTable(s, sessionsPath, merged, "session_date")
+            val days = b.select(col("session_date")).distinct()
+            val fresh = TxTable.read(s, sessionsPath)
               .join(broadcast(days), Seq("session_date"), "left_semi")
               .groupBy("session_date")
               .agg(
                 count(lit(1)).as("n_sessions"),
                 sum(col("n")).as("n_events"),
                 round(sum(col("total")), 6).as("total_value"))
-            // same migration guard as goldTxCommit: never shadow a
-            // legacy flat-parquet gold with a fresh _txlog
-            TxTable.requireNotFlatTable(s, goldRoot)
             TxTable.commit(s, goldRoot, fresh, "session_date")
           }
           ()
@@ -350,40 +336,4 @@ object StreamingPipeline {
       .start()
     q.awaitTermination()
   }
-}
-
-/** Filesystem helpers that honor the path's scheme (hdfs://, s3a://,
-  * file:) via the Hadoop FileSystem API — `java.io.File` silently reports
-  * remote paths as absent/empty, which upstream code would misread as
-  * "table does not exist".
-  */
-object PathIO {
-  import org.apache.hadoop.fs.Path
-
-  private def fs(spark: SparkSession, p: String) =
-    new Path(p).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  def exists(spark: SparkSession, p: String): Boolean =
-    fs(spark, p).exists(new Path(p))
-
-  /** Replace `target` with `src` by delete+rename (rename is a metadata
-    * op on HDFS/local; a crash between the two leaves `src` intact for
-    * recovery). Hadoop reports most failures via boolean returns rather
-    * than exceptions — an ignored false from rename would mean the
-    * target was deleted and never replaced (silent table loss), so both
-    * results are checked.
-    */
-  def replace(spark: SparkSession, src: String, target: String): Unit = {
-    val f = fs(spark, target)
-    val t = new Path(target)
-    if (f.exists(t) && !f.delete(t, true))
-      throw new java.io.IOException(s"failed to delete $target before replace")
-    if (!f.rename(new Path(src), t))
-      throw new java.io.IOException(
-        s"failed to rename $src -> $target; data remains at $src for recovery")
-  }
-
-  /** Total bytes under a path (scheme-aware). */
-  def sizeBytes(spark: SparkSession, p: String): Long =
-    fs(spark, p).getContentSummary(new Path(p)).getLength
 }

@@ -100,8 +100,11 @@ class GoldenE2ESpec extends AnyFunSuite {
     val b1 = bronzeOf(conftestLines, "2022-04-14 13:30:00")
     val s1 = Incremental.silverIncrement(b1, None, t0).cache()
     assert(s1.count() == 4)
-    val g1 = Incremental.goldIncrement(s1, None, t0).cache()
-    assert(g1.count() == 1)
+    // gold merges on its partition key: each affected-day recompute is
+    // one TxTable commit overriding exactly those days
+    val goldRoot = s"${graft.TestTmp.dir("graft-golden-incr")}/gold"
+    TxTable.commit(spark, goldRoot, Incremental.goldAffectedDays(s1, None, t0), "reading_date")
+    assert(TxTable.read(spark, goldRoot).count() == 1)
 
     // late reading for the same (historical) day, ingested later
     val late = Seq((5L, "1649941900 Voltage 2.01", Timestamp.valueOf("2022-04-14 17:00:00")))
@@ -111,8 +114,9 @@ class GoldenE2ESpec extends AnyFunSuite {
     val s2 = Incremental.silverIncrement(b2, Some(s1), t1).cache()
     assert(s2.count() == 5, "only the late row passes the watermark; merge keeps 5")
 
-    val g2 = Incremental.goldIncrement(s2, Some(g1), t1)
-    val rows = g2.collect()
+    TxTable.commit(spark, goldRoot,
+      Incremental.goldAffectedDays(s2, Some(TxTable.read(spark, goldRoot)), t1), "reading_date")
+    val rows = TxTable.read(spark, goldRoot).collect()
     assert(rows.length == 1)
     // whole-day recompute: AVG(1.34,1.35,2.01) * AVG(12,14)
     val expected = ((1.34 + 1.35 + 2.01) / 3.0) * 13.0

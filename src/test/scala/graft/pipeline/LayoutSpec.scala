@@ -1,21 +1,19 @@
 package graft.pipeline
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
 
-/** Physical-layout behavior: partition pruning on the silver layout,
-  * shuffle-free bucketed joins, and the typed Aggregator parity.
+/** Physical-layout behavior: partition pruning on the TxTable silver
+  * layout, shuffle-free bucketed joins, and the typed Aggregator parity.
   */
 class LayoutSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
-  test("silver partitioned by reading_date: range scan prunes partitions; dynamic overwrite touches only changed days") {
-    val root = graft.TestTmp.dir("graft-layout")
+  test("TxTable silver by day: scans prune days; a day commit rewrites one dir") {
+    val root = s"${graft.TestTmp.dir("graft-layout")}/silver"
     val silver = Seq(
       (1L, "2022-04-14 13:10:17", "Voltage", 1.34, "2022-04-14"),
       (2L, "2022-04-15 09:00:00", "Voltage", 1.50, "2022-04-15"),
@@ -25,32 +23,46 @@ class LayoutSpec extends AnyFunSuite {
       .withColumn("reading_date", to_date(col("d")))
       .withColumn("processed_at", to_timestamp(lit("2022-04-16 12:00:00")))
       .select("raw_id", "reading_time", "metric_name", "metric_value", "reading_date", "processed_at")
-    TableLayout.writeSilverPartitioned(silver, s"$root/silver")
+    TxTable.commit(spark, root, silver, "reading_date")
 
-    // layout: one dir per day
-    val dirs = new java.io.File(s"$root/silver").listFiles().filter(_.isDirectory).map(_.getName).sorted
-    assert(dirs.toSeq == Seq("reading_date=2022-04-14", "reading_date=2022-04-15", "reading_date=2022-04-16"))
+    // layout: one dir per day, all in the first version dir
+    val (_, v1) = TxTable.latest(spark, root)
+    assert(v1.keys.toSeq.sorted == Seq("2022-04-14", "2022-04-15", "2022-04-16"))
+    assert(v1.forall { case (day, dir) => dir.startsWith("v1-") && dir.endsWith(s"/reading_date=$day") })
 
-    // pruning asserted on the CONTENTS of PartitionFilters — the scan
-    // node always prints the label (even empty), so a bare substring
-    // match passes vacuously; and DataFrame.inputFiles lists the whole
-    // relation pre-pruning, so it can't be used either
-    val scan = spark.read.parquet(s"$root/silver")
-      .filter(col("reading_date") >= "2022-04-15" && col("reading_date") < "2022-04-16")
-    assert(scan.count() == 1)
-    val plan = scan.queryExecution.executedPlan.toString
-    val pf = plan.split("PartitionFilters: \\[")(1).split("\\]")(0)
-    assert(pf.contains("reading_date"),
-      s"range predicate must land in PartitionFilters, got: [$pf]")
+    // pruning asserted on the CONTENTS of every scan's PartitionFilters —
+    // the scan node always prints the label (even empty), so a bare
+    // substring match passes vacuously; and DataFrame.inputFiles lists
+    // the whole relation pre-pruning, so it can't be used either
+    def assertPruned(expectScans: Int): Unit = {
+      val scan = TxTable.read(spark, root)
+        .filter(col("reading_date") >= "2022-04-15" && col("reading_date") < "2022-04-16")
+      assert(scan.count() == 1)
+      val pfs = scan.queryExecution.executedPlan.toString
+        .split("PartitionFilters: \\[").drop(1).map(_.split("\\]")(0))
+      assert(pfs.length == expectScans && pfs.forall(_.contains("reading_date")),
+        s"range predicate must land in every scan's PartitionFilters, got: ${pfs.mkString("; ")}")
+    }
+    assertPruned(expectScans = 1)
 
-    // dynamic overwrite of one day leaves the others untouched
+    // a one-day commit republishes that day only: the other days keep
+    // their manifest entries and their files, byte for byte
+    def files(dir: String) = new java.io.File(s"$root/$dir").listFiles()
+      .map(f => (f.getName, f.length, f.lastModified)).toSet
+    val before = v1.map { case (day, dir) => day -> files(dir) }
     val day2 = silver.filter(col("reading_date") === "2022-04-15")
       .withColumn("metric_value", lit(9.99))
-    TableLayout.writeSilverPartitioned(day2, s"$root/silver")
-    val after = spark.read.parquet(s"$root/silver")
+    TxTable.commit(spark, root, day2, "reading_date")
+    val (v, v2) = TxTable.latest(spark, root)
+    assert(v == 2 && v2("2022-04-15").startsWith("v2-"))
+    Seq("2022-04-14", "2022-04-16").foreach { day =>
+      assert(v2(day) == v1(day) && files(v2(day)) == before(day), s"day $day was touched")
+    }
+    val after = TxTable.read(spark, root)
     assert(after.count() == 3)
     assert(after.filter(col("reading_date") === "2022-04-15").head.getAs[Double]("metric_value") == 9.99)
     assert(after.filter(col("reading_date") === "2022-04-14").head.getAs[Double]("metric_value") == 1.34)
+    assertPruned(expectScans = 2)
   }
 
   test("bucketed join elides the shuffle on both sides") {
@@ -73,19 +85,6 @@ class LayoutSpec extends AnyFunSuite {
       spark.sql("DROP TABLE IF EXISTS customer_b")
       spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
     }
-  }
-
-  test("compaction: many small files -> few target-size files, identical data") {
-    val root = graft.TestTmp.dir("graft-compact")
-    val df = spark.range(0, 10000).toDF("id").withColumn("v", col("id") * 2)
-    df.repartition(50).write.parquet(s"$root/t") // 50 tiny files
-    val before = spark.read.parquet(s"$root/t")
-    assert(before.inputFiles.length == 50)
-    val sumBefore = before.agg(sum("v")).head.getLong(0)
-    TableLayout.compact(spark, s"$root/t", targetFileMB = 256)
-    val after = spark.read.parquet(s"$root/t")
-    assert(after.inputFiles.length < 5, s"expected few files, got ${after.inputFiles.length}")
-    assert(after.count() == 10000 && after.agg(sum("v")).head.getLong(0) == sumBefore)
   }
 
   test("typed PowerAggregator matches the untyped pivot on the golden batch") {

@@ -1,7 +1,6 @@
 package graft.pipeline
 
-import java.nio.file.Files
-
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -36,15 +35,25 @@ class ServeCacheSpec extends AnyFunSuite {
     (df(silverRows), df(goldRows))
   }
 
+  /** The fixture committed as silver and gold TxTables under a fresh
+    * root; returns the two table roots. */
+  private def mkTables(frames: (DataFrame, DataFrame)): (String, String) = {
+    val base = graft.TestTmp.dir("serve-cache")
+    val (sRoot, gRoot) = (s"$base/silver", s"$base/gold")
+    TxTable.commit(spark, sRoot, frames._1, "reading_date")
+    TxTable.commit(spark, gRoot, frames._2, "reading_date")
+    (sRoot, gRoot)
+  }
+
   private def sparkPath(
-      silver: org.apache.spark.sql.DataFrame, gold: org.apache.spark.sql.DataFrame,
-      f: Option[String], t: Option[String]): Either[String, Seq[(String, String, Double)]] =
+      silver: DataFrame, gold: DataFrame, f: Option[String], t: Option[String]): Either[String, Seq[(String, String, Double)]] =
     Serve.range(silver, gold, f, t).map(_.collect()
       .map(r => (r.getString(0), r.getString(1), r.getDouble(2))).toSeq)
 
   test("cached range equals the Spark serve path across range shapes and reject cases") {
-    val (silver, gold) = mkFrames()
-    val cache = ServeCache.fromFrames(silver, gold)
+    val (sRoot, gRoot) = mkTables(mkFrames())
+    val cache = ServeCache.fromTxTables(spark, sRoot, gRoot)
+    val (silver, gold) = (TxTable.read(spark, sRoot), TxTable.read(spark, gRoot))
     val cases = Seq(
       (Some("2024-01-01"), Some("2024-01-02")), // date-only to => inclusive day
       (Some("2024-01-01"), Some("2024-01-01")), // single day
@@ -70,12 +79,7 @@ class ServeCacheSpec extends AnyFunSuite {
   }
 
   test("staleness contract: version-pinned reads, manifest-driven refresh, no-op when current") {
-    val base = graft.TestTmp.dir("serve-cache")
-    val (sRoot, gRoot) = (s"$base/silver", s"$base/gold")
-    val (silver, gold) = mkFrames()
-    TxTable.commit(spark, sRoot, silver, "reading_date")
-    TxTable.commit(spark, gRoot, gold, "reading_date")
-
+    val (sRoot, gRoot) = mkTables(mkFrames())
     val cache = ServeCache.fromTxTables(spark, sRoot, gRoot)
     assert(cache.version === (1L, 1L))
     assert(cache.range(Some("2024-01-04"), Some("2024-01-04")).toOption.get.isEmpty)
@@ -108,11 +112,7 @@ class ServeCacheSpec extends AnyFunSuite {
     // volatile write, so every response must expose a version PREFIX:
     // appended days present = exactly {1..k} for some k, each with its
     // own value — a gap or a value/day mismatch is a torn read.
-    val base = graft.TestTmp.dir("serve-cache-conc")
-    val (sRoot, gRoot) = (s"$base/silver", s"$base/gold")
-    val (silver, gold) = mkFrames()
-    TxTable.commit(spark, sRoot, silver, "reading_date")
-    TxTable.commit(spark, gRoot, gold, "reading_date")
+    val (sRoot, gRoot) = mkTables(mkFrames())
     val cache = ServeCache.fromTxTables(spark, sRoot, gRoot)
 
     val nDays = 12
@@ -154,21 +154,23 @@ class ServeCacheSpec extends AnyFunSuite {
   }
 
   test("bounded collect: a store above maxRows refuses to build; a date/time mismatch fails loudly") {
-    val (silver, gold) = mkFrames()
+    val (sRoot, gRoot) = mkTables(mkFrames())
     val e1 = intercept[IllegalArgumentException] {
-      ServeCache.fromFrames(silver, gold, maxRows = 3)
+      ServeCache.fromTxTables(spark, sRoot, gRoot, maxRows = 3)
     }
     assert(e1.getMessage.contains("cache bound"))
 
     // a store row whose reading_date is NOT date(reading_time) breaks
     // the response-order invariant and must be rejected at load
+    val (silver, gold) = mkFrames()
     val bad = silver.unionByName(
       Seq(("2024-01-09", "2024-01-01 00:00:00", "click", 1.0))
         .toDF("reading_date", "ts", "metric_name", "metric_value")
         .select(col("reading_date"), to_timestamp(col("ts")).as("reading_time"),
           col("metric_name"), col("metric_value")))
+    val (badRoot, gRoot2) = mkTables((bad, gold))
     val e2 = intercept[IllegalArgumentException] {
-      ServeCache.fromFrames(bad, gold)
+      ServeCache.fromTxTables(spark, badRoot, gRoot2)
     }
     assert(e2.getMessage.contains("misorder"))
   }

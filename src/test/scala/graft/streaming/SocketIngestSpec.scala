@@ -8,6 +8,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
+import graft.pipeline.TxTable
 
 /** IoT socket-source connector tier: newline-delimited readings pushed
   * over TCP land in the same Silver (and Gold) the file tier maintains,
@@ -53,13 +54,13 @@ class SocketIngestSpec extends AnyFunSuite {
       var rows = 0L
       while (rows < 4 && System.nanoTime() < deadline) {
         q.processAllAvailable()
-        rows = if (graft.streaming.PathIO.exists(spark, silverPath))
-          spark.read.parquet(silverPath).count()
+        rows = if (TxTable.latest(spark, silverPath)._1 > 0)
+          TxTable.read(spark, silverPath).count()
         else 0L
       }
       assert(rows == 4, s"4 valid readings merged from the socket, got $rows")
 
-      val silver = spark.read.parquet(silverPath)
+      val silver = TxTable.read(spark, silverPath)
       assert(silver.columns.toSet ==
         Set("raw_id", "reading_time", "metric_name", "metric_value", "reading_date", "processed_at"),
         "socket tier lands the SAME typed silver schema as the file tier")
@@ -69,7 +70,7 @@ class SocketIngestSpec extends AnyFunSuite {
       assert(v17.toSeq == Seq(1.34), "values parsed through the stg_readings plan of record")
 
       // gold advanced inside the same batch: one Power row, the golden value
-      val g = graft.pipeline.TxTable.read(spark, goldPath).collect()
+      val g = TxTable.read(spark, goldPath).collect()
       assert(g.length == 1 && g(0).getAs[String]("metric_name") == "Power")
       assert(math.abs(g(0).getAs[Double]("metric_value") - 17.485) < 1e-9,
         "avg(V) * avg(I) = 1.345 * 13.0 = 17.485 (test_all.sh golden value)")

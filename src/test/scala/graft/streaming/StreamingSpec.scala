@@ -2,10 +2,13 @@ package graft.streaming
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
+import graft.pipeline.TxTable
 
 /** Streaming pipeline tests: AvailableNow drain + foreachBatch merge
   * (tier 1, faithful) and watermarked tumbling-window aggregation
@@ -27,12 +30,12 @@ class StreamingSpec extends AnyFunSuite {
       "1649941817 Voltage 1.34\n1649941818 Voltage 1.35\n1649941817 Current 12.0\n1649941818 Current 14.0\nnot a line\n")
 
     StreamingPipeline.runBronzeToSilverAvailableNow(spark, bronzeDir, silverPath, ckpt)
-    val s1 = spark.read.parquet(silverPath)
+    val s1 = TxTable.read(spark, silverPath)
     assert(s1.count() == 4, "4 valid lines parsed, invalid dropped")
 
     // drain again with nothing new: checkpoint file-log skips the file
     StreamingPipeline.runBronzeToSilverAvailableNow(spark, bronzeDir, silverPath, ckpt)
-    assert(spark.read.parquet(silverPath).count() == 4)
+    assert(TxTable.read(spark, silverPath).count() == 4)
 
     // new file: every line becomes a NEW reading with a fresh raw_id —
     // including an exact repeat of an earlier line, exactly as a
@@ -44,7 +47,7 @@ class StreamingSpec extends AnyFunSuite {
       java.nio.file.Paths.get(s"$bronzeDir/batch2.txt"),
       "1649941819 Voltage 1.36\n1649941817 Voltage 9.99\n1649941817 Voltage 1.34\n")
     StreamingPipeline.runBronzeToSilverAvailableNow(spark, bronzeDir, silverPath, ckpt)
-    val s3 = spark.read.parquet(silverPath)
+    val s3 = TxTable.read(spark, silverPath)
     assert(s3.count() == 7, "three new readings appended (reference raw_id semantics)")
     val at17 = s3.filter(col("metric_name") === "Voltage" &&
       col("reading_time") === to_timestamp(lit("2022-04-14 13:10:17")))
@@ -54,8 +57,8 @@ class StreamingSpec extends AnyFunSuite {
 
     // gold after drain (TxTable manifest log — read via TxTable.read)
     val goldPath = s"$root/gold"
-    StreamingPipeline.goldAfterDrain(spark, silverPath, goldPath)
-    val g = graft.pipeline.TxTable.read(spark, goldPath).collect()
+    StreamingPipeline.goldTxCommit(spark, silverPath, goldPath)
+    val g = TxTable.read(spark, goldPath).collect()
     assert(g.length == 1)
     assert(g(0).getAs[String]("metric_name") == "Power")
   }
@@ -299,12 +302,12 @@ class StreamingSpec extends AnyFunSuite {
         .select(col("reading_date").cast("string"), col("metric_value"))
         .collect().map(r => (r.getString(0), r.getDouble(1))).toSet
     def batchRecompute(): Set[(String, Double)] =
-      SensorPipeline.silverToGold(spark.read.parquet(silverPath))
+      SensorPipeline.silverToGold(TxTable.read(spark, silverPath))
         .select(col("reading_date").cast("string"), col("metric_value"))
         .collect().map(r => (r.getString(0), r.getDouble(1))).toSet
 
     // batch 1: one full day -> gold must exist MID-STREAM (no
-    // goldAfterDrain call anywhere in this test)
+    // goldTxCommit call anywhere in this test)
     Files.writeString(
       java.nio.file.Paths.get(s"$bronzeDir/b1.txt"),
       "1649941817 Voltage 1.34\n1649941818 Voltage 1.35\n1649941817 Current 12.0\n1649941818 Current 14.0\n")
@@ -332,14 +335,103 @@ class StreamingSpec extends AnyFunSuite {
     assert(math.abs(day14 - expected14) < 1e-9, "late reading re-aggregated the whole day")
   }
 
-  test("goldTxCommit refuses to silently shadow a pre-existing flat parquet gold") {
-    val root = graft.TestTmp.dir("graft-goldfmt")
-    Seq((1L, "x")).toDF("a", "b").write.parquet(s"$root/silver")
-    // old on-disk format: a flat parquet table at the gold path
-    Seq((1L, 2.0)).toDF("k", "v").write.parquet(s"$root/gold")
-    val ex = intercept[IllegalStateException](
-      StreamingPipeline.goldTxCommit(spark, s"$root/silver", s"$root/gold"))
-    assert(ex.getMessage.contains("flat parquet"), ex.getMessage)
+  test("killed mid-batch: silver keeps its last publish; re-drain converges") {
+    val root = graft.TestTmp.dir("graft-stream-crash")
+    val b1 = "1649941817 Voltage 1.34\n1649941817 Current 12.0\n"
+    val b2 = "1649941818 Voltage 1.35\n1650028217 Current 10.0\nnot a line\n"
+    def put(dir: String, name: String, body: String): Unit = {
+      new java.io.File(dir).mkdirs()
+      Files.writeString(java.nio.file.Paths.get(s"$dir/$name"), body)
+    }
+    // a sorted multiset: a replay that duplicated rows must show
+    def rows(path: String) =
+      TxTable.read(spark, path).drop("processed_at").collect().map(_.toString).sorted.toSeq
+    def drain(name: String): Unit = StreamingPipeline.runBronzeToSilverAvailableNow(
+      spark, s"$root/$name-bronze", s"$root/$name", s"$root/$name-ckpt")
+    // b1 drains cleanly; the batch carrying b2 runs `work`, then dies
+    // before the checkpoint records it
+    def killedAfter(name: String)(work: (DataFrame, Long) => Unit): Unit = {
+      put(s"$root/$name-bronze", "b1.txt", b1)
+      drain(name)
+      put(s"$root/$name-bronze", "b2.txt", b2)
+      val q = spark.readStream.schema(StreamingPipeline.rawLineSchema).text(s"$root/$name-bronze")
+        .writeStream
+        .trigger(Trigger.AvailableNow())
+        .option("checkpointLocation", s"$root/$name-ckpt")
+        .foreachBatch { (batch: DataFrame, id: Long) =>
+          work(batch, id)
+          throw new IllegalStateException("killed")
+        }
+        .start()
+      intercept[StreamingQueryException](q.awaitTermination())
+    }
+
+    put(s"$root/clean-bronze", "b1.txt", b1)
+    drain("clean")
+    put(s"$root/clean-bronze", "b2.txt", b2)
+    drain("clean")
+    val clean = rows(s"$root/clean")
+    assert(clean.size == 4)
+
+    // killed between stage and publish: the staged whole-table dir
+    // (poisoned values, so a leak would show) stays invisible
+    val staged = s"$root/staged"
+    killedAfter("staged") { (batch, _) =>
+      val s = batch.sparkSession
+      TxTable.stage(s, staged,
+        TxTable.read(s, staged).withColumn("metric_value", lit(-1.0)), "reading_date")
+    }
+    val vdirs = new java.io.File(staged).list().count(_.startsWith("v"))
+    assert(vdirs == 2, s"one published and one staged version dir, got $vdirs")
+    assert(TxTable.latest(spark, staged)._1 == 1, "the staged dir was never published")
+    assert(rows(staged).size == 2, "TxTable.read still returns the previous version")
+
+    // killed after the publish: the replay re-merges rows already live
+    val published = s"$root/published"
+    killedAfter("published") { (batch, id) =>
+      StreamingPipeline.mergeBatchToSilver(batch, id, published, None)
+    }
+    assert(TxTable.latest(spark, published)._1 == 2 && rows(published) == clean)
+
+    // re-drain from the checkpoint: the killed batch replays with the same
+    // files and the same ids, and lands where the uninterrupted run does
+    Seq(staged, published).foreach { path =>
+      drain(path.split("/").last)
+      assert(rows(path) == clean, s"re-drain of $path must equal the uninterrupted run")
+    }
+  }
+
+  test("first commit refuses a flat root: commit, appendCommit, silver sink") {
+    val root = graft.TestTmp.dir("graft-flat")
+    val rows = Seq(("2022-04-14", 1.0)).toDF("reading_date", "v")
+    def flatTable(name: String): String = { // the pre-TxTable on-disk format
+      val p = s"$root/$name"
+      rows.write.parquet(p)
+      p
+    }
+    def assertRefused(p: String)(write: => Any): Unit = {
+      val before = new java.io.File(p).list().toSet
+      val ex = intercept[Exception](write)
+      val msgs = Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null)
+        .map(e => String.valueOf(e.getMessage)).toSeq
+      assert(msgs.exists(_.contains("holds a flat parquet table")), msgs.mkString(" | "))
+      assert(new java.io.File(p).list().toSet == before, "the guard runs before any dir is written")
+    }
+    val viaCommit = flatTable("commit")
+    assertRefused(viaCommit)(TxTable.commit(spark, viaCommit, rows, "reading_date"))
+    val viaAppend = flatTable("append")
+    assertRefused(viaAppend)(TxTable.appendCommit(spark, viaAppend, rows, "reading_date"))
+    // a partitioned flat table with no _SUCCESS marker is known by its dirs
+    val partitioned = s"$root/partitioned"
+    rows.write.partitionBy("reading_date").parquet(partitioned)
+    new java.io.File(s"$partitioned/_SUCCESS").delete()
+    assertRefused(partitioned)(TxTable.commit(spark, partitioned, rows, "reading_date"))
+    // the streaming silver sink on a silver root still in the flat format
+    new java.io.File(s"$root/bronze").mkdirs()
+    Files.writeString(java.nio.file.Paths.get(s"$root/bronze/b1.txt"), "1649941817 Voltage 1.34\n")
+    val silver = flatTable("silver")
+    assertRefused(silver)(StreamingPipeline.runBronzeToSilverAvailableNow(
+      spark, s"$root/bronze", silver, s"$root/ckpt"))
   }
 
   test("sessions -> gold: closed sessions maintain a per-day session mart incrementally via TxTable") {
@@ -362,7 +454,7 @@ class StreamingSpec extends AnyFunSuite {
     StreamingPipeline.runSessionsToGold(
       stream, s"$root/sessions", s"$root/gold", s"$root/ckpt")
 
-    val sessions = spark.read.parquet(s"$root/sessions")
+    val sessions = TxTable.read(spark, s"$root/sessions")
     // user 1's first session (2 events, gap-closed) must be present;
     // exact totals depend on which timeouts fired before the drain ended
     assert(sessions.filter(col("user_id") === 1L && col("n") === 2).count() == 1)
@@ -372,8 +464,9 @@ class StreamingSpec extends AnyFunSuite {
       .collect().map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2), r.getDouble(3)))).toMap
     // Jan 1 summary must aggregate ALL closed Jan-1 sessions — and must
     // equal a batch recompute from the sessions table (parity check)
-    val expected = spark.read.parquet(s"$root/sessions")
-      .withColumn("session_date", to_date(col("session_start")))
+    assert(sessions.filter(col("session_date") =!= to_date(col("session_start"))).isEmpty,
+      "the sessions table is partitioned on date(session_start)")
+    val expected = sessions
       .filter(col("session_date") === "2024-01-01")
       .agg(count(lit(1)), sum(col("n")), round(sum(col("total")), 6))
       .collect()(0)
