@@ -16,8 +16,8 @@ import org.apache.spark.sql.types.LongType
   * hash-checks the kernel row-for-row against DuckDB. The layout
   * EFFECT (file skipping) is measured at the parquet-footer level in
   * `graft.pipeline.ZOrderSpec`; the transactional compaction that
-  * applies the kernel to a live table is
-  * [[graft.pipeline.TxTable.compactZOrder]].
+  * applies the kernel to a live table's append runs is
+  * [[graft.pipeline.TxTable.compactLeveled]].
   */
 object ZOrderOps {
 

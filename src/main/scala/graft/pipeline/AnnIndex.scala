@@ -550,9 +550,9 @@ object AnnIndex {
 
   /** Many small appends fragment the postings table (one file set per
     * commit); merge the accumulated append runs back into bounded
-    * LEVELED runs ([[TxTable.compactLeveled]], r15 — this was
-    * [[TxTable.compactAll]], the O(corpus) full rewrite the r13/r14
-    * maintenance work retired everywhere else: a cadenced compact that
+    * LEVELED runs ([[TxTable.compactLeveled]], r15 — this was the
+    * O(corpus) full rewrite the r13/r14 maintenance work retired
+    * everywhere else, SCALE.md §16d: a cadenced compact that
     * re-reads and re-writes the whole postings table per firing is not
     * runnable at 100 TB, while a leveled firing touches only the
     * appends landed since the last one, promoting a level only when it

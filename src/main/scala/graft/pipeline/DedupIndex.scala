@@ -133,63 +133,6 @@ object DedupIndex {
       keyRowBound = bandRowBound)
   }
 
-  /** Coalesce a SORTED distinct point set into at most `maxRanges`
-    * inclusive [lo, hi] ranges covering every point: keep the
-    * (maxRanges - 1) LARGEST gaps between consecutive points as range
-    * splits, so the ranges hug the points and the spurious coverage
-    * (gap interiors a pushed range predicate also admits) is the
-    * minimum possible for that range budget. Driver-side, O(n log n).
-    *
-    * NOT on the probe's hot path (r15, measured; SCALE.md §17a): a
-    * fresh OR-of-ranges Column per ingest recompiles superlinearly in
-    * the leaf count (14 s first-eval at 96 leaves, paid per consumer
-    * per batch) — the probe pushes an In point set instead, whose
-    * InSet form compiles once per JVM. Kept as the range toolkit for
-    * stable (compile-once) predicates.
-    */
-  private[pipeline] def coalesceRanges(
-      sortedPoints: Array[Long], maxRanges: Int): Seq[(Long, Long)] = {
-    require(maxRanges >= 1, s"maxRanges must be >= 1, got $maxRanges")
-    val n = sortedPoints.length
-    if (n == 0) return Seq.empty
-    if (n <= maxRanges) return sortedPoints.map(p => (p, p)).toSeq
-    // gap i sits between points i and i+1; split at the largest ones.
-    // Gap widths as unsigned-safe Longs: points are sorted, so the
-    // difference never overflows (both fit in [Long.Min, Long.Max] and
-    // hi >= lo), except hi - lo may exceed Long.MaxValue for extreme
-    // spreads — compare via java.lang.Long.compareUnsigned on the raw
-    // difference, which is exact for hi >= lo.
-    val splits = (0 until n - 1)
-      .sortBy(i => sortedPoints(i + 1) - sortedPoints(i))(
-        Ordering.fromLessThan[Long]((a, b) => java.lang.Long.compareUnsigned(a, b) > 0))
-      .take(maxRanges - 1)
-      .sorted
-    val bounds = (-1 +: splits :+ (n - 1)).distinct.sorted
-    bounds.sliding(2).map { case Seq(a, b) =>
-      (sortedPoints(a + 1), sortedPoints(b))
-    }.toSeq
-  }
-
-  /** A balanced OR-tree of inclusive range predicates over `c` — the
-    * stats-prunable probe filter: Catalyst translates the Or/And/
-    * comparison tree to a parquet filter, and on the band_hash-
-    * clustered leveled layout each narrow range prunes to the row
-    * groups whose footer min/max it straddles. Balanced (not a linear
-    * fold) so 256 leaves cost depth 8, keeping both the analyzer and
-    * the generated row-level code shallow. Empty ranges = `false`
-    * (reads nothing).
-    */
-  private[pipeline] def rangePredicate(
-      c: org.apache.spark.sql.Column, ranges: Seq[(Long, Long)]): org.apache.spark.sql.Column = {
-    def build(rs: Seq[(Long, Long)]): org.apache.spark.sql.Column = rs match {
-      case Seq((lo, hi)) => if (lo == hi) c === lit(lo) else c >= lit(lo) && c <= lit(hi)
-      case _ =>
-        val (l, r) = rs.splitAt(rs.length / 2)
-        build(l) || build(r)
-    }
-    if (ranges.isEmpty) lit(false) else build(ranges)
-  }
-
   /** Probe session: a config clone of the caller's session holding
     * the raised parquet In-pushdown threshold the pruned probe needs
     * (default 10 would collapse a 100-point predicate to a useless
@@ -328,8 +271,8 @@ object DedupIndex {
 
   /** Index maintenance: merge the per-ingest append fragments into
     * bounded LEVELED runs ([[TxTable.compactLeveled]], r14 — the full
-    * [[TxTable.compactAll]] rewrite was O(index) per firing, the same
-    * scale-killer shape as the shard table's) and reclaim superseded
+    * rewrite it replaced was O(index) per firing, the same scale-killer
+    * shape as the shard table's; SCALE.md §16d) and reclaim superseded
     * dirs. Runs are clustered on band_hash within each band_id
     * partition, so a future stats-pruned probe layout stays possible.
     * Contents are unchanged, but the vacuum DELETES superseded version
@@ -535,13 +478,13 @@ object DedupIndex {
         .groupBy("band_id", "band_hash").agg(count(lit(1)).as("cnt"))
     }
     // ONE job commits the survivors: stage the admitted bands directly
-    // and publish only if any partition landed (appendCommitNonEmpty) —
-    // the former cut + count + write evaluated the cap window twice and
-    // paid an extra job for the emptiness probe; the staging write is
-    // now the single evaluation AND the materializing action of the
-    // non-eager `best` cut above.
+    // and publish only if any partition landed (appendCommit's empty-
+    // stage rule) — the former cut + count + write evaluated the cap
+    // window twice and paid an extra job for the emptiness probe; the
+    // staging write is now the single evaluation AND the materializing
+    // action of the non-eager `best` cut above.
     val admitted = admitWithCap(survivorBands, bucketCounts, p.maxBucket)
-    TxTable.appendCommitNonEmpty(spark, root, admitted, "band_id")
+    TxTable.appendCommit(spark, root, admitted, "band_id")
     // (newBands/admitted checkpoint blocks are reclaimed by the
     // ContextCleaner once this frame's references drop; the returned
     // verdicts only reference the checkpointed `best`)

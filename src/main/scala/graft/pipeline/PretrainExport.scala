@@ -660,7 +660,7 @@ object PretrainExport {
     * append adds one dir per touched partition to the shard AND band
     * tables, and per-append wall grows ~linearly in the accumulated
     * dir count as listings/scans fan out). When either table's
-    * [[TxTable.fragmentation]] crosses `maxDirsPerPartition`, run one
+    * [[TxTable.level0Fragmentation]] crosses `maxDirsPerPartition`, run one
     * LEVELED compaction step set ([[TxTable.compactLeveled]]): merge
     * only the level-0 append runs landed since the last firing into a
     * doc_id-clustered level-1 run, promoting a level up only when it

@@ -25,12 +25,14 @@ import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
   *     never shows a torn commit.
   *
   * Single-writer by design (the reference's hourly DAG is too).
-  * Concurrent committers stage into UNIQUE nonce-named dirs (never
-  * touching each other's files) and race only on the manifest
-  * create-if-absent CAS — the loser FAILS LOUDLY (never a silent
-  * clobber of a committed manifest); a reader can never observe a torn
-  * mix. [[publishOptimistic]]/[[appendPublish]] retry that race,
-  * [[publish]] treats it as a single-writer-contract violation.
+  * Committers stage into UNIQUE nonce-named dirs (never touching each
+  * other's files) and race only on the manifest create-if-absent CAS,
+  * so a reader can never observe a torn mix. A rewriting commit
+  * ([[publish]], [[deleteWhere]]) that loses that race FAILS LOUDLY —
+  * a single-writer-contract violation, never a silent clobber of a
+  * committed manifest. The two races that do happen are retried: blind
+  * appends ([[appendPublish]]) commute, and a leveled merge
+  * ([[compactLeveled]]) rebases over concurrent appends.
   */
 object TxTable {
 
@@ -39,8 +41,8 @@ object TxTable {
 
   /** Staged partition dirs as manifest entries: partition VALUE (in the
     * writer's escaped directory form) -> dir relative to root. The one
-    * place dir names become manifest keys — [[publishImpl]],
-    * [[publishOptimistic]] and [[deleteWhere]] all go through it.
+    * place dir names become manifest keys — every publish and
+    * [[deleteWhere]] go through it.
     */
   private def listStaged(f: org.apache.hadoop.fs.FileSystem, root: String,
       stagedDir: String, partitionCol: String): Map[String, String] =
@@ -223,55 +225,67 @@ object TxTable {
     * visible in the same instant; a crash anywhere before the rename
     * leaves the table at the previous version.
     *
-    * Concurrency: the table is single-writer by contract. If two
-    * publishers race anyway, each writes a complete self-consistent
-    * manifest and the version-number CAS picks exactly one winner — the
-    * loser throws (on the local FS too: hard-link create-if-absent, not
-    * an overwriting rename, so a committed manifest — e.g. a concurrent
-    * [[appendPublish]] — can never be silently clobbered). A reader can
-    * never observe a torn mix, because manifests are only ever created
-    * whole.
+    * Concurrency: single-writer by contract. If two publishers race
+    * anyway, the version-number CAS ([[casManifest]]) picks exactly one
+    * winner and the loser throws; a committed manifest — e.g. a
+    * concurrent [[appendPublish]] — is never clobbered.
     */
   def publish(spark: SparkSession, root: String, stagedDir: String, partitionCol: String): Unit =
-    publishImpl(spark, root, stagedDir, partitionCol, replaceAll = false)
+    publishVersion(spark, root, stagedDir, partitionCol)
 
-  private def publishImpl(spark: SparkSession, root: String, stagedDir: String,
-      partitionCol: String, replaceAll: Boolean): Unit = {
+  /** [[publish]], returning the committed version. */
+  private def publishVersion(spark: SparkSession, root: String, stagedDir: String,
+      partitionCol: String): Long = {
     val f = fs(spark, root)
     val (v, old) = latest(spark, root)
     val changed = listStaged(f, root, stagedDir, partitionCol)
     require(changed.nonEmpty, s"staged dir $stagedDir has no $partitionCol= partitions")
-    val next = v + 1
-    // replaceAll (compaction): the staged dir IS the whole table — a
-    // merge would keep an old entry alive whenever a partition VALUE
-    // round-trips to a different directory string (e.g. day=00123
-    // re-inferred as int and rewritten day=123), duplicating its rows
-    val entries = if (replaceAll) changed else old ++ changed
-    writeManifest(f, root, next, entries,
+    writeManifest(f, root, v + 1, old ++ changed,
       s"staged data remains at $root/$stagedDir")
   }
 
-  /** Single-writer publish tail shared by [[publishImpl]] and
+  /** Single-writer publish tail shared by [[publish]] and
     * [[deleteWhere]]: one create-if-absent CAS attempt at version
     * `next`. Routed through [[casManifest]] rather than a plain rename
     * because POSIX rename OVERWRITES — a concurrent [[appendPublish]]
     * that just CAS-committed the same version number would be silently
     * clobbered (a lost committed append). Losing the CAS here means
     * another writer took the version: the single-writer contract was
-    * violated, so fail LOUDLY with the recovery hint instead.
+    * violated, so fail LOUDLY with the recovery hint instead. Returns
+    * `next`.
     */
   private def writeManifest(f: org.apache.hadoop.fs.FileSystem, root: String,
-      next: Long, entries: Map[String, String], onFailure: String): Unit =
-    if (!casManifest(f, root, next, entries))
-      throw new java.io.IOException(
-        s"manifest publish failed for version $next (a concurrent writer " +
-          s"committed it first — this path is single-writer by contract); $onFailure")
+      next: Long, entries: Map[String, String], onFailure: String): Long =
+    if (casManifest(f, root, next, entries)) next
+    else throw new java.io.IOException(
+      s"manifest publish failed for version $next (a concurrent writer " +
+        s"committed it first — this path is single-writer by contract); $onFailure")
 
   /** Stage + publish in one call: the crash-safe replacement for a
-    * multi-partition dir-swap merge.
+    * multi-partition dir-swap merge. Returns the committed version, or
+    * the unchanged latest one when `data` is empty (`stageNonEmpty`).
     */
-  def commit(spark: SparkSession, root: String, data: DataFrame, partitionCol: String): Unit =
-    publish(spark, root, stage(spark, root, data, partitionCol), partitionCol)
+  def commit(spark: SparkSession, root: String, data: DataFrame, partitionCol: String): Long =
+    stageNonEmpty(spark, root, data, partitionCol)(publishVersion(spark, root, _, partitionCol))
+
+  /** The one empty-stage rule of [[commit]] and [[appendCommit]]: stage
+    * `data`, then publish only when at least one partition landed — ONE
+    * write job instead of the count-then-write pair an emptiness
+    * pre-check costs (the count re-evaluates the whole input). An empty
+    * staging (a bare dir with write metadata, no partition subdirs) is
+    * deleted at once as debris and the latest version is returned
+    * unchanged; no manifest is written.
+    */
+  private def stageNonEmpty(spark: SparkSession, root: String, data: DataFrame,
+      partitionCol: String)(publishStaged: String => Long): Long = {
+    val stagedDir = stage(spark, root, data, partitionCol)
+    val f = fs(spark, root)
+    if (listStaged(f, root, stagedDir, partitionCol).nonEmpty) publishStaged(stagedDir)
+    else {
+      f.delete(new Path(s"$root/$stagedDir"), true)
+      latest(spark, root)._1
+    }
+  }
 
   /** Row-level delete — the takedown/right-to-erasure path: remove every
     * row where `predicate` is TRUE (NULL = keep, standard SQL DELETE
@@ -349,66 +363,12 @@ object TxTable {
     deleted
   }
 
-  /** Thrown by [[publishOptimistic]] when another committer changed one
-    * of THIS commit's partitions after `baseVersion` — a write-write
-    * conflict the caller must resolve by re-deriving its data from the
-    * new table state.
-    */
-  final class WriteConflictException(msg: String) extends java.io.IOException(msg)
-
-  /** Optimistic multi-writer publish (snapshot OCC, the Delta/Iceberg
-    * commit protocol in miniature): the caller read the table at
-    * `baseVersion`, derived `stagedDir` from it, and now attempts to
-    * commit. If other writers committed in between, their manifests are
-    * REBASED under ours — unless one of them touched a partition we
-    * are changing, which is a [[WriteConflictException]] (partition-
-    * level write-write conflict; blind last-wins would silently drop
-    * their rows). The manifest create is the CAS: write-tmp then
-    * rename to the next version's name, which fails when that version
-    * was taken (HDFS rename-to-existing is atomic-no; the local-FS
-    * exists-check narrows the same race for tests) — the loser
-    * re-reads, re-checks conflicts, and retries at the next number.
-    * Disjoint-partition writers therefore ALL succeed, serialized by
-    * version number; same-partition writers fail loudly.
-    *
-    * Returns the committed version.
-    */
-  def publishOptimistic(
-      spark: SparkSession, root: String, stagedDir: String, partitionCol: String,
-      baseVersion: Long, maxRetries: Int = 10): Long = {
-    val f = fs(spark, root)
-    val changed = listStaged(f, root, stagedDir, partitionCol)
-    require(changed.nonEmpty, s"staged dir $stagedDir has no $partitionCol= partitions")
-    val baseState: Map[String, String] =
-      if (baseVersion == 0L) Map.empty
-      else parseManifest(f, new Path(logDir(root), manifestName(baseVersion)))
-    val ld = new Path(logDir(root))
-    if (!f.exists(ld) && !f.mkdirs(ld))
-      throw new java.io.IOException(s"cannot create $ld")
-
-    var attempt = 0
-    while (attempt < maxRetries) {
-      attempt += 1
-      val (v, cur) = latest(spark, root)
-      require(v >= baseVersion, s"base version $baseVersion is ahead of the log ($v)")
-      // write-write check against every intervening commit
-      val conflicts = changed.keys.filter(k => cur.get(k) != baseState.get(k)).toSeq.sorted
-      if (conflicts.nonEmpty)
-        throw new WriteConflictException(
-          s"partitions [${conflicts.mkString(", ")}] changed since version $baseVersion — rebase required")
-      val next = v + 1
-      if (casManifest(f, root, next, cur ++ changed)) return next
-    }
-    throw new java.io.IOException(
-      s"could not commit after $maxRetries attempts — log is too contended")
-  }
-
   /** Atomic create-if-absent of manifest `next`. POSIX rename(2)
     * OVERWRITES an existing destination, so a check-then-rename on the
     * local FS would let two racers both pass the check and the second
-    * silently clobber the first's manifest — the exact lost commit the
-    * OCC protocol forbids. Hard LINK creation is the atomic
-    * create-if-absent POSIX does offer (link(2) fails EEXIST); HDFS
+    * silently clobber the first's manifest — a lost commit. Hard LINK
+    * creation is the atomic create-if-absent POSIX does offer (link(2)
+    * fails EEXIST); HDFS
     * rename already refuses an existing destination atomically in the
     * namenode. Returns whether THIS writer won version `next`.
     */
@@ -467,23 +427,23 @@ object TxTable {
   /** BLIND APPEND: add `stagedDir`'s partitions to the table WITHOUT
     * rewriting anything — each touched partition's manifest entry grows
     * by one dir; its existing dirs (and every untouched partition) carry
-    * over verbatim. Appends COMMUTE, so unlike [[publishOptimistic]]
-    * there is no write-write conflict under any concurrency: concurrent
-    * appenders race only on the manifest CAS and the loser simply
-    * remerges on top of the winner (the Delta "blind appends never
-    * conflict" rule). The scale rationale: an incremental ingest at
-    * 100 TB must cost O(increment), never O(partition) — rewrite-commit
-    * ([[commit]]) rewrites every touched partition, append-commit writes
-    * only the new rows.
+    * over verbatim. Appends COMMUTE, so there is no write-write
+    * conflict under any concurrency: concurrent appenders race only on
+    * the manifest CAS and the loser simply remerges on top of the
+    * winner (the Delta "blind appends never conflict" rule). The scale
+    * rationale: an incremental ingest at 100 TB must cost O(increment),
+    * never O(partition) — rewrite-commit ([[commit]]) rewrites every
+    * touched partition, append-commit writes only the new rows.
     *
     * Tradeoff: each append adds one dir (and its files) to the
-    * partition's scan list — run [[compactAll]] when accumulated appends
-    * fragment reads, exactly like Delta OPTIMIZE.
+    * partition's scan list — run [[compactLeveled]] when accumulated
+    * appends fragment reads, like Delta OPTIMIZE.
     *
     * Returns the committed version.
     */
   def appendPublish(spark: SparkSession, root: String, stagedDir: String,
-      partitionCol: String, maxRetries: Int = 10): Long = {
+      partitionCol: String): Long = {
+    val maxAttempts = 10
     val f = fs(spark, root)
     val changed = listStaged(f, root, stagedDir, partitionCol)
     require(changed.nonEmpty, s"staged dir $stagedDir has no $partitionCol= partitions")
@@ -491,7 +451,7 @@ object TxTable {
     if (!f.exists(ld) && !f.mkdirs(ld))
       throw new java.io.IOException(s"cannot create $ld")
     var attempt = 0
-    while (attempt < maxRetries) {
+    while (attempt < maxAttempts) {
       attempt += 1
       val (v, cur) = latest(spark, root)
       val entries = cur ++ changed.map { case (k, dir) =>
@@ -500,41 +460,15 @@ object TxTable {
       if (casManifest(f, root, v + 1, entries)) return v + 1
     }
     throw new java.io.IOException(
-      s"could not append after $maxRetries attempts — log is too contended")
+      s"could not append after $maxAttempts attempts — log is too contended")
   }
 
-  /** Stage + blind-append in one call: the O(increment) ingest commit. */
+  /** Stage + blind-append in one call: the O(increment) ingest commit.
+    * Same empty-stage rule as [[commit]]: an empty `data` publishes
+    * nothing and returns the unchanged latest version. */
   def appendCommit(spark: SparkSession, root: String, data: DataFrame,
       partitionCol: String): Long =
-    appendPublish(spark, root, stage(spark, root, data, partitionCol), partitionCol)
-
-  /** [[appendCommit]] tolerating a POSSIBLY-EMPTY increment: stage
-    * first, publish only when at least one partition actually landed —
-    * ONE write job instead of the count-then-write pair an emptiness
-    * pre-check costs (the count re-evaluates the whole increment; at
-    * increment sizes the fixed per-job driver latency is the dominant
-    * term, r13 verdict item 1). An empty staging (a bare dir with
-    * write metadata, no partition subdirs) is deleted immediately as
-    * debris and the table version is unchanged. Returns the committed
-    * version (or the unchanged latest). */
-  def appendCommitNonEmpty(spark: SparkSession, root: String, data: DataFrame,
-      partitionCol: String): Long = {
-    val stagedDir = stage(spark, root, data, partitionCol)
-    val f = fs(spark, root)
-    if (listStaged(f, root, stagedDir, partitionCol).nonEmpty)
-      appendPublish(spark, root, stagedDir, partitionCol)
-    else {
-      f.delete(new Path(s"$root/$stagedDir"), true)
-      latest(spark, root)._1
-    }
-  }
-
-  /** Read-stage-publish with OCC: returns the committed version. */
-  def commitOptimistic(
-      spark: SparkSession, root: String, data: DataFrame, partitionCol: String): Long = {
-    val base = latest(spark, root)._1
-    publishOptimistic(spark, root, stage(spark, root, data, partitionCol), partitionCol, base)
-  }
+    stageNonEmpty(spark, root, data, partitionCol)(appendPublish(spark, root, _, partitionCol))
 
   /** Incremental read: the rows ADDED between `sinceVersion` (exclusive)
     * and `toVersion` (inclusive) — the cheap "new data since version V"
@@ -547,8 +481,8 @@ object TxTable {
     * Valid ONLY across blind-append commits ([[appendCommit]] /
     * [[appendPublish]]), whose manifest entries GROW — every old
     * partition keeps its dirs and new dirs join the tail. A rewriting
-    * commit in the window ([[commit]], [[deleteWhere]], [[compactAll]],
-    * [[compactZOrder]]) re-homes EXISTING rows into fresh dirs, where a
+    * commit in the window ([[commit]], [[deleteWhere]],
+    * [[compactLeveled]]) re-homes EXISTING rows into fresh dirs, where a
     * dir-level diff would double-count them as new — detected (an old
     * entry whose dir list is not a prefix of the new one, or a dropped
     * partition) and REFUSED loudly: the consumer must re-baseline from a
@@ -616,57 +550,6 @@ object TxTable {
           "or point the writer at a fresh root")
   }
 
-  /** Compact the table: rewrite EVERY live partition into one fresh
-    * version dir and publish it as the COMPLETE new manifest. Bounds the
-    * version-dir sprawl an incremental writer accretes (each commit
-    * leaves its partitions scattered across the version dirs that last
-    * touched them — after thousands of commits a read unions thousands
-    * of scans). The manifest is replaced wholesale, not merged: since
-    * the staged dir holds every live row, merging could only resurrect
-    * stale entries (a partition value whose directory form changes
-    * across the read/write round-trip would otherwise stay live twice).
-    * Run [[vacuum]] afterwards to reclaim the superseded dirs; time
-    * travel before the compaction point survives until then.
-    */
-  def compactAll(spark: SparkSession, root: String, partitionCol: String): Unit =
-    publishImpl(spark, root, stage(spark, root, read(spark, root), partitionCol),
-      partitionCol, replaceAll = true)
-
-  /** Z-order compaction (the OPTIMIZE ZORDER BY analog): [[compactAll]]
-    * plus the [[TableLayout.zValue]] clustered layout — rows are
-    * range-partitioned on (partitionCol, morton(zorderCols)) and sorted
-    * within tasks, so after the rewrite each partition dir's files
-    * cover COMPACT z-curve segments and every zorder column's parquet
-    * min/max footer is tight. A later scan with a box predicate on the
-    * zorder columns prunes most files by statistics alone
-    * (`graft.pipeline.ZOrderSpec` has the measured bound); an
-    * append-heavy table instead accretes files whose per-column ranges
-    * each span the whole domain, so every box scan reads every file.
-    * Same crash-safety as compactAll: the clustered rewrite stages
-    * invisibly and ONE manifest CAS replaces the table wholesale; time
-    * travel to pre-compaction versions survives until [[vacuum]].
-    *
-    * `numFiles` bounds the range exchange's partition count — size it
-    * as liveBytes / targetFileBytes (e.g. 1 GiB targets) at scale; the
-    * partitionBy write splits each task's rows by partition value, and
-    * because tasks hold contiguous (partition, z) ranges the per-dir
-    * files stay z-contiguous.
-    */
-  def compactZOrder(spark: SparkSession, root: String, partitionCol: String,
-      zorderCols: Seq[String], bits: Int = 16, numFiles: Int = 64): Unit = {
-    import org.apache.spark.sql.functions.col
-    val data = read(spark, root)
-    val zkey = TableLayout.zValue(
-      zorderCols.map(col), TableLayout.columnBounds(data, zorderCols), bits)
-    val kc = graft.ops.SkewOps.freshName(data, "_z")
-    val clustered = data.withColumn(kc, zkey)
-      .repartitionByRange(numFiles, col(partitionCol), col(kc))
-      .sortWithinPartitions(partitionCol, kc)
-      .drop(kc)
-    publishImpl(spark, root, stage(spark, root, clustered, partitionCol),
-      partitionCol, replaceAll = true)
-  }
-
   /** Run level of a version dir: append-staged dirs (`v<N>-<nonce>`)
     * are level-0 runs; [[compactLeveled]] merges write `-l<k>`-suffixed
     * dirs, so the leveling policy is derivable from the manifest alone
@@ -674,17 +557,27 @@ object TxTable {
   private def runLevel(vdir: String): Int =
     "-l(\\d+)$".r.findFirstMatchIn(vdir).map(_.group(1).toInt).getOrElse(0)
 
+  /** Test-only injection points for [[compactLeveled]]'s rebase publish:
+    * deterministic lost-CAS coverage without a real thread race.
+    * `Publish` fires immediately before every CAS attempt (a spec makes
+    * it append once to steal the version); `Rebase` fires at the start
+    * of every retry. Production never sets these. */
+  private[pipeline] var testHookCompactPublish: () => Unit = () => ()
+  private[pipeline] var testHookCompactRebase: () => Unit = () => ()
+
   /** LEVELED (size-tiered) compaction — O(period) routine maintenance
-    * for an append-only table, replacing [[compactAll]]/[[compactZOrder]]'s
-    * O(corpus) full rewrite in the maintenance cadence (the r13
+    * for an append-only table, replacing the O(corpus) full-table
+    * rewrite earlier rounds ran in the maintenance cadence (the r13
     * verdict's one named scale-killer: at 100 TB a maintenance pass
-    * that re-reads and re-writes the whole corpus is not runnable).
+    * that re-reads and re-writes the whole corpus is not runnable;
+    * SCALE.md §16d).
     *
     * Model: every dir in a manifest entry is a RUN; append dirs are
-    * level-0 runs. One call merges ALL current level-0 runs into ONE
-    * level-1 run — clustered like [[compactZOrder]] (range-partitioned
-    * on (partitionCol, z(zorderCols)), sorted within tasks, so each
-    * run's parquet min/max footers stay tight and the id-range probes
+    * level-0 runs. One call merges ALL current level-0 runs (once there
+    * are at least two) into ONE level-1 run — z-clustered (range-
+    * partitioned on (partitionCol, z(zorderCols)) at 16 bits per column,
+    * sorted within tasks, so each run's parquet min/max footers stay
+    * tight and the id-range probes
     * an incremental writer runs keep pruning by statistics) — then,
     * while any level holds >= `fanout` runs, promotes that level into
     * one run of the next. Cost per call is O(bytes merged): routine
@@ -703,8 +596,8 @@ object TxTable {
     * (higher-level runs are strictly older than lower, so entries stay
     * chronological). Run [[vacuum]] afterwards to reclaim merged dirs.
     *
-    * Returns the number of merge steps performed (0 = fewer than
-    * `minLevel0` level-0 runs and nothing promotable — call again
+    * Returns the number of merge steps performed (0 = fewer than two
+    * level-0 runs and nothing promotable — call again
     * after more appends).
     *
     * `minMergeLevel`/`maxMergeLevel` bound WHICH levels may merge —
@@ -728,17 +621,8 @@ object TxTable {
     * single-owner violation and still fails loudly. Do not run TWO
     * compactors over the same LEVELS; appenders are free.
     */
-  /** Test-only injection points for [[compactLeveled]]'s rebase publish:
-    * deterministic lost-CAS coverage without a real thread race.
-    * `Publish` fires immediately before every CAS attempt (a spec makes
-    * it append once to steal the version); `Rebase` fires at the start
-    * of every retry. Production never sets these. */
-  private[pipeline] var testHookCompactPublish: () => Unit = () => ()
-  private[pipeline] var testHookCompactRebase: () => Unit = () => ()
-
   def compactLeveled(spark: SparkSession, root: String, partitionCol: String,
-      zorderCols: Seq[String], fanout: Int = 8, bits: Int = 16,
-      numFiles: Int = 16, minLevel0: Int = 2,
+      zorderCols: Seq[String], fanout: Int = 8,
       minMergeLevel: Int = 0, maxMergeLevel: Int = Int.MaxValue): Int = {
     import org.apache.spark.sql.functions.col
     require(fanout >= 2, s"fanout must be >= 2, got $fanout")
@@ -752,12 +636,12 @@ object TxTable {
       if (v == 0) return steps
       val byLevel = entries.values.flatMap(dirsOf).map(_.takeWhile(_ != '/'))
         .toSet.groupBy(runLevel)
-      // lowest level first: merge l0 whenever >= minLevel0 runs (the
+      // lowest level first: merge l0 whenever >= 2 runs (the
       // routine firing), promote level k>=1 only at fanout — within
       // the caller's [minMergeLevel, maxMergeLevel] window
       val mergeable = byLevel.collect {
         case (0, ds) if minMergeLevel <= 0 && 0 <= maxMergeLevel &&
-          ds.size >= minLevel0 => (0, ds)
+          ds.size >= 2 => (0, ds)
         case (k, ds) if k >= 1 && k >= minMergeLevel && k <= maxMergeLevel &&
           ds.size >= fanout => (k, ds)
       }.toSeq.sortBy(_._1)
@@ -774,7 +658,7 @@ object TxTable {
           // sizing, no job): a routine level-0 firing keeps the small
           // default, while a top-level promotion that merges most of
           // the corpus fans out to ~512 MiB output files instead of
-          // serializing the whole merge through `numFiles` range
+          // serializing the whole merge through 16 range
           // partitions (unbounded file sizes + a 16-way sort of the
           // corpus at the 100 TB framing)
           val mergedBytes = toMerge.toSeq.map { d =>
@@ -783,9 +667,9 @@ object TxTable {
           }.sum
           val targetFileBytes = 512L * 1024 * 1024
           val nf = math.min(4096L,
-            math.max(numFiles.toLong, mergedBytes / targetFileBytes + 1)).toInt
+            math.max(16L, mergedBytes / targetFileBytes + 1)).toInt
           val zkey = TableLayout.zValue(
-            zorderCols.map(col), TableLayout.columnBounds(data, zorderCols), bits)
+            zorderCols.map(col), TableLayout.columnBounds(data, zorderCols), 16)
           val kc = graft.ops.SkewOps.freshName(data, "_z")
           val clustered = data.withColumn(kc, zkey)
             .repartitionByRange(nf, col(partitionCol), col(kc))
@@ -843,33 +727,6 @@ object TxTable {
     steps
   }
 
-  /** Table history (the DESCRIBE HISTORY analog): one row per
-    * still-travelable version — (version, committedAt millis, partition
-    * count, dir count). Dir count > partition count measures append
-    * fragmentation (when the gap grows, run [[compactAll]]). Reads only
-    * the manifest log; never touches data files.
-    */
-  def history(spark: SparkSession, root: String): Seq[(Long, Long, Int, Int)] = {
-    val f = fs(spark, root)
-    val ld = new Path(logDir(root))
-    if (!f.exists(ld)) return Seq.empty
-    f.listStatus(ld)
-      .filter(_.getPath.getName.endsWith(".manifest"))
-      .sortBy(_.getPath.getName)
-      .flatMap { st =>
-        // a concurrent vacuum may delete a superseded manifest between
-        // the listing and this read — skip it, like latest() effectively
-        // does (vacuum never deletes the max manifest)
-        try {
-          val entries = parseManifest(f, st.getPath)
-          Some((st.getPath.getName.stripSuffix(".manifest").toLong,
-            st.getModificationTime,
-            entries.size,
-            entries.values.map(dirsOf(_).size).sum))
-        } catch { case _: java.io.FileNotFoundException => None }
-      }.toSeq
-  }
-
   /** Total bytes of the live version dirs at the latest committed
     * version — a driver-side fs walk (no Spark job), the cheap size
     * signal a probe-regime gate reads ([[DedupIndex]]'s scan-vs-prune
@@ -894,9 +751,7 @@ object TxTable {
     * latest version (1.0 = perfectly compacted; each blind append adds
     * one dir to every partition it touches, so a pure appender's value
     * grows by ~1 per commit). 0 when the table has no committed
-    * version. The cheap poll a maintenance cadence reads —
-    * [[history]] gives the same number per version but parses every
-    * manifest. */
+    * version. The cheap poll a maintenance cadence reads. */
   def fragmentation(spark: SparkSession, root: String): Double = {
     val (v, entries) = latest(spark, root)
     if (v == 0 || entries.isEmpty) 0.0

@@ -71,10 +71,11 @@ object StreamingPipeline {
     * and the socket connector tier ([[runSocketToSilver]]).
     *
     * Silver is a [[TxTable]] partitioned by reading_date (read it with
-    * `TxTable.read`): the merged table is staged invisibly and published
+    * `TxTable.read`): the merged days are staged invisibly and published
     * by one manifest rename, so a batch killed before the publish leaves
     * the previous version live and its replay from the checkpoint
-    * converges to the same rows.
+    * converges to the same rows. Only the batch's days are read and
+    * restaged, so a batch costs O(days it touches), not O(table).
     */
   def mergeBatchToSilver(
       batch: DataFrame,
@@ -127,9 +128,10 @@ object StreamingPipeline {
           .withColumn("ingested_at", current_timestamp())
           .withColumnRenamed("value", "raw_line")
         val fresh = SensorPipeline.bronzeToSilver(bronze)
-        // a batch without one valid reading changes neither silver nor
-        // gold (and a TxTable has no empty version to publish)
-        if (fresh.isEmpty) return
+        // a batch without one valid reading touches no day, and changes
+        // neither silver nor gold
+        val days = partitionValues(fresh, "reading_date")
+        if (days.isEmpty) return
         val spark = batch.sparkSession
         // dbt-merge on raw_id — SAME key as the batch path, so the two
         // tiers keep identical semantics (duplicate identical readings
@@ -139,14 +141,13 @@ object StreamingPipeline {
         val merged =
           if (TxTable.latest(spark, silverPath)._1 == 0) fresh
           else Merge.merge(
-            TxTable.read(spark, silverPath), fresh,
+            TxTable.read(spark, silverPath).filter(col("reading_date").isin(days: _*)), fresh,
             Seq("raw_id"),
             Seq(col("processed_at").desc, col("reading_time").desc))
-        commitWholeTable(spark, silverPath, merged, "reading_date")
+        commitAndVacuum(spark, silverPath, merged, "reading_date")
         // gold increment inside the SAME batch (reference: staging >>
         // marts ordering per hourly run, sensor_data_pipeline.py:88)
         goldPath.foreach(gp => goldTxCommit(spark, silverPath, gp))
-        ()
   }
 
   /** IoT socket-source connector variant (north star "Structured
@@ -190,18 +191,31 @@ object StreamingPipeline {
     val target =
       if (TxTable.latest(spark, goldRoot)._1 > 0) Some(TxTable.read(spark, goldRoot)) else None
     val fresh = Incremental.goldAffectedDays(TxTable.read(spark, silverPath), target)
-    if (!fresh.isEmpty) TxTable.commit(spark, goldRoot, fresh, "reading_date")
+    commitAndVacuum(spark, goldRoot, fresh, "reading_date")
   }
 
-  /** Publish a whole-table merge result as one TxTable commit. The merge
-    * keys fix each row's partition (reading_date derives from the line a
-    * raw_id names, session_date from the session_start key), so the
-    * staged dir restages every live partition and the previous version
-    * dirs are superseded whole; [[TxTable.vacuum]] reclaims them once
-    * past its reader-retention horizon, so the sink keeps about one copy
-    * of the table rather than one per micro-batch.
+  /** The distinct `partitionCol` values of a micro-batch, in ONE job:
+    * each task keeps its own value set and the driver merges them, so
+    * no exchange runs. The values are days, bounded by the calendar.
+    *
+    * A sink merges a batch into only the target rows in these
+    * partitions, because the merge keys fix each row's partition
+    * (reading_date derives from the line a raw_id names, session_date
+    * from the session_start key). That semi join is a literal IN filter
+    * on the partition column, so the scan prunes the other partitions
+    * at planning time and no broadcast job runs.
     */
-  private def commitWholeTable(
+  private def partitionValues(batch: DataFrame, partitionCol: String): Seq[Any] =
+    batch.select(partitionCol).rdd
+      .mapPartitions(rows => Iterator(rows.map(_.get(0)).toSet))
+      .fold(Set.empty[Any])(_ ++ _).toSeq
+
+  /** Every sink commit: publish `data` as one TxTable commit (nothing
+    * when it is empty), then [[TxTable.vacuum]] the table, so superseded
+    * version dirs and manifests are reclaimed once past the reader-
+    * retention horizon instead of piling up one set per micro-batch.
+    */
+  private def commitAndVacuum(
       spark: SparkSession, root: String, data: DataFrame, partitionCol: String): Unit = {
     TxTable.commit(spark, root, data, partitionCol)
     TxTable.vacuum(spark, root)
@@ -247,7 +261,7 @@ object StreamingPipeline {
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) TxTable.commit(batch.sparkSession, goldRoot, batch, "reading_date")
+        commitAndVacuum(batch.sparkSession, goldRoot, batch, "reading_date")
         ()
       }
       .start()
@@ -290,9 +304,10 @@ object StreamingPipeline {
     * Append), and each micro-batch (1) merges them idempotently into a
     * durable sessions [[TxTable]] partitioned by `session_date` =
     * date(session_start) — session identity (user_id, session_start)
-    * dedups foreachBatch's at-least-once replays, the raw_id pattern —
-    * then (2) recomputes the per-day session summary for exactly the
-    * days this batch's sessions touch and publishes those days through
+    * dedups foreachBatch's at-least-once replays, the raw_id pattern;
+    * only the batch's days are read and restaged — then (2) recomputes
+    * the per-day session summary for exactly the days this batch's
+    * sessions touch and publishes those days through
     * [[graft.pipeline.TxTable]] atomically. Same affected-partition
     * shape as the Power gold, driven by streaming state output instead
     * of a watermark scan. Read with `TxTable.read(spark, goldRoot)`:
@@ -312,24 +327,25 @@ object StreamingPipeline {
       .trigger(Trigger.AvailableNow())
       .foreachBatch {
         (batch: org.apache.spark.sql.Dataset[StatefulSessions.ClosedSession], _: Long) =>
-          if (!batch.isEmpty) {
-            val s = batch.sparkSession
-            val b = batch.toDF().localCheckpoint(true) // consumed twice below
-              .withColumn("session_date", to_date(col("session_start")))
+          val s = batch.sparkSession
+          val b = batch.toDF().localCheckpoint(true) // consumed twice below
+            .withColumn("session_date", to_date(col("session_start")))
+          val days = partitionValues(b, "session_date")
+          if (days.nonEmpty) {
             val merged =
               if (TxTable.latest(s, sessionsPath)._1 == 0) b
-              else Merge.merge(TxTable.read(s, sessionsPath), b,
-                Seq("user_id", "session_start"), Seq(col("session_end").desc))
-            commitWholeTable(s, sessionsPath, merged, "session_date")
-            val days = b.select(col("session_date")).distinct()
+              else Merge.merge(
+                TxTable.read(s, sessionsPath).filter(col("session_date").isin(days: _*)),
+                b, Seq("user_id", "session_start"), Seq(col("session_end").desc))
+            commitAndVacuum(s, sessionsPath, merged, "session_date")
             val fresh = TxTable.read(s, sessionsPath)
-              .join(broadcast(days), Seq("session_date"), "left_semi")
+              .filter(col("session_date").isin(days: _*))
               .groupBy("session_date")
               .agg(
                 count(lit(1)).as("n_sessions"),
                 sum(col("n")).as("n_events"),
                 round(sum(col("total")), 6).as("total_value"))
-            TxTable.commit(s, goldRoot, fresh, "session_date")
+            commitAndVacuum(s, goldRoot, fresh, "session_date")
           }
           ()
       }

@@ -134,39 +134,6 @@ class DedupIndexSpec extends AnyFunSuite {
     assert(DedupIndex.prefilterIndex(idx, inc.filter(lit(false))).count() == 0)
   }
 
-  test("coalesceRanges: covers every point, respects the budget, splits at the largest gaps") {
-    // distinct sorted points with one huge gap: budget 2 must split there
-    val pts = Array(10L, 12L, 15L, 1000000L, 1000002L)
-    assert(DedupIndex.coalesceRanges(pts, 2) == Seq((10L, 15L), (1000000L, 1000002L)))
-    // budget >= n: every point its own [p, p]
-    assert(DedupIndex.coalesceRanges(pts, 5) == pts.map(p => (p, p)).toSeq)
-    assert(DedupIndex.coalesceRanges(pts, 99) == pts.map(p => (p, p)).toSeq)
-    // budget 1: one range spanning everything
-    assert(DedupIndex.coalesceRanges(pts, 1) == Seq((10L, 1000002L)))
-    // budget 3: the two largest gaps split (15->1e6 and 10->12? no — 12->15
-    // is 3, 10->12 is 2: splits at 15->1e6 and 12->15)
-    assert(DedupIndex.coalesceRanges(pts, 3) == Seq((10L, 12L), (15L, 15L), (1000000L, 1000002L)))
-    // unsigned gap widths: points straddling Long overflow boundaries
-    val wide = Array(Long.MinValue + 1, -5L, 5L, Long.MaxValue - 1)
-    val r = DedupIndex.coalesceRanges(wide, 2)
-    assert(r.length == 2 && r.head._1 == Long.MinValue + 1 && r.last._2 == Long.MaxValue - 1)
-    assert(wide.forall(p => r.exists { case (lo, hi) => p >= lo && p <= hi }))
-    assert(DedupIndex.coalesceRanges(Array.empty[Long], 4) == Seq.empty)
-  }
-
-  test("rangePredicate: admits exactly the covered values; empty = nothing") {
-    val vals = spark.range(0, 100).toDF("band_hash")
-    val pred = DedupIndex.rangePredicate(col("band_hash"),
-      Seq((3L, 5L), (10L, 10L), (90L, 92L)))
-    val got = vals.filter(pred).collect().map(_.getLong(0)).toSet
-    assert(got == Set(3L, 4L, 5L, 10L, 90L, 91L, 92L))
-    assert(vals.filter(DedupIndex.rangePredicate(col("band_hash"), Seq.empty)).count() == 0)
-    // a 300-range predicate analyzes and evaluates (balanced tree depth)
-    val many = (0 until 300).map(i => (i * 10L, i * 10L + 1))
-    assert(vals.filter(DedupIndex.rangePredicate(col("band_hash"), many))
-      .count() == 20) // 0,1,10,11,...,90,91 within [0,100)
-  }
-
   test("probe regimes are verdict- and index-identical: bloom scan, tiny-increment ranges, narrow matched pass, fallback (r15)") {
     // the same three-ingest sequence under every probe regime must
     // produce bit-identical verdicts AND stored band tables — the

@@ -178,7 +178,7 @@ class LeveledCompactSpec extends AnyFunSuite {
         fired = true
         // another owner full-rewrites the table: the merge's source
         // runs are no longer live — rebasing would resurrect them
-        TxTable.compactAll(spark, root, "p")
+        TxTable.commit(spark, root, TxTable.read(spark, root), "p")
       }
     }
     val e = try intercept[java.io.IOException] {

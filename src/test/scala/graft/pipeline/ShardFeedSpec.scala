@@ -143,9 +143,9 @@ class ShardFeedSpec extends AnyFunSuite {
     PretrainExport.append(spark, root, mkDocs(b1))
     val v1 = PretrainExport.shardVersion(spark, root)
     PretrainExport.append(spark, root, mkDocs(b2))
-    // compaction re-homes EVERY live row into fresh dirs: a dir-level
+    // a full rewrite re-homes EVERY live row into fresh dirs: a dir-level
     // delta from v1 would double-count all of b1's rows as new
-    TxTable.compactAll(spark, s"$root/shards", "shard")
+    TxTable.commit(spark, s"$root/shards", TxTable.read(spark, s"$root/shards"), "shard")
     val e = intercept[IllegalArgumentException] {
       PretrainExport.newShardsSince(spark, root, v1)
     }

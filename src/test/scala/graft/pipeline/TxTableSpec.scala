@@ -187,52 +187,6 @@ class TxTableSpec extends AnyFunSuite {
     assert(ex.getMessage.contains("CAST_INVALID_INPUT"), ex.getMessage.take(200))
   }
 
-  test("compactAll rewrites every live partition into one version; vacuum then drops the rest") {
-    val root = graft.TestTmp.dir("txtable9") + "/t"
-    TxTable.commit(spark, root, rows("d1" -> 1.0, "d2" -> 2.0), "day")
-    TxTable.commit(spark, root, rows("d1" -> 10.0), "day")
-    TxTable.commit(spark, root, rows("d3" -> 3.0), "day")
-    val before = snapshot(root)
-    TxTable.compactAll(spark, root, "day")
-    assert(snapshot(root) == before, "compaction must not change table contents")
-    TxTable.vacuum(spark, root, retainMs = 0L) // eager mode: no reader grace
-    val live = new java.io.File(root).listFiles().map(_.getName).filter(_.startsWith("v")).toSet
-    assert(live.size == 1, s"after compact+vacuum exactly ONE version dir survives: $live")
-    assert(snapshot(root) == before, "read identical after vacuum")
-  }
-
-  test("optimistic concurrency: disjoint-partition writers both commit; same-partition conflict throws") {
-    val root = graft.TestTmp.dir("graft-txocc") + "/t"
-    TxTable.commit(spark, root, rows("d1" -> 1.0, "d2" -> 2.0), "day") // v1
-
-    // A reads at v1 and stages d1; B commits d2 first; A must REBASE
-    // cleanly (disjoint partitions) and land at v3 with BOTH updates
-    val baseA = TxTable.latest(spark, root)._1
-    val stagedA = TxTable.stage(spark, root, rows("d1" -> 10.0), "day")
-    val vB = TxTable.commitOptimistic(spark, root, rows("d2" -> 20.0), "day")
-    assert(vB == 2L)
-    val vA = TxTable.publishOptimistic(spark, root, stagedA, "day", baseA)
-    assert(vA == 3L)
-    assert(snapshot(root) == Set(("d1", 10.0), ("d2", 20.0)))
-
-    // C reads at v3 and stages d2; D commits d2 in between: C's publish
-    // must fail with a write-write conflict, and the table keeps D's row
-    val baseC = TxTable.latest(spark, root)._1
-    val stagedC = TxTable.stage(spark, root, rows("d2" -> 99.0), "day")
-    TxTable.commitOptimistic(spark, root, rows("d2" -> 21.0), "day")
-    val conflict = intercept[TxTable.WriteConflictException] {
-      TxTable.publishOptimistic(spark, root, stagedC, "day", baseC)
-    }
-    assert(conflict.getMessage.contains("d2"))
-    assert(snapshot(root) == Set(("d1", 10.0), ("d2", 21.0)))
-
-    // the failed commit left only invisible debris; vacuum collects it
-    // and a subsequent rebased retry (fresh base) succeeds
-    val retry = TxTable.commitOptimistic(spark, root, rows("d2" -> 99.0), "day")
-    assert(retry == 5L)
-    assert(snapshot(root) == Set(("d1", 10.0), ("d2", 99.0)))
-  }
-
   test("appendCommit: O(increment) — existing partition dirs carry over verbatim, new rows union in") {
     val root = graft.TestTmp.dir("txappend") + "/t"
     val v1 = TxTable.appendCommit(spark, root, rows("d1" -> 1.0, "d2" -> 2.0), "day")
@@ -250,6 +204,33 @@ class TxTableSpec extends AnyFunSuite {
     TxTable.commit(spark, root, rows("d1" -> 99.0), "day")
     assert(snapshot(root) == Set("d1" -> 99.0, "d2" -> 2.0, "d3" -> 3.0))
     assert(!TxTable.latest(spark, root)._2("d1").contains("\t"))
+  }
+
+  test("empty stage: commit and appendCommit of an empty frame publish nothing; publish of one throws") {
+    val dir = graft.TestTmp.dir("txempty")
+    val empty = rows("d1" -> 1.0).filter(lit(false))
+    def versionDirs(root: String) =
+      Option(new java.io.File(root).list()).toSeq.flatten.filter(_.startsWith("v")).toSet
+    def manifests(root: String) =
+      Option(new java.io.File(s"$root/_txlog").list()).toSeq.flatten.toSet
+    // a fresh root and a committed table: same rule for both commits
+    val committed = s"$dir/committed"
+    assert(TxTable.commit(spark, committed, rows("d1" -> 1.0), "day") == 1L)
+    for (root <- Seq(s"$dir/fresh", committed)) {
+      val (v, dirs, logs) = (TxTable.latest(spark, root)._1, versionDirs(root), manifests(root))
+      assert(TxTable.commit(spark, root, empty, "day") == v, root)
+      assert(TxTable.appendCommit(spark, root, empty, "day") == v, root)
+      assert(TxTable.latest(spark, root)._1 == v, s"$root: no version published")
+      assert(manifests(root) == logs, s"$root: no manifest written")
+      assert(versionDirs(root) == dirs, s"$root: the empty stage left no v* dir")
+    }
+    assert(snapshot(committed) == Set("d1" -> 1.0))
+    // the two-step API keeps refusing an empty staged dir
+    val staged = TxTable.stage(spark, committed, empty, "day")
+    val ex = intercept[IllegalArgumentException](TxTable.publish(spark, committed, staged, "day"))
+    assert(ex.getMessage.contains("has no day= partitions"), ex.getMessage)
+    intercept[IllegalArgumentException](TxTable.appendPublish(spark, committed, staged, "day"))
+    assert(TxTable.latest(spark, committed)._1 == 1L)
   }
 
   test("blind appends never conflict: two appenders to the SAME partition both land (the Delta append rule)") {
@@ -271,38 +252,6 @@ class TxTableSpec extends AnyFunSuite {
     assert(snapshot(root) == Set("d1" -> 1.0, "d1" -> 3.0))
     assert(!TxTable.latest(spark, root)._2("d1").contains("\t"),
       "delete's rewrite collapses the dir list")
-  }
-
-  test("history reports every travelable version with its fragmentation") {
-    val root = graft.TestTmp.dir("txhist") + "/t"
-    assert(TxTable.history(spark, root).isEmpty)
-    TxTable.commit(spark, root, rows("d1" -> 1.0, "d2" -> 2.0), "day")
-    TxTable.appendCommit(spark, root, rows("d1" -> 3.0), "day")
-    TxTable.appendCommit(spark, root, rows("d1" -> 4.0), "day")
-    val h = TxTable.history(spark, root)
-    assert(h.map(_._1) == Seq(1L, 2L, 3L))
-    assert(h.map(x => (x._3, x._4)) == Seq((2, 2), (2, 3), (2, 4)),
-      s"partition/dir counts must show the append fragmentation: $h")
-    TxTable.compactAll(spark, root, "day")
-    TxTable.vacuum(spark, root, retainMs = 0L) // eager mode: no reader grace
-    val h2 = TxTable.history(spark, root)
-    assert(h2.map(_._1) == Seq(4L), "vacuum drops superseded versions from history")
-    assert(h2.head._3 == 2 && h2.head._4 == 2, "compaction collapses dirs to one per partition")
-  }
-
-  test("appends compact away: compactAll collapses accumulated append dirs into one") {
-    val root = graft.TestTmp.dir("txappend3") + "/t"
-    TxTable.appendCommit(spark, root, rows("d1" -> 1.0), "day")
-    TxTable.appendCommit(spark, root, rows("d1" -> 2.0), "day")
-    TxTable.appendCommit(spark, root, rows("d1" -> 3.0), "day")
-    val frag = TxTable.latest(spark, root)._2("d1")
-    assert(frag.split("\t").length == 3, s"three appends -> three dirs: $frag")
-    TxTable.compactAll(spark, root, "day")
-    TxTable.vacuum(spark, root, retainMs = 0L) // eager mode: no reader grace
-    assert(!TxTable.latest(spark, root)._2("d1").contains("\t"))
-    assert(snapshot(root) == Set("d1" -> 1.0, "d1" -> 2.0, "d1" -> 3.0))
-    val live = new java.io.File(root).listFiles().map(_.getName).filter(_.startsWith("v")).toSet
-    assert(live.size == 1, s"one version dir after compact+vacuum: $live")
   }
 
   test("deleteWhere: partial-partition rewrite, full-partition drop, untouched files shared, audit trail") {

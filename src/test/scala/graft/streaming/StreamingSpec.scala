@@ -401,6 +401,61 @@ class StreamingSpec extends AnyFunSuite {
     }
   }
 
+  test("a batch restages only its own days: a one-day batch stages one reading_date dir") {
+    val root = graft.TestTmp.dir("graft-stream-days")
+    val bronzeDir = s"$root/bronze"
+    val silverPath = s"$root/silver"
+    new java.io.File(bronzeDir).mkdirs()
+    def drain(name: String, body: String): Unit = {
+      Files.writeString(java.nio.file.Paths.get(s"$bronzeDir/$name"), body)
+      StreamingPipeline.runBronzeToSilverAvailableNow(spark, bronzeDir, silverPath, s"$root/ckpt")
+    }
+    // batch 1 spans three days: 2022-04-14, -15 and -16
+    drain("b1.txt", "1649941817 Voltage 1.34\n1650028217 Voltage 2.0\n1650114617 Current 3.0\n")
+    val before = TxTable.latest(spark, silverPath)._2
+    assert(before.keySet == Set("2022-04-14", "2022-04-15", "2022-04-16"))
+    // batch 2 touches 2022-04-15 only
+    drain("b2.txt", "1650028218 Current 10.0\n")
+    val (v, after) = TxTable.latest(spark, silverPath)
+    assert(v == 2L)
+    val staged = new java.io.File(silverPath).list().filter(_.startsWith("v2-")).toSeq
+    assert(staged.size == 1, s"one staged dir for batch 2: $staged")
+    val dayDirs = new java.io.File(s"$silverPath/${staged.head}").list()
+      .filter(_.startsWith("reading_date=")).toSeq
+    assert(dayDirs == Seq("reading_date=2022-04-15"), s"batch 2 staged $dayDirs")
+    assert(after - "2022-04-15" == before - "2022-04-15",
+      "the untouched days keep their manifest entries")
+    val s = TxTable.read(spark, silverPath)
+    assert(s.count() == 4)
+    assert(s.filter(col("reading_date") === "2022-04-15").count() == 2,
+      "the touched day holds its old reading and the new one")
+  }
+
+  test("every sink commit vacuums: an unpublished version dir is gone after one batch") {
+    val root = graft.TestTmp.dir("graft-stream-vacuum")
+    val bronzeDir = s"$root/bronze"
+    val (silverPath, goldPath) = (s"$root/silver", s"$root/gold")
+    new java.io.File(bronzeDir).mkdirs()
+    def drain(name: String, body: String): Unit = {
+      Files.writeString(java.nio.file.Paths.get(s"$bronzeDir/$name"), body)
+      StreamingPipeline.runBronzeToSilverAvailableNow(
+        spark, bronzeDir, silverPath, s"$root/ckpt", goldPath = Some(goldPath))
+    }
+    drain("b1.txt", "1649941817 Voltage 1.34\n1649941817 Current 12.0\n")
+    // debris no manifest names, e.g. left by a writer killed before its
+    // publish; vacuum drops it once it is older than the latest manifest,
+    // whatever the reader-retention horizon
+    val dead = Seq(silverPath, goldPath).map { t =>
+      val d = new java.io.File(s"$t/v99-dead/reading_date=2022-04-14")
+      d.mkdirs()
+      Files.writeString(new java.io.File(d, "part-0.parquet").toPath, "not parquet")
+      new java.io.File(s"$t/v99-dead")
+    }
+    drain("b2.txt", "1650028217 Voltage 2.0\n1650028217 Current 10.0\n")
+    dead.foreach(d => assert(!d.exists(), s"$d must be vacuumed"))
+    assert(TxTable.read(spark, goldPath).count() == 2)
+  }
+
   test("first commit refuses a flat root: commit, appendCommit, silver sink") {
     val root = graft.TestTmp.dir("graft-flat")
     val rows = Seq(("2022-04-14", 1.0)).toDF("reading_date", "v")
