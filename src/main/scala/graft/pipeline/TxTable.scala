@@ -22,7 +22,10 @@ import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
   *   - readers list `_txlog`, take the highest `.manifest` (ignoring
   *     `.tmp` debris), and read exactly the dirs it names. Any crash
   *     before the rename leaves the previous manifest latest: the table
-  *     never shows a torn commit.
+  *     never shows a torn commit;
+  *   - the manifest is the only catalogue a read consults: its dirs are
+  *     the scan's partitions, one footer per version dir gives the
+  *     schema, so building a read launches no Spark job.
   *
   * Single-writer by design (the reference's hourly DAG is too).
   * Committers stage into UNIQUE nonce-named dirs (never touching each
@@ -102,12 +105,15 @@ object TxTable {
 
   /** Read the table at its latest committed version. Partitions may live
     * in different version dirs (each commit rewrites only the partitions
-    * it touched); one pruned scan per referenced version, unioned.
+    * it touched); they are still one relation, so one pruned scan.
     */
   def read(spark: SparkSession, root: String): DataFrame =
     readManifest(spark, root, latest(spark, root) match {
-      case (v, e) => require(v > 0 && e.nonEmpty, s"no committed version at $root"); e
+      case (v, e) => require(v > 0 && e.nonEmpty, s"no committed version at $root"); liveDirs(e)
     })
+
+  private def liveDirs(entries: Map[String, String]): Seq[String] =
+    entries.values.toSeq.flatMap(dirsOf)
 
   /** Time travel: read the table AS OF a past committed version — free,
     * because manifests are immutable and version dirs are append-only
@@ -119,25 +125,36 @@ object TxTable {
     val m = new Path(logDir(root), manifestName(version))
     require(f.exists(m),
       s"version $version does not exist at $root (committed or already vacuumed)")
-    readManifest(spark, root, parseManifest(f, m))
+    readManifest(spark, root, liveDirs(parseManifest(f, m)))
   }
 
-  private def readManifest(
-      spark: SparkSession, root: String, entries: Map[String, String]): DataFrame = {
-    val byVersion = entries.values.toSeq.flatMap(dirsOf).groupBy(_.takeWhile(_ != '/'))
-    // allowMissingColumns = schema evolution: a commit may ADD columns;
-    // partitions still living in older version dirs read as null for
-    // them (and a column dropped by a new commit survives as null on the
-    // new partitions until every partition is rewritten). Version dirs
-    // are iterated in sorted order so the NEWEST schema wins the union's
-    // column order deterministically.
-    val dfs = byVersion.toSeq.sortBy { case (vdir, _) =>
-      -vdir.drop(1).takeWhile(_.isDigit).toLong // numeric: v10 > v2
-    }.map { case (vdir, dirs) =>
-      spark.read
-        .option("basePath", s"$root/$vdir")
-        .parquet(dirs.map(d => s"$root/$d").toSeq: _*)
+  /** One relation per distinct schema over `dirs` (partition dirs
+    * relative to root), built from the manifest alone: partition values
+    * come from the dir names, each version dir's schema from one footer
+    * (all files of one staged write share it), and the dirs are listed on
+    * the driver — no Spark job. Schema evolution: a commit may ADD
+    * columns; partitions in older version dirs read them as null, and a
+    * dropped column survives as null on the new partitions until every
+    * partition is rewritten. The NEWEST version dir's relation comes
+    * first, so its schema wins the union's column order.
+    */
+  private def readManifest(spark: SparkSession, root: String, dirs: Seq[String]): DataFrame = {
+    import org.apache.spark.sql.execution.datasources.{ManifestScanBridge => Scan}
+    val f = fs(spark, root)
+    val leaves = dirs.map(d => f.makeQualified(new Path(s"$root/$d")))
+    val listing = leaves.map(d => d -> Scan.dataFiles(f, d)).toMap
+    val spec = Scan.partitionSpec(spark, leaves)
+    val schemaOf = leaves.groupBy(_.getParent).map { case (vdir, ds) =>
+      vdir -> Scan.footerSchema(spark, ds.iterator.flatMap(listing(_)).nextOption()
+        .getOrElse(throw new java.io.IOException(s"no data files under live dirs of $vdir")))
     }
+    val dfs = leaves.groupBy(d => schemaOf(d.getParent)).toSeq
+      .sortBy { case (_, ds) => -ds.map(_.getParent.getName.drop(1).takeWhile(_.isDigit).toLong).max }
+      .map { case (schema, ds) =>
+        val in = ds.toSet
+        Scan.parquet(spark, schema, spec.copy(partitions = spec.partitions.filter(p => in(p.path))),
+          listing)
+      }
     widenAll(dfs).reduce(_.unionByName(_, allowMissingColumns = true))
   }
 
@@ -228,14 +245,10 @@ object TxTable {
     * Concurrency: single-writer by contract. If two publishers race
     * anyway, the version-number CAS ([[casManifest]]) picks exactly one
     * winner and the loser throws; a committed manifest — e.g. a
-    * concurrent [[appendPublish]] — is never clobbered.
+    * concurrent [[appendPublish]] — is never clobbered. Returns the
+    * committed version.
     */
-  def publish(spark: SparkSession, root: String, stagedDir: String, partitionCol: String): Unit =
-    publishVersion(spark, root, stagedDir, partitionCol)
-
-  /** [[publish]], returning the committed version. */
-  private def publishVersion(spark: SparkSession, root: String, stagedDir: String,
-      partitionCol: String): Long = {
+  def publish(spark: SparkSession, root: String, stagedDir: String, partitionCol: String): Long = {
     val f = fs(spark, root)
     val (v, old) = latest(spark, root)
     val changed = listStaged(f, root, stagedDir, partitionCol)
@@ -266,7 +279,7 @@ object TxTable {
     * the unchanged latest one when `data` is empty (`stageNonEmpty`).
     */
   def commit(spark: SparkSession, root: String, data: DataFrame, partitionCol: String): Long =
-    stageNonEmpty(spark, root, data, partitionCol)(publishVersion(spark, root, _, partitionCol))
+    stageNonEmpty(spark, root, data, partitionCol)(publish(spark, root, _, partitionCol))
 
   /** The one empty-stage rule of [[commit]] and [[appendCommit]]: stage
     * `data`, then publish only when at least one partition landed — ONE
@@ -523,7 +536,7 @@ object TxTable {
           s"$toVersion (dirs ${oldDirs.mkString(",")} -> ${newDirs.mkString(",")}) " +
           "— a dir-level delta would double-count its rows; re-baseline from " +
           s"readAt($toVersion)")
-      newDirs.drop(oldDirs.size).map(k -> _)
+      newDirs.drop(oldDirs.size)
     }
     val dropped = (oldEntries.keySet -- newEntries.keySet).toSeq.sorted
     require(dropped.isEmpty,
@@ -531,9 +544,7 @@ object TxTable {
         s"$sinceVersion and $toVersion — the append-only delta contract is " +
         s"broken; re-baseline from readAt($toVersion)")
     if (added.isEmpty) None
-    else Some(readManifest(spark, root, added.groupBy(_._1).map {
-      case (k, kvs) => k -> kvs.map(_._2).mkString("\t")
-    }))
+    else Some(readManifest(spark, root, added))
   }
 
   /** The first-version guard of [[stage]]: fail, naming the migration,
@@ -649,11 +660,8 @@ object TxTable {
         case None => continue = false
         case Some((lv, toMerge)) =>
           // read ONLY the merged runs' dirs (the O(period) claim)
-          val sub = entries.flatMap { case (k, e) =>
-            val ds = dirsOf(e).filter(d => toMerge(d.takeWhile(_ != '/')))
-            if (ds.isEmpty) None else Some(k -> ds.mkString("\t"))
-          }
-          val data = readManifest(spark, root, sub)
+          val data = readManifest(spark, root,
+            liveDirs(entries).filter(d => toMerge(d.takeWhile(_ != '/'))))
           // file count scales with the MERGED bytes (driver-side fs
           // sizing, no job): a routine level-0 firing keeps the small
           // default, while a top-level promotion that merges most of
@@ -689,7 +697,7 @@ object TxTable {
           // entries around the ALREADY-STAGED run on each lost CAS —
           // the expensive merge is never re-done, only the cheap
           // manifest math. The `vN` prefix in the staged dir's name can
-          // go stale across a rebase; it is forensic, never parsed.
+          // go stale across a rebase; only a mixed-schema read orders by it.
           var curV = v
           var curEntries = entries
           var published = false
@@ -747,26 +755,14 @@ object TxTable {
     }.sum
   }
 
-  /** Append-fragmentation signal: data dirs per live partition at the
-    * latest version (1.0 = perfectly compacted; each blind append adds
-    * one dir to every partition it touches, so a pure appender's value
-    * grows by ~1 per commit). 0 when the table has no committed
-    * version. The cheap poll a maintenance cadence reads. */
-  def fragmentation(spark: SparkSession, root: String): Double = {
-    val (v, entries) = latest(spark, root)
-    if (v == 0 || entries.isEmpty) 0.0
-    else entries.values.map(dirsOf(_).size).sum.toDouble / entries.size
-  }
-
   /** UNCOMPACTED (level-0) append runs per live partition — the
     * trigger a LEVELED maintenance cadence compares its threshold
-    * against. [[fragmentation]] counts ALL runs, which under leveling
-    * has a structural floor of roughly one run per accumulated level
-    * (up to fanout−1 per level), so a threshold compared against the
-    * total degenerates into firing on every commit once two levels
-    * exist — while this metric returns to ZERO after each firing and
-    * the threshold keeps meaning "this many appends since the last
-    * compaction". */
+    * against. A count of ALL runs would have a structural floor of
+    * roughly one run per accumulated level (up to fanout−1 per level),
+    * so a threshold compared against it would fire on every commit once
+    * two levels exist — while this metric returns to ZERO after each
+    * firing and the threshold keeps meaning "this many appends since the
+    * last compaction". 0 when the table has no committed version. */
   def level0Fragmentation(spark: SparkSession, root: String): Double = {
     val (v, entries) = latest(spark, root)
     if (v == 0 || entries.isEmpty) 0.0

@@ -14,8 +14,9 @@ import graft.pipeline.{Incremental, Merge, SensorPipeline, TxTable}
   * watermark and UNBOUNDED lateness). The faithful Spark mapping is a
   * file-source stream with `Trigger.AvailableNow` + `foreachBatch`
   * performing the same merge the batch path uses — identical semantics,
-  * including whole-day recompute of late data, because each batch runs
-  * the same [[Incremental]] code.
+  * including whole-day recompute of late data, because each batch parses
+  * with [[SensorPipeline.bronzeToSilver]], merges on `raw_id` with
+  * [[Merge.merge]] and recomputes gold with [[Incremental.goldAffectedDays]].
   *
   * Tier 2 — idiomatic: `withWatermark` + 1-day tumbling `window()` in
   * update mode. Equivalent only up to the chosen lateness bound
@@ -34,9 +35,10 @@ object StreamingPipeline {
     *
     * Each micro-batch: assign raw_ids from a monotonic base (batchId
     * captured in the closure), parse+validate with the SAME plan builder
-    * the batch path uses, then first-writer-wins merge into the target.
-    */
-  /** Optional `goldPath`: when set, each micro-batch ALSO advances the
+    * the batch path uses, then last-writer-wins merge into the target
+    * (a fresh row replaces the target row with the same `raw_id`).
+    *
+    * Optional `goldPath`: when set, each micro-batch ALSO advances the
     * Gold mart after its Silver merge — the same [[Incremental]] batch
     * code, so the tier-1 contract (whole-day recompute, unbounded
     * lateness) holds mid-stream: a late reading for any historical day

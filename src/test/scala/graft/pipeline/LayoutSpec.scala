@@ -62,7 +62,8 @@ class LayoutSpec extends AnyFunSuite {
     assert(after.count() == 3)
     assert(after.filter(col("reading_date") === "2022-04-15").head.getAs[Double]("metric_value") == 9.99)
     assert(after.filter(col("reading_date") === "2022-04-14").head.getAs[Double]("metric_value") == 1.34)
-    assertPruned(expectScans = 2)
+    // the two version dirs are still one relation, so one pruned scan
+    assertPruned(expectScans = 1)
   }
 
   test("bucketed join elides the shuffle on both sides") {

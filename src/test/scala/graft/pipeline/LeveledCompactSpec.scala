@@ -48,7 +48,8 @@ class LeveledCompactSpec extends AnyFunSuite {
     assert(TxTable.compactLeveled(spark, root, "p", Seq("id")) === 1)
     assert(snapshot(root) === before, "compaction is pure layout")
     assert(levels(root) === Map(1 -> 1), s"one l1 run expected: ${levels(root)}")
-    assert(TxTable.fragmentation(spark, root) === 1.0)
+    assert(TxTable.latest(spark, root)._2.values.forall(!_.contains("\t")),
+      "every manifest entry is one dir")
 
     // next period: two more appends, then a firing — the l1 run's DIR
     // must survive verbatim (the merge read only the new l0 runs)

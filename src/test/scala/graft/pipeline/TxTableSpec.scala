@@ -187,6 +187,76 @@ class TxTableSpec extends AnyFunSuite {
     assert(ex.getMessage.contains("CAST_INVALID_INPUT"), ex.getMessage.take(200))
   }
 
+  /** Spark jobs launched while `body` runs, counted by job group. A
+    * sentinel job afterwards flushes the listener bus: events arrive in
+    * order, so once its start is seen every earlier start was counted. */
+  private def jobsOf[T](body: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"txtable-jobs-${java.util.UUID.randomUUID()}"
+    val starts = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = starts.add(
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "build")
+      val out = try body finally sc.clearJobGroup()
+      sc.setJobGroup(group + "-sentinel", "flush")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (!starts.contains(group + "-sentinel") && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(starts.contains(group + "-sentinel"), "listener bus did not deliver the sentinel job")
+      (out, starts.toArray.count(_ == group))
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("reads build from the manifest alone: no job, one FileScan over every version dir") {
+    val root = graft.TestTmp.dir("txmanifest") + "/t"
+    def days(from: Int, until: Int, value: Double) = (from until until)
+      .map(i => (java.time.LocalDate.of(2022, 1, 1).plusDays(i).toString, i.toLong, value))
+      .toDF("day", "id", "value")
+    // 20 + 25 + 11 = 56 partition dirs over 3 version dirs; days 10-19
+    // and 30-34 hold two dirs each
+    TxTable.appendCommit(spark, root, days(0, 20, 1.0), "day")
+    TxTable.appendCommit(spark, root, days(10, 35, 2.0), "day")
+    TxTable.appendCommit(spark, root, days(30, 41, 3.0), "day")
+    val dirs = TxTable.latest(spark, root)._2.values.toSeq.flatMap(_.split("\t"))
+    assert(dirs.size == 56 && dirs.map(_.takeWhile(_ != '/')).distinct.size == 3)
+
+    // more than 32 dirs each: Spark's own discovery would start a
+    // parallel-listing job, and each version dir a schema-inference job
+    val ((latest, at2, since1), jobs) = jobsOf(
+      (TxTable.read(spark, root), TxTable.readAt(spark, root, 2),
+        TxTable.readSince(spark, root, 1, 3).get))
+    assert(jobs == 0, "building read, readAt and readSince must launch no Spark job")
+    assert(latest.schema("day").dataType == org.apache.spark.sql.types.DateType)
+
+    // the same rows as one basePath read per live dir, unioned
+    val perDir = dirs.map(d => spark.read.option("basePath", s"$root/${d.takeWhile(_ != '/')}")
+      .parquet(s"$root/$d")).reduce(_.unionByName(_))
+    def same(got: org.apache.spark.sql.DataFrame, want: org.apache.spark.sql.DataFrame) = {
+      val w = want.select(got.columns.map(col).toSeq: _*)
+      assert(got.exceptAll(w).isEmpty && w.exceptAll(got).isEmpty)
+    }
+    same(latest, perDir)
+    same(at2, perDir.filter(col("value") =!= 3.0))
+    same(since1, perDir.filter(col("value") =!= 1.0))
+
+    // a day range is one scan with the range in its PartitionFilters
+    val range = col("day") >= "2022-01-11" && col("day") < "2022-01-21"
+    val filtered = latest.filter(range)
+    val scans = filtered.queryExecution.sparkPlan.collect {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec => s
+    }
+    assert(scans.size == 1, filtered.queryExecution.sparkPlan.toString)
+    val pfs = scans.head.partitionFilters.map(_.sql).mkString(" AND ")
+    assert(pfs.contains("2022-01-11") && pfs.contains("2022-01-21"), pfs)
+    assert(filtered.count() == 20)
+    same(filtered, perDir.filter(range))
+  }
+
   test("appendCommit: O(increment) — existing partition dirs carry over verbatim, new rows union in") {
     val root = graft.TestTmp.dir("txappend") + "/t"
     val v1 = TxTable.appendCommit(spark, root, rows("d1" -> 1.0, "d2" -> 2.0), "day")
