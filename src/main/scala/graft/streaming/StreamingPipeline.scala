@@ -16,7 +16,8 @@ import graft.pipeline.{Incremental, Merge, SensorPipeline, TxTable}
   * performing the same merge the batch path uses — identical semantics,
   * including whole-day recompute of late data, because each batch parses
   * with [[SensorPipeline.bronzeToSilver]], merges on `raw_id` with
-  * [[Merge.merge]] and recomputes gold with [[Incremental.goldAffectedDays]].
+  * [[Merge.intoPartitions]] (as [[Incremental.silverIncrement]] does)
+  * and recomputes gold with [[Incremental.goldAffectedDays]].
   *
   * Tier 2 — idiomatic: `withWatermark` + 1-day tumbling `window()` in
   * update mode. Equivalent only up to the chosen lateness bound
@@ -76,8 +77,9 @@ object StreamingPipeline {
     * `TxTable.read`): the merged days are staged invisibly and published
     * by one manifest rename, so a batch killed before the publish leaves
     * the previous version live and its replay from the checkpoint
-    * converges to the same rows. Only the batch's days are read and
-    * restaged, so a batch costs O(days it touches), not O(table).
+    * converges to the same rows. [[Merge.intoPartitions]] reads and
+    * restages only the batch's days: O(days it touches), not O(table); a
+    * batch without a valid reading runs its day-set job alone.
     */
   def mergeBatchToSilver(
       batch: DataFrame,
@@ -130,26 +132,20 @@ object StreamingPipeline {
           .withColumn("ingested_at", current_timestamp())
           .withColumnRenamed("value", "raw_line")
         val fresh = SensorPipeline.bronzeToSilver(bronze)
-        // a batch without one valid reading touches no day, and changes
-        // neither silver nor gold
-        val days = partitionValues(fresh, "reading_date")
-        if (days.isEmpty) return
         val spark = batch.sparkSession
-        // dbt-merge on raw_id — SAME key as the batch path, so the two
-        // tiers keep identical semantics (duplicate identical readings
+        // dbt-merge on raw_id — SAME key and body as the batch path, so the
+        // two tiers keep identical semantics (duplicate identical readings
         // stay distinct rows, exactly like distinct reference raw_ids);
         // batch replays are idempotent because the ids above are
-        // replay-stable
-        val merged =
-          if (TxTable.latest(spark, silverPath)._1 == 0) fresh
-          else Merge.merge(
-            TxTable.read(spark, silverPath).filter(col("reading_date").isin(days: _*)), fresh,
-            Seq("raw_id"),
+        // replay-stable. No valid reading: nothing to commit.
+        Merge.intoPartitions(committed(spark, silverPath), fresh, "reading_date", Seq("raw_id"),
             Seq(col("processed_at").desc, col("reading_time").desc))
-        commitAndVacuum(spark, silverPath, merged, "reading_date")
-        // gold increment inside the SAME batch (reference: staging >>
-        // marts ordering per hourly run, sensor_data_pipeline.py:88)
-        goldPath.foreach(gp => goldTxCommit(spark, silverPath, gp))
+          .foreach { case (_, merged) =>
+            commitAndVacuum(spark, silverPath, merged, "reading_date")
+            // gold increment inside the SAME batch (reference: staging >>
+            // marts ordering per hourly run, sensor_data_pipeline.py:88)
+            goldPath.foreach(gp => goldTxCommit(spark, silverPath, gp))
+          }
   }
 
   /** IoT socket-source connector variant (north star "Structured
@@ -190,27 +186,14 @@ object StreamingPipeline {
     * override). Read the mart with `TxTable.read(spark, goldRoot)`.
     */
   def goldTxCommit(spark: SparkSession, silverPath: String, goldRoot: String): Unit = {
-    val target =
-      if (TxTable.latest(spark, goldRoot)._1 > 0) Some(TxTable.read(spark, goldRoot)) else None
-    val fresh = Incremental.goldAffectedDays(TxTable.read(spark, silverPath), target)
+    val fresh =
+      Incremental.goldAffectedDays(TxTable.read(spark, silverPath), committed(spark, goldRoot))
     commitAndVacuum(spark, goldRoot, fresh, "reading_date")
   }
 
-  /** The distinct `partitionCol` values of a micro-batch, in ONE job:
-    * each task keeps its own value set and the driver merges them, so
-    * no exchange runs. The values are days, bounded by the calendar.
-    *
-    * A sink merges a batch into only the target rows in these
-    * partitions, because the merge keys fix each row's partition
-    * (reading_date derives from the line a raw_id names, session_date
-    * from the session_start key). That semi join is a literal IN filter
-    * on the partition column, so the scan prunes the other partitions
-    * at planning time and no broadcast job runs.
-    */
-  private def partitionValues(batch: DataFrame, partitionCol: String): Seq[Any] =
-    batch.select(partitionCol).rdd
-      .mapPartitions(rows => Iterator(rows.map(_.get(0)).toSet))
-      .fold(Set.empty[Any])(_ ++ _).toSeq
+  /** The table at its latest version; None before its first commit. */
+  private def committed(spark: SparkSession, root: String): Option[DataFrame] =
+    if (TxTable.latest(spark, root)._1 > 0) Some(TxTable.read(spark, root)) else None
 
   /** Every sink commit: publish `data` as one TxTable commit (nothing
     * when it is empty), then [[TxTable.vacuum]] the table, so superseded
@@ -307,9 +290,9 @@ object StreamingPipeline {
     * durable sessions [[TxTable]] partitioned by `session_date` =
     * date(session_start) — session identity (user_id, session_start)
     * dedups foreachBatch's at-least-once replays, the raw_id pattern;
-    * only the batch's days are read and restaged — then (2) recomputes
-    * the per-day session summary for exactly the days this batch's
-    * sessions touch and publishes those days through
+    * [[Merge.intoPartitions]], the silver sinks' body, reads and restages
+    * only the batch's days — then (2) recomputes the per-day session
+    * summary for exactly those days and publishes them through
     * [[graft.pipeline.TxTable]] atomically. Same affected-partition
     * shape as the Power gold, driven by streaming state output instead
     * of a watermark scan. Read with `TxTable.read(spark, goldRoot)`:
@@ -332,24 +315,19 @@ object StreamingPipeline {
           val s = batch.sparkSession
           val b = batch.toDF().localCheckpoint(true) // consumed twice below
             .withColumn("session_date", to_date(col("session_start")))
-          val days = partitionValues(b, "session_date")
-          if (days.nonEmpty) {
-            val merged =
-              if (TxTable.latest(s, sessionsPath)._1 == 0) b
-              else Merge.merge(
-                TxTable.read(s, sessionsPath).filter(col("session_date").isin(days: _*)),
-                b, Seq("user_id", "session_start"), Seq(col("session_end").desc))
-            commitAndVacuum(s, sessionsPath, merged, "session_date")
-            val fresh = TxTable.read(s, sessionsPath)
-              .filter(col("session_date").isin(days: _*))
-              .groupBy("session_date")
-              .agg(
-                count(lit(1)).as("n_sessions"),
-                sum(col("n")).as("n_events"),
-                round(sum(col("total")), 6).as("total_value"))
-            commitAndVacuum(s, goldRoot, fresh, "session_date")
-          }
-          ()
+          Merge.intoPartitions(committed(s, sessionsPath), b, "session_date",
+              Seq("user_id", "session_start"), Seq(col("session_end").desc))
+            .foreach { case (days, merged) =>
+              commitAndVacuum(s, sessionsPath, merged, "session_date")
+              val fresh = TxTable.read(s, sessionsPath)
+                .filter(col("session_date").isin(days: _*))
+                .groupBy("session_date")
+                .agg(
+                  count(lit(1)).as("n_sessions"),
+                  sum(col("n")).as("n_events"),
+                  round(sum(col("total")), 6).as("total_value"))
+              commitAndVacuum(s, goldRoot, fresh, "session_date")
+            }
       }
       .start()
     q.awaitTermination()

@@ -28,6 +28,19 @@ class GoldenE2ESpec extends AnyFunSuite {
       .toDF("id", "raw_line", "ingested_at")
 
   private val t0 = lit(Timestamp.valueOf("2022-04-14 14:00:00"))
+  private val t1 = lit(Timestamp.valueOf("2022-04-14 18:00:00"))
+
+  /** Two readings a day on 2022-04-14, -15 and -16 (bronze ids 1-6). */
+  private val threeDays = Seq(
+    "1649941817 Voltage 1.34", "1649941817 Current 12.0",
+    "1650028217 Voltage 2.0", "1650028217 Current 10.0",
+    "1650114617 Voltage 3.0", "1650114617 Current 11.0")
+
+  /** Bronze rows ingested after t0 and before t1, so only they pass the
+    * watermark of a silver processed at t0. */
+  private def lateBronze(rows: (Long, String)*): org.apache.spark.sql.DataFrame =
+    rows.map { case (id, l) => (id, l, Timestamp.valueOf("2022-04-14 17:00:00")) }
+      .toDF("id", "raw_line", "ingested_at")
 
   test("golden: 4 lines -> silver 4 -> gold 1 Power=17.485 -> serve 5 ordered rows") {
     val bronze = bronzeOf(conftestLines, "2022-04-14 13:30:00")
@@ -110,7 +123,6 @@ class GoldenE2ESpec extends AnyFunSuite {
     val late = Seq((5L, "1649941900 Voltage 2.01", Timestamp.valueOf("2022-04-14 17:00:00")))
       .toDF("id", "raw_line", "ingested_at")
     val b2 = b1.unionByName(late)
-    val t1 = lit(Timestamp.valueOf("2022-04-14 18:00:00"))
     val s2 = Incremental.silverIncrement(b2, Some(s1), t1).cache()
     assert(s2.count() == 5, "only the late row passes the watermark; merge keeps 5")
 
@@ -121,6 +133,53 @@ class GoldenE2ESpec extends AnyFunSuite {
     // whole-day recompute: AVG(1.34,1.35,2.01) * AVG(12,14)
     val expected = ((1.34 + 1.35 + 2.01) / 3.0) * 13.0
     assert(math.abs(rows(0).getAs[Double]("metric_value") - expected) < 1e-12)
+  }
+
+  test("silverIncrement restages only the affected day, and its commit equals a whole-table merge") {
+    val root = graft.TestTmp.dir("graft-golden-scope")
+    val (scoped, whole) = (s"$root/scoped", s"$root/whole")
+    val b1 = bronzeOf(threeDays, "2022-04-14 13:30:00")
+    Seq(scoped, whole).foreach(r =>
+      TxTable.commit(spark, r, Incremental.silverIncrement(b1, None, t0), "reading_date"))
+    // one new line and raw_id 3 re-sent with a corrected value, both on
+    // 2022-04-15
+    val update = lateBronze(7L -> "1650028218 Voltage 2.2", 3L -> "1650028217 Voltage 2.5")
+    val incr = Incremental.silverIncrement(
+      b1.unionByName(update), Some(TxTable.read(spark, scoped)), t1).cache()
+    assert(incr.select(col("reading_date").cast("string")).as[String].collect().toSet ==
+      Set("2022-04-15"), "only the affected day comes back")
+    assert(incr.select("raw_id").as[Long].collect().sorted.toSeq == Seq(3L, 4L, 7L))
+
+    val v = TxTable.commit(spark, scoped, incr, "reading_date")
+    val staged = new java.io.File(scoped).list().filter(_.startsWith(s"v$v-")).toSeq
+    assert(staged.size == 1, s"one staged dir: $staged")
+    assert(new java.io.File(s"$scoped/${staged.head}").list().filter(_.startsWith("reading_date="))
+      .toSeq == Seq("reading_date=2022-04-15"))
+    incr.unpersist()
+
+    // the whole-table way: merge against all of silver, restage every day
+    TxTable.commit(spark, whole, Merge.merge(TxTable.read(spark, whole),
+      SensorPipeline.bronzeToSilver(update, t1), Seq("raw_id"),
+      Seq(col("processed_at").desc, col("reading_time").desc)), "reading_date")
+    val (got, want) = (TxTable.read(spark, scoped), TxTable.read(spark, whole))
+    assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
+    assert(got.count() == 7)
+    assert(got.filter(col("raw_id") === 3).select("metric_value").as[Double].collect().toSeq ==
+      Seq(2.5))
+  }
+
+  test("a raw_id re-sent on another day fails unique_raw_id loudly, never a silent duplicate") {
+    val root = graft.TestTmp.dir("graft-golden-contract") + "/silver"
+    val b1 = bronzeOf(threeDays, "2022-04-14 13:30:00")
+    TxTable.commit(spark, root, Incremental.silverIncrement(b1, None, t0), "reading_date")
+    // raw_id 1 is on 2022-04-14; re-sent with a 2022-04-16 line, the
+    // increment restages 2022-04-16 only and the old row stays
+    val resent = lateBronze(1L -> "1650114618 Voltage 3.3")
+    TxTable.commit(spark, root, Incremental.silverIncrement(
+      b1.unionByName(resent), Some(TxTable.read(spark, root)), t1), "reading_date")
+    val ex = intercept[Quality.QualityFailure](
+      Quality.assertAll(TxTable.read(spark, root), Quality.silverChecks))
+    assert(ex.failing == Seq("unique_raw_id" -> 2L), ex.getMessage)
   }
 
   test("response serializes to the reference's golden JSON shape (S5)") {

@@ -187,31 +187,6 @@ class TxTableSpec extends AnyFunSuite {
     assert(ex.getMessage.contains("CAST_INVALID_INPUT"), ex.getMessage.take(200))
   }
 
-  /** Spark jobs launched while `body` runs, counted by job group. A
-    * sentinel job afterwards flushes the listener bus: events arrive in
-    * order, so once its start is seen every earlier start was counted. */
-  private def jobsOf[T](body: => T): (T, Int) = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val group = s"txtable-jobs-${java.util.UUID.randomUUID()}"
-    val starts = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = starts.add(
-        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "build")
-      val out = try body finally sc.clearJobGroup()
-      sc.setJobGroup(group + "-sentinel", "flush")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
-      while (!starts.contains(group + "-sentinel") && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(starts.contains(group + "-sentinel"), "listener bus did not deliver the sentinel job")
-      (out, starts.toArray.count(_ == group))
-    } finally sc.removeSparkListener(listener)
-  }
-
   test("reads build from the manifest alone: no job, one FileScan over every version dir") {
     val root = graft.TestTmp.dir("txmanifest") + "/t"
     def days(from: Int, until: Int, value: Double) = (from until until)
@@ -227,7 +202,7 @@ class TxTableSpec extends AnyFunSuite {
 
     // more than 32 dirs each: Spark's own discovery would start a
     // parallel-listing job, and each version dir a schema-inference job
-    val ((latest, at2, since1), jobs) = jobsOf(
+    val ((latest, at2, since1), jobs) = graft.JobCount(spark)(
       (TxTable.read(spark, root), TxTable.readAt(spark, root, 2),
         TxTable.readSince(spark, root, 1, 3).get))
     assert(jobs == 0, "building read, readAt and readSince must launch no Spark job")

@@ -431,6 +431,21 @@ class StreamingSpec extends AnyFunSuite {
       "the touched day holds its old reading and the new one")
   }
 
+  test("a batch without one valid line launches exactly one job and publishes no version") {
+    val root = graft.TestTmp.dir("graft-stream-novalid")
+    val (silverPath, goldPath) = (s"$root/silver", s"$root/gold")
+    StreamingPipeline.mergeBatchToSilver(
+      Seq("1649941817 Voltage 1.34", "1649941817 Current 12.0").toDF("value"), 0L,
+      silverPath, Some(goldPath))
+    val before = Seq(silverPath, goldPath).map(TxTable.latest(spark, _))
+    assert(before.map(_._1) == Seq(1L, 1L))
+    val (_, jobs) = graft.JobCount(spark)(StreamingPipeline.mergeBatchToSilver(
+      Seq("not a line", "", "1649941817 Voltage abc").toDF("value"), 1L,
+      silverPath, Some(goldPath)))
+    assert(jobs == 1, "the day-set job alone: no merge, commit or gold job")
+    assert(Seq(silverPath, goldPath).map(TxTable.latest(spark, _)) == before)
+  }
+
   test("every sink commit vacuums: an unpublished version dir is gone after one batch") {
     val root = graft.TestTmp.dir("graft-stream-vacuum")
     val bronzeDir = s"$root/bronze"
