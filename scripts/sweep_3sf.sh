@@ -14,10 +14,15 @@ set -e -o pipefail
 OUT=${1:-/tmp/graft_sweep}
 mkdir -p "$OUT"
 cd "$(dirname "$0")/.."
+# verify <log> <sfDir> <outDir>: one Verify run that publishes the SF's dumps
+verify() {
+  SPARK_GRAFT_DUMP_ALL_SF=1 SPARK_DRIVER_MEM=48g \
+    sbt -batch "runMain graft.Verify $2 $3" > "$1" 2>&1
+}
 for SF in sf0.001 sf0.01 sf0.1; do
   echo "=== $SF ==="
   rm -rf "$OUT/$SF"
-  SPARK_GRAFT_DUMP_ALL_SF=1 bash scripts/run_soak.sh graft.Verify 48g \
+  verify \
     "$OUT/verify_$SF.log" "/root/testdata/$SF" "$OUT/$SF"
   if [ "$SF" != "sf0.01" ]; then
     python3 scripts/remap_dump_scoped.py "$OUT/$SF" "$SF"

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The one session recipe and the one clone recipe every entry point,
-  * soak, test and iterative loop goes through, so the settings the
+  * test and iterative loop goes through, so the settings the
   * plan gate, the oracle dumps and the bench floor were frozen under
   * cannot drift between copies.
   */

@@ -761,7 +761,7 @@ object GraphOps {
     * whose label diversity — and so pair state — shrinks as communities
     * collapse. Callers with MULTI-edge voting semantics must pass
     * `distinctEdges = false`; every caller in this repo (co-occurrence
-    * edges, soak generators, the SQL twin's set-derived CTE) is
+    * edges, the specs' generated graphs, the SQL twin's set-derived CTE) is
     * set-shaped, matching the brute-force spec's Set[(src,dst)] model.
     *
     * The collapse additionally requires every dst to also appear as

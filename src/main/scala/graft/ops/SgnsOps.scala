@@ -99,17 +99,7 @@ object SgnsOps {
       // materialization timing moves — spec-pinned lazy ≡ eager),
       // a fraction of the driver round-trips. Some(x) is the spec
       // override that pins both paths.
-      eagerCuts: Option[Boolean] = None,
-      // ship model vectors to the scoring joins as FLOAT arrays: the
-      // batch working set is examples × (1+negatives) × vector width
-      // through TWO exchanges (§12i's disk bound), and the example
-      // rows carry both model vectors — float32 halves those exchange
-      // bytes, which is what decides whether a 200M-pair epoch fits a
-      // single box. Values move by float32 rounding only (model state
-      // and gradient aggregation stay double; spec pins the tolerance).
-      // Default off: the oracle-scale queries don't need it and the
-      // sequential-twin pin stays exact.
-      floatExchange: Boolean = false)
+      eagerCuts: Option[Boolean] = None)
 
   /** Trained model: `inVecs`/`outVecs` are (node LONG, vec
     * ARRAY<DOUBLE>[dim]), checkpointed (stable — safe to both dump and
@@ -123,9 +113,6 @@ object SgnsOps {
 
   private def dot(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
-
-  /** L2 norm of a vector column (soak/diagnostic helper). */
-  def normCol(vec: Column): Column = sqrt(dot(vec, vec))
 
   /** Train over `pairs` (the [[GraphOps.skipGramPairs]] schema: seed,
     * c_step, center, x_step, context — (seed, c_step, x_step) is the
@@ -246,14 +233,9 @@ object SgnsOps {
             .join(if (small) broadcast(voc) else voc, "idx")
             .select(col("center"), col("node").as("other"), lit(0.0).as("label")))
         val ex = negs.fold(pos)(pos.unionAll)
-        // score every example against the BATCH-START model; under
-        // floatExchange the vectors ride the joins (and the wide
-        // example-side exchange between them) as float32
-        val vecT: Column => Column =
-          if (p.floatExchange) c => transform(c, x => x.cast("float"))
-          else identity
-        val vinJ = vin.select(col("node").as("c_n"), vecT(col("vec")).as("cv"))
-        val voutJ = vout.select(col("node").as("o_n"), vecT(col("vec")).as("ov"))
+        // score every example against the BATCH-START model
+        val vinJ = vin.select(col("node").as("c_n"), col("vec").as("cv"))
+        val voutJ = vout.select(col("node").as("o_n"), col("vec").as("ov"))
         val scored = ex
           .join(if (small) broadcast(vinJ) else vinJ, col("center") === col("c_n"))
           .join(if (small) broadcast(voutJ) else voutJ, col("other") === col("o_n"))

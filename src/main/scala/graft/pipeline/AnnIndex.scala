@@ -307,12 +307,8 @@ object AnnIndex {
       rot: Option[OpqOps.Rotation]): Long = {
     val assigned = adcEncode(emb, cents, books, rot)
     val pRoot = postingsRoot(root)
-    val novel =
-      if (TxTable.latest(spark, pRoot)._1 > 0)
-        assigned.join(
-          TxTable.read(spark, pRoot).select("vec_id").distinct(),
-          Seq("vec_id"), "left_anti")
-      else assigned
+    val novel = TxTable.committed(spark, pRoot).fold(assigned)(stored =>
+      assigned.join(stored.select("vec_id").distinct(), Seq("vec_id"), "left_anti"))
     val cut = novel.localCheckpoint(false)
     val n = cut.count()
     if (n > 0) TxTable.appendCommit(spark, pRoot, cut, "cluster")
@@ -329,12 +325,8 @@ object AnnIndex {
       "vec_id")
       .select(col("cluster"), col("vec_id"), col("emb"), col("norm"))
     val pRoot = postingsRoot(root)
-    val novel =
-      if (TxTable.latest(spark, pRoot)._1 > 0)
-        assigned.join(
-          TxTable.read(spark, pRoot).select("vec_id").distinct(),
-          Seq("vec_id"), "left_anti")
-      else assigned
+    val novel = TxTable.committed(spark, pRoot).fold(assigned)(stored =>
+      assigned.join(stored.select("vec_id").distinct(), Seq("vec_id"), "left_anti"))
     val cut = novel.localCheckpoint(false)
     val n = cut.count()
     if (n > 0) TxTable.appendCommit(spark, pRoot, cut, "cluster")

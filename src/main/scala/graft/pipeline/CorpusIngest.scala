@@ -79,12 +79,8 @@ object CorpusIngest {
     val accepted = passed.join(acceptedIds, Seq("doc_id"), "leftsemi")
     // corpus-side idempotence: never re-append a doc_id already
     // committed (covers batch replays AND resends in later batches)
-    val novel =
-      if (TxTable.latest(spark, corpusRoot)._1 > 0)
-        accepted.join(
-          TxTable.read(spark, corpusRoot).select("doc_id").distinct(),
-          Seq("doc_id"), "left_anti")
-      else accepted
+    val novel = TxTable.committed(spark, corpusRoot).fold(accepted)(stored =>
+      accepted.join(stored.select("doc_id").distinct(), Seq("doc_id"), "left_anti"))
     toAppend = novel.persist()
     val appended = toAppend.count()
     if (appended > 0) TxTable.appendCommit(spark, corpusRoot, toAppend, "source")
@@ -161,12 +157,8 @@ object CorpusIngest {
           .otherwise(lit("missing_required_field")).as("reason"))
       .groupBy("line_key", "raw_line", "reason")
       .agg(count(lit(1)).as("n_seen"))
-    novelBad = (
-      if (TxTable.latest(spark, quarantineRoot)._1 > 0)
-        bad.join(
-          TxTable.read(spark, quarantineRoot).select("line_key").distinct(),
-          Seq("line_key"), "left_anti")
-      else bad).persist()
+    novelBad = TxTable.committed(spark, quarantineRoot).fold(bad)(stored =>
+      bad.join(stored.select("line_key").distinct(), Seq("line_key"), "left_anti")).persist()
     if (novelBad.count() > 0)
       TxTable.appendCommit(spark, quarantineRoot, novelBad, "reason")
     val quarantined = parsed.filter(badCond).count()

@@ -156,19 +156,26 @@ object Merge {
     * new content for `TxTable.commit` (or `stage` + `publish`) to restage;
     * None when `updates` is empty, the updates alone with no target.
     * Sound because the keys fix a row's partition (raw_id its
-    * reading_date, session_start its session_date). The values take one
-    * job, no exchange (per-task sets merged on the driver); the literal
-    * IN filter prunes at planning time, so no broadcast job runs.
+    * reading_date, session_start its session_date). The values come from
+    * [[partitionValues]]; the literal IN filter prunes at planning time,
+    * so no broadcast job runs.
     */
   def intoPartitions(target: Option[DataFrame], updates: DataFrame, partitionCol: String,
       keys: Seq[String], order: Seq[Column]): Option[(Seq[Any], DataFrame)] = {
-    val values = updates.select(partitionCol).rdd
-      .mapPartitions(rows => Iterator(rows.map(_.get(0)).toSet))
-      .fold(Set.empty[Any])(_ ++ _).toSeq
+    val values = partitionValues(updates, partitionCol)
     if (values.isEmpty) None
     else Some(values -> target.fold(updates)(t =>
       merge(t.filter(col(partitionCol).isin(values: _*)), updates, keys, order)))
   }
+
+  /** The distinct values of `column` in `df`, for a literal IN filter that
+    * prunes partitions at planning time: one job, no exchange (per-task
+    * sets merged on the driver).
+    */
+  private[pipeline] def partitionValues(df: DataFrame, column: String): Seq[Any] =
+    df.select(column).rdd
+      .mapPartitions(rows => Iterator(rows.map(_.get(0)).toSet))
+      .fold(Set.empty[Any])(_ ++ _).toSeq
 }
 
 /** Incremental runner — the reference's two hand-rolled "optimizer rules"
@@ -218,22 +225,17 @@ object Incremental {
     * of every day that received new silver since the target's watermark.
     * This is the gold merge: `TxTable.commit(..., "reading_date")`
     * publishes it as one atomic partition override, which is exactly the
-    * dbt merge on gold's unique_key = reading_date.
+    * dbt merge on gold's unique_key = reading_date. The days come from
+    * [[Merge.partitionValues]], as the silver merge's do, so the recompute
+    * scans only their silver partitions.
     */
   def goldAffectedDays(
       silver: DataFrame,
       goldTarget: Option[DataFrame],
       calculatedAt: Column = current_timestamp()): DataFrame = {
     val wm = watermark(goldTarget, "calculated_at")
-    val affectedDays =
-      silver.filter(col("processed_at") > lit(wm)).select("reading_date").distinct()
-    // Semi join (Catalyst rewrites the reference's IN-subquery to exactly
-    // this); at scale this prunes silver partitions dynamically. The day
-    // side is bounded by the calendar, so BROADCAST it — without the hint
-    // the semi join would hash-exchange the full silver table on
-    // reading_date just to drop most of it.
-    val affected = silver.join(broadcast(affectedDays), Seq("reading_date"), "left_semi")
-    silverToGold(affected, calculatedAt)
+    val days = Merge.partitionValues(silver.filter(col("processed_at") > lit(wm)), "reading_date")
+    silverToGold(silver.filter(col("reading_date").isin(days: _*)), calculatedAt)
   }
 }
 

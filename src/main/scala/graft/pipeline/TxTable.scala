@@ -107,10 +107,19 @@ object TxTable {
     * in different version dirs (each commit rewrites only the partitions
     * it touched); they are still one relation, so one pruned scan.
     */
-  def read(spark: SparkSession, root: String): DataFrame =
-    readManifest(spark, root, latest(spark, root) match {
-      case (v, e) => require(v > 0 && e.nonEmpty, s"no committed version at $root"); liveDirs(e)
-    })
+  def read(spark: SparkSession, root: String): DataFrame = {
+    val t = committed(spark, root)
+    require(t.isDefined, s"no committed version at $root")
+    t.get
+  }
+
+  /** [[read]] when the table has a committed version, None before its
+    * first commit; one listing of the log either way.
+    */
+  def committed(spark: SparkSession, root: String): Option[DataFrame] = {
+    val (v, entries) = latest(spark, root)
+    if (v > 0) Some(readManifest(spark, root, liveDirs(entries))) else None
+  }
 
   private def liveDirs(entries: Map[String, String]): Seq[String] =
     entries.values.toSeq.flatMap(dirsOf)

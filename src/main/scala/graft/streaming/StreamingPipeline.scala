@@ -138,8 +138,8 @@ object StreamingPipeline {
         // stay distinct rows, exactly like distinct reference raw_ids);
         // batch replays are idempotent because the ids above are
         // replay-stable. No valid reading: nothing to commit.
-        Merge.intoPartitions(committed(spark, silverPath), fresh, "reading_date", Seq("raw_id"),
-            Seq(col("processed_at").desc, col("reading_time").desc))
+        Merge.intoPartitions(TxTable.committed(spark, silverPath), fresh, "reading_date",
+            Seq("raw_id"), Seq(col("processed_at").desc, col("reading_time").desc))
           .foreach { case (_, merged) =>
             commitAndVacuum(spark, silverPath, merged, "reading_date")
             // gold increment inside the SAME batch (reference: staging >>
@@ -186,14 +186,10 @@ object StreamingPipeline {
     * override). Read the mart with `TxTable.read(spark, goldRoot)`.
     */
   def goldTxCommit(spark: SparkSession, silverPath: String, goldRoot: String): Unit = {
-    val fresh =
-      Incremental.goldAffectedDays(TxTable.read(spark, silverPath), committed(spark, goldRoot))
+    val fresh = Incremental.goldAffectedDays(
+      TxTable.read(spark, silverPath), TxTable.committed(spark, goldRoot))
     commitAndVacuum(spark, goldRoot, fresh, "reading_date")
   }
-
-  /** The table at its latest version; None before its first commit. */
-  private def committed(spark: SparkSession, root: String): Option[DataFrame] =
-    if (TxTable.latest(spark, root)._1 > 0) Some(TxTable.read(spark, root)) else None
 
   /** Every sink commit: publish `data` as one TxTable commit (nothing
     * when it is empty), then [[TxTable.vacuum]] the table, so superseded
@@ -315,7 +311,7 @@ object StreamingPipeline {
           val s = batch.sparkSession
           val b = batch.toDF().localCheckpoint(true) // consumed twice below
             .withColumn("session_date", to_date(col("session_start")))
-          Merge.intoPartitions(committed(s, sessionsPath), b, "session_date",
+          Merge.intoPartitions(TxTable.committed(s, sessionsPath), b, "session_date",
               Seq("user_id", "session_start"), Seq(col("session_end").desc))
             .foreach { case (days, merged) =>
               commitAndVacuum(s, sessionsPath, merged, "session_date")

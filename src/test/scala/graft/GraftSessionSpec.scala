@@ -11,7 +11,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** [[GraftSession]]: the factory's settings, and the derived-session
   * cache's contract — clones follow the parent's current settings,
   * never leak overrides back, are reused for identical inputs, and do
-  * not keep a dropped parent alive.
+  * not keep a dropped parent alive. Two source guards keep session
+  * building in the factory, and mains and environment knobs in the entry
+  * points.
   */
 class GraftSessionSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -78,13 +80,14 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(ref.get == null, "parent session still reachable after 50 GC rounds")
   }
 
+  private def scalaFiles(root: String): Seq[Path] = {
+    val s = Files.walk(Paths.get(root))
+    try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+    finally s.close()
+  }
+
   test("no session is built or cloned outside GraftSession") {
     val banned = Seq("SparkSession" + ".builder", "conf" + ".getAll")
-    def scalaFiles(root: String): Seq[Path] = {
-      val s = Files.walk(Paths.get(root))
-      try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
-      finally s.close()
-    }
     val offenders = for {
       f <- scalaFiles("src/main") ++ scalaFiles("src/test")
       if f.getFileName.toString != "GraftSession.scala"
@@ -94,5 +97,23 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(offenders.isEmpty,
       "build sessions with GraftSession.builder and clone them with GraftSession.derived:\n" +
         offenders.mkString("\n"))
+  }
+
+  test("the library has no main or environment knob outside the entry points") {
+    def outside(token: String, allowed: Set[String]): Seq[String] = for {
+      f <- scalaFiles("src/main")
+      if !allowed(f.getFileName.toString)
+      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+      if line.contains(token)
+    } yield s"$f:${i + 1}: ${line.trim}"
+    val mains = outside("def main(",
+      Set("Bench.scala", "Verify.scala", "Explain.scala", "EntrySmoke.scala", "ChaosIngestChild.scala"))
+    val knobs = outside("sys.env",
+      Set("Bench.scala", "Verify.scala", "Explain.scala", "OracleDump.scala"))
+    assert(mains.isEmpty,
+      "one-shot programs go in a scratch copy, not the library:\n" + mains.mkString("\n"))
+    assert(knobs.isEmpty,
+      "library code takes settings as parameters, not environment variables:\n" +
+        knobs.mkString("\n"))
   }
 }

@@ -131,11 +131,11 @@ class GraphOpsSpec extends AnyFunSuite {
   }
 
   test("k-core invariant: every survivor's core degree is >= k, on a generated graph") {
-    // the soak generator's graph (well-formedness is its own test
+    // the TestData generator's graph (well-formedness is its own test
     // below): whatever survives a k-core MUST have >= k surviving
     // neighbors — the defining invariant, checked on a non-trivial
     // random structure rather than a closed form
-    val edges = graft.GraphSoak.syntheticEdges(spark, 2000L, extra = 3)
+    val edges = graft.TestData.syntheticEdges(spark, 2000L, extra = 3)
     // fixed 8 peels do NOT converge on this graph at k=8 (this spec
     // originally caught exactly that: sub-k survivors remained, and the
     // TRUE 8-core is empty — mean degree 10 sits below the 8-core
@@ -572,14 +572,14 @@ class GraphOpsSpec extends AnyFunSuite {
   }
 
   test("soak generator: symmetric, distinct, self-loop-free, degree-bounded") {
-    val e = graft.GraphSoak.syntheticEdges(spark, 1000L, extra = 3)
+    val e = graft.TestData.syntheticEdges(spark, 1000L, extra = 3)
     assert(e.filter(col("src") === col("dst")).count() === 0)
     assert(e.count() === e.distinct().count())
     // symmetry: reversing the edge list yields the same set
     assert(e.select(col("dst").as("src"), col("src").as("dst"))
       .except(e).count() === 0)
-    // bounded max degree: ring floor 4 + 3 out-chords + random in-chords;
-    // a hub would break the triangle-join cost model the soak measures
+    // bounded max degree: ring floor 4 + 3 out-chords + random in-chords,
+    // no hub
     val maxDeg = e.groupBy("src").count().agg(max("count")).head().getLong(0)
     assert(maxDeg < 40, s"unexpected hub: max degree $maxDeg")
   }

@@ -43,9 +43,9 @@ class ChaosKillSpec extends AnyFunSuite {
     val src = s"$base/src"
     val markers = new File(s"$base/markers"); markers.mkdirs()
 
-    // 6 input files = 6 micro-batches; the Soak corpus generator plants
+    // 6 input files = 6 micro-batches; the TestData corpus generator plants
     // near-dup families so the DedupIndex gate does real cross-batch work
-    graft.Soak.genDocsPublic(spark, 3000L)
+    graft.TestData.genDocs(spark, 3000L)
       .repartitionByRange(6, col("doc_id"))
       .write.parquet(src)
 

@@ -2,6 +2,9 @@ package graft.pipeline
 
 import java.sql.Timestamp
 
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -166,6 +169,31 @@ class GoldenE2ESpec extends AnyFunSuite {
     assert(got.count() == 7)
     assert(got.filter(col("raw_id") === 3).select("metric_value").as[Double].collect().toSeq ==
       Seq(2.5))
+  }
+
+  test("goldAffectedDays scans only the affected silver day, by a partition filter, no broadcast") {
+    val root = graft.TestTmp.dir("graft-golden-gold-scope")
+    val (silverRoot, goldRoot) = (s"$root/silver", s"$root/gold")
+    val b1 = bronzeOf(threeDays, "2022-04-14 13:30:00")
+    TxTable.commit(spark, silverRoot, Incremental.silverIncrement(b1, None, t0), "reading_date")
+    TxTable.commit(spark, goldRoot,
+      Incremental.goldAffectedDays(TxTable.read(spark, silverRoot), None, t0), "reading_date")
+    // one late line on 2022-04-15, the only affected day of three
+    TxTable.commit(spark, silverRoot, Incremental.silverIncrement(
+      b1.unionByName(lateBronze(7L -> "1650028218 Voltage 2.2")),
+      Some(TxTable.read(spark, silverRoot)), t1), "reading_date")
+    val gold = Incremental.goldAffectedDays(
+      TxTable.read(spark, silverRoot), Some(TxTable.read(spark, goldRoot)), t1)
+    assert(gold.collect().map(_.getAs[java.sql.Date]("reading_date").toString).toSeq ==
+      Seq("2022-04-15"))
+
+    val plan = gold.queryExecution.executedPlan
+    val helper = new AdaptiveSparkPlanHelper {}
+    val scans = helper.collect(plan) { case s: FileSourceScanExec => s }
+    assert(scans.nonEmpty, plan.toString)
+    scans.foreach(s => assert(s.partitionFilters.map(_.sql)
+      .exists(f => f.contains("reading_date") && f.contains("DATE '2022-04-15'")), plan.toString))
+    assert(helper.collect(plan) { case b: BroadcastExchangeExec => b }.isEmpty, plan.toString)
   }
 
   test("a raw_id re-sent on another day fails unique_raw_id loudly, never a silent duplicate") {

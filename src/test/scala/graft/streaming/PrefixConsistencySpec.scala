@@ -11,7 +11,7 @@ import graft.SparkTestSession
 import graft.pipeline.{Incremental, SensorPipeline, TxTable}
 
 /** Prefix consistency (Structured Streaming, SIGMOD 2018): one bronze log
-  * split into increments gives the same silver through the batch
+  * split into increments gives the same silver and gold through the batch
   * increments, through AvailableNow drains and in one shot.
   */
 class PrefixConsistencySpec extends AnyFunSuite {
@@ -43,6 +43,17 @@ class PrefixConsistencySpec extends AnyFunSuite {
     assert(view(got).exceptAll(view(want)).isEmpty && view(want).exceptAll(view(got)).isEmpty,
       s"$what differs from one-shot bronzeToSilver")
 
+  /** Gold without calculated_at; Power is a product of averages whose
+    * summation order may move the last bits, so within a relative 1e-12. */
+  private def assertSameGold(got: DataFrame, want: DataFrame, what: String): Unit = {
+    def power(gold: DataFrame, as: String) = gold.select(col("reading_date"),
+      col("metric_name"), col("reading_time"), col("metric_value").as(as))
+    val diff = power(got, "v")
+      .join(power(want, "w"), Seq("reading_date", "metric_name", "reading_time"), "full_outer")
+      .filter(col("v").isNull || col("w").isNull || abs(col("v") - col("w")) > abs(col("w")) * 1e-12)
+    assert(diff.isEmpty, s"$what differs from one-shot silverToGold: ${diff.collect().mkString(", ")}")
+  }
+
   test("batch increments == AvailableNow drains == one-shot bronzeToSilver") {
     val root = graft.TestTmp.dir("graft-prefix")
     // bronze is append-only with serial ids; increment k is ingested at
@@ -52,24 +63,30 @@ class PrefixConsistencySpec extends AnyFunSuite {
       .toDF("id", "raw_line", "ingested_at")
     val oneShot = SensorPipeline.bronzeToSilver(bronze).cache()
     assert(oneShot.count() == 14 && oneShot.select("reading_date").distinct().count() == 4)
+    val oneShotGold = SensorPipeline.silverToGold(oneShot)
+    assert(oneShotGold.count() == 4)
 
-    val batchRoot = s"$root/batch"
+    // each increment commits silver, then gold from the affected days
+    val (batchRoot, batchGold) = (s"$root/batch", s"$root/batch_gold")
     increments.indices.foreach { k =>
       val soFar = bronze.filter(col("ingested_at") <= lit(at(k, 0)))
-      val target = if (k == 0) None else Some(TxTable.read(spark, batchRoot))
-      TxTable.commit(spark, batchRoot,
-        Incremental.silverIncrement(soFar, target, lit(at(k, 30))), "reading_date")
+      TxTable.commit(spark, batchRoot, Incremental.silverIncrement(
+        soFar, TxTable.committed(spark, batchRoot), lit(at(k, 30))), "reading_date")
+      TxTable.commit(spark, batchGold, Incremental.goldAffectedDays(TxTable.read(spark, batchRoot),
+        TxTable.committed(spark, batchGold), lit(at(k, 45))), "reading_date")
     }
     assertSame(TxTable.read(spark, batchRoot), oneShot, "batch silver")
+    assertSameGold(TxTable.read(spark, batchGold), oneShotGold, "batch gold")
 
     val bronzeDir = s"$root/bronze"
     new java.io.File(bronzeDir).mkdirs()
     increments.zipWithIndex.foreach { case (lines, k) =>
       Files.writeString(Paths.get(s"$bronzeDir/inc$k.txt"), lines.mkString("", "\n", "\n"))
       StreamingPipeline.runBronzeToSilverAvailableNow(
-        spark, bronzeDir, s"$root/stream", s"$root/ckpt")
+        spark, bronzeDir, s"$root/stream", s"$root/ckpt", Some(s"$root/stream_gold"))
     }
     assertSame(TxTable.read(spark, s"$root/stream"), oneShot, "streaming silver")
+    assertSameGold(TxTable.read(spark, s"$root/stream_gold"), oneShotGold, "streaming gold")
     oneShot.unpersist()
   }
 }

@@ -54,9 +54,7 @@ class SocketIngestSpec extends AnyFunSuite {
       var rows = 0L
       while (rows < 4 && System.nanoTime() < deadline) {
         q.processAllAvailable()
-        rows = if (TxTable.latest(spark, silverPath)._1 > 0)
-          TxTable.read(spark, silverPath).count()
-        else 0L
+        rows = TxTable.committed(spark, silverPath).fold(0L)(_.count())
       }
       assert(rows == 4, s"4 valid readings merged from the socket, got $rows")
 
