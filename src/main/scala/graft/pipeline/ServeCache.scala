@@ -1,7 +1,8 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Driver-side pinned-snapshot serve tier — the sub-10 ms path in
   * front of [[Serve.range]].
@@ -12,68 +13,180 @@ import org.apache.spark.sql.functions._
   * dbt outputs with Postgres (`/root/reference/src/db/repositories/
   * readings.py:25-49` — the API never touches the pipeline engine);
   * this is the same architectural move inside the library: the
-  * serve-shaped slice of silver+gold is collected ONCE per table
-  * version into a driver-side array pre-sorted in response order and
-  * pre-formatted (ISO-ms strings), and a range call is two binary
-  * searches plus an array slice — no Spark job at all.
+  * serve-shaped slice of silver+gold lives in driver-side arrays
+  * pre-sorted in response order and pre-formatted (ISO-ms strings),
+  * and a range call is two binary searches plus an array slice — no
+  * Spark job at all.
   *
-  * Bounded by contract: `maxRows` caps the collect (the serve store
-  * is day-grain gold plus a bounded silver window in any real
+  * Refresh cost model: a refresh diffs the latest (silver, gold)
+  * manifests against the two the snapshot was built from. A day is a
+  * manifest key. A day whose dir list changed in either table, or that
+  * is new, is reloaded (both tables' rows of it); a day gone from both
+  * manifests is dropped; every other day is kept. Only the reloaded
+  * days' dirs are read, so a refresh reads O(changed days) rows in 3
+  * jobs: a count for the bound, then one collect. The reloaded rows
+  * are sorted and validated on the driver, and each kept day's run is
+  * copied from the pinned arrays (a day is one contiguous run in
+  * (date, time, name) order). The first load is the same diff against
+  * an empty snapshot. A change of the session time zone counts every
+  * day as changed, because the ISO strings and the date check below
+  * depend on it.
+  *
+  * Bounded by contract: `maxRows` caps the pinned rows (the serve
+  * store is day-grain gold plus a bounded silver window in any real
   * deployment; a snapshot above the cap throws rather than silently
   * eating the driver heap — the repo's guarded-collect discipline).
+  * The count runs before the collect.
   *
   * Staleness contract (spec'd in ServeCacheSpec):
   *  - reads serve the SNAPSHOT version pinned at construction or at
   *    the last successful [[refreshIfStale]] — never a mix of
   *    versions (the snapshot swap is one volatile write; concurrent
-  *    readers see the old array or the new one, both internally
+  *    readers see the old arrays or the new ones, both internally
   *    consistent with one (silver, gold) manifest version pair);
   *  - [[version]] exposes the pinned pair, so a writer needing
   *    read-your-writes refreshes after its commit and checks the
   *    version advanced — the manifest is the truth, the cache never
   *    invents a version;
   *  - [[refreshIfStale]] is a no-op (returns false) when the latest
-  *    manifest versions equal the pinned pair: steady-state serving
-  *    costs two manifest listings, not a rebuild.
+  *    manifest versions equal the pinned pair and the session zone is
+  *    unchanged: steady-state serving costs two manifest listings and
+  *    no job. A refresh that fails (the bound, the checks below) keeps
+  *    the old snapshot.
   *
   * Response-order invariant: [[Serve.range]] orders by (reading_time,
   * metric_name) while the cache slices by reading_date; the two agree
   * because reading_date is derived from reading_time in every store
   * producer (silver normalization, gold day grain), making date runs
-  * time-contiguous. That derivation is VALIDATED at snapshot load
-  * (one linear pass: event-time must be nondecreasing in
-  * (date, time, name) order) — a store that breaks it fails loudly at
-  * refresh, never serves misordered ranges.
+  * time-contiguous. That derivation is VALIDATED for every reloaded
+  * row, and event time must be nondecreasing in (date, time, name)
+  * order over the whole spliced snapshot — a store that breaks it
+  * fails loudly at refresh, never serves misordered ranges.
   */
 final class ServeCache private (
     spark: SparkSession, silverRoot: String, goldRoot: String, maxRows: Long) {
 
   import ServeCache._
 
-  private def latestVersions: (Long, Long) =
-    (TxTable.latest(spark, silverRoot)._1, TxTable.latest(spark, goldRoot)._1)
-
-  /** Reads BOTH tables at the exact versions the manifest listing
-    * returned ([[TxTable.readAt]]): a commit racing the rebuild cannot
-    * bleed half-new rows into a snapshot stamped with the old version. */
-  private def loadSnapshot(): Snapshot = {
-    val (vs, vg) = latestVersions
-    buildSnapshot(
-      TxTable.readAt(spark, silverRoot, vs),
-      TxTable.readAt(spark, goldRoot, vg), vs, vg, maxRows)
+  /** The snapshot at the latest committed versions, built from `prev`
+    * by manifest diff; `prev` itself when nothing changed. Both tables
+    * are read from the manifests the one [[TxTable.latest]] call per
+    * table returned, so a commit racing the refresh cannot bleed
+    * half-new rows into a snapshot stamped with the old version. */
+  private def diff(prev: Snapshot): Snapshot = {
+    val (vs, silver) = TxTable.latest(spark, silverRoot)
+    val (vg, gold) = TxTable.latest(spark, goldRoot)
+    val zone = spark.conf.get("spark.sql.session.timeZone", java.util.TimeZone.getDefault.getID)
+    if (vs == prev.vSilver && vg == prev.vGold && zone == prev.zone) return prev
+    val days = (silver.keySet ++ gold.keySet).toArray.sorted
+    val changed = days.filter(d => zone != prev.zone ||
+      silver.get(d) != prev.silver.get(d) || gold.get(d) != prev.gold.get(d)).toSet
+    val kept = days.filterNot(changed)
+      .map(d => d -> (lowerBound(prev.dates, d), upperBound(prev.dates, d))).toMap
+    val keptRows = kept.values.map { case (lo, hi) => hi - lo }.sum
+    val rows = reload(silver.filter(e => changed(e._1)), gold.filter(e => changed(e._1)),
+      keptRows, zone)
+    val n = keptRows + rows.length
+    val next = Snapshot(vs, vg, silver, gold, zone,
+      new Array(n), new Array(n), new Array(n), new Array(n), new Array(n))
+    var at = 0
+    var j = 0
+    days.foreach { d =>
+      kept.get(d) match {
+        case Some((lo, hi)) =>
+          def copy(from: AnyRef, to: AnyRef): Unit = System.arraycopy(from, lo, to, at, hi - lo)
+          copy(prev.dates, next.dates); copy(prev.us, next.us); copy(prev.iso, next.iso)
+          copy(prev.name, next.name); copy(prev.value, next.value)
+          at += hi - lo
+        case None =>
+          while (j < rows.length && rows(j).getString(0) == d) {
+            val r = rows(j)
+            next.dates(at) = d; next.us(at) = r.getLong(1); next.iso(at) = r.getString(2)
+            next.name(at) = r.getString(3); next.value(at) = r.getDouble(4)
+            at += 1; j += 1
+          }
+      }
+    }
+    // rows are sorted by date and each changed day takes its whole run,
+    // so a row is left over only when its date is no manifest key
+    require(j == rows.length,
+      s"serve store row dated '${rows(j).getString(0)}' is no manifest key of a changed day " +
+        "— the day runs would be misplaced; fix the store producer")
+    var i = 1
+    while (i < n) {
+      require(next.us(i) >= next.us(i - 1),
+        s"serve store event time decreases in (date,time,name) order around " +
+          s"${next.dates(i - 1)} / ${next.dates(i)} — " +
+          "cached ranges would misorder; fix the store producer")
+      i += 1
+    }
+    next
   }
 
-  @volatile private var snap: Snapshot = loadSnapshot()
+  /** The serve-shaped rows of the changed days' entries, checked
+    * against the bound (with the `keptRows`) before they are collected,
+    * validated and sorted in (date, time, name) order. */
+  private def reload(silver: Map[String, String], gold: Map[String, String],
+      keptRows: Int, zone: String): Array[Row] = {
+    def slice(df: DataFrame) = df.select(
+      col("reading_date").cast("string").as("d"),
+      unix_micros(col("reading_time")).as("us"),
+      date_format(col("reading_time"), "yyyy-MM-dd'T'HH:mm:ss.SSS'Z'").as("iso"),
+      col("metric_name").cast("string").as("n"),
+      col("metric_value").cast("double").as("v"))
+    val slices = Seq(silverRoot -> silver, goldRoot -> gold)
+      .flatMap { case (root, e) => TxTable.readEntries(spark, root, e) }.map(slice)
+    if (slices.isEmpty) return Array.empty
+    val union = slices.reduce(_.unionByName(_))
+    val n = keptRows + union.count()
+    require(n <= maxRows,
+      s"serve store is $n rows, above the $maxRows cache bound — " +
+        "this snapshot does not belong on the driver; serve it from the Spark path")
+    val rows = union.collect() // bounded by the explicit maxRows guard above
+    // response-order invariant: (date, time, name) order must BE
+    // (time, name) order. The nondecreasing-time check alone is not
+    // sufficient — two rows with EQUAL reading_time but different
+    // reading_date pass it yet would serve names mis-ordered across
+    // the date boundary relative to Serve.range's (time, name) order —
+    // so validate reading_date = date(reading_time) directly per row,
+    // derived under the SESSION timezone (the zone the store's date
+    // slices were cast under) — hardcoding UTC would false-fire on
+    // valid data whenever a deployment runs non-UTC. The local date is
+    // floor((epoch second + zone offset) / day), as java.time derives
+    // it; its string is rebuilt only when the day changes.
+    val rules = java.time.ZoneId.of(zone).getRules
+    var day = Long.MinValue
+    var derived = ""
+    var i = 0
+    while (i < rows.length) {
+      val sec = Math.floorDiv(rows(i).getLong(1), 1000000L)
+      val local = Math.floorDiv(
+        sec + rules.getOffset(java.time.Instant.ofEpochSecond(sec)).getTotalSeconds, 86400L)
+      if (local != day) { day = local; derived = java.time.LocalDate.ofEpochDay(day).toString }
+      val d = rows(i).getString(0)
+      require(d == derived,
+        s"serve store violates reading_date = date(reading_time) at reloaded row $i: " +
+          s"date '$d' vs time-derived '$derived' — " +
+          "cached ranges would misorder; fix the store producer")
+      i += 1
+    }
+    java.util.Arrays.sort(rows, responseOrder)
+    rows
+  }
+
+  @volatile private var snap: Snapshot = diff(Empty)
 
   /** The (silver, gold) TxTable versions this cache is serving. */
   def version: (Long, Long) = (snap.vSilver, snap.vGold)
 
-  /** Reload iff the latest committed versions differ from the pinned
-    * pair. Returns true when a new snapshot was installed. */
+  /** Diff against the latest committed versions iff they (or the
+    * session zone) differ from the pinned ones. Returns true when a new
+    * snapshot was installed. */
   def refreshIfStale(): Boolean = synchronized {
-    val cur = (snap.vSilver, snap.vGold)
-    if (latestVersions == cur) false
-    else { snap = loadSnapshot(); true }
+    val next = diff(snap)
+    val swapped = next ne snap
+    snap = next
+    swapped
   }
 
   /** [[Serve.range]] semantics off the pinned snapshot: same parameter
@@ -93,74 +206,56 @@ final class ServeCache private (
 
 object ServeCache {
 
-  /** Column-wise snapshot (four parallel arrays beat an array of case
+  /** Column-wise snapshot (parallel arrays beat an array of case
     * classes for a few-hundred-MB pinned store: no per-row object
     * header, and the date column is only touched by the binary
-    * search). Sorted by (date, event-time micros, name). */
+    * search). Sorted by (date, event-time micros, name); `dates` holds
+    * one String per day, the manifest key. It keeps the two manifests
+    * (partition value -> dirs) and the session zone it was built from,
+    * which the next refresh diffs against. */
   private[pipeline] final case class Snapshot(
       vSilver: Long, vGold: Long,
-      dates: Array[String], iso: Array[String],
+      silver: Map[String, String], gold: Map[String, String], zone: String,
+      dates: Array[String], us: Array[Long], iso: Array[String],
       name: Array[String], value: Array[Double])
 
+  /** What the first load diffs against: no version (-1 is never a
+    * committed one), no day, no zone. */
+  private val Empty = Snapshot(-1L, -1L, Map.empty, Map.empty, "",
+    Array.empty, Array.empty, Array.empty, Array.empty, Array.empty)
+
+  /** (date, event-time micros, name) with names in Spark's binary UTF-8
+    * order, nulls first, as `orderBy` sorts them. Java's
+    * `String.compareTo` compares UTF-16 units, which differs for
+    * characters outside the BMP. */
+  private val responseOrder: java.util.Comparator[Row] = (a, b) => {
+    val byDate = a.getString(0).compareTo(b.getString(0))
+    if (byDate != 0) byDate
+    else {
+      val byTime = java.lang.Long.compare(a.getLong(1), b.getLong(1))
+      if (byTime != 0) byTime
+      else {
+        val (x, y) = (a.getString(3), b.getString(3))
+        if (x == null || y == null) java.lang.Boolean.compare(x != null, y != null)
+        else UTF8String.fromString(x).binaryCompare(UTF8String.fromString(y))
+      }
+    }
+  }
+
   /** First index with dates(i) >= key (the classic lower bound). */
-  private def lowerBound(dates: Array[String], key: String): Int = {
+  private def lowerBound(dates: Array[String], key: String): Int = firstNot(dates, _ < key)
+
+  /** First index with dates(i) > key. */
+  private def upperBound(dates: Array[String], key: String): Int = firstNot(dates, _ <= key)
+
+  /** First index whose date fails `before`, which holds on a prefix. */
+  private def firstNot(dates: Array[String], before: String => Boolean): Int = {
     var lo = 0; var hi = dates.length
     while (lo < hi) {
       val mid = (lo + hi) >>> 1
-      if (dates(mid) < key) lo = mid + 1 else hi = mid
+      if (before(dates(mid))) lo = mid + 1 else hi = mid
     }
     lo
-  }
-
-  private def buildSnapshot(
-      silver: DataFrame, gold: DataFrame, vSilver: Long, vGold: Long,
-      maxRows: Long): Snapshot = {
-    def slice(df: DataFrame) = df.select(
-      col("reading_date").cast("string").as("d"),
-      unix_micros(col("reading_time")).as("us"),
-      date_format(col("reading_time"), "yyyy-MM-dd'T'HH:mm:ss.SSS'Z'").as("iso"),
-      col("metric_name").cast("string").as("n"),
-      col("metric_value").cast("double").as("v"))
-    val union = slice(silver).unionByName(slice(gold))
-    val n = union.count()
-    require(n <= maxRows,
-      s"serve store is $n rows, above the $maxRows cache bound — " +
-        "this snapshot does not belong on the driver; serve it from the Spark path")
-    val rows = union
-      .orderBy(col("d"), col("us"), col("n"))
-      .collect() // bounded by the explicit maxRows guard above
-    // response-order invariant: (date, time, name) order must BE
-    // (time, name) order. The nondecreasing-time check alone is not
-    // sufficient — two rows with EQUAL reading_time but different
-    // reading_date pass it yet would serve names mis-ordered across
-    // the date boundary relative to Serve.range's (time, name) order —
-    // so validate reading_date = date(reading_time) directly per row,
-    // derived under the SESSION timezone (the zone the store's date
-    // slices were cast under) — hardcoding UTC would false-fire on
-    // valid data whenever a deployment runs non-UTC.
-    val zone = java.time.ZoneId.of(
-      union.sparkSession.conf.get(
-        "spark.sql.session.timeZone", java.util.TimeZone.getDefault.getID))
-    var i = 0
-    while (i < rows.length) {
-      val d = rows(i).getString(0)
-      val us = rows(i).getLong(1)
-      val derived = java.time.Instant
-        .ofEpochSecond(Math.floorDiv(us, 1000000L))
-        .atZone(zone).toLocalDate.toString
-      require(d == derived,
-        s"serve store violates reading_date = date(reading_time) at row $i: " +
-          s"date '$d' vs time-derived '$derived' — " +
-          "cached ranges would misorder; fix the store producer")
-      if (i > 0) require(us >= rows(i - 1).getLong(1),
-        s"serve store event time decreases in (date,time,name) order around " +
-          s"${rows(i - 1).getString(0)} / $d — " +
-          "cached ranges would misorder; fix the store producer")
-      i += 1
-    }
-    Snapshot(vSilver, vGold,
-      rows.map(_.getString(0)), rows.map(_.getString(2)),
-      rows.map(_.getString(3)), rows.map(_.getDouble(4)))
   }
 
   /** Version-consistent cache over committed silver/gold [[TxTable]]s. */

@@ -116,10 +116,16 @@ object TxTable {
   /** [[read]] when the table has a committed version, None before its
     * first commit; one listing of the log either way.
     */
-  def committed(spark: SparkSession, root: String): Option[DataFrame] = {
-    val (v, entries) = latest(spark, root)
-    if (v > 0) Some(readManifest(spark, root, liveDirs(entries))) else None
-  }
+  def committed(spark: SparkSession, root: String): Option[DataFrame] =
+    readEntries(spark, root, latest(spark, root)._2)
+
+  /** The rows of `entries`, a subset of one committed manifest of `root`
+    * (as [[latest]] returns it), built like [[read]] but listing and
+    * opening only those entries' dirs; None when `entries` is empty.
+    */
+  private[pipeline] def readEntries(spark: SparkSession, root: String,
+      entries: Map[String, String]): Option[DataFrame] =
+    if (entries.isEmpty) None else Some(readManifest(spark, root, liveDirs(entries)))
 
   private def liveDirs(entries: Map[String, String]): Seq[String] =
     entries.values.toSeq.flatMap(dirsOf)

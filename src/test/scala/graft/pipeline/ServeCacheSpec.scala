@@ -24,16 +24,19 @@ class ServeCacheSpec extends AnyFunSuite {
       ("2024-01-03", "2024-01-03 23:59:59.999", "view", 4.0)) ++
       (if (extraDay) Seq(("2024-01-04", "2024-01-04 01:02:03.004", "click", 9.0))
        else Nil)
-    val goldRows = Seq(
-      ("2024-01-01", "2024-01-01 00:00:00", "Power", 3.0),
-      ("2024-01-02", "2024-01-02 00:00:00", "Power", 6.5),
-      ("2024-01-03", "2024-01-03 00:00:00", "Power", 8.25))
-    def df(rows: Seq[(String, String, String, Double)]) =
-      rows.toDF("reading_date", "ts", "metric_name", "metric_value")
-        .select(col("reading_date"), to_timestamp(col("ts")).as("reading_time"),
-          col("metric_name"), col("metric_value"))
-    (df(silverRows), df(goldRows))
+    (frame(silverRows), frame(goldRows))
   }
+
+  private val goldRows = Seq(
+    ("2024-01-01", "2024-01-01 00:00:00", "Power", 3.0),
+    ("2024-01-02", "2024-01-02 00:00:00", "Power", 6.5),
+    ("2024-01-03", "2024-01-03 00:00:00", "Power", 8.25))
+
+  /** Store rows (reading_date, reading_time text, name, value) as a frame. */
+  private def frame(rows: Seq[(String, String, String, Double)]): DataFrame =
+    rows.toDF("reading_date", "ts", "metric_name", "metric_value")
+      .select(col("reading_date"), to_timestamp(col("ts")).as("reading_time"),
+        col("metric_name"), col("metric_value"))
 
   /** The fixture committed as silver and gold TxTables under a fresh
     * root; returns the two table roots. */
@@ -49,6 +52,20 @@ class ServeCacheSpec extends AnyFunSuite {
       silver: DataFrame, gold: DataFrame, f: Option[String], t: Option[String]): Either[String, Seq[(String, String, Double)]] =
     Serve.range(silver, gold, f, t).map(_.collect()
       .map(r => (r.getString(0), r.getString(1), r.getDouble(2))).toSeq)
+
+  private val everything = (Some("2000-01-01"), Some("2100-01-01"))
+
+  /** The cache's full range equals, in order, the Spark path over the
+    * tables at the cache's pinned versions, which are the latest. */
+  private def assertPinnedParity(cache: ServeCache, sRoot: String, gRoot: String,
+      session: org.apache.spark.sql.SparkSession = spark): Unit = {
+    val (vs, vg) = cache.version
+    assert((vs, vg) === (TxTable.latest(session, sRoot)._1, TxTable.latest(session, gRoot)._1))
+    val viaSpark = sparkPath(TxTable.readAt(session, sRoot, vs), TxTable.readAt(session, gRoot, vg),
+      everything._1, everything._2)
+    assert(viaSpark.exists(_.nonEmpty))
+    assert(cache.range(everything._1, everything._2) === viaSpark)
+  }
 
   test("cached range equals the Spark serve path across range shapes and reject cases") {
     val (sRoot, gRoot) = mkTables(mkFrames())
@@ -138,11 +155,7 @@ class ServeCacheSpec extends AnyFunSuite {
     readers.foreach(_.start())
     (1 to nDays).foreach { day =>
       val d = f"2025-03-$day%02d"
-      TxTable.appendCommit(spark, sRoot,
-        Seq((d, s"$d 00:00:01", "click", day.toDouble))
-          .toDF("reading_date", "ts", "metric_name", "metric_value")
-          .select(col("reading_date"), to_timestamp(col("ts")).as("reading_time"),
-            col("metric_name"), col("metric_value")),
+      TxTable.appendCommit(spark, sRoot, frame(Seq((d, s"$d 00:00:01", "click", day.toDouble))),
         "reading_date")
       assert(cache.refreshIfStale(), s"refresh must observe day $day's commit")
     }
@@ -163,15 +176,128 @@ class ServeCacheSpec extends AnyFunSuite {
     // a store row whose reading_date is NOT date(reading_time) breaks
     // the response-order invariant and must be rejected at load
     val (silver, gold) = mkFrames()
-    val bad = silver.unionByName(
-      Seq(("2024-01-09", "2024-01-01 00:00:00", "click", 1.0))
-        .toDF("reading_date", "ts", "metric_name", "metric_value")
-        .select(col("reading_date"), to_timestamp(col("ts")).as("reading_time"),
-          col("metric_name"), col("metric_value")))
+    val bad = silver.unionByName(frame(Seq(("2024-01-09", "2024-01-01 00:00:00", "click", 1.0))))
     val (badRoot, gRoot2) = mkTables((bad, gold))
     val e2 = intercept[IllegalArgumentException] {
       ServeCache.fromTxTables(spark, badRoot, gRoot2)
     }
     assert(e2.getMessage.contains("misorder"))
+  }
+
+  test("manifest-diff refresh equals the Spark path after a restage, a gold-only commit, a new day and a delete") {
+    val (sRoot, gRoot) = mkTables(mkFrames())
+    val cache = ServeCache.fromTxTables(spark, sRoot, gRoot)
+    assertPinnedParity(cache, sRoot, gRoot)
+    def day(d: String) = cache.range(Some(d), Some(d)).toOption.get
+
+    // one existing day restaged with a changed value
+    TxTable.commit(spark, sRoot,
+      frame(Seq(("2024-01-02", "2024-01-02 12:00:00.5", "click", 30.25))), "reading_date")
+    assert(cache.refreshIfStale())
+    assertPinnedParity(cache, sRoot, gRoot)
+    assert(day("2024-01-02").map(_._3) === Seq(6.5, 30.25))
+
+    // a gold-only commit
+    TxTable.commit(spark, gRoot,
+      frame(Seq(("2024-01-03", "2024-01-03 00:00:00", "Power", 80.0))), "reading_date")
+    assert(cache.refreshIfStale())
+    assertPinnedParity(cache, sRoot, gRoot)
+    assert(day("2024-01-03").map(_._3) === Seq(80.0, 4.0))
+
+    // a new day, blind-appended
+    TxTable.appendCommit(spark, sRoot,
+      frame(Seq(("2024-01-05", "2024-01-05 07:00:00", "view", 5.0))), "reading_date")
+    assert(cache.refreshIfStale())
+    assertPinnedParity(cache, sRoot, gRoot)
+
+    // a day deleted from silver keeps its gold row; deleted from both, it is gone
+    assert(TxTable.deleteWhere(spark, sRoot, "reading_date", col("reading_date") === "2024-01-01") == 2)
+    assert(cache.refreshIfStale())
+    assertPinnedParity(cache, sRoot, gRoot)
+    assert(day("2024-01-01") === Seq(("2024-01-01T00:00:00.000Z", "Power", 3.0)))
+    assert(TxTable.deleteWhere(spark, gRoot, "reading_date", col("reading_date") === "2024-01-01") == 1)
+    assert(cache.refreshIfStale())
+    assertPinnedParity(cache, sRoot, gRoot)
+    assert(day("2024-01-01").isEmpty)
+    assert(!cache.refreshIfStale())
+  }
+
+  test("refresh counts: a one-day append reads only that day in at most 3 jobs; no change, no job") {
+    val (sRoot, gRoot) = mkTables(mkFrames())
+    val cache = ServeCache.fromTxTables(spark, sRoot, gRoot)
+    val (idle, idleJobs) = graft.JobCount(spark)(cache.refreshIfStale())
+    assert(!idle && idleJobs == 0, s"a refresh with nothing changed launched $idleJobs jobs")
+    TxTable.appendCommit(spark, sRoot,
+      frame(Seq(("2024-01-04", "2024-01-04 01:02:03.004", "click", 9.0))), "reading_date")
+    val (swapped, jobs, records) = graft.JobCount.withRecords(spark)(cache.refreshIfStale())
+    assert(swapped && jobs <= 3, s"a refresh after a one-day append launched $jobs jobs")
+    // the one new row, read by the bound's count and by the collect; a
+    // full reload would read all 8 rows twice
+    assert(records == 2, s"a refresh after a one-day append read $records input records")
+    assertPinnedParity(cache, sRoot, gRoot)
+  }
+
+  test("bound on refresh: kept plus reloaded rows above maxRows throw and the old snapshot stays") {
+    val (sRoot, gRoot) = mkTables(mkFrames()) // 4 silver + 3 gold rows
+    val cache = ServeCache.fromTxTables(spark, sRoot, gRoot, maxRows = 7)
+    val before = cache.range(everything._1, everything._2)
+    TxTable.appendCommit(spark, sRoot,
+      frame(Seq(("2024-01-04", "2024-01-04 01:02:03.004", "click", 9.0))), "reading_date")
+    val e = intercept[IllegalArgumentException](cache.refreshIfStale())
+    assert(e.getMessage.contains("cache bound"))
+    assert(cache.version === (1L, 1L))
+    assert(cache.range(everything._1, everything._2) === before)
+  }
+
+  test("names at one reading_time sort in Spark's UTF-8 order, on load and on refresh") {
+    // U+FF21 sorts before U+1F600 in UTF-8 (and code point) order, after
+    // its surrogate pair in UTF-16 order, which String.compareTo uses
+    val (fullwidth, emoji) = ("A\uFF21", "A\uD83D\uDE00")
+    assert(emoji.compareTo(fullwidth) < 0)
+    val (silver, gold) = mkFrames()
+    val (sRoot, gRoot) = mkTables((silver.unionByName(frame(Seq(
+      ("2024-01-02", "2024-01-02 12:00:00.5", emoji, 7.0),
+      ("2024-01-02", "2024-01-02 12:00:00.5", fullwidth, 8.0)))), gold))
+    val cache = ServeCache.fromTxTables(spark, sRoot, gRoot)
+    assertPinnedParity(cache, sRoot, gRoot)
+    assert(cache.range(Some("2024-01-02"), Some("2024-01-02")).toOption.get.map(_._2) ===
+      Seq("Power", fullwidth, emoji, "click"))
+    TxTable.appendCommit(spark, sRoot, frame(Seq(
+      ("2024-01-04", "2024-01-04 08:00:00", emoji, 1.0),
+      ("2024-01-04", "2024-01-04 08:00:00", fullwidth, 2.0))), "reading_date")
+    assert(cache.refreshIfStale())
+    assertPinnedParity(cache, sRoot, gRoot)
+    assert(cache.range(Some("2024-01-04"), Some("2024-01-04")).toOption.get.map(_._2) ===
+      Seq(fullwidth, emoji))
+  }
+
+  test("a session time-zone change between refreshes reloads every day") {
+    val tz = "spark.sql.session.timeZone"
+    // a clone of a private parent: no other caller is handed this
+    // session, whose zone the test changes
+    val session = graft.GraftSession.derived(spark.newSession(), Map(tz -> "UTC"))
+    // every time is a valid reading_date in UTC and in Berlin
+    val (sRoot, gRoot) = mkTables((frame(Seq(
+      ("2024-01-01", "2024-01-01 10:00:00", "click", 1.0),
+      ("2024-01-02", "2024-01-02 11:30:00.25", "view", 2.0),
+      ("2024-01-03", "2024-01-03 09:15:00", "click", 3.0))), frame(goldRows)))
+    val cache = ServeCache.fromTxTables(session, sRoot, gRoot)
+    assertPinnedParity(cache, sRoot, gRoot, session)
+
+    session.conf.set(tz, "Europe/Berlin")
+    TxTable.appendCommit(spark, sRoot,
+      frame(Seq(("2024-01-04", "2024-01-04 12:00:00", "view", 4.0))), "reading_date")
+    assert(cache.refreshIfStale())
+    assertPinnedParity(cache, sRoot, gRoot, session)
+    assert(cache.range(Some("2024-01-01"), Some("2024-01-01")).toOption.get ===
+      Seq(("2024-01-01T01:00:00.000Z", "Power", 3.0), ("2024-01-01T11:00:00.000Z", "click", 1.0)))
+
+    // back to UTC with no commit: still every day
+    session.conf.set(tz, "UTC")
+    assert(cache.refreshIfStale())
+    assertPinnedParity(cache, sRoot, gRoot, session)
+    assert(cache.range(Some("2024-01-01"), Some("2024-01-01")).toOption.get.map(_._1) ===
+      Seq("2024-01-01T00:00:00.000Z", "2024-01-01T10:00:00.000Z"))
+    assert(!cache.refreshIfStale())
   }
 }
