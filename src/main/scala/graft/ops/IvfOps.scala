@@ -356,19 +356,6 @@ object IvfOps {
     annTrained(emb, queryPred, k, nlist, nprobe)
   }
 
-  /** Spherical-k-means cell assignment of every vector (production twin
-    * of the stand-in `assign`): (vec_id, cluster).
-    */
-  def assignTrained(
-      emb: org.apache.spark.sql.DataFrame,
-      nlist: Int,
-      iters: Int = 5): org.apache.spark.sql.DataFrame = {
-    val unit = unitEmb(emb)
-    val model = KMeans.fitSample(unit, k = nlist, iters = iters, spherical = true)
-    KMeans.assignClusters(unit, model.centroids)
-      .select(col("vec_id"), col("cluster").cast(LongType).as("cluster"))
-  }
-
   /** Trained IVF cosine search: spherical k-means cells, probe the
     * `nprobe` nearest cells per query, exact cosine re-rank inside.
     * Returns (q_id, vec_id, cosine, rank), totally ordered.

@@ -40,18 +40,6 @@ object LmOps {
   private def toks(docs: DataFrame) =
     docs.select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
 
-  /** Unigram model: token -> count, plus corpus totals (T tokens,
-    * V vocab). Counts ride as DOUBLE so every downstream expression is
-    * pure float math (matching the oracle's arithmetic exactly).
-    */
-  def unigramModel(docs: DataFrame): (DataFrame, Double, Double) = {
-    val cnt = toks(docs).groupBy("tok")
-      .agg(count(lit(1)).cast(DoubleType).as("c"))
-    val Array(t, v) = cnt.agg(sum(col("c")), count(lit(1)).cast(DoubleType))
-      .head() match { case r => Array(r.getDouble(0), r.getDouble(1)) }
-    (cnt, t, v)
-  }
-
   /** Per-document perplexity under the corpus unigram model:
     * exp(-(1/n) * sum ln p(w)). Returns (doc_id, n_tokens, ppl).
     *

@@ -20,6 +20,4 @@ final case class QueryDef(
 object QueryDef {
   def apply(name: String, oracle: String)(run: (SparkSession, String) => DataFrame): QueryDef =
     QueryDef(name, run, Some(oracle))
-  def noOracle(name: String)(run: (SparkSession, String) => DataFrame): QueryDef =
-    QueryDef(name, run, None)
 }

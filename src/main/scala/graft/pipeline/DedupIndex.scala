@@ -272,29 +272,24 @@ object DedupIndex {
   /** Index maintenance: merge the per-ingest append fragments into
     * bounded LEVELED runs ([[TxTable.compactLeveled]], r14 — the full
     * rewrite it replaced was O(index) per firing, the same scale-killer
-    * shape as the shard table's; SCALE.md §16d) and reclaim superseded
-    * dirs. Runs are clustered on band_hash within each band_id
+    * shape as the shard table's; SCALE.md §16d). Runs are clustered on band_hash within each band_id
     * partition, so a future stats-pruned probe layout stays possible.
-    * Contents are unchanged, but the vacuum DELETES superseded version
-    * dirs: any still-unevaluated verdicts frame from an earlier
-    * [[ingest]] (whose plan pins the pre-ingest dir list) must be
-    * materialized first. Single-writer, like ingest itself. Returns
+    * Contents are unchanged. Single-writer, like ingest itself. Returns
     * whether any merge step ran.
     *
-    * `vacuum` defaults FALSE (r14): compact is reached from streaming
-    * maintenance ([[PretrainExport.runAvailableNow]]'s maintain hook),
-    * whose driver cannot know its readers' retention windows — an
-    * unconditional vacuum there could FileNotFound a reader pinned on
-    * a superseded version mid-scan. Batch callers that own the only
-    * readers opt in (or schedule [[TxTable.vacuum]] themselves).
+    * Compact never vacuums: it is reached from streaming maintenance
+    * ([[PretrainExport.runAvailableNow]]'s maintain hook), whose driver
+    * cannot know its readers' retention windows — a vacuum there could
+    * FileNotFound a reader pinned on a superseded version mid-scan.
+    * Batch callers that own the only readers schedule [[TxTable.vacuum]]
+    * themselves (it deletes superseded version dirs, so any
+    * still-unevaluated verdicts frame from an earlier [[ingest]], whose
+    * plan pins the pre-ingest dir list, must be materialized first).
     */
-  def compact(spark: SparkSession, root: String, vacuum: Boolean = false,
-      minMergeLevel: Int = 0, maxMergeLevel: Int = Int.MaxValue): Boolean = {
-    val steps = TxTable.compactLeveled(spark, root, "band_id", Seq("band_hash"),
-      minMergeLevel = minMergeLevel, maxMergeLevel = maxMergeLevel)
-    if (vacuum) TxTable.vacuum(spark, root)
-    steps > 0
-  }
+  def compact(spark: SparkSession, root: String,
+      minMergeLevel: Int = 0, maxMergeLevel: Int = Int.MaxValue): Boolean =
+    TxTable.compactLeveled(spark, root, "band_id", Seq("band_hash"),
+      minMergeLevel = minMergeLevel, maxMergeLevel = maxMergeLevel) > 0
 
   /** The index's band geometry is pinned at creation (`_graft_params`
     * beside the log): signatures and bucket layout are functions of

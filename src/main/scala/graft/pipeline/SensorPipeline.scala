@@ -113,12 +113,18 @@ object SensorPipeline {
       .orderBy(col("reading_time"), col("metric_name")) // O2
   }
 
-  /** JSON-response projection (data.py:110-126 + format_timestamp
-    * data.py:150-153): ms-truncated ISO-8601 Z strings.
+  /** The response's time format (format_timestamp data.py:150-153):
+    * ms-truncated ISO-8601 Z — one definition for [[formatResponse]] and
+    * the serve cache's pre-formatted strings.
+    */
+  val ResponseTimeFormat = "yyyy-MM-dd'T'HH:mm:ss.SSS'Z'"
+
+  /** JSON-response projection (data.py:110-126) with
+    * [[ResponseTimeFormat]] strings.
     */
   def formatResponse(served: DataFrame): DataFrame =
     served.select(
-      date_format(col("reading_time"), "yyyy-MM-dd'T'HH:mm:ss.SSS'Z'").as("time"), // P15
+      date_format(col("reading_time"), ResponseTimeFormat).as("time"), // P15
       col("metric_name").as("name"),
       col("metric_value").as("value"))
 }
@@ -205,11 +211,9 @@ object Incremental {
     }
 
   /** One Silver increment: bronze rows newer than the watermark, parsed,
-    * merged on raw_id into the affected days only ([[Merge.intoPartitions]];
-    * the empty fresh rows when none is valid). Meant for `TxTable.commit`
-    * or `stage` + `publish`, which keep every other day. Sound because
-    * raw_id fixes a row's day: the reference's bronze is append-only with
-    * serial ids, as the streaming tiers assume.
+    * merged into the affected days only ([[silverMerge]]; the empty fresh
+    * rows when none is valid). Meant for `TxTable.commit` or `stage` +
+    * `publish`, which keep every other day.
     */
   def silverIncrement(
       bronze: DataFrame,
@@ -217,9 +221,20 @@ object Incremental {
       processedAt: Column = current_timestamp()): DataFrame = {
     val wm = watermark(silverTarget, "processed_at")
     val fresh = bronzeToSilver(bronze.filter(col("ingested_at") > lit(wm)), processedAt) // F3
-    Merge.intoPartitions(silverTarget, fresh, "reading_date", Seq("raw_id"),
-      Seq(col("processed_at").desc, col("reading_time").desc)).fold(fresh)(_._2)
+    silverMerge(silverTarget, fresh).fold(fresh)(_._2)
   }
+
+  /** The silver merge of the batch increment and the streaming silver
+    * sinks: [[Merge.intoPartitions]] of `fresh` silver rows into the
+    * `reading_date` days they touch, keyed on `raw_id`, latest
+    * `processed_at` (then `reading_time`) winning. Sound because raw_id
+    * fixes a row's day: the reference's bronze is append-only with
+    * serial ids, as the streaming tiers assume.
+    */
+  def silverMerge(silverTarget: Option[DataFrame],
+      fresh: DataFrame): Option[(Seq[Any], DataFrame)] =
+    Merge.intoPartitions(silverTarget, fresh, "reading_date", Seq("raw_id"),
+      Seq(col("processed_at").desc, col("reading_time").desc))
 
   /** The recomputed affected-day Gold rows only — the FULL new content
     * of every day that received new silver since the target's watermark.

@@ -131,7 +131,7 @@ final class ServeCache private (
     def slice(df: DataFrame) = df.select(
       col("reading_date").cast("string").as("d"),
       unix_micros(col("reading_time")).as("us"),
-      date_format(col("reading_time"), "yyyy-MM-dd'T'HH:mm:ss.SSS'Z'").as("iso"),
+      date_format(col("reading_time"), SensorPipeline.ResponseTimeFormat).as("iso"),
       col("metric_name").cast("string").as("n"),
       col("metric_value").cast("double").as("v"))
     val slices = Seq(silverRoot -> silver, goldRoot -> gold)

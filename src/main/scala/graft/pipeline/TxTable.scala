@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 
 /** Crash-safe multi-partition commits without a table-format jar — the
@@ -30,12 +30,18 @@ import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
   * Single-writer by design (the reference's hourly DAG is too).
   * Committers stage into UNIQUE nonce-named dirs (never touching each
   * other's files) and race only on the manifest create-if-absent CAS,
-  * so a reader can never observe a torn mix. A rewriting commit
-  * ([[publish]], [[deleteWhere]]) that loses that race FAILS LOUDLY —
-  * a single-writer-contract violation, never a silent clobber of a
-  * committed manifest. The two races that do happen are retried: blind
-  * appends ([[appendPublish]]) commute, and a leveled merge
-  * ([[compactLeveled]]) rebases over concurrent appends.
+  * so a reader can never observe a torn mix. Every writer commits its
+  * manifest through one routine, [[publishManifest]]: CAS the entries
+  * as the next version; on a lost CAS with attempts left, re-read the
+  * log, rebase the entries onto it and try the version after. Only
+  * the attempts and the rebase differ per writer:
+  *   - a rewriting commit ([[publish]], [[deleteWhere]]) has 1 attempt,
+  *     so losing FAILS LOUDLY — a single-writer-contract violation,
+  *     never a silent clobber of a committed manifest;
+  *   - a blind append ([[appendPublish]]) has 10: appends commute, so
+  *     the rebase grows each touched entry of the fresh manifest;
+  *   - a leveled merge ([[compactLeveled]]) has 20: it rebases over
+  *     concurrent appends as long as every merged run is still live.
   */
 object TxTable {
 
@@ -47,7 +53,7 @@ object TxTable {
     * place dir names become manifest keys — every publish and
     * [[deleteWhere]] go through it.
     */
-  private def listStaged(f: org.apache.hadoop.fs.FileSystem, root: String,
+  private def listStaged(f: FileSystem, root: String,
       stagedDir: String, partitionCol: String): Map[String, String] =
     f.listStatus(new Path(s"$root/$stagedDir"))
       .map(_.getPath.getName)
@@ -57,6 +63,7 @@ object TxTable {
 
   private def logDir(root: String) = root + "/_txlog"
   private def manifestName(v: Long) = f"$v%08d.manifest"
+  private def manifestPath(root: String, v: Long) = new Path(logDir(root), manifestName(v))
 
   /** Manifest entry values are TAB-joined lists of dirs relative to root:
     * a partition written once maps to one dir; every [[appendCommit]]
@@ -70,24 +77,42 @@ object TxTable {
     ds
   }
 
+  /** The version dir (run) a partition dir `v<N>-<nonce>[-l<k>]/<col>=<val>` lives in. */
+  private def runOf(dir: String): String = dir.takeWhile(_ != '/')
+
+  /** Every version dir `entries` reference. */
+  private def versionDirs(entries: Map[String, String]): Set[String] =
+    entries.values.flatMap(dirsOf).map(runOf).toSet
+
+  /** Committed versions in `_txlog`, ascending; `.tmp` debris from a
+    * crashed publish is invisible. Empty before the first commit. */
+  private def versions(f: FileSystem, root: String): Seq[Long] = {
+    val ld = new Path(logDir(root))
+    if (!f.exists(ld)) Seq.empty
+    else f.listStatus(ld).toSeq.map(_.getPath.getName)
+      .filter(_.endsWith(".manifest"))
+      .map(_.stripSuffix(".manifest").toLong).sorted
+  }
+
   /** Latest committed state: (version, partitionValue -> dir relative to
     * root). (0, empty) when the table has no committed version.
     */
   def latest(spark: SparkSession, root: String): (Long, Map[String, String]) = {
     val f = fs(spark, root)
-    val ld = new Path(logDir(root))
-    if (!f.exists(ld)) return (0L, Map.empty)
-    val versions = f.listStatus(ld).map(_.getPath.getName)
-      .filter(_.endsWith(".manifest")) // .tmp debris from a crashed publish is invisible
-      .map(_.stripSuffix(".manifest").toLong)
-    if (versions.isEmpty) (0L, Map.empty)
-    else {
-      val v = versions.max
-      (v, parseManifest(f, new Path(ld, manifestName(v))))
-    }
+    versions(f, root).lastOption
+      .fold((0L, Map.empty[String, String]))(v => (v, parseManifest(f, manifestPath(root, v))))
   }
 
-  private def parseManifest(f: org.apache.hadoop.fs.FileSystem, p: Path): Map[String, String] = {
+  /** The entries of committed version `v`, or an IllegalArgumentException
+    * (ending in `hint`) when it was never committed or is vacuumed. */
+  private def manifestAt(f: FileSystem, root: String, v: Long,
+      hint: String = ""): Map[String, String] = {
+    val m = manifestPath(root, v)
+    require(f.exists(m), s"version $v does not exist at $root (committed or already vacuumed)$hint")
+    parseManifest(f, m)
+  }
+
+  private def parseManifest(f: FileSystem, p: Path): Map[String, String] = {
     val in = f.open(p)
     val txt =
       try scala.io.Source.fromInputStream(in, "UTF-8").mkString
@@ -135,13 +160,8 @@ object TxTable {
     * until [[vacuum]] (which therefore bounds the travel horizon; run it
     * only past your audit window).
     */
-  def readAt(spark: SparkSession, root: String, version: Long): DataFrame = {
-    val f = fs(spark, root)
-    val m = new Path(logDir(root), manifestName(version))
-    require(f.exists(m),
-      s"version $version does not exist at $root (committed or already vacuumed)")
-    readManifest(spark, root, liveDirs(parseManifest(f, m)))
-  }
+  def readAt(spark: SparkSession, root: String, version: Long): DataFrame =
+    readManifest(spark, root, liveDirs(manifestAt(fs(spark, root), root, version)))
 
   /** One relation per distinct schema over `dirs` (partition dirs
     * relative to root), built from the manifest alone: partition values
@@ -243,7 +263,15 @@ object TxTable {
   def stage(spark: SparkSession, root: String, data: DataFrame, partitionCol: String): String = {
     val next = latest(spark, root)._1 + 1
     if (next == 1) requireNotFlatTable(spark, root, partitionCol)
-    val dir = s"v$next-${java.util.UUID.randomUUID().toString.take(8)}"
+    writeRun(root, data, partitionCol, next, "")
+  }
+
+  /** Write `data` partitioned by `partitionCol` into a fresh version dir
+    * `v<next>-<nonce><suffix>` and return its name — the one data write
+    * of [[stage]] and [[compactLeveled]]. */
+  private def writeRun(root: String, data: DataFrame, partitionCol: String,
+      next: Long, suffix: String): String = {
+    val dir = s"v$next-${java.util.UUID.randomUUID().toString.take(8)}$suffix"
     data.write
       .mode(SaveMode.ErrorIfExists)
       .partitionBy(partitionCol)
@@ -268,26 +296,39 @@ object TxTable {
     val (v, old) = latest(spark, root)
     val changed = listStaged(f, root, stagedDir, partitionCol)
     require(changed.nonEmpty, s"staged dir $stagedDir has no $partitionCol= partitions")
-    writeManifest(f, root, v + 1, old ++ changed,
-      s"staged data remains at $root/$stagedDir")
+    publishManifest(spark, f, root, v, old ++ changed, 1,
+      s"publish is single-writer by contract; staged data remains at $root/$stagedDir")(identity)
   }
 
-  /** Single-writer publish tail shared by [[publish]] and
-    * [[deleteWhere]]: one create-if-absent CAS attempt at version
-    * `next`. Routed through [[casManifest]] rather than a plain rename
-    * because POSIX rename OVERWRITES — a concurrent [[appendPublish]]
-    * that just CAS-committed the same version number would be silently
-    * clobbered (a lost committed append). Losing the CAS here means
-    * another writer took the version: the single-writer contract was
-    * violated, so fail LOUDLY with the recovery hint instead. Returns
-    * `next`.
+  /** Test-only injection point: fires immediately before every manifest
+    * CAS attempt of every writer — deterministic lost-CAS coverage
+    * without a real thread race (a spec makes it commit once to steal
+    * the version; that nested commit re-enters the hook). Production
+    * never sets it. */
+  private[pipeline] var testHookBeforeCas: () => Unit = () => ()
+
+  /** The one manifest commit of every writer: CAS `entries` as version
+    * `v + 1` ([[casManifest]], never a plain rename — POSIX rename
+    * OVERWRITES, so a concurrent writer that just committed that version
+    * would be silently clobbered). On a lost CAS with `attempts` left,
+    * re-read [[latest]] and retry at the version after it with
+    * `rebase(its entries)`; otherwise throw, naming the root, the version
+    * and `onFailure` (the writer's contract and recovery hint). Returns
+    * the committed version.
     */
-  private def writeManifest(f: org.apache.hadoop.fs.FileSystem, root: String,
-      next: Long, entries: Map[String, String], onFailure: String): Long =
-    if (casManifest(f, root, next, entries)) next
-    else throw new java.io.IOException(
-      s"manifest publish failed for version $next (a concurrent writer " +
-        s"committed it first — this path is single-writer by contract); $onFailure")
+  @scala.annotation.tailrec
+  private def publishManifest(spark: SparkSession, f: FileSystem,
+      root: String, v: Long, entries: Map[String, String], attempts: Int, onFailure: String)(
+      rebase: Map[String, String] => Map[String, String]): Long = {
+    testHookBeforeCas()
+    if (casManifest(f, root, v + 1, entries)) v + 1
+    else if (attempts <= 1) throw new java.io.IOException(
+      s"a concurrent writer committed version ${v + 1} at $root first; $onFailure")
+    else {
+      val (fresh, freshEntries) = latest(spark, root)
+      publishManifest(spark, f, root, fresh, rebase(freshEntries), attempts - 1, onFailure)(rebase)
+    }
+  }
 
   /** Stage + publish in one call: the crash-safe replacement for a
     * multi-partition dir-swap merge. Returns the committed version, or
@@ -386,8 +427,9 @@ object TxTable {
     require(entries.nonEmpty,
       s"deleteWhere would remove every row of $root — refusing (an empty table has no " +
         s"manifest representation); drop the table root explicitly instead")
-    writeManifest(f, root, v + 1, entries,
-      s"staged survivors remain at $root/$stagedDir")
+    publishManifest(spark, f, root, v, entries, 1,
+      s"deleteWhere is single-writer by contract; staged survivors remain at $root/$stagedDir")(
+      identity)
     deleted
   }
 
@@ -400,8 +442,8 @@ object TxTable {
     * rename already refuses an existing destination atomically in the
     * namenode. Returns whether THIS writer won version `next`.
     */
-  private def casManifest(f: org.apache.hadoop.fs.FileSystem, root: String,
-      next: Long, entries: Map[String, String]): Boolean = {
+  private def casManifest(f: FileSystem, root: String, next: Long,
+      entries: Map[String, String]): Boolean = {
     val ld = new Path(logDir(root))
     if (!f.exists(ld) && !f.mkdirs(ld))
       throw new java.io.IOException(s"cannot create $ld")
@@ -471,24 +513,17 @@ object TxTable {
     */
   def appendPublish(spark: SparkSession, root: String, stagedDir: String,
       partitionCol: String): Long = {
-    val maxAttempts = 10
+    val attempts = 10
     val f = fs(spark, root)
     val changed = listStaged(f, root, stagedDir, partitionCol)
     require(changed.nonEmpty, s"staged dir $stagedDir has no $partitionCol= partitions")
-    val ld = new Path(logDir(root))
-    if (!f.exists(ld) && !f.mkdirs(ld))
-      throw new java.io.IOException(s"cannot create $ld")
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      attempt += 1
-      val (v, cur) = latest(spark, root)
-      val entries = cur ++ changed.map { case (k, dir) =>
-        k -> cur.get(k).map(_ + "\t" + dir).getOrElse(dir)
-      }
-      if (casManifest(f, root, v + 1, entries)) return v + 1
+    def grow(cur: Map[String, String]) = cur ++ changed.map { case (k, dir) =>
+      k -> cur.get(k).fold(dir)(_ + "\t" + dir)
     }
-    throw new java.io.IOException(
-      s"could not append after $maxAttempts attempts — log is too contended")
+    val (v, cur) = latest(spark, root)
+    publishManifest(spark, f, root, v, grow(cur), attempts,
+      s"append lost all $attempts attempts — the log is too contended; " +
+        s"staged data remains at $root/$stagedDir")(grow)
   }
 
   /** Stage + blind-append in one call: the O(increment) ingest commit.
@@ -529,20 +564,10 @@ object TxTable {
       s"readSince window is inverted: since=$sinceVersion > to=$toVersion")
     if (sinceVersion == toVersion) return None
     val f = fs(spark, root)
-    val newEntries = parseManifest(f, {
-      val m = new Path(logDir(root), manifestName(toVersion))
-      require(f.exists(m), s"version $toVersion does not exist at $root " +
-        "(committed or already vacuumed)")
-      m
-    })
+    val newEntries = manifestAt(f, root, toVersion)
     val oldEntries: Map[String, String] =
       if (sinceVersion == 0L) Map.empty
-      else parseManifest(f, {
-        val m = new Path(logDir(root), manifestName(sinceVersion))
-        require(f.exists(m), s"version $sinceVersion does not exist at $root " +
-          "(committed or already vacuumed) — re-baseline from a full snapshot")
-        m
-      })
+      else manifestAt(f, root, sinceVersion, " — re-baseline from a full snapshot")
     val added = newEntries.toSeq.flatMap { case (k, entry) =>
       val newDirs = dirsOf(entry)
       val oldDirs = oldEntries.get(k).map(dirsOf).getOrElse(Seq.empty)
@@ -582,14 +607,6 @@ object TxTable {
     * (no sidecar state to desync). */
   private def runLevel(vdir: String): Int =
     "-l(\\d+)$".r.findFirstMatchIn(vdir).map(_.group(1).toInt).getOrElse(0)
-
-  /** Test-only injection points for [[compactLeveled]]'s rebase publish:
-    * deterministic lost-CAS coverage without a real thread race.
-    * `Publish` fires immediately before every CAS attempt (a spec makes
-    * it append once to steal the version); `Rebase` fires at the start
-    * of every retry. Production never sets these. */
-  private[pipeline] var testHookCompactPublish: () => Unit = () => ()
-  private[pipeline] var testHookCompactRebase: () => Unit = () => ()
 
   /** LEVELED (size-tiered) compaction — O(period) routine maintenance
     * for an append-only table, replacing the O(corpus) full-table
@@ -660,8 +677,7 @@ object TxTable {
     while (continue) {
       val (v, entries) = latest(spark, root)
       if (v == 0) return steps
-      val byLevel = entries.values.flatMap(dirsOf).map(_.takeWhile(_ != '/'))
-        .toSet.groupBy(runLevel)
+      val byLevel = versionDirs(entries).groupBy(runLevel)
       // lowest level first: merge l0 whenever >= 2 runs (the
       // routine firing), promote level k>=1 only at fanout — within
       // the caller's [minMergeLevel, maxMergeLevel] window
@@ -676,7 +692,7 @@ object TxTable {
         case Some((lv, toMerge)) =>
           // read ONLY the merged runs' dirs (the O(period) claim)
           val data = readManifest(spark, root,
-            liveDirs(entries).filter(d => toMerge(d.takeWhile(_ != '/'))))
+            liveDirs(entries).filter(d => toMerge(runOf(d))))
           // file count scales with the MERGED bytes (driver-side fs
           // sizing, no job): a routine level-0 firing keeps the small
           // default, while a top-level promotion that merges most of
@@ -684,10 +700,7 @@ object TxTable {
           // serializing the whole merge through 16 range
           // partitions (unbounded file sizes + a 16-way sort of the
           // corpus at the 100 TB framing)
-          val mergedBytes = toMerge.toSeq.map { d =>
-            try f.getContentSummary(new Path(s"$root/$d")).getLength
-            catch { case _: java.io.FileNotFoundException => 0L }
-          }.sum
+          val mergedBytes = dirBytes(f, root, toMerge)
           val targetFileBytes = 512L * 1024 * 1024
           val nf = math.min(4096L,
             math.max(16L, mergedBytes / targetFileBytes + 1)).toInt
@@ -698,12 +711,7 @@ object TxTable {
             .repartitionByRange(nf, col(partitionCol), col(kc))
             .sortWithinPartitions(partitionCol, kc)
             .drop(kc)
-          val next = v + 1
-          val dir = s"v$next-${java.util.UUID.randomUUID().toString.take(8)}-l${lv + 1}"
-          clustered.write
-            .mode(SaveMode.ErrorIfExists)
-            .partitionBy(partitionCol)
-            .parquet(s"$root/$dir")
+          val dir = writeRun(root, clustered, partitionCol, v + 1, s"-l${lv + 1}")
           val staged = listStaged(f, root, dir, partitionCol)
           require(staged.nonEmpty,
             s"leveled merge of ${toMerge.size} level-$lv runs staged no partitions " +
@@ -713,36 +721,21 @@ object TxTable {
           // the expensive merge is never re-done, only the cheap
           // manifest math. The `vN` prefix in the staged dir's name can
           // go stale across a rebase; only a mixed-schema read orders by it.
-          var curV = v
-          var curEntries = entries
-          var published = false
-          var attempt = 0
-          while (!published) {
-            attempt += 1
-            if (attempt > 1) {
-              testHookCompactRebase()
-              val (v2, e2) = latest(spark, root)
-              val live = e2.values.flatMap(dirsOf)
-                .map(_.takeWhile(_ != '/')).toSet
-              val missing = toMerge.filterNot(live)
-              if (missing.nonEmpty) throw new java.io.IOException(
-                s"leveled merge lost its source runs [${missing.mkString(", ")}] to a " +
-                  s"concurrent rewrite at $root — two compactors (or a compactor and a " +
-                  s"deleteWhere/vacuum) ran over the same runs; staged run remains at $root/$dir")
-              curV = v2; curEntries = e2
-            }
-            if (attempt > 20) throw new java.io.IOException(
-              s"leveled merge could not publish after 20 attempts at $root — " +
-                s"log too contended; staged run remains at $root/$dir")
-            val newEntries = (curEntries.keySet ++ staged.keySet).flatMap { k =>
-              val keep = curEntries.get(k)
-                .map(dirsOf(_).filterNot(d => toMerge(d.takeWhile(_ != '/'))))
-                .getOrElse(Seq.empty)
-              val ds = keep ++ staged.get(k)
-              if (ds.isEmpty) None else Some(k -> ds.mkString("\t"))
-            }.toMap
-            testHookCompactPublish()
-            published = casManifest(f, root, curV + 1, newEntries)
+          def around(cur: Map[String, String]) = (cur.keySet ++ staged.keySet).flatMap { k =>
+            val kept = cur.get(k).fold(Seq.empty[String])(dirsOf(_).filterNot(d => toMerge(runOf(d))))
+            val ds = kept ++ staged.get(k)
+            if (ds.isEmpty) None else Some(k -> ds.mkString("\t"))
+          }.toMap
+          val attempts = 20
+          publishManifest(spark, f, root, v, around(entries), attempts,
+            s"leveled merge lost all $attempts attempts — the log is too contended; " +
+              s"staged run remains at $root/$dir") { fresh =>
+            val missing = toMerge -- versionDirs(fresh)
+            if (missing.nonEmpty) throw new java.io.IOException(
+              s"leveled merge lost its source runs [${missing.mkString(", ")}] to a " +
+                s"concurrent rewrite at $root — two compactors (or a compactor and a " +
+                s"deleteWhere/vacuum) ran over the same runs; staged run remains at $root/$dir")
+            around(fresh)
           }
           steps += 1
       }
@@ -758,17 +751,16 @@ object TxTable {
     * full, so this is an upper bound — exactly the safe direction for
     * a "is the table big enough to bother pruning" gate. 0 when
     * nothing is committed. */
-  def liveBytes(spark: SparkSession, root: String): Long = {
-    val f = fs(spark, root)
-    val (v, entries) = latest(spark, root)
-    if (v == 0) return 0L
-    val dirs: Seq[String] =
-      entries.values.flatMap(dirsOf).map(_.takeWhile(_ != '/')).toSet.toSeq
-    dirs.map { d =>
+  def liveBytes(spark: SparkSession, root: String): Long =
+    dirBytes(fs(spark, root), root, versionDirs(latest(spark, root)._2))
+
+  /** Summed bytes of the version dirs `dirs` (a vanished dir counts 0):
+    * a driver-side fs walk, no Spark job. */
+  private def dirBytes(f: FileSystem, root: String, dirs: Set[String]): Long =
+    dirs.toSeq.map { d =>
       try f.getContentSummary(new Path(s"$root/$d")).getLength
       catch { case _: java.io.FileNotFoundException => 0L }
     }.sum
-  }
 
   /** UNCOMPACTED (level-0) append runs per live partition — the
     * trigger a LEVELED maintenance cadence compares its threshold
@@ -782,7 +774,7 @@ object TxTable {
     val (v, entries) = latest(spark, root)
     if (v == 0 || entries.isEmpty) 0.0
     else entries.values
-      .map(dirsOf(_).count(d => runLevel(d.takeWhile(_ != '/')) == 0))
+      .map(dirsOf(_).count(d => runLevel(runOf(d)) == 0))
       .sum.toDouble / entries.size
   }
 
@@ -818,26 +810,20 @@ object TxTable {
   def vacuum(spark: SparkSession, root: String,
       retainMs: Long = DefaultVacuumRetainMs): Unit = {
     val f = fs(spark, root)
-    val (v, entries) = latest(spark, root)
-    if (v == 0) return
-    val manifestMtime =
-      f.getFileStatus(new Path(logDir(root), manifestName(v))).getModificationTime
+    val vs = versions(f, root)
+    if (vs.isEmpty) return
+    val v = vs.last
+    def mtime(vi: Long) = f.getFileStatus(manifestPath(root, vi)).getModificationTime
+    val manifestMtime = mtime(v)
     val now = System.currentTimeMillis()
     // superseded manifests still inside the retention horizon: vi is
     // stale since mtime(manifest v_{i+1}); protect vi (and its dirs)
     // until now - staleSince >= retainMs
-    val versions = f.listStatus(new Path(logDir(root)))
-      .map(_.getPath.getName).filter(_.endsWith(".manifest"))
-      .map(_.stripSuffix(".manifest").toLong).sorted
-    val staleSince: Map[Long, Long] = versions.zip(versions.drop(1)).map {
-      case (vi, vnext) =>
-        vi -> f.getFileStatus(new Path(logDir(root), manifestName(vnext))).getModificationTime
-    }.toMap
-    val retained = versions.filter(vi =>
-      vi < v && staleSince.get(vi).exists(t => now - t < retainMs))
-    val live = (entries.values.flatMap(dirsOf) ++ retained.flatMap { vi =>
-      parseManifest(f, new Path(logDir(root), manifestName(vi))).values.flatMap(dirsOf)
-    }).map(_.takeWhile(_ != '/')).toSet
+    val retained = vs.zip(vs.drop(1)).collect {
+      case (vi, vnext) if now - mtime(vnext) < retainMs => vi
+    }
+    val live = (v +: retained).toSet[Long]
+      .flatMap(vi => versionDirs(parseManifest(f, manifestPath(root, vi))))
     f.listStatus(new Path(root)).foreach { st =>
       val p = st.getPath
       if (p.getName.startsWith("v") && !live.contains(p.getName) && p.getName != "_txlog" &&

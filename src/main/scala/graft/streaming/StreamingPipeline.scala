@@ -16,7 +16,7 @@ import graft.pipeline.{Incremental, Merge, SensorPipeline, TxTable}
   * performing the same merge the batch path uses — identical semantics,
   * including whole-day recompute of late data, because each batch parses
   * with [[SensorPipeline.bronzeToSilver]], merges on `raw_id` with
-  * [[Merge.intoPartitions]] (as [[Incremental.silverIncrement]] does)
+  * [[Incremental.silverMerge]] (as [[Incremental.silverIncrement]] does)
   * and recomputes gold with [[Incremental.goldAffectedDays]].
   *
   * Tier 2 — idiomatic: `withWatermark` + 1-day tumbling `window()` in
@@ -138,8 +138,7 @@ object StreamingPipeline {
         // stay distinct rows, exactly like distinct reference raw_ids);
         // batch replays are idempotent because the ids above are
         // replay-stable. No valid reading: nothing to commit.
-        Merge.intoPartitions(TxTable.committed(spark, silverPath), fresh, "reading_date",
-            Seq("raw_id"), Seq(col("processed_at").desc, col("reading_time").desc))
+        Incremental.silverMerge(TxTable.committed(spark, silverPath), fresh)
           .foreach { case (_, merged) =>
             commitAndVacuum(spark, silverPath, merged, "reading_date")
             // gold increment inside the SAME batch (reference: staging >>

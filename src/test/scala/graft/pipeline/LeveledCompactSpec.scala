@@ -143,22 +143,18 @@ class LeveledCompactSpec extends AnyFunSuite {
     TxTable.appendCommit(spark, root, rows(10 until 20, "b"), "p")
     // steal the version exactly once, right before the merge's CAS —
     // deterministic stand-in for an appender racing the promotion thread
+    // (the stealing append's own CAS re-enters the hook: one-shot flag)
     var stole = false
-    TxTable.testHookCompactPublish = () => {
+    TxTable.testHookBeforeCas = () => {
       if (!stole) {
         stole = true
         TxTable.appendCommit(spark, root, rows(100 until 110, "a"), "p"); ()
       }
     }
-    var rebased = false
-    TxTable.testHookCompactRebase = () => { rebased = true }
     try {
       assert(TxTable.compactLeveled(spark, root, "p", Seq("id")) === 1)
-    } finally {
-      TxTable.testHookCompactPublish = () => ()
-      TxTable.testHookCompactRebase = () => ()
-    }
-    assert(stole && rebased, "the hook must have stolen the CAS and forced a rebase")
+    } finally TxTable.testHookBeforeCas = () => ()
+    assert(stole, "the hook must have stolen the merge's version")
     // the stolen append's rows AND the merged rows all survive
     assert(snapshot(root) ===
       ((0 until 10).map(i => (i.toLong, "a")) ++
@@ -174,7 +170,7 @@ class LeveledCompactSpec extends AnyFunSuite {
     TxTable.appendCommit(spark, root, rows(0 until 10, "a"), "p")
     TxTable.appendCommit(spark, root, rows(10 until 20, "a"), "p")
     var fired = false
-    TxTable.testHookCompactPublish = () => {
+    TxTable.testHookBeforeCas = () => {
       if (!fired) {
         fired = true
         // another owner full-rewrites the table: the merge's source
@@ -184,7 +180,7 @@ class LeveledCompactSpec extends AnyFunSuite {
     }
     val e = try intercept[java.io.IOException] {
       TxTable.compactLeveled(spark, root, "p", Seq("id"))
-    } finally TxTable.testHookCompactPublish = () => ()
+    } finally TxTable.testHookBeforeCas = () => ()
     assert(e.getMessage.contains("lost its source runs"), e.getMessage)
     // the loser's staged dir is debris; the winner's table is intact
     assert(snapshot(root) === (0 until 20).map(i => (i.toLong, "a")).toSet)

@@ -299,6 +299,53 @@ class TxTableSpec extends AnyFunSuite {
       "delete's rewrite collapses the dir list")
   }
 
+  /** Run `body` with the pre-CAS hook stealing the next version ONCE by
+    * `steal` — the hook fires again inside `steal`'s own commit, so the
+    * flag makes it one-shot — and check that the steal happened. */
+  private def stealingOnce[T](steal: => Unit)(body: => T): T = {
+    var stole = false
+    TxTable.testHookBeforeCas = () => if (!stole) { stole = true; steal }
+    val out = try body finally TxTable.testHookBeforeCas = () => ()
+    assert(stole, "the hook must have stolen the version")
+    out
+  }
+
+  test("lost CAS: publish and deleteWhere fail loudly and leave the winner's manifest live") {
+    val root = graft.TestTmp.dir("txlostcas") + "/t"
+    TxTable.commit(spark, root, rows("d1" -> 1.0), "day") // v1
+    val staged = TxTable.stage(spark, root, rows("d1" -> 2.0), "day")
+    val lost = stealingOnce(TxTable.appendCommit(spark, root, rows("d2" -> 5.0), "day")) {
+      intercept[java.io.IOException](TxTable.publish(spark, root, staged, "day"))
+    }
+    assert(lost.getMessage.contains("version 2") && lost.getMessage.contains(s"$root/$staged"),
+      lost.getMessage)
+    assert(TxTable.latest(spark, root)._1 == 2L)
+    assert(snapshot(root) == Set("d1" -> 1.0, "d2" -> 5.0), "the stealing append is the live v2")
+
+    val lostDelete = stealingOnce(TxTable.appendCommit(spark, root, rows("d3" -> 7.0), "day")) {
+      intercept[java.io.IOException](TxTable.deleteWhere(spark, root, "day", col("value") === 1.0))
+    }
+    assert(lostDelete.getMessage.contains("version 3") &&
+      lostDelete.getMessage.contains("staged survivors"), lostDelete.getMessage)
+    assert(TxTable.latest(spark, root)._1 == 3L)
+    assert(snapshot(root) == Set("d1" -> 1.0, "d2" -> 5.0, "d3" -> 7.0),
+      "the losing delete removed nothing; the stealing append is the live v3")
+  }
+
+  test("lost CAS: appendPublish rebases onto the winner and lands at the next version") {
+    val root = graft.TestTmp.dir("txlostcas2") + "/t"
+    TxTable.commit(spark, root, rows("d1" -> 1.0), "day") // v1
+    val staged = TxTable.stage(spark, root, rows("d1" -> 2.0, "d2" -> 3.0), "day")
+    val v = stealingOnce(TxTable.appendCommit(spark, root, rows("d1" -> 4.0), "day")) {
+      TxTable.appendPublish(spark, root, staged, "day")
+    }
+    assert(v == 3L, "the stealer took v2, the rebased append v3")
+    assert(snapshot(root) == Set("d1" -> 1.0, "d1" -> 2.0, "d1" -> 4.0, "d2" -> 3.0),
+      "both appends' rows are live")
+    assert(TxTable.latest(spark, root)._2("d1").split("\t").length == 3,
+      "d1 grew by both appends' dirs")
+  }
+
   test("deleteWhere: partial-partition rewrite, full-partition drop, untouched files shared, audit trail") {
     val root = graft.TestTmp.dir("txdel") + "/t"
     TxTable.commit(spark, root,
