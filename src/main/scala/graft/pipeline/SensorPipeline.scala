@@ -3,6 +3,7 @@ package graft.pipeline
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -179,9 +180,11 @@ object Merge {
     * sets merged on the driver).
     */
   private[pipeline] def partitionValues(df: DataFrame, column: String): Seq[Any] =
-    df.select(column).rdd
-      .mapPartitions(rows => Iterator(rows.map(_.get(0)).toSet))
-      .fold(Set.empty[Any])(_ ++ _).toSeq
+    CallSites(df.sparkSession, "Merge.partitionValues") {
+      df.select(column).rdd
+        .mapPartitions(rows => Iterator(rows.map(_.get(0)).toSet))
+        .fold(Set.empty[Any])(_ ++ _).toSeq
+    }
 }
 
 /** Incremental runner — the reference's two hand-rolled "optimizer rules"
@@ -192,6 +195,32 @@ object Merge {
   * that silver/gold are [[TxTable]]s partitioned by reading_date, so both
   * increments return only the affected days: each reads, and its commit
   * rewrites, only the changed partitions.
+  *
+  * Both rules are answered from the TxTable log when it can vouch for the
+  * answer, with no scan (the way Structured Streaming's offset and commit
+  * logs tell a restart where it stood), and by the whole-table watermark
+  * scan otherwise:
+  *   - the silver watermark is the `#watermark` of the version the silver
+  *     target frame reads. The scan runs when the target is not a whole
+  *     [[TxTable.read]] of one version (a checkpointed, filtered or
+  *     hand-built frame), or that version recorded no watermark: a
+  *     manifest written before the `#` lines, a [[TxTable.deleteWhere]],
+  *     [[TxTable.compactLeveled]] or rebased append, a commit of a frame
+  *     whose processed_at is no [[AuditStamp]] (a caller's column that is
+  *     not foldable, or a foldable one below the watermark), or a publish
+  *     onto another version than the one the frame read (a stale target);
+  *   - gold's days are the silver manifest keys whose dir list differs
+  *     between Vs, the silver version gold's commit recorded (its
+  *     `#read`), and Vcur, the version the silver frame reads — no job.
+  *     The scan runs when there is no gold target, either frame is not a
+  *     whole read of one version, gold's manifest recorded no read of
+  *     that silver root, Vs or Vcur is vacuumed, or Vs is newer than
+  *     Vcur. The diff assumes what the scan assumes: the commit that
+  *     recorded Vs brought gold up to date with silver at Vs. It differs
+  *     from the scan in one way: a silver commit that restages a day
+  *     without newer processed_at (a [[TxTable.deleteWhere]] of part of
+  *     it) changes the day's dirs, so the diff recomputes that day, which
+  *     the scan misses.
   */
 object Incremental {
   import SensorPipeline._
@@ -206,22 +235,68 @@ object Incremental {
   def watermark(target: Option[DataFrame], tsCol: String): Timestamp =
     target match {
       case None => epoch0
-      case Some(df) =>
+      case Some(df) => CallSites(df.sparkSession, "Incremental.watermark") {
         Option(df.agg(max(col(tsCol))).head().getTimestamp(0)).getOrElse(epoch0)
+      }
     }
 
   /** One Silver increment: bronze rows newer than the watermark, parsed,
     * merged into the affected days only ([[silverMerge]]; the empty fresh
     * rows when none is valid). Meant for `TxTable.commit` or `stage` +
     * `publish`, which keep every other day.
+    *
+    * The watermark comes from the log when it can (see the object doc).
+    * `processedAt` is resolved to one driver value, truncated to
+    * microseconds: the default `current_timestamp()` becomes
+    * max(now, watermark), and any other foldable timestamp column is
+    * evaluated once. When that value is at or above the watermark and the
+    * target is a whole TxTable version (or absent) it is carried as an
+    * [[AuditStamp]], so the commit records it as the new watermark; a
+    * column that is not foldable is used as given.
     */
   def silverIncrement(
       bronze: DataFrame,
       silverTarget: Option[DataFrame],
       processedAt: Column = current_timestamp()): DataFrame = {
-    val wm = watermark(silverTarget, "processed_at")
-    val fresh = bronzeToSilver(bronze.filter(col("ingested_at") > lit(wm)), processedAt) // F3
+    val spark = bronze.sparkSession
+    val snap = silverTarget.flatMap(TxTable.snapshotOf)
+    val wm = snap.flatMap { case (root, v) => TxTable.commitInfo(spark, root, v).flatMap(_.watermark) }
+      .map(DateTimeUtils.toJavaTimestamp)
+      .getOrElse(watermark(silverTarget, "processed_at"))
+    val stamp = resolveStamp(spark, processedAt, DateTimeUtils.fromJavaTimestamp(wm),
+      if (silverTarget.isEmpty) Some(None) else snap.map(Some(_)))
+    val fresh = bronzeToSilver(bronze.filter(col("ingested_at") > lit(wm)), stamp) // F3
     silverMerge(silverTarget, fresh).fold(fresh)(_._2)
+  }
+
+  /** `processedAt` as one driver value (see [[silverIncrement]]): an
+    * [[AuditStamp]] over `base` (Some(None): over no table) when it is at
+    * or above `wm` micros and `base` is known, else a plain literal; the
+    * column itself when it is not a foldable timestamp. */
+  private def resolveStamp(spark: SparkSession, processedAt: Column, wm: Long,
+      base: Option[Option[(String, Long)]]): Column = {
+    import org.apache.spark.sql.catalyst.expressions.{Alias, CurrentTimestamp, Literal}
+    import org.apache.spark.sql.catalyst.plans.logical.{OneRowRelation, Project}
+    import org.apache.spark.sql.graftbridge.{ColumnBridge, DatasetBridge}
+    val probe =
+      try Some(DatasetBridge.ofRows(spark, OneRowRelation()).select(processedAt.as("p")).queryExecution)
+      catch { case _: org.apache.spark.sql.AnalysisException => None } // reads a column
+    val value: Option[Long] = probe.flatMap { qe =>
+      qe.analyzed match {
+        case Project(Seq(Alias(_: CurrentTimestamp, _)), _) =>
+          Some(math.max(DateTimeUtils.instantToMicros(java.time.Instant.now()), wm))
+        case _ => qe.optimizedPlan match {
+          case Project(Seq(Alias(Literal(us: Long, TimestampType), _)), _) => Some(us)
+          case _ => None
+        }
+      }
+    }
+    value.fold(processedAt) { us =>
+      ColumnBridge.column(base match {
+        case Some(b) if us >= wm => AuditStamp(us, b)
+        case _ => Literal(us, TimestampType)
+      })
+    }
   }
 
   /** The silver merge of the batch increment and the streaming silver
@@ -237,20 +312,42 @@ object Incremental {
       Seq(col("processed_at").desc, col("reading_time").desc))
 
   /** The recomputed affected-day Gold rows only — the FULL new content
-    * of every day that received new silver since the target's watermark.
+    * of every day that received new silver since gold's last commit.
     * This is the gold merge: `TxTable.commit(..., "reading_date")`
     * publishes it as one atomic partition override, which is exactly the
     * dbt merge on gold's unique_key = reading_date. The days come from
-    * [[Merge.partitionValues]], as the silver merge's do, so the recompute
-    * scans only their silver partitions.
+    * the log's diff of silver manifests (see the object doc), else from
+    * [[Merge.partitionValues]] over the silver rows newer than gold's
+    * watermark; either way the recompute scans only their silver
+    * partitions.
     */
   def goldAffectedDays(
       silver: DataFrame,
       goldTarget: Option[DataFrame],
       calculatedAt: Column = current_timestamp()): DataFrame = {
-    val wm = watermark(goldTarget, "calculated_at")
-    val days = Merge.partitionValues(silver.filter(col("processed_at") > lit(wm)), "reading_date")
+    val dayType = silver.schema("reading_date").dataType
+    val days = loggedDays(silver, goldTarget).map(_.map(d => lit(d).cast(dayType))).getOrElse {
+      val wm = watermark(goldTarget, "calculated_at")
+      Merge.partitionValues(silver.filter(col("processed_at") > lit(wm)), "reading_date").map(lit)
+    }
     silverToGold(silver.filter(col("reading_date").isin(days: _*)), calculatedAt)
+  }
+
+  /** Gold's affected days from the log: the silver manifest keys changed
+    * between the version gold's target commit read and the one `silver`
+    * reads, unescaped and sorted; None when the log cannot vouch. */
+  private[pipeline] def loggedDays(silver: DataFrame,
+      goldTarget: Option[DataFrame]): Option[Seq[String]] = {
+    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    for {
+      gold <- goldTarget
+      (goldRoot, vg) <- TxTable.snapshotOf(gold)
+      (root, vcur) <- TxTable.snapshotOf(silver)
+      vs <- TxTable.commitInfo(silver.sparkSession, goldRoot, vg).flatMap(_.reads.get(root))
+      if vs <= vcur
+      keys <- TxTable.changedKeys(silver.sparkSession, root, vs, vcur)
+    } yield keys.toSeq.sorted.filter(_ != ExternalCatalogUtils.DEFAULT_PARTITION_NAME)
+      .map(ExternalCatalogUtils.unescapePathName)
   }
 }
 
@@ -299,7 +396,7 @@ object Quality {
     */
   def assertAll(df: DataFrame, checks: Seq[Check]): Seq[(String, Long)] = {
     val bySeverity = checks.map(c => c.name -> c.severity).toMap
-    val violations = run(df, checks).collect()
+    val violations = CallSites(df.sparkSession, "Quality.assertAll")(run(df, checks).collect())
       .map(r => r.getString(0) -> r.getLong(1))
       .filter(_._2 > 0)
     val (errors, warns) = violations.partition { case (n, _) =>

@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -22,9 +23,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * manifests against the two the snapshot was built from. A day is a
   * manifest key. A day whose dir list changed in either table, or that
   * is new, is reloaded (both tables' rows of it); a day gone from both
-  * manifests is dropped; every other day is kept. Only the reloaded
-  * days' dirs are read, so a refresh reads O(changed days) rows in 3
-  * jobs: a count for the bound, then one collect. The reloaded rows
+  * manifests is dropped; every other day is kept ([[TxTable.changedKeys]],
+  * the diff gold's affected days come from too). Only the reloaded
+  * days' dirs are read, once, in one job, so a refresh reads O(changed
+  * days) rows. The reloaded rows
   * are sorted and validated on the driver, and each kept day's run is
   * copied from the pinned arrays (a day is one contiguous run in
   * (date, time, name) order). The first load is the same diff against
@@ -36,7 +38,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * store is day-grain gold plus a bounded silver window in any real
   * deployment; a snapshot above the cap throws rather than silently
   * eating the driver heap — the repo's guarded-collect discipline).
-  * The count runs before the collect.
+  * Each task of the reload returns at most the rows left under the cap
+  * plus one, so the driver holds at most the cap plus one row per task
+  * before the bound fails the refresh.
   *
   * Staleness contract (spec'd in ServeCacheSpec):
   *  - reads serve the SNAPSHOT version pinned at construction or at
@@ -79,8 +83,9 @@ final class ServeCache private (
     val zone = spark.conf.get("spark.sql.session.timeZone", java.util.TimeZone.getDefault.getID)
     if (vs == prev.vSilver && vg == prev.vGold && zone == prev.zone) return prev
     val days = (silver.keySet ++ gold.keySet).toArray.sorted
-    val changed = days.filter(d => zone != prev.zone ||
-      silver.get(d) != prev.silver.get(d) || gold.get(d) != prev.gold.get(d)).toSet
+    val changed =
+      if (zone != prev.zone) days.toSet
+      else TxTable.changedKeys(prev.silver, silver) ++ TxTable.changedKeys(prev.gold, gold)
     val kept = days.filterNot(changed)
       .map(d => d -> (lowerBound(prev.dates, d), upperBound(prev.dates, d))).toMap
     val keptRows = kept.values.map { case (lo, hi) => hi - lo }.sum
@@ -123,9 +128,9 @@ final class ServeCache private (
     next
   }
 
-  /** The serve-shaped rows of the changed days' entries, checked
-    * against the bound (with the `keptRows`) before they are collected,
-    * validated and sorted in (date, time, name) order. */
+  /** The serve-shaped rows of the changed days' entries, collected in
+    * one job, checked against the bound (with the `keptRows`), validated
+    * and sorted in (date, time, name) order. */
   private def reload(silver: Map[String, String], gold: Map[String, String],
       keptRows: Int, zone: String): Array[Row] = {
     def slice(df: DataFrame) = df.select(
@@ -138,11 +143,19 @@ final class ServeCache private (
       .flatMap { case (root, e) => TxTable.readEntries(spark, root, e) }.map(slice)
     if (slices.isEmpty) return Array.empty
     val union = slices.reduce(_.unionByName(_))
-    val n = keptRows + union.count()
+    // one job, each task cut at the budget + 1 rows: a store above the
+    // bound fails here, having moved at most that many rows per task
+    val cap = math.max(0L, math.min(maxRows - keptRows, Int.MaxValue - 1L)).toInt + 1
+    val parts = CallSites(spark, "ServeCache.reload") {
+      spark.sparkContext.runJob(union.queryExecution.toRdd,
+        (it: Iterator[InternalRow]) => it.take(cap).map(_.copy()).toArray)
+    }
+    val n = keptRows + parts.map(_.length.toLong).sum
     require(n <= maxRows,
       s"serve store is $n rows, above the $maxRows cache bound — " +
         "this snapshot does not belong on the driver; serve it from the Spark path")
-    val rows = union.collect() // bounded by the explicit maxRows guard above
+    val toRow = CatalystTypeConverters.createToScalaConverter(union.schema)
+    val rows = parts.flatMap(_.map(r => toRow(r).asInstanceOf[Row]))
     // response-order invariant: (date, time, name) order must BE
     // (time, name) order. The nondecreasing-time check alone is not
     // sufficient — two rows with EQUAL reading_time but different

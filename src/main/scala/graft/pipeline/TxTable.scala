@@ -42,6 +42,34 @@ import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
   *     the rebase grows each touched entry of the fresh manifest;
   *   - a leveled merge ([[compactLeveled]]) has 20: it rebases over
   *     concurrent appends as long as every merged run is still live.
+  *
+  * Commit info (the log's counterpart of Structured Streaming's offset
+  * and commit logs). Every [[read]], [[readAt]] and [[committed]] frame
+  * is tagged with the (root, version) it reads ([[sourcesOf]]). [[stage]]
+  * writes what the staged frame read into a `_txinfo` file of its staged
+  * dir, which the scan listing and `listStaged` skip like every other
+  * `_` file; a frame that reads no tagged table and carries no stamp
+  * writes no file. The
+  * publish copies that info into the manifest as `#` lines ahead of the
+  * entries (a partition dir name escapes `#`, so no key starts with one):
+  *   - `#read <version> <root>`: one line per table the staged frame read
+  *     at one version. [[publish]] and [[appendPublish]] write them; a
+  *     rebased append keeps them.
+  *   - `#watermark <micros>`: the table's `max(processed_at)` after the
+  *     commit. Written only when the frame carries one [[AuditStamp]]
+  *     (`Incremental.silverIncrement`'s processed_at) that dominates the
+  *     very version the publish builds on, and the frame reads this table
+  *     at that version only (or, for a new table, not at all). A rebased
+  *     append drops it.
+  * [[deleteWhere]] and [[compactLeveled]] write no `#` line, so their
+  * manifests, like every manifest with no info, have the bytes they had
+  * before `#` lines existed. A
+  * manifest without `#` lines (every manifest written before this
+  * format) parses as before, with empty info ([[commitInfo]]). The
+  * change is one-way: a `#` line holds no tab (fields are space-separated,
+  * the root last; a root with a control character is never recorded), so
+  * a reader that predates it fails on such a manifest with "malformed
+  * manifest line".
   */
 object TxTable {
 
@@ -98,26 +126,45 @@ object TxTable {
     * root). (0, empty) when the table has no committed version.
     */
   def latest(spark: SparkSession, root: String): (Long, Map[String, String]) = {
-    val f = fs(spark, root)
-    versions(f, root).lastOption
-      .fold((0L, Map.empty[String, String]))(v => (v, parseManifest(f, manifestPath(root, v))))
+    val (v, m) = latestManifest(fs(spark, root), root)
+    (v, m.entries)
   }
+
+  /** One manifest: its entries and the `#` lines (see the header). */
+  private final case class Manifest(entries: Map[String, String], info: CommitInfo)
+
+  private val NoManifest = Manifest(Map.empty, CommitInfo.empty)
+
+  /** The latest version and its manifest; one listing of the log. */
+  private def latestManifest(f: FileSystem, root: String): (Long, Manifest) =
+    versions(f, root).lastOption
+      .fold((0L, NoManifest))(v => (v, parseManifest(f, manifestPath(root, v))))
 
   /** The entries of committed version `v`, or an IllegalArgumentException
     * (ending in `hint`) when it was never committed or is vacuumed. */
   private def manifestAt(f: FileSystem, root: String, v: Long,
       hint: String = ""): Map[String, String] = {
-    val m = manifestPath(root, v)
-    require(f.exists(m), s"version $v does not exist at $root (committed or already vacuumed)$hint")
-    parseManifest(f, m)
+    val m = manifestIfCommitted(f, root, v)
+    require(m.isDefined, s"version $v does not exist at $root (committed or already vacuumed)$hint")
+    m.get.entries
   }
 
-  private def parseManifest(f: FileSystem, p: Path): Map[String, String] = {
+  /** The manifest of version `v`; None when it was never committed or is
+    * vacuumed. */
+  private def manifestIfCommitted(f: FileSystem, root: String, v: Long): Option[Manifest] = {
+    val m = manifestPath(root, v)
+    if (v > 0 && f.exists(m)) Some(parseManifest(f, m)) else None
+  }
+
+  private def readText(f: FileSystem, p: Path): String = {
     val in = f.open(p)
-    val txt =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    val entries = txt.split("\n").iterator.filter(_.nonEmpty).map { line =>
+    try scala.io.Source.fromInputStream(in, "UTF-8").mkString
+    finally in.close()
+  }
+
+  private def parseManifest(f: FileSystem, p: Path): Manifest = {
+    val (info, lines) = readText(f, p).split("\n").toSeq.filter(_.nonEmpty).partition(_.startsWith("#"))
+    val entries = lines.iterator.map { line =>
       line.split("\t", 2) match {
         case Array(k, dir) => k -> dir
         case _ => throw new java.io.IOException(s"malformed manifest line in $p: '$line'")
@@ -125,8 +172,86 @@ object TxTable {
     }.toMap
     if (entries.isEmpty)
       throw new java.io.IOException(s"manifest $p is empty or truncated")
-    entries
+    Manifest(entries, CommitInfo(readsOf(info, p), infoField(info, "#watermark").map(_.toLong)))
   }
+
+  /** The `#read` lines of a manifest or a staged `_txinfo` file. */
+  private def readsOf(info: Seq[String], p: Path): Map[String, Long] =
+    info.filter(_.startsWith("#read ")).map { l =>
+      l.split(" ", 3) match {
+        case Array(_, v, root) => root -> v.toLong
+        case _ => throw new java.io.IOException(s"malformed info line in $p: '$l'")
+      }
+    }.toMap
+
+  /** The value of the one `tag` line, if any; unknown `#` lines are
+    * skipped. */
+  private def infoField(info: Seq[String], tag: String): Option[String] =
+    info.find(_.startsWith(tag + " ")).map(_.stripPrefix(tag + " "))
+
+  private def infoLines(reads: Map[String, Long]): Seq[String] =
+    reads.toSeq.sortBy(_._1).map { case (root, v) => s"#read $v $root" }
+
+  /** What the log records about committed version `version` of `root`
+    * (the `#` lines, see the header); None when the version was never
+    * committed or is vacuumed. */
+  def commitInfo(spark: SparkSession, root: String, version: Long): Option[CommitInfo] =
+    manifestIfCommitted(fs(spark, root), root, version).map(_.info)
+
+  /** Partition keys whose dir list differs between two manifests' entries
+    * (changed, new or gone): the days a later version restaged. */
+  def changedKeys(before: Map[String, String], after: Map[String, String]): Set[String] =
+    (before.keySet ++ after.keySet).filter(k => before.get(k) != after.get(k))
+
+  /** [[changedKeys]] between committed versions `from` and `to` of
+    * `root`; None when either is not (or no longer) in the log. */
+  private[pipeline] def changedKeys(spark: SparkSession, root: String,
+      from: Long, to: Long): Option[Set[String]] = {
+    val f = fs(spark, root)
+    for {
+      before <- manifestIfCommitted(f, root, from)
+      after <- manifestIfCommitted(f, root, to)
+    } yield changedKeys(before.entries, after.entries)
+  }
+
+  /** Relation options that tag a [[read]] relation with its (root,
+    * version). Options never reach plan text, and a reader ignores keys
+    * it does not know. */
+  private val RootTag = "graft.txtable.root"
+  private val VersionTag = "graft.txtable.version"
+
+  /** Whole-version reads by their logical plan, for [[snapshotOf]]. Plans
+    * hold fresh expression ids, so a plan equal to a registered one is
+    * that read (or a frame sharing its query execution). Weak keys: an
+    * entry lives as long as its frame. */
+  private val snapshots = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, (String, Long)]())
+
+  private def qualified(f: FileSystem, root: String): String = f.makeQualified(new Path(root)).toString
+
+  /** The (qualified root -> versions) of every tagged TxTable relation
+    * `df` reads, subqueries included. */
+  private def versionsRead(df: DataFrame): Map[String, Set[Long]] = {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    df.queryExecution.analyzed.collectWithSubqueries {
+      case l: LogicalRelation => l.relation
+    }.collect {
+      case h: HadoopFsRelation if h.options.contains(RootTag) =>
+        h.options(RootTag) -> h.options(VersionTag).toLong
+    }.groupMap(_._1)(_._2).map { case (root, vs) => root -> vs.toSet }
+  }
+
+  /** The TxTable versions `df` reads: one version per qualified root. A
+    * root read at two versions is left out (no provenance), as are the
+    * partial frames of `readEntries` and [[readSince]]. */
+  def sourcesOf(df: DataFrame): Map[String, Long] =
+    versionsRead(df).collect { case (root, vs) if vs.size == 1 => root -> vs.head }
+
+  /** (qualified root, version) when `df` is a whole [[read]], [[readAt]]
+    * or [[committed]] frame of one version, unfiltered and unprojected;
+    * None for any other frame. */
+  private[pipeline] def snapshotOf(df: DataFrame): Option[(String, Long)] =
+    Option(snapshots.get(df.queryExecution.logical))
 
   /** Read the table at its latest committed version. Partitions may live
     * in different version dirs (each commit rewrites only the partitions
@@ -141,16 +266,28 @@ object TxTable {
   /** [[read]] when the table has a committed version, None before its
     * first commit; one listing of the log either way.
     */
-  def committed(spark: SparkSession, root: String): Option[DataFrame] =
-    readEntries(spark, root, latest(spark, root)._2)
+  def committed(spark: SparkSession, root: String): Option[DataFrame] = {
+    val (v, entries) = latest(spark, root)
+    if (v == 0) None else Some(snapshot(spark, root, v, entries))
+  }
+
+  /** The whole table at version `v`, tagged and registered as a snapshot. */
+  private def snapshot(spark: SparkSession, root: String, v: Long,
+      entries: Map[String, String]): DataFrame = {
+    val tag = (qualified(fs(spark, root), root), v)
+    val df = readManifest(spark, root, liveDirs(entries), Some(tag))
+    snapshots.put(df.queryExecution.logical, tag)
+    df
+  }
 
   /** The rows of `entries`, a subset of one committed manifest of `root`
     * (as [[latest]] returns it), built like [[read]] but listing and
     * opening only those entries' dirs; None when `entries` is empty.
+    * Partial, so untagged.
     */
   private[pipeline] def readEntries(spark: SparkSession, root: String,
       entries: Map[String, String]): Option[DataFrame] =
-    if (entries.isEmpty) None else Some(readManifest(spark, root, liveDirs(entries)))
+    if (entries.isEmpty) None else Some(readManifest(spark, root, liveDirs(entries), None))
 
   private def liveDirs(entries: Map[String, String]): Seq[String] =
     entries.values.toSeq.flatMap(dirsOf)
@@ -161,7 +298,7 @@ object TxTable {
     * only past your audit window).
     */
   def readAt(spark: SparkSession, root: String, version: Long): DataFrame =
-    readManifest(spark, root, liveDirs(manifestAt(fs(spark, root), root, version)))
+    snapshot(spark, root, version, manifestAt(fs(spark, root), root, version))
 
   /** One relation per distinct schema over `dirs` (partition dirs
     * relative to root), built from the manifest alone: partition values
@@ -171,9 +308,11 @@ object TxTable {
     * columns; partitions in older version dirs read them as null, and a
     * dropped column survives as null on the new partitions until every
     * partition is rewritten. The NEWEST version dir's relation comes
-    * first, so its schema wins the union's column order.
+    * first, so its schema wins the union's column order. A whole-version
+    * read passes its (root, version) `tag` into every relation's options.
     */
-  private def readManifest(spark: SparkSession, root: String, dirs: Seq[String]): DataFrame = {
+  private def readManifest(spark: SparkSession, root: String, dirs: Seq[String],
+      tag: Option[(String, Long)]): DataFrame = {
     import org.apache.spark.sql.execution.datasources.{ManifestScanBridge => Scan}
     val f = fs(spark, root)
     val leaves = dirs.map(d => f.makeQualified(new Path(s"$root/$d")))
@@ -183,12 +322,15 @@ object TxTable {
       vdir -> Scan.footerSchema(spark, ds.iterator.flatMap(listing(_)).nextOption()
         .getOrElse(throw new java.io.IOException(s"no data files under live dirs of $vdir")))
     }
+    val options = tag.fold(Map.empty[String, String]) { case (r, v) =>
+      Map(RootTag -> r, VersionTag -> v.toString)
+    }
     val dfs = leaves.groupBy(d => schemaOf(d.getParent)).toSeq
       .sortBy { case (_, ds) => -ds.map(_.getParent.getName.drop(1).takeWhile(_.isDigit).toLong).max }
       .map { case (schema, ds) =>
         val in = ds.toSet
         Scan.parquet(spark, schema, spec.copy(partitions = spec.partitions.filter(p => in(p.path))),
-          listing)
+          listing, options)
       }
     widenAll(dfs).reduce(_.unionByName(_, allowMissingColumns = true))
   }
@@ -257,25 +399,89 @@ object TxTable {
     * FLAT parquet table (the pre-TxTable on-disk format), before any
     * dir is written: a `_txlog` beside it would shadow the flat files
     * forever while `spark.read.parquet(root)` readers keep consuming
-    * them. Every TxTable writer stages through here, so every writer
-    * gets the guard.
+    * them. Every writer that can create a table stages through here, so
+    * every such writer gets the guard.
+    *
+    * When `data` reads a TxTable version or carries an [[AuditStamp]],
+    * the staged dir also gets an `_txinfo` file for the publish (see the
+    * header).
     */
-  def stage(spark: SparkSession, root: String, data: DataFrame, partitionCol: String): String = {
-    val next = latest(spark, root)._1 + 1
-    if (next == 1) requireNotFlatTable(spark, root, partitionCol)
-    writeRun(root, data, partitionCol, next, "")
+  def stage(spark: SparkSession, root: String, data: DataFrame, partitionCol: String): String =
+    stageOn(spark, fs(spark, root), root, data, partitionCol)._1
+
+  /** [[stage]], also returning the version it staged on (one listing of
+    * the log) and the info it wrote to the staged dir's [[InfoFile]]. */
+  private def stageOn(spark: SparkSession, f: FileSystem, root: String, data: DataFrame,
+      partitionCol: String): (String, Long, StagedInfo) = {
+    val base = versions(f, root).lastOption.getOrElse(0L)
+    if (base == 0) requireNotFlatTable(spark, root, partitionCol)
+    val dir = writeRun(root, data, partitionCol, base + 1, "")
+    val info = stagedInfo(qualified(f, root), data)
+    if (info.nonEmpty) {
+      val out = f.create(new Path(s"$root/$dir/$InfoFile"), false)
+      try out.write(info.lines.mkString("\n").getBytes("UTF-8")) finally out.close()
+    }
+    (dir, base, info)
+  }
+
+  /** A staged dir ready to publish: its name, its partitions as manifest
+    * entries (`listStaged`) and its info. */
+  private final case class Staged(dir: String, parts: Map[String, String], info: StagedInfo)
+
+  /** The staged dir's copy of its commit info: `#read` and `#stamp` lines. */
+  private val InfoFile = "_txinfo"
+
+  /** What a staged frame read, and the [[AuditStamp]] it carries as
+    * (micros, the version of this table the stamp dominates, 0 for a new
+    * table) when the publish may record it as the watermark. */
+  private final case class StagedInfo(reads: Map[String, Long], stamp: Option[(Long, Long)]) {
+    def nonEmpty: Boolean = reads.nonEmpty || stamp.nonEmpty
+    def lines: Seq[String] = infoLines(reads) ++ stamp.map { case (us, v) => s"#stamp $us $v" }
+    /** The manifest info of a publish that builds on version `v`. */
+    def at(v: Long): CommitInfo = CommitInfo(reads, stamp.collect { case (us, `v`) => us })
+  }
+
+  /** The stamp qualifies when it is the frame's only one, it dominates
+    * this table (`root`) at version v, and the frame reads this table at
+    * exactly v — or, for a stamp over no table, reads it not at all. */
+  private def stagedInfo(root: String, data: DataFrame): StagedInfo = {
+    val read = versionsRead(data)
+    val stamps = data.queryExecution.analyzed.collectWithSubqueries {
+      case p => p.expressions.flatMap(_.collect { case a: AuditStamp => a })
+    }.flatten.distinct
+    val stamp = stamps match {
+      case Seq(AuditStamp(us, None)) if !read.contains(root) => Some(us -> 0L)
+      case Seq(AuditStamp(us, Some((`root`, v)))) if read.get(root).contains(Set(v)) => Some(us -> v)
+      case _ => None
+    }
+    StagedInfo(sourcesOf(data).filter(_._1.forall(!_.isControl)), stamp)
+  }
+
+  /** The staged info of `stagedDir` ([[InfoFile]]); empty without one. */
+  private def readStagedInfo(f: FileSystem, root: String, stagedDir: String): StagedInfo = {
+    val p = new Path(s"$root/$stagedDir/$InfoFile")
+    if (!f.exists(p)) StagedInfo(Map.empty, None)
+    else {
+      val info = readText(f, p).split("\n").toSeq.filter(_.startsWith("#"))
+      StagedInfo(readsOf(info, p), infoField(info, "#stamp").map(l => l.split(" ") match {
+        case Array(us, v) => us.toLong -> v.toLong
+        case _ => throw new java.io.IOException(s"malformed info line in $p: '#stamp $l'")
+      }))
+    }
   }
 
   /** Write `data` partitioned by `partitionCol` into a fresh version dir
     * `v<next>-<nonce><suffix>` and return its name — the one data write
-    * of [[stage]] and [[compactLeveled]]. */
+    * of [[stage]], [[deleteWhere]] and [[compactLeveled]]. */
   private def writeRun(root: String, data: DataFrame, partitionCol: String,
       next: Long, suffix: String): String = {
     val dir = s"v$next-${java.util.UUID.randomUUID().toString.take(8)}$suffix"
-    data.write
-      .mode(SaveMode.ErrorIfExists)
-      .partitionBy(partitionCol)
-      .parquet(s"$root/$dir")
+    CallSites(data.sparkSession, "TxTable.stage") {
+      data.write
+        .mode(SaveMode.ErrorIfExists)
+        .partitionBy(partitionCol)
+        .parquet(s"$root/$dir")
+    }
     dir
   }
 
@@ -283,7 +489,8 @@ object TxTable {
     * overridden by the staged partitions), write it to a temp name, and
     * atomically rename it into place. All staged partitions become
     * visible in the same instant; a crash anywhere before the rename
-    * leaves the table at the previous version.
+    * leaves the table at the previous version. The staged dir's info
+    * becomes the manifest's `#` lines.
     *
     * Concurrency: single-writer by contract. If two publishers race
     * anyway, the version-number CAS ([[casManifest]]) picks exactly one
@@ -293,12 +500,16 @@ object TxTable {
     */
   def publish(spark: SparkSession, root: String, stagedDir: String, partitionCol: String): Long = {
     val f = fs(spark, root)
-    val (v, old) = latest(spark, root)
     val changed = listStaged(f, root, stagedDir, partitionCol)
     require(changed.nonEmpty, s"staged dir $stagedDir has no $partitionCol= partitions")
-    publishManifest(spark, f, root, v, old ++ changed, 1,
-      s"publish is single-writer by contract; staged data remains at $root/$stagedDir")(identity)
+    val (v, base) = latestManifest(f, root)
+    publishOn(f, root, v, base, Staged(stagedDir, changed, readStagedInfo(f, root, stagedDir)))
   }
+
+  /** [[publish]] onto version `v`, whose manifest is `base`. */
+  private def publishOn(f: FileSystem, root: String, v: Long, base: Manifest, s: Staged): Long =
+    publishManifest(f, root, v, base.entries ++ s.parts, s.info.at(v), 1,
+      s"publish is single-writer by contract; staged data remains at $root/${s.dir}")(identity)
 
   /** Test-only injection point: fires immediately before every manifest
     * CAS attempt of every writer — deterministic lost-CAS coverage
@@ -307,26 +518,28 @@ object TxTable {
     * never sets it. */
   private[pipeline] var testHookBeforeCas: () => Unit = () => ()
 
-  /** The one manifest commit of every writer: CAS `entries` as version
-    * `v + 1` ([[casManifest]], never a plain rename — POSIX rename
+  /** The one manifest commit of every writer: CAS `entries` and `info` as
+    * version `v + 1` ([[casManifest]], never a plain rename — POSIX rename
     * OVERWRITES, so a concurrent writer that just committed that version
     * would be silently clobbered). On a lost CAS with `attempts` left,
-    * re-read [[latest]] and retry at the version after it with
-    * `rebase(its entries)`; otherwise throw, naming the root, the version
-    * and `onFailure` (the writer's contract and recovery hint). Returns
-    * the committed version.
+    * re-read the latest manifest and retry at the version after it with
+    * `rebase(its entries)`, keeping the reads and dropping the watermark
+    * (it was proven against the lost base only); otherwise throw, naming
+    * the root, the version and `onFailure` (the writer's contract and
+    * recovery hint). Returns the committed version.
     */
   @scala.annotation.tailrec
-  private def publishManifest(spark: SparkSession, f: FileSystem,
-      root: String, v: Long, entries: Map[String, String], attempts: Int, onFailure: String)(
-      rebase: Map[String, String] => Map[String, String]): Long = {
+  private def publishManifest(f: FileSystem,
+      root: String, v: Long, entries: Map[String, String], info: CommitInfo, attempts: Int,
+      onFailure: String)(rebase: Map[String, String] => Map[String, String]): Long = {
     testHookBeforeCas()
-    if (casManifest(f, root, v + 1, entries)) v + 1
+    if (casManifest(f, root, v + 1, entries, info)) v + 1
     else if (attempts <= 1) throw new java.io.IOException(
       s"a concurrent writer committed version ${v + 1} at $root first; $onFailure")
     else {
-      val (fresh, freshEntries) = latest(spark, root)
-      publishManifest(spark, f, root, fresh, rebase(freshEntries), attempts - 1, onFailure)(rebase)
+      val (fresh, m) = latestManifest(f, root)
+      publishManifest(f, root, fresh, rebase(m.entries), info.copy(watermark = None),
+        attempts - 1, onFailure)(rebase)
     }
   }
 
@@ -335,7 +548,7 @@ object TxTable {
     * the unchanged latest one when `data` is empty (`stageNonEmpty`).
     */
   def commit(spark: SparkSession, root: String, data: DataFrame, partitionCol: String): Long =
-    stageNonEmpty(spark, root, data, partitionCol)(publish(spark, root, _, partitionCol))
+    stageNonEmpty(spark, root, data, partitionCol)(publishOn)
 
   /** The one empty-stage rule of [[commit]] and [[appendCommit]]: stage
     * `data`, then publish only when at least one partition landed — ONE
@@ -344,15 +557,26 @@ object TxTable {
     * staging (a bare dir with write metadata, no partition subdirs) is
     * deleted at once as debris and the latest version is returned
     * unchanged; no manifest is written.
+    *
+    * One commit lists the log once, lists the staged dir once and parses
+    * the manifest it staged on once, handing all three to the publish;
+    * only a lost CAS re-reads the log. When that manifest is gone by the
+    * publish (a concurrent commit and vacuum), the publish builds on the
+    * latest one instead.
     */
   private def stageNonEmpty(spark: SparkSession, root: String, data: DataFrame,
-      partitionCol: String)(publishStaged: String => Long): Long = {
-    val stagedDir = stage(spark, root, data, partitionCol)
+      partitionCol: String)(publishStaged: (FileSystem, String, Long, Manifest, Staged) => Long): Long = {
     val f = fs(spark, root)
-    if (listStaged(f, root, stagedDir, partitionCol).nonEmpty) publishStaged(stagedDir)
-    else {
+    val (stagedDir, v, info) = stageOn(spark, f, root, data, partitionCol)
+    val changed = listStaged(f, root, stagedDir, partitionCol)
+    if (changed.isEmpty) {
       f.delete(new Path(s"$root/$stagedDir"), true)
-      latest(spark, root)._1
+      v
+    } else {
+      val (at, base) =
+        if (v == 0) (v, NoManifest)
+        else manifestIfCommitted(f, root, v).fold(latestManifest(f, root))(v -> _)
+      publishStaged(f, root, at, base, Staged(stagedDir, changed, info))
     }
   }
 
@@ -386,7 +610,7 @@ object TxTable {
     val f = fs(spark, root)
     val (v, old) = latest(spark, root)
     require(v > 0 && old.nonEmpty, s"no committed version at $root")
-    val cur = read(spark, root)
+    val cur = snapshot(spark, root, v, old)
     // deterministic-after-analysis: expr("rand() < 0.5") only resolves to
     // a Nondeterministic node once analyzed against the actual table
     val analyzedDet = cur.filter(predicate).queryExecution.analyzed.collectFirst {
@@ -422,12 +646,12 @@ object TxTable {
       .filter(col(partitionCol).cast("string").isin(affectedRaw.toSeq: _*))
       .filter(not(hit))
     // fully-deleted partitions simply never appear in the staged dir
-    val stagedDir = stage(spark, root, survivors, partitionCol)
+    val stagedDir = writeRun(root, survivors, partitionCol, v + 1, "")
     val entries = (old -- affectedKeys) ++ listStaged(f, root, stagedDir, partitionCol)
     require(entries.nonEmpty,
       s"deleteWhere would remove every row of $root — refusing (an empty table has no " +
         s"manifest representation); drop the table root explicitly instead")
-    publishManifest(spark, f, root, v, entries, 1,
+    publishManifest(f, root, v, entries, CommitInfo.empty, 1,
       s"deleteWhere is single-writer by contract; staged survivors remain at $root/$stagedDir")(
       identity)
     deleted
@@ -443,7 +667,7 @@ object TxTable {
     * namenode. Returns whether THIS writer won version `next`.
     */
   private def casManifest(f: FileSystem, root: String, next: Long,
-      entries: Map[String, String]): Boolean = {
+      entries: Map[String, String], info: CommitInfo): Boolean = {
     val ld = new Path(logDir(root))
     if (!f.exists(ld) && !f.mkdirs(ld))
       throw new java.io.IOException(s"cannot create $ld")
@@ -458,8 +682,9 @@ object TxTable {
       val tmp = new Path(ld,
         manifestName(next) + s".${java.util.UUID.randomUUID().toString.take(8)}.tmp")
       val out = f.create(tmp, true)
-      try out.write(
-        entries.toSeq.sorted.map { case (k, dir) => s"$k\t$dir" }.mkString("\n").getBytes("UTF-8"))
+      val lines = infoLines(info.reads) ++ info.watermark.map(w => s"#watermark $w") ++
+        entries.toSeq.sorted.map { case (k, dir) => s"$k\t$dir" }
+      try out.write(lines.mkString("\n").getBytes("UTF-8"))
       finally out.close()
       try {
         val won =
@@ -513,17 +738,22 @@ object TxTable {
     */
   def appendPublish(spark: SparkSession, root: String, stagedDir: String,
       partitionCol: String): Long = {
-    val attempts = 10
     val f = fs(spark, root)
     val changed = listStaged(f, root, stagedDir, partitionCol)
     require(changed.nonEmpty, s"staged dir $stagedDir has no $partitionCol= partitions")
-    def grow(cur: Map[String, String]) = cur ++ changed.map { case (k, dir) =>
+    val (v, base) = latestManifest(f, root)
+    appendOn(f, root, v, base, Staged(stagedDir, changed, readStagedInfo(f, root, stagedDir)))
+  }
+
+  /** [[appendPublish]] onto version `v`, whose manifest is `base`. */
+  private def appendOn(f: FileSystem, root: String, v: Long, base: Manifest, s: Staged): Long = {
+    val attempts = 10
+    def grow(cur: Map[String, String]) = cur ++ s.parts.map { case (k, dir) =>
       k -> cur.get(k).fold(dir)(_ + "\t" + dir)
     }
-    val (v, cur) = latest(spark, root)
-    publishManifest(spark, f, root, v, grow(cur), attempts,
+    publishManifest(f, root, v, grow(base.entries), s.info.at(v), attempts,
       s"append lost all $attempts attempts — the log is too contended; " +
-        s"staged data remains at $root/$stagedDir")(grow)
+        s"staged data remains at $root/${s.dir}")(grow)
   }
 
   /** Stage + blind-append in one call: the O(increment) ingest commit.
@@ -531,7 +761,7 @@ object TxTable {
     * nothing and returns the unchanged latest version. */
   def appendCommit(spark: SparkSession, root: String, data: DataFrame,
       partitionCol: String): Long =
-    stageNonEmpty(spark, root, data, partitionCol)(appendPublish(spark, root, _, partitionCol))
+    stageNonEmpty(spark, root, data, partitionCol)(appendOn)
 
   /** Incremental read: the rows ADDED between `sinceVersion` (exclusive)
     * and `toVersion` (inclusive) — the cheap "new data since version V"
@@ -584,7 +814,7 @@ object TxTable {
         s"$sinceVersion and $toVersion — the append-only delta contract is " +
         s"broken; re-baseline from readAt($toVersion)")
     if (added.isEmpty) None
-    else Some(readManifest(spark, root, added))
+    else Some(readManifest(spark, root, added, None))
   }
 
   /** The first-version guard of [[stage]]: fail, naming the migration,
@@ -692,7 +922,7 @@ object TxTable {
         case Some((lv, toMerge)) =>
           // read ONLY the merged runs' dirs (the O(period) claim)
           val data = readManifest(spark, root,
-            liveDirs(entries).filter(d => toMerge(runOf(d))))
+            liveDirs(entries).filter(d => toMerge(runOf(d))), None)
           // file count scales with the MERGED bytes (driver-side fs
           // sizing, no job): a routine level-0 firing keeps the small
           // default, while a top-level promotion that merges most of
@@ -727,7 +957,7 @@ object TxTable {
             if (ds.isEmpty) None else Some(k -> ds.mkString("\t"))
           }.toMap
           val attempts = 20
-          publishManifest(spark, f, root, v, around(entries), attempts,
+          publishManifest(f, root, v, around(entries), CommitInfo.empty, attempts,
             s"leveled merge lost all $attempts attempts — the log is too contended; " +
               s"staged run remains at $root/$dir") { fresh =>
             val missing = toMerge -- versionDirs(fresh)
@@ -823,7 +1053,7 @@ object TxTable {
       case (vi, vnext) if now - mtime(vnext) < retainMs => vi
     }
     val live = (v +: retained).toSet[Long]
-      .flatMap(vi => versionDirs(parseManifest(f, manifestPath(root, vi))))
+      .flatMap(vi => versionDirs(parseManifest(f, manifestPath(root, vi)).entries))
     f.listStatus(new Path(root)).foreach { st =>
       val p = st.getPath
       if (p.getName.startsWith("v") && !live.contains(p.getName) && p.getName != "_txlog" &&
@@ -848,4 +1078,31 @@ object TxTable {
         f.delete(p, false)
     }
   }
+}
+
+/** What the log records about one commit besides its entries: the TxTable
+  * versions its staged frame read (qualified root -> version), and the
+  * table's watermark (`max(processed_at)`, epoch micros) when the commit
+  * provably set it. Empty for a manifest without `#` lines. */
+final case class CommitInfo(reads: Map[String, Long], watermark: Option[Long])
+
+object CommitInfo {
+  val empty: CommitInfo = CommitInfo(Map.empty, None)
+}
+
+/** A processed_at chosen once on the driver (epoch `micros`), at or above
+  * the watermark of the table version `base` names — None when the frame
+  * it stamps merges into no table. Foldable, so the optimizer turns it
+  * into the same timestamp literal `current_timestamp()` becomes: plans
+  * and generated code do not change. A [[TxTable.stage]] of a frame that
+  * carries it records it for the publish to turn into the watermark. */
+final case class AuditStamp(micros: Long, base: Option[(String, Long)])
+    extends org.apache.spark.sql.catalyst.expressions.LeafExpression
+    with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
+  override def foldable: Boolean = true
+  override def nullable: Boolean = false
+  override def dataType: org.apache.spark.sql.types.DataType = org.apache.spark.sql.types.TimestampType
+  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = micros
+  override def toString: String =
+    org.apache.spark.sql.catalyst.expressions.Literal(micros, dataType).toString
 }

@@ -51,10 +51,11 @@ object ManifestScanBridge {
   }
 
   /** One parquet relation over `spec`'s partition dirs, whose data files
-    * are `listing`. The index reads them from a pre-filled cache, so
-    * building the frame lists nothing and launches no job. */
+    * are `listing`, with relation `options`. The index reads them from a
+    * pre-filled cache, so building the frame lists nothing and launches
+    * no job. */
   def parquet(spark: SparkSession, dataSchema: StructType, spec: PartitionSpec,
-      listing: Map[Path, Array[FileStatus]]): DataFrame = {
+      listing: Map[Path, Array[FileStatus]], options: Map[String, String]): DataFrame = {
     val listed = new FileStatusCache {
       override def getLeafFiles(dir: Path): Option[Array[FileStatus]] = listing.get(dir)
       override def putLeafFiles(dir: Path, files: Array[FileStatus]): Unit = ()
@@ -63,6 +64,6 @@ object ManifestScanBridge {
     val index = new InMemoryFileIndex(
       spark, spec.partitions.map(_.path), Map.empty, None, listed, Some(spec))
     spark.baseRelationToDataFrame(HadoopFsRelation(
-      index, spec.partitionColumns, dataSchema, None, new ParquetFileFormat, Map.empty)(spark))
+      index, spec.partitionColumns, dataSchema, None, new ParquetFileFormat, options)(spark))
   }
 }

@@ -196,6 +196,59 @@ class GoldenE2ESpec extends AnyFunSuite {
     assert(helper.collect(plan) { case b: BroadcastExchangeExec => b }.isEmpty, plan.toString)
   }
 
+  test("planned from the log: after the first increment silverIncrement runs one job, goldAffectedDays none") {
+    val root = graft.TestTmp.dir("graft-golden-log")
+    val (silverRoot, goldRoot) = (s"$root/silver", s"$root/gold")
+    val b1 = bronzeOf(threeDays, "2022-04-14 13:30:00")
+    TxTable.commit(spark, silverRoot, Incremental.silverIncrement(b1, None, t0), "reading_date")
+    TxTable.commit(spark, goldRoot,
+      Incremental.goldAffectedDays(TxTable.read(spark, silverRoot), None, t0), "reading_date")
+    val b2 = b1.unionByName(lateBronze(7L -> "1650028218 Voltage 2.2"))
+    // the scan's cost, for contrast: a target with no provenance
+    val (_, scanJobs) = graft.JobCount(spark)(Incremental.silverIncrement(
+      b2, Some(TxTable.read(spark, silverRoot).localCheckpoint()), t1))
+    val (incr, jobs, records) = graft.JobCount.withRecords(spark)(
+      Incremental.silverIncrement(b2, Some(TxTable.read(spark, silverRoot)), t1))
+    assert(jobs == 1 && scanJobs > jobs,
+      s"silverIncrement ran $jobs jobs from the log, $scanJobs with the watermark scan")
+    assert(records == 0, s"the day-set job read $records silver file records")
+    TxTable.commit(spark, silverRoot, incr, "reading_date")
+    val (gold, goldJobs) = graft.JobCount(spark)(Incremental.goldAffectedDays(
+      TxTable.read(spark, silverRoot), Some(TxTable.read(spark, goldRoot)), t1))
+    assert(goldJobs == 0, s"goldAffectedDays ran $goldJobs jobs")
+    assert(gold.collect().map(_.getAs[java.sql.Date]("reading_date").toString).toSeq == Seq("2022-04-15"))
+  }
+
+  test("a silver deleteWhere of part of one day: the log's diff recomputes that day, where the scan misses it") {
+    val root = graft.TestTmp.dir("graft-golden-delete")
+    val (silverRoot, goldRoot) = (s"$root/silver", s"$root/gold")
+    val b1 = bronzeOf(threeDays, "2022-04-14 13:30:00")
+    def goldStep(at: org.apache.spark.sql.Column) = TxTable.commit(spark, goldRoot,
+      Incremental.goldAffectedDays(TxTable.read(spark, silverRoot), TxTable.committed(spark, goldRoot), at),
+      "reading_date")
+    TxTable.commit(spark, silverRoot, Incremental.silverIncrement(b1, None, t0), "reading_date")
+    goldStep(t0)
+    // a second Voltage on 2022-04-15, then the first one deleted
+    TxTable.commit(spark, silverRoot, Incremental.silverIncrement(
+      b1.unionByName(lateBronze(7L -> "1650028218 Voltage 2.2")),
+      Some(TxTable.read(spark, silverRoot)), t1), "reading_date")
+    goldStep(t1)
+    assert(TxTable.deleteWhere(spark, silverRoot, "reading_date", col("raw_id") === 3L) == 1L)
+    val (silver, gold) = (TxTable.read(spark, silverRoot), TxTable.read(spark, goldRoot))
+    val wm = Incremental.watermark(Some(gold), "calculated_at")
+    assert(Merge.partitionValues(silver.filter(col("processed_at") > lit(wm)), "reading_date").isEmpty,
+      "the delete wrote no newer processed_at: the watermark scan finds no day")
+    assert(Incremental.loggedDays(silver, Some(gold)).contains(Seq("2022-04-15")))
+    goldStep(lit(Timestamp.valueOf("2022-04-14 20:00:00")))
+    val got = TxTable.read(spark, goldRoot).select(col("reading_date").cast("string"), col("metric_value"))
+      .as[(String, Double)].collect().toMap
+    val want = SensorPipeline.silverToGold(TxTable.read(spark, silverRoot))
+      .select(col("reading_date").cast("string"), col("metric_value")).as[(String, Double)].collect().toMap
+    assert(got.keySet == want.keySet && got.forall { case (d, v) => math.abs(v - want(d)) <= math.abs(want(d)) * 1e-12 },
+      s"gold $got differs from one-shot silverToGold $want")
+    assert(math.abs(got("2022-04-15") - 2.2 * 10.0) < 1e-9, "2022-04-15 recomputed without raw_id 3")
+  }
+
   test("a raw_id re-sent on another day fails unique_raw_id loudly, never a silent duplicate") {
     val root = graft.TestTmp.dir("graft-golden-contract") + "/silver"
     val b1 = bronzeOf(threeDays, "2022-04-14 13:30:00")

@@ -222,7 +222,7 @@ class ServeCacheSpec extends AnyFunSuite {
     assert(!cache.refreshIfStale())
   }
 
-  test("refresh counts: a one-day append reads only that day in at most 3 jobs; no change, no job") {
+  test("refresh counts: a one-day append reads only that day, once, in one job; no change, no job") {
     val (sRoot, gRoot) = mkTables(mkFrames())
     val cache = ServeCache.fromTxTables(spark, sRoot, gRoot)
     val (idle, idleJobs) = graft.JobCount(spark)(cache.refreshIfStale())
@@ -230,10 +230,10 @@ class ServeCacheSpec extends AnyFunSuite {
     TxTable.appendCommit(spark, sRoot,
       frame(Seq(("2024-01-04", "2024-01-04 01:02:03.004", "click", 9.0))), "reading_date")
     val (swapped, jobs, records) = graft.JobCount.withRecords(spark)(cache.refreshIfStale())
-    assert(swapped && jobs <= 3, s"a refresh after a one-day append launched $jobs jobs")
-    // the one new row, read by the bound's count and by the collect; a
-    // full reload would read all 8 rows twice
-    assert(records == 2, s"a refresh after a one-day append read $records input records")
+    assert(swapped && jobs == 1, s"a refresh after a one-day append launched $jobs jobs")
+    // the one new row, read once by the bounded collect; a full reload
+    // would read all 8 rows
+    assert(records == 1, s"a refresh after a one-day append read $records input records")
     assertPinnedParity(cache, sRoot, gRoot)
   }
 

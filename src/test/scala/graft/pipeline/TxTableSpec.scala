@@ -442,4 +442,240 @@ class TxTableSpec extends AnyFunSuite {
       .collect().map(r => (r.getString(0), r.getDouble(1))).toSet
     assert(got == Set("2022-04-14" -> 18.0, "2022-04-15" -> 20.0))
   }
+
+  /** A three-increment bronze log over 2022-04-14..17: valid lines, late
+    * lines for an earlier day, and duplicate lines (each a distinct
+    * reading). */
+  private val log = Seq(
+    Seq("1649941817 Voltage 1.34", "1649941817 Current 12.0",
+      "1650028217 Voltage 2.0", "1650028217 Voltage 2.0", "1650028217 Current 10.0"),
+    Seq("1650028218 Current 10.0", "1650114617 Voltage 3.0", "1650114617 Current 11.0",
+      "1649941818 Voltage 1.35", "1649941817 Voltage 1.34"),
+    Seq("1650200000 Voltage 4.0", "1650200000 Current 9.0", "1650028219 Current 10.5",
+      "1649941900 Current 14.0", "1650114617 Voltage 3.0"))
+
+  /** Bronze that grows one ingest at a time: serial ids, each ingest
+    * stamped with the wall clock, as the reference's POST edge does. */
+  private final class Bronze {
+    private val all = scala.collection.mutable.ArrayBuffer.empty[(Long, String, java.sql.Timestamp)]
+    def add(lines: Seq[String]): org.apache.spark.sql.DataFrame = {
+      Thread.sleep(2) // ingested strictly after every earlier processed_at
+      val at = new java.sql.Timestamp(System.currentTimeMillis())
+      lines.foreach(l => all += ((all.size + 1L, l, at)))
+      all.toSeq.toDF("id", "raw_line", "ingested_at")
+    }
+  }
+
+  private def micros(t: java.sql.Timestamp): Long =
+    org.apache.spark.sql.catalyst.util.DateTimeUtils.fromJavaTimestamp(t)
+
+  private def maxProcessedAt(df: org.apache.spark.sql.DataFrame): Long =
+    micros(df.agg(max("processed_at")).head().getTimestamp(0))
+
+  /** The days the gold watermark scan picks: silver days with rows
+    * processed after gold's newest calculated_at. */
+  private def scanDays(silver: org.apache.spark.sql.DataFrame,
+      gold: Option[org.apache.spark.sql.DataFrame]): Set[String] =
+    Merge.partitionValues(silver.filter(col("processed_at") >
+      lit(Incremental.watermark(gold, "calculated_at"))), "reading_date").map(_.toString).toSet
+
+  private def sameRows(a: org.apache.spark.sql.DataFrame, b: org.apache.spark.sql.DataFrame): Boolean =
+    a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
+
+  /** Gold equals one-shot silverToGold of `silver`, calculated_at aside
+    * and Power within a relative 1e-12 (a product of averages). */
+  private def assertGoldOf(goldRoot: String, silver: org.apache.spark.sql.DataFrame): Unit = {
+    def power(g: org.apache.spark.sql.DataFrame, as: String) =
+      g.select(col("reading_date"), col("metric_value").as(as))
+    val diff = power(TxTable.read(spark, goldRoot), "v")
+      .join(power(SensorPipeline.silverToGold(silver), "w"), Seq("reading_date"), "full_outer")
+      .filter(col("v").isNull || col("w").isNull || abs(col("v") - col("w")) > abs(col("w")) * 1e-12)
+    assert(diff.isEmpty, s"gold differs from one-shot silverToGold: ${diff.collect().mkString(", ")}")
+  }
+
+  /** `Incremental.silverIncrement` over `target` equals the watermark
+    * scan's answer: the merge of the bronze rows ingested after the
+    * target's scanned max(processed_at). */
+  private def assertScanAnswer(bronze: org.apache.spark.sql.DataFrame,
+      target: Option[org.apache.spark.sql.DataFrame], at: java.sql.Timestamp): Unit = {
+    val wm = Incremental.watermark(target, "processed_at")
+    val fresh = SensorPipeline.bronzeToSilver(bronze.filter(col("ingested_at") > lit(wm)), lit(at))
+    val want = Incremental.silverMerge(target, fresh).fold(fresh)(_._2)
+    assert(sameRows(Incremental.silverIncrement(bronze, target, lit(at)), want),
+      "silverIncrement differs from the watermark scan's answer")
+  }
+
+  test("commit info: each recorded watermark is max(processed_at) at its version; gold's diff days equal the scan's") {
+    val root = graft.TestTmp.dir("txinfo-exact")
+    val (silverRoot, goldRoot) = (s"$root/silver", s"$root/gold")
+    val bronze = new Bronze
+    log.indices.foreach { k =>
+      val v = TxTable.commit(spark, silverRoot, Incremental.silverIncrement(
+        bronze.add(log(k)), TxTable.committed(spark, silverRoot)), "reading_date")
+      val w = TxTable.commitInfo(spark, silverRoot, v).flatMap(_.watermark)
+      assert(w.contains(maxProcessedAt(TxTable.readAt(spark, silverRoot, v))),
+        s"increment $k: recorded watermark $w is not max(processed_at) of version $v")
+      val silver = TxTable.read(spark, silverRoot)
+      val gold = TxTable.committed(spark, goldRoot)
+      val logged = Incremental.loggedDays(silver, gold)
+      if (k == 0) assert(logged.isEmpty, "no gold target: the scan picks the days")
+      else assert(logged.map(_.toSet).contains(scanDays(silver, gold)),
+        s"increment $k: diff days $logged differ from the scan's ${scanDays(silver, gold)}")
+      TxTable.commit(spark, goldRoot, Incremental.goldAffectedDays(silver, gold), "reading_date")
+      assert(TxTable.commitInfo(spark, goldRoot, TxTable.latest(spark, goldRoot)._1).get ==
+        CommitInfo(TxTable.sourcesOf(silver), None), "gold records the silver version it read")
+    }
+    val oneShot = SensorPipeline.bronzeToSilver(bronze.add(Nil)).drop("processed_at")
+    assert(sameRows(TxTable.read(spark, silverRoot).drop("processed_at"), oneShot))
+    assertGoldOf(goldRoot, TxTable.read(spark, silverRoot))
+  }
+
+  test("commit info: a frame reading no table keeps the parent's bytes; a rebased append keeps its reads, drops the watermark") {
+    val root = graft.TestTmp.dir("txinfo-format") + "/t"
+    TxTable.commit(spark, root, rows("d1" -> 1.0), "day")
+    assert(!new java.io.File(root).list().exists(d => new java.io.File(s"$root/$d/_txinfo").exists))
+    assert(Files.readString(java.nio.file.Paths.get(s"$root/_txlog/00000001.manifest")) ==
+      TxTable.latest(spark, root)._2.toSeq.sorted.map { case (k, d) => s"$k\t$d" }.mkString("\n"),
+      "no # line, no info file: the manifest has the parent's bytes")
+    assert(TxTable.commitInfo(spark, root, 1) == Some(CommitInfo.empty))
+    assert(TxTable.commitInfo(spark, root, 2).isEmpty, "no version 2 yet")
+
+    val silverRoot = graft.TestTmp.dir("txinfo-rebase") + "/silver"
+    val bronze = new Bronze
+    TxTable.commit(spark, silverRoot,
+      Incremental.silverIncrement(bronze.add(log(0)), None), "reading_date")
+    val target = TxTable.read(spark, silverRoot)
+    val q = TxTable.sourcesOf(target).keys.head
+    assert(TxTable.sourcesOf(target) == Map(q -> 1L) && TxTable.sourcesOf(target.union(target)) == Map(q -> 1L))
+    assert(TxTable.sourcesOf(target.union(TxTable.readAt(spark, silverRoot, 1))) == Map(q -> 1L))
+    val staged = TxTable.stage(spark, silverRoot,
+      Incremental.silverIncrement(bronze.add(log(1)), Some(target)), "reading_date")
+    assert(new java.io.File(s"$silverRoot/$staged/_txinfo").exists)
+    assert(TxTable.latest(spark, silverRoot)._2.keySet.forall(!_.startsWith("#")))
+    val v = stealingOnce(TxTable.appendCommit(spark, silverRoot,
+      SensorPipeline.bronzeToSilver(bronze.add(log(2))), "reading_date")) {
+      TxTable.appendPublish(spark, silverRoot, staged, "reading_date")
+    }
+    assert(v == 3L && TxTable.commitInfo(spark, silverRoot, 3) == Some(CommitInfo(Map(q -> 1L), None)),
+      s"rebased append: ${TxTable.commitInfo(spark, silverRoot, 3)}")
+    assert(TxTable.commitInfo(spark, silverRoot, 2) == Some(CommitInfo(Map.empty, None)),
+      "a frame reading no table and carrying no stamp records nothing")
+
+    // a caller's column that is not foldable is used as given, never recorded
+    val byIngest = graft.TestTmp.dir("txinfo-column") + "/silver"
+    val all = bronze.add(Nil)
+    TxTable.commit(spark, byIngest, Incremental.silverIncrement(all, None, col("ingested_at")), "reading_date")
+    assert(TxTable.commitInfo(spark, byIngest, 1) == Some(CommitInfo.empty))
+    assert(TxTable.read(spark, byIngest).select("processed_at").distinct().as[java.sql.Timestamp]
+      .collect().toSet == all.select("ingested_at").distinct().as[java.sql.Timestamp].collect().toSet)
+  }
+
+  test("fallbacks: no provenance, a parent-format manifest and a caller's stamp below the watermark give the scan's answer") {
+    val root = graft.TestTmp.dir("txinfo-fallback1")
+    val (silverRoot, goldRoot) = (s"$root/silver", s"$root/gold")
+    val bronze = new Bronze
+    val t0 = new java.sql.Timestamp(System.currentTimeMillis())
+    TxTable.commit(spark, silverRoot, Incremental.silverIncrement(bronze.add(log(0)), None), "reading_date")
+    TxTable.commit(spark, goldRoot,
+      Incremental.goldAffectedDays(TxTable.read(spark, silverRoot), None), "reading_date")
+
+    // a checkpointed copy of silver reads no TxTable relation: no provenance
+    val copy = TxTable.read(spark, silverRoot).localCheckpoint()
+    assert(TxTable.snapshotOf(copy).isEmpty && TxTable.sourcesOf(copy).isEmpty)
+    val b1 = bronze.add(log(1))
+    assertScanAnswer(b1, Some(copy), new java.sql.Timestamp(System.currentTimeMillis()))
+    val v2 = TxTable.commit(spark, silverRoot, Incremental.silverIncrement(b1, Some(copy)), "reading_date")
+    assert(TxTable.commitInfo(spark, silverRoot, v2) == Some(CommitInfo.empty))
+    assert(Incremental.loggedDays(copy, TxTable.committed(spark, goldRoot)).isEmpty)
+    assert(Incremental.loggedDays(TxTable.read(spark, silverRoot),
+      Some(TxTable.read(spark, goldRoot).localCheckpoint())).isEmpty)
+
+    // a caller's stamp below the watermark is used as given, never recorded
+    val b2 = bronze.add(log(2))
+    val low = Incremental.silverIncrement(b2, TxTable.committed(spark, silverRoot), lit(t0))
+    val v3 = TxTable.commit(spark, silverRoot, low, "reading_date")
+    assert(TxTable.commitInfo(spark, silverRoot, v3).get.watermark.isEmpty)
+    assert(maxProcessedAt(TxTable.read(spark, silverRoot)) > micros(t0))
+    val b3 = bronze.add(Seq("1650200001 Voltage 4.5"))
+    assertScanAnswer(b3, TxTable.committed(spark, silverRoot), new java.sql.Timestamp(System.currentTimeMillis()))
+
+    // a stamped commit, then its manifests rewritten in the parent's
+    // format: every # line gone
+    val v4 = TxTable.commit(spark, silverRoot,
+      Incremental.silverIncrement(b3, TxTable.committed(spark, silverRoot)), "reading_date")
+    assert(TxTable.commitInfo(spark, silverRoot, v4).get.watermark.nonEmpty)
+    TxTable.commit(spark, goldRoot, Incremental.goldAffectedDays(TxTable.read(spark, silverRoot),
+      TxTable.committed(spark, goldRoot)), "reading_date")
+    Seq(silverRoot, goldRoot).foreach { r =>
+      val m = java.nio.file.Paths.get(f"$r/_txlog/${TxTable.latest(spark, r)._1}%08d.manifest")
+      Files.writeString(m, Files.readAllLines(m).toArray.map(_.toString).filterNot(_.startsWith("#")).mkString("\n"))
+    }
+    assert(TxTable.commitInfo(spark, silverRoot, v4) == Some(CommitInfo.empty))
+    assert(Incremental.loggedDays(TxTable.read(spark, silverRoot), TxTable.committed(spark, goldRoot)).isEmpty)
+    val b4 = bronze.add(Seq("1650200002 Current 9.5"))
+    assertScanAnswer(b4, TxTable.committed(spark, silverRoot), new java.sql.Timestamp(System.currentTimeMillis()))
+    TxTable.commit(spark, silverRoot,
+      Incremental.silverIncrement(b4, TxTable.committed(spark, silverRoot)), "reading_date")
+    TxTable.commit(spark, goldRoot, Incremental.goldAffectedDays(TxTable.read(spark, silverRoot),
+      TxTable.committed(spark, goldRoot)), "reading_date")
+    val silver = TxTable.read(spark, silverRoot)
+    assert(sameRows(silver.drop("processed_at"), SensorPipeline.bronzeToSilver(b4).drop("processed_at")))
+    assertGoldOf(goldRoot, silver)
+  }
+
+  test("fallbacks: a stale target, a deleteWhere, a compactLeveled and a vacuumed gold source give the scan's answer") {
+    val root = graft.TestTmp.dir("txinfo-fallback2")
+    val (silverRoot, goldRoot) = (s"$root/silver", s"$root/gold")
+    val bronze = new Bronze
+    def now = new java.sql.Timestamp(System.currentTimeMillis())
+    def silverStep(b: org.apache.spark.sql.DataFrame) = TxTable.commit(spark, silverRoot,
+      Incremental.silverIncrement(b, TxTable.committed(spark, silverRoot)), "reading_date")
+    def goldStep() = TxTable.commit(spark, goldRoot, Incremental.goldAffectedDays(
+      TxTable.read(spark, silverRoot), TxTable.committed(spark, goldRoot)), "reading_date")
+    silverStep(bronze.add(log(0)))
+    goldStep()
+    assert(silverStep(bronze.add(log(1))) == 2L)
+    goldStep()
+
+    // a stale target: read at version 1 while 2 is latest. Its watermark
+    // is version 1's; the publish onto 2 records none
+    val stale = TxTable.readAt(spark, silverRoot, 1)
+    val b1 = bronze.add(Seq("1650200003 Voltage 4.1"))
+    assertScanAnswer(b1, Some(stale), now)
+    val v3 = TxTable.commit(spark, silverRoot, Incremental.silverIncrement(b1, Some(stale)), "reading_date")
+    assert(TxTable.commitInfo(spark, silverRoot, v3).get.watermark.isEmpty)
+    assertScanAnswer(b1, TxTable.committed(spark, silverRoot), now)
+
+    // a deleteWhere and a leveled merge record no watermark
+    assert(TxTable.deleteWhere(spark, silverRoot, "reading_date", col("raw_id") === 2L) == 1L)
+    assert(TxTable.commitInfo(spark, silverRoot, v3 + 1) == Some(CommitInfo.empty))
+    val b2 = bronze.add(log(2))
+    assertScanAnswer(b2, TxTable.committed(spark, silverRoot), now)
+    assert(TxTable.compactLeveled(spark, silverRoot, "reading_date", Seq("raw_id")) >= 1)
+    assert(TxTable.commitInfo(spark, silverRoot, TxTable.latest(spark, silverRoot)._1) ==
+      Some(CommitInfo.empty))
+    assertScanAnswer(b2, TxTable.committed(spark, silverRoot), now)
+    val v = silverStep(b2)
+    assert(TxTable.commitInfo(spark, silverRoot, v).get.watermark.nonEmpty,
+      "a scanned watermark of a whole version still stamps the next commit")
+
+    // gold's recorded silver version vacuumed away: the scan picks the days
+    val vs = TxTable.commitInfo(spark, goldRoot, TxTable.latest(spark, goldRoot)._1).get.reads.values.head
+    assert(vs == 2L)
+    TxTable.vacuum(spark, silverRoot, retainMs = 0L)
+    assert(TxTable.commitInfo(spark, silverRoot, vs).isEmpty)
+    assert(Incremental.loggedDays(TxTable.read(spark, silverRoot), TxTable.committed(spark, goldRoot)).isEmpty)
+    goldStep()
+
+    // a leveled merge of gold records no read: the scan picks the days
+    silverStep(bronze.add(Seq("1650300000 Voltage 1.0", "1650300000 Current 2.0")))
+    assert(Incremental.loggedDays(TxTable.read(spark, silverRoot), TxTable.committed(spark, goldRoot))
+      .contains(Seq("2022-04-18")))
+    goldStep()
+    assert(TxTable.compactLeveled(spark, goldRoot, "reading_date", Seq("metric_value")) >= 1)
+    silverStep(bronze.add(Seq("1650300001 Voltage 1.5")))
+    assert(Incremental.loggedDays(TxTable.read(spark, silverRoot), TxTable.committed(spark, goldRoot)).isEmpty)
+    goldStep()
+    assertGoldOf(goldRoot, TxTable.read(spark, silverRoot))
+  }
 }

@@ -54,29 +54,45 @@ class PrefixConsistencySpec extends AnyFunSuite {
     assert(diff.isEmpty, s"$what differs from one-shot silverToGold: ${diff.collect().mkString(", ")}")
   }
 
+  /** Increment k is ingested at hour k + 1 and processed half an hour
+    * later; bronze is append-only with serial ids. */
+  private def at(k: Int, minute: Int) = Timestamp.valueOf(f"2022-04-20 ${k + 1}%02d:$minute%02d:00")
+
+  private lazy val bronze = increments.zipWithIndex
+    .flatMap { case (lines, k) => lines.map(l => (l, at(k, 0))) }
+    .zipWithIndex.map { case ((l, at), i) => (i.toLong + 1, l, at) }
+    .toDF("id", "raw_line", "ingested_at")
+
+  /** The batch increments into `root`/silver and `root`/gold: increment k
+    * merges into `target(k)` (silver's latest version by default) and
+    * commits silver, runs `afterSilver(k)`, then commits gold from the
+    * affected days. Checks both tables against the one-shot run. */
+  private def runBatch(root: String, what: String,
+      target: Int => Option[DataFrame] = _ => None,
+      afterSilver: Int => Unit = _ => ()): Unit = {
+    val (silverRoot, goldRoot) = (s"$root/silver", s"$root/gold")
+    increments.indices.foreach { k =>
+      val soFar = bronze.filter(col("ingested_at") <= lit(at(k, 0)))
+      TxTable.commit(spark, silverRoot, Incremental.silverIncrement(
+        soFar, target(k).orElse(TxTable.committed(spark, silverRoot)), lit(at(k, 30))), "reading_date")
+      afterSilver(k)
+      TxTable.commit(spark, goldRoot, Incremental.goldAffectedDays(TxTable.read(spark, silverRoot),
+        TxTable.committed(spark, goldRoot), lit(at(k, 45))), "reading_date")
+    }
+    val oneShot = SensorPipeline.bronzeToSilver(bronze)
+    assertSame(TxTable.read(spark, silverRoot), oneShot, s"$what silver")
+    assertSameGold(TxTable.read(spark, goldRoot), SensorPipeline.silverToGold(oneShot), s"$what gold")
+  }
+
   test("batch increments == AvailableNow drains == one-shot bronzeToSilver") {
     val root = graft.TestTmp.dir("graft-prefix")
-    // bronze is append-only with serial ids; increment k is ingested at
-    // hour k + 1 and processed half an hour later
-    def at(k: Int, minute: Int) = Timestamp.valueOf(f"2022-04-20 ${k + 1}%02d:$minute%02d:00")
-    val bronze = increments.zipWithIndex.flatMap { case (lines, k) => lines.map(l => (l, at(k, 0))) }.zipWithIndex.map { case ((l, at), i) => (i.toLong + 1, l, at) }
-      .toDF("id", "raw_line", "ingested_at")
     val oneShot = SensorPipeline.bronzeToSilver(bronze).cache()
     assert(oneShot.count() == 14 && oneShot.select("reading_date").distinct().count() == 4)
     val oneShotGold = SensorPipeline.silverToGold(oneShot)
     assert(oneShotGold.count() == 4)
 
     // each increment commits silver, then gold from the affected days
-    val (batchRoot, batchGold) = (s"$root/batch", s"$root/batch_gold")
-    increments.indices.foreach { k =>
-      val soFar = bronze.filter(col("ingested_at") <= lit(at(k, 0)))
-      TxTable.commit(spark, batchRoot, Incremental.silverIncrement(
-        soFar, TxTable.committed(spark, batchRoot), lit(at(k, 30))), "reading_date")
-      TxTable.commit(spark, batchGold, Incremental.goldAffectedDays(TxTable.read(spark, batchRoot),
-        TxTable.committed(spark, batchGold), lit(at(k, 45))), "reading_date")
-    }
-    assertSame(TxTable.read(spark, batchRoot), oneShot, "batch silver")
-    assertSameGold(TxTable.read(spark, batchGold), oneShotGold, "batch gold")
+    runBatch(s"$root/batch", "batch")
 
     val bronzeDir = s"$root/bronze"
     new java.io.File(bronzeDir).mkdirs()
@@ -88,5 +104,28 @@ class PrefixConsistencySpec extends AnyFunSuite {
     assertSame(TxTable.read(spark, s"$root/stream"), oneShot, "streaming silver")
     assertSameGold(TxTable.read(spark, s"$root/stream_gold"), oneShotGold, "streaming gold")
     oneShot.unpersist()
+  }
+
+  test("batch increments with silver vacuumed before each gold step == one-shot") {
+    // retainMs = 0 drops the silver version gold's last commit read, so
+    // from the second increment gold's days come from the watermark scan
+    val root = graft.TestTmp.dir("graft-prefix-vacuum")
+    runBatch(root, "vacuumed batch", afterSilver = k => {
+      TxTable.vacuum(spark, s"$root/silver", retainMs = 0L)
+      if (k > 0) {
+        val read = TxTable.commitInfo(spark, s"$root/gold", TxTable.latest(spark, s"$root/gold")._1)
+          .get.reads.values.head
+        assert(TxTable.commitInfo(spark, s"$root/silver", read).isEmpty,
+          s"silver version $read, which gold read, is vacuumed")
+      }
+    })
+  }
+
+  test("batch increments with one driven by a checkpointed silver frame == one-shot") {
+    // a checkpointed copy reads no TxTable version: that increment scans
+    // for its watermark and records none, so the next one scans too
+    val root = graft.TestTmp.dir("graft-prefix-cached")
+    runBatch(root, "checkpoint-driven batch",
+      target = k => if (k == 1) Some(TxTable.read(spark, s"$root/silver").localCheckpoint()) else None)
   }
 }
