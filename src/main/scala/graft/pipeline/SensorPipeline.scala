@@ -157,8 +157,9 @@ object Merge {
     target.join(deduped.select(keys.map(col): _*), keys, "left_anti").unionByName(deduped)
   }
 
-  /** The one affected-partition merge of batch silver and the streaming
-    * sinks: [[merge]] `updates` into only the `target` partitions they
+  /** The affected-partition merge of the streaming sessions sink
+    * (silver's is `Incremental.silverMerge`, which also takes the append
+    * path): [[merge]] `updates` into only the `target` partitions they
     * touch. Returns those `partitionCol` values and the partitions' FULL
     * new content for `TxTable.commit` (or `stage` + `publish`) to restage;
     * None when `updates` is empty, the updates alone with no target.
@@ -180,10 +181,29 @@ object Merge {
     * sets merged on the driver).
     */
   private[pipeline] def partitionValues(df: DataFrame, column: String): Seq[Any] =
+    partitionValuesAndKeys(df, column, None)._1
+
+  /** [[partitionValues]], and in the same job the smallest and largest
+    * non-null value of the long column `key` when one is named (None when
+    * it has none). */
+  private[pipeline] def partitionValuesAndKeys(df: DataFrame, column: String,
+      key: Option[String]): (Seq[Any], Option[(Long, Long)]) =
     CallSites(df.sparkSession, "Merge.partitionValues") {
-      df.select(column).rdd
-        .mapPartitions(rows => Iterator(rows.map(_.get(0)).toSet))
-        .fold(Set.empty[Any])(_ ++ _).toSeq
+      val (values, lo, hi) = df.select((column +: key.toSeq).map(col): _*).rdd
+        .mapPartitions { rows =>
+          var (vs, lo, hi) = (Set.empty[Any], Long.MaxValue, Long.MinValue)
+          rows.foreach { row =>
+            vs += row.get(0)
+            if (row.length > 1 && !row.isNullAt(1)) {
+              lo = math.min(lo, row.getLong(1)); hi = math.max(hi, row.getLong(1))
+            }
+          }
+          Iterator((vs, lo, hi))
+        }
+        .fold((Set.empty[Any], Long.MaxValue, Long.MinValue)) { case ((v1, l1, h1), (v2, l2, h2)) =>
+          (v1 ++ v2, math.min(l1, l2), math.max(h1, h2))
+        }
+      (values.toSeq, if (lo <= hi) Some((lo, hi)) else None)
     }
 }
 
@@ -209,6 +229,12 @@ object Merge {
   *     whose processed_at is no [[AuditStamp]] (a caller's column that is
   *     not foldable, or a foldable one below the watermark), or a publish
   *     onto another version than the one the frame read (a stale target);
+  *   - the largest committed `raw_id`, which decides whether the silver
+  *     merge is an append ([[silverMerge]]), is the `#maxkey` of that
+  *     version. One `max(raw_id)` scan runs when it has none (folded into
+  *     the watermark scan when that runs too); a target that is no whole
+  *     version takes the anti-join merge with no scan. Every merge frame
+  *     is vouched with the new largest key, so the next commit records it;
   *   - gold's days are the silver manifest keys whose dir list differs
   *     between Vs, the silver version gold's commit recorded (its
   *     `#read`), and Vcur, the version the silver frame reads — no job.
@@ -220,7 +246,13 @@ object Merge {
   *     from the scan in one way: a silver commit that restages a day
   *     without newer processed_at (a [[TxTable.deleteWhere]] of part of
   *     it) changes the day's dirs, so the diff recomputes that day, which
-  *     the scan misses.
+  *     the scan misses. The gold frame is vouched to cover those days, so
+  *     its commit drops the row of a day whose recompute is empty.
+  *
+  * In the steady state of hourly increments `silverIncrement` runs one
+  * job (the day-set job, which also finds the smallest fresh key), its
+  * commit writes only the fresh rows, as one new run per day, and
+  * `goldAffectedDays` runs none.
   */
 object Incremental {
   import SensorPipeline._
@@ -260,14 +292,27 @@ object Incremental {
       processedAt: Column = current_timestamp()): DataFrame = {
     val spark = bronze.sparkSession
     val snap = silverTarget.flatMap(TxTable.snapshotOf)
-    val wm = snap.flatMap { case (root, v) => TxTable.commitInfo(spark, root, v).flatMap(_.watermark) }
-      .map(DateTimeUtils.toJavaTimestamp)
+    val logged = snap.flatMap { case (root, v) => TxTable.commitInfo(spark, root, v) }
+      .getOrElse(CommitInfo.empty)
+    // a whole version whose commit recorded no watermark: the scan finds
+    // the largest key too
+    val scanned = silverTarget.filter(_ => snap.nonEmpty && logged.watermark.isEmpty).map(maxima)
+    val wm = logged.watermark.map(DateTimeUtils.toJavaTimestamp)
+      .orElse(scanned.map(_._1))
       .getOrElse(watermark(silverTarget, "processed_at"))
     val stamp = resolveStamp(spark, processedAt, DateTimeUtils.fromJavaTimestamp(wm),
       if (silverTarget.isEmpty) Some(None) else snap.map(Some(_)))
     val fresh = bronzeToSilver(bronze.filter(col("ingested_at") > lit(wm)), stamp) // F3
-    silverMerge(silverTarget, fresh).fold(fresh)(_._2)
+    mergeFresh(silverTarget, fresh, scanned.map(_._2), None).fold(fresh)(_._2)
   }
+
+  /** (max(processed_at) or epoch, max(raw_id) or Long.MinValue) of
+    * `target`: one scan for the watermark and the largest key. */
+  private def maxima(target: DataFrame): (Timestamp, Long) =
+    CallSites(target.sparkSession, "Incremental.watermark") {
+      val r = target.agg(max(col("processed_at")), max(col("raw_id"))).head()
+      (Option(r.getTimestamp(0)).getOrElse(epoch0), if (r.isNullAt(1)) Long.MinValue else r.getLong(1))
+    }
 
   /** `processedAt` as one driver value (see [[silverIncrement]]): an
     * [[AuditStamp]] over `base` (Some(None): over no table) when it is at
@@ -300,37 +345,88 @@ object Incremental {
   }
 
   /** The silver merge of the batch increment and the streaming silver
-    * sinks: [[Merge.intoPartitions]] of `fresh` silver rows into the
-    * `reading_date` days they touch, keyed on `raw_id`, latest
-    * `processed_at` (then `reading_time`) winning. Sound because raw_id
-    * fixes a row's day: the reference's bronze is append-only with
-    * serial ids, as the streaming tiers assume.
+    * sinks: the merge of `fresh` silver rows into the `reading_date` days
+    * they touch, keyed on `raw_id`, latest `processed_at` (then
+    * `reading_time`) winning, as [[Merge.intoPartitions]] does. Returns
+    * those days and their FULL new content; None when `fresh` has no row.
+    * Sound because raw_id fixes a row's day: the reference's bronze is
+    * append-only with serial ids, as the streaming tiers assume.
+    *
+    * Serial ids make the merge an append: when every fresh raw_id is
+    * above the target's largest one, no committed row is replaced, and
+    * the content is `target.filter(reading_date IN days) ∪
+    * dedupeLatest(fresh)`, with no anti-join. With a whole TxTable
+    * version as target the frame is vouched as a [[TxTable.Extension]]
+    * of it, so its commit writes only the fresh rows ([[TxTable.stage]]).
+    * The smallest fresh key comes from the day-set job; the largest
+    * committed one from the version's `#maxkey`, else from one
+    * `max(raw_id)` scan. The frame is vouched with the table's new
+    * largest key, so the commit records it.
+    * A replayed or colliding key, or a target that is no whole version,
+    * takes the anti-join merge.
+    *
+    * A caller that knows bounds on the fresh raw_ids by construction
+    * passes them as `keyRange` (the streaming sinks: each micro-batch's
+    * ids lie in its batch's id block). The bounds stand in for the
+    * smallest and largest fresh key, so the day-set job reads no raw_id:
+    * one that derives from a window (the sinks' replay-stable ids) would
+    * cost it a shuffle.
     */
-  def silverMerge(silverTarget: Option[DataFrame],
-      fresh: DataFrame): Option[(Seq[Any], DataFrame)] =
-    Merge.intoPartitions(silverTarget, fresh, "reading_date", Seq("raw_id"),
-      Seq(col("processed_at").desc, col("reading_time").desc))
+  def silverMerge(silverTarget: Option[DataFrame], fresh: DataFrame,
+      keyRange: Option[(Long, Long)] = None): Option[(Seq[Any], DataFrame)] =
+    mergeFresh(silverTarget, fresh, None, keyRange)
+
+  /** [[silverMerge]], with the target's largest key when a scan already
+    * found it. */
+  private def mergeFresh(silverTarget: Option[DataFrame], fresh: DataFrame,
+      scannedMax: Option[Long], keyRange: Option[(Long, Long)]): Option[(Seq[Any], DataFrame)] = {
+    val (days, found) = Merge.partitionValuesAndKeys(fresh, "reading_date",
+      if (keyRange.isEmpty) Some("raw_id") else None)
+    val keys = keyRange.orElse(found)
+    if (days.isEmpty) None
+    else Some(days -> (silverTarget match {
+      case None => TxTable.vouch(fresh, maxKey = keys.map(_._2))
+      case Some(target) =>
+        val order = Seq(col("processed_at").desc, col("reading_time").desc)
+        val slice = target.filter(col("reading_date").isin(days: _*))
+        val committed = TxTable.snapshotOf(target).map { case (root, v) =>
+          scannedMax.orElse(TxTable.commitInfo(fresh.sparkSession, root, v).flatMap(_.maxKey))
+            .getOrElse(maxima(target)._2)
+        }
+        val maxKey = committed.map(c => keys.fold(c)(k => math.max(c, k._2)))
+        committed match {
+          case Some(c) if keys.forall(_._1 > c) =>
+            val added = Merge.dedupeLatest(fresh, Seq("raw_id"), order)
+            TxTable.vouch(slice.unionByName(added), maxKey = maxKey,
+              extension = Some(TxTable.Extension(target, days, added)))
+          case _ => TxTable.vouch(Merge.merge(slice, fresh, Seq("raw_id"), order), maxKey = maxKey)
+        }
+    }))
+  }
 
   /** The recomputed affected-day Gold rows only — the FULL new content
     * of every day that received new silver since gold's last commit.
     * This is the gold merge: `TxTable.commit(..., "reading_date")`
     * publishes it as one atomic partition override, which is exactly the
-    * dbt merge on gold's unique_key = reading_date. The days come from
-    * the log's diff of silver manifests (see the object doc), else from
-    * [[Merge.partitionValues]] over the silver rows newer than gold's
-    * watermark; either way the recompute scans only their silver
-    * partitions.
+    * dbt merge on gold's unique_key = reading_date. The frame is vouched
+    * to cover every affected day, so the commit also drops the gold row
+    * of a day whose recompute yields none (the both-metrics guard). The
+    * days come from the log's diff of silver manifests (see the object
+    * doc), else from [[Merge.partitionValues]] over the silver rows newer
+    * than gold's watermark; either way the recompute scans only their
+    * silver partitions.
     */
   def goldAffectedDays(
       silver: DataFrame,
       goldTarget: Option[DataFrame],
       calculatedAt: Column = current_timestamp()): DataFrame = {
     val dayType = silver.schema("reading_date").dataType
-    val days = loggedDays(silver, goldTarget).map(_.map(d => lit(d).cast(dayType))).getOrElse {
+    val days: Seq[Any] = loggedDays(silver, goldTarget).getOrElse {
       val wm = watermark(goldTarget, "calculated_at")
-      Merge.partitionValues(silver.filter(col("processed_at") > lit(wm)), "reading_date").map(lit)
+      Merge.partitionValues(silver.filter(col("processed_at") > lit(wm)), "reading_date")
     }
-    silverToGold(silver.filter(col("reading_date").isin(days: _*)), calculatedAt)
+    TxTable.vouch(silverToGold(silver.filter(col("reading_date").isin(days.map(d => lit(d).cast(dayType)): _*)),
+      calculatedAt), covers = days)
   }
 
   /** Gold's affected days from the log: the silver manifest keys changed

@@ -20,19 +20,26 @@ import org.apache.spark.unsafe.types.UTF8String
   * Spark job at all.
   *
   * Refresh cost model: a refresh diffs the latest (silver, gold)
-  * manifests against the two the snapshot was built from. A day is a
-  * manifest key. A day whose dir list changed in either table, or that
-  * is new, is reloaded (both tables' rows of it); a day gone from both
-  * manifests is dropped; every other day is kept ([[TxTable.changedKeys]],
-  * the diff gold's affected days come from too). Only the reloaded
-  * days' dirs are read, once, in one job, so a refresh reads O(changed
-  * days) rows. The reloaded rows
-  * are sorted and validated on the driver, and each kept day's run is
-  * copied from the pinned arrays (a day is one contiguous run in
-  * (date, time, name) order). The first load is the same diff against
-  * an empty snapshot. A change of the session time zone counts every
-  * day as changed, because the ISO strings and the date check below
-  * depend on it.
+  * manifests against the two the snapshot was built from, table by
+  * table. A day is a manifest key ([[TxTable.changedKeys]], the diff
+  * gold's affected days come from too). Per table and day:
+  *   - an unchanged entry keeps its pinned rows;
+  *   - a grown entry (a blind append, or a silver increment committed as
+  *     an extension, [[TxTable.grownBy]]) keeps its pinned rows and
+  *     reads only the dirs it gained;
+  *   - a restaged or new entry reads its dirs and drops its pinned rows;
+  *     a gone one drops them.
+  * Every pinned row carries a bit saying whether it is gold's, so one
+  * table's rows of a day can go while the other's stay. All the reads
+  * happen once, in one job, so a refresh reads O(changed rows): after
+  * an extension, the appended silver rows and the recomputed gold rows.
+  * The read rows are sorted and validated on the driver; a changed
+  * day's run is the merge of its kept pinned rows and its read rows, and
+  * every other day's run is copied from the pinned arrays (a day is one
+  * contiguous run in (date, time, name) order). The first load is the
+  * same diff against an empty snapshot. A change of the session time
+  * zone counts every entry as restaged, because the ISO strings and the
+  * date check below depend on it.
   *
   * Bounded by contract: `maxRows` caps the pinned rows (the serve
   * store is day-grain gold plus a bounded silver window in any real
@@ -83,37 +90,54 @@ final class ServeCache private (
     val zone = spark.conf.get("spark.sql.session.timeZone", java.util.TimeZone.getDefault.getID)
     if (vs == prev.vSilver && vg == prev.vGold && zone == prev.zone) return prev
     val days = (silver.keySet ++ gold.keySet).toArray.sorted
-    val changed =
-      if (zone != prev.zone) days.toSet
-      else TxTable.changedKeys(prev.silver, silver) ++ TxTable.changedKeys(prev.gold, gold)
-    val kept = days.filterNot(changed)
-      .map(d => d -> (lowerBound(prev.dates, d), upperBound(prev.dates, d))).toMap
-    val keptRows = kept.values.map { case (lo, hi) => hi - lo }.sum
-    val rows = reload(silver.filter(e => changed(e._1)), gold.filter(e => changed(e._1)),
-      keptRows, zone)
+    val (silverRead, silverGone) = changes(prev.silver, silver, zone != prev.zone)
+    val (goldRead, goldGone) = changes(prev.gold, gold, zone != prev.zone)
+    val changed = silverRead.keySet ++ silverGone ++ goldRead.keySet ++ goldGone
+    // the old rows of day d the new snapshot keeps: its run, less the
+    // rows of a table whose old rows of d are gone
+    def run(d: String) = (lowerBound(prev.dates, d), upperBound(prev.dates, d))
+    def kept(d: String, i: Int) = !(if (prev.fromGold(i)) goldGone(d) else silverGone(d))
+    val keptRows = days.iterator.map { d =>
+      val (lo, hi) = run(d)
+      if (!changed(d)) hi - lo else (lo until hi).count(kept(d, _))
+    }.sum
+    val rows = reload(silverRead, goldRead, keptRows, zone)
     val n = keptRows + rows.length
     val next = Snapshot(vs, vg, silver, gold, zone,
-      new Array(n), new Array(n), new Array(n), new Array(n), new Array(n))
+      new Array(n), new Array(n), new Array(n), new Array(n), new Array(n), new Array(n))
     var at = 0
     var j = 0
+    def take(r: Row): Unit = {
+      next.dates(at) = r.getString(0); next.us(at) = r.getLong(1); next.iso(at) = r.getString(2)
+      next.name(at) = r.getString(3); next.value(at) = r.getDouble(4); next.fromGold(at) = r.getBoolean(5)
+      at += 1; j += 1
+    }
+    def copy(lo: Int, hi: Int): Unit = {
+      def arrays(from: AnyRef, to: AnyRef): Unit = System.arraycopy(from, lo, to, at, hi - lo)
+      arrays(prev.dates, next.dates); arrays(prev.us, next.us); arrays(prev.iso, next.iso)
+      arrays(prev.name, next.name); arrays(prev.value, next.value); arrays(prev.fromGold, next.fromGold)
+      at += hi - lo
+    }
     days.foreach { d =>
-      kept.get(d) match {
-        case Some((lo, hi)) =>
-          def copy(from: AnyRef, to: AnyRef): Unit = System.arraycopy(from, lo, to, at, hi - lo)
-          copy(prev.dates, next.dates); copy(prev.us, next.us); copy(prev.iso, next.iso)
-          copy(prev.name, next.name); copy(prev.value, next.value)
-          at += hi - lo
-        case None =>
-          while (j < rows.length && rows(j).getString(0) == d) {
-            val r = rows(j)
-            next.dates(at) = d; next.us(at) = r.getLong(1); next.iso(at) = r.getString(2)
-            next.name(at) = r.getString(3); next.value(at) = r.getDouble(4)
-            at += 1; j += 1
-          }
+      val (lo, hi) = run(d)
+      if (!changed(d)) copy(lo, hi)
+      else {
+        // merge the day's kept old rows and its reloaded rows, both sorted
+        def fresh = j < rows.length && rows(j).getString(0) == d
+        var i = lo
+        while (i < hi || fresh) {
+          if (i < hi && !kept(d, i)) i += 1
+          else if (i < hi && (!fresh ||
+              compareTimeName(prev.us(i), prev.name(i), rows(j).getLong(1), rows(j).getString(3)) <= 0)) {
+            next.dates(at) = d; next.us(at) = prev.us(i); next.iso(at) = prev.iso(i)
+            next.name(at) = prev.name(i); next.value(at) = prev.value(i); next.fromGold(at) = prev.fromGold(i)
+            at += 1; i += 1
+          } else take(rows(j))
+        }
       }
     }
-    // rows are sorted by date and each changed day takes its whole run,
-    // so a row is left over only when its date is no manifest key
+    // rows are sorted by date and each changed day takes its rows, so a
+    // row is left over only when its date is no manifest key
     require(j == rows.length,
       s"serve store row dated '${rows(j).getString(0)}' is no manifest key of a changed day " +
         "— the day runs would be misplaced; fix the store producer")
@@ -128,19 +152,36 @@ final class ServeCache private (
     next
   }
 
-  /** The serve-shaped rows of the changed days' entries, collected in
-    * one job, checked against the bound (with the `keptRows`), validated
-    * and sorted in (date, time, name) order. */
+  /** What a refresh reads of one table and which days' old rows of it go,
+    * from its manifest `before` and `after`: a grown entry (appended or
+    * extended) reads only the dirs it gained and keeps the old rows; a
+    * restaged, new or gone entry reads its new dirs, if any, and drops
+    * the old rows. `all` (a zone change) treats every key as restaged. */
+  private def changes(before: Map[String, String], after: Map[String, String],
+      all: Boolean): (Map[String, String], Set[String]) = {
+    val keys = if (all) before.keySet ++ after.keySet else TxTable.changedKeys(before, after)
+    val grown = if (all) Map.empty[String, Seq[String]]
+      else keys.flatMap(k => before.get(k).zip(after.get(k)).flatMap { case (b, a) => TxTable.grownBy(b, a) }
+        .map(k -> _)).toMap
+    val read = keys.flatMap(k => grown.get(k).map(ds => k -> ds.mkString("\t")).orElse(after.get(k).map(k -> _)))
+    (read.toMap, keys -- grown.keySet)
+  }
+
+  /** The serve-shaped rows of the changed entries, collected in one job,
+    * checked against the bound (with the `keptRows`), validated and
+    * sorted in (date, time, name) order; each row says whether it is
+    * gold's. */
   private def reload(silver: Map[String, String], gold: Map[String, String],
       keptRows: Int, zone: String): Array[Row] = {
-    def slice(df: DataFrame) = df.select(
+    def slice(df: DataFrame, isGold: Boolean) = df.select(
       col("reading_date").cast("string").as("d"),
       unix_micros(col("reading_time")).as("us"),
       date_format(col("reading_time"), SensorPipeline.ResponseTimeFormat).as("iso"),
       col("metric_name").cast("string").as("n"),
-      col("metric_value").cast("double").as("v"))
-    val slices = Seq(silverRoot -> silver, goldRoot -> gold)
-      .flatMap { case (root, e) => TxTable.readEntries(spark, root, e) }.map(slice)
+      col("metric_value").cast("double").as("v"),
+      lit(isGold).as("g"))
+    val slices = Seq((silverRoot, silver, false), (goldRoot, gold, true))
+      .flatMap { case (root, e, g) => TxTable.readEntries(spark, root, e).map(slice(_, g)) }
     if (slices.isEmpty) return Array.empty
     val union = slices.reduce(_.unionByName(_))
     // one job, each task cut at the budget + 1 rows: a store above the
@@ -230,12 +271,12 @@ object ServeCache {
       vSilver: Long, vGold: Long,
       silver: Map[String, String], gold: Map[String, String], zone: String,
       dates: Array[String], us: Array[Long], iso: Array[String],
-      name: Array[String], value: Array[Double])
+      name: Array[String], value: Array[Double], fromGold: Array[Boolean])
 
   /** What the first load diffs against: no version (-1 is never a
     * committed one), no day, no zone. */
   private val Empty = Snapshot(-1L, -1L, Map.empty, Map.empty, "",
-    Array.empty, Array.empty, Array.empty, Array.empty, Array.empty)
+    Array.empty, Array.empty, Array.empty, Array.empty, Array.empty, Array.empty)
 
   /** (date, event-time micros, name) with names in Spark's binary UTF-8
     * order, nulls first, as `orderBy` sorts them. Java's
@@ -244,15 +285,15 @@ object ServeCache {
   private val responseOrder: java.util.Comparator[Row] = (a, b) => {
     val byDate = a.getString(0).compareTo(b.getString(0))
     if (byDate != 0) byDate
-    else {
-      val byTime = java.lang.Long.compare(a.getLong(1), b.getLong(1))
-      if (byTime != 0) byTime
-      else {
-        val (x, y) = (a.getString(3), b.getString(3))
-        if (x == null || y == null) java.lang.Boolean.compare(x != null, y != null)
-        else UTF8String.fromString(x).binaryCompare(UTF8String.fromString(y))
-      }
-    }
+    else compareTimeName(a.getLong(1), a.getString(3), b.getLong(1), b.getString(3))
+  }
+
+  /** (event-time micros, name) order within one date, as [[responseOrder]]. */
+  private def compareTimeName(us1: Long, n1: String, us2: Long, n2: String): Int = {
+    val byTime = java.lang.Long.compare(us1, us2)
+    if (byTime != 0) byTime
+    else if (n1 == null || n2 == null) java.lang.Boolean.compare(n1 != null, n2 != null)
+    else UTF8String.fromString(n1).binaryCompare(UTF8String.fromString(n2))
   }
 
   /** First index with dates(i) >= key (the classic lower bound). */

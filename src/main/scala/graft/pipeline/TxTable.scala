@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Literal
 
 /** Crash-safe multi-partition commits without a table-format jar — the
   * transactional twin of the reference's Postgres MERGE atomicity
@@ -61,15 +62,39 @@ import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
   *     very version the publish builds on, and the frame reads this table
   *     at that version only (or, for a new table, not at all). A rebased
   *     append drops it.
+  *   - `#maxkey <n>`: the table's largest merge key after the commit.
+  *     Written only for a frame whose builder vouched for it ([[vouch]];
+  *     `Incremental.silverMerge` does, with the largest `raw_id`), on the
+  *     same reads rule as the watermark; a rebased append drops it.
   * [[deleteWhere]] and [[compactLeveled]] write no `#` line, so their
   * manifests, like every manifest with no info, have the bytes they had
   * before `#` lines existed. A
   * manifest without `#` lines (every manifest written before this
-  * format) parses as before, with empty info ([[commitInfo]]). The
-  * change is one-way: a `#` line holds no tab (fields are space-separated,
-  * the root last; a root with a control character is never recorded), so
-  * a reader that predates it fails on such a manifest with "malformed
-  * manifest line".
+  * format) parses as before, with empty info ([[commitInfo]]); unknown
+  * `#` lines are skipped, so a reader that knows only `#read` and
+  * `#watermark` reads a manifest with `#maxkey`. The change is one-way:
+  * a `#` line holds no tab (fields are space-separated, the root last; a
+  * root with a control character is never recorded), so a reader that
+  * predates `#` lines fails on such a manifest with "malformed manifest
+  * line".
+  *
+  * Extensions (the commit of an increment that only adds rows). A frame
+  * whose builder vouched that it is a whole read's rows of some
+  * partitions plus added rows ([[Extension]]; `Incremental.silverMerge`
+  * does when every fresh key is above the table's largest) and that
+  * [[stage]] stages on the version that read is at, is written as the
+  * added rows only, and `_txinfo` records which keys extend that version
+  * (`#extends <version> <key>`); the publish grows those keys' entries by
+  * the staged dir, as [[appendPublish]] does, and fails loudly onto any
+  * other version. A key whose entry holds [[MaxRuns]] (8) dirs, or
+  * whose turn it is (one version in 8, picked by a hash of the key;
+  * [[restages]]), is restaged from the read's rows instead, so no read
+  * opens more than 8 dirs of one partition and partitions that grow
+  * together restage on different commits.
+  * A frame vouched to cover partitions ([[vouch]]; `goldAffectedDays`
+  * covers its affected days) records them as `#covers <key>`; a rewriting
+  * publish drops a covered partition the frame has no row for. Neither
+  * line reaches the manifest.
   */
 object TxTable {
 
@@ -172,7 +197,8 @@ object TxTable {
     }.toMap
     if (entries.isEmpty)
       throw new java.io.IOException(s"manifest $p is empty or truncated")
-    Manifest(entries, CommitInfo(readsOf(info, p), infoField(info, "#watermark").map(_.toLong)))
+    Manifest(entries, CommitInfo(readsOf(info, p), infoField(info, "#watermark").map(_.toLong),
+      infoField(info, "#maxkey").map(_.toLong)))
   }
 
   /** The `#read` lines of a manifest or a staged `_txinfo` file. */
@@ -202,6 +228,14 @@ object TxTable {
     * (changed, new or gone): the days a later version restaged. */
   def changedKeys(before: Map[String, String], after: Map[String, String]): Set[String] =
     (before.keySet ++ after.keySet).filter(k => before.get(k) != after.get(k))
+
+  /** The dirs entry `after` adds to entry `before` when its dir list
+    * starts with `before`'s (appends and extensions only ever grow an
+    * entry); None when the partition was restaged. */
+  def grownBy(before: String, after: String): Option[Seq[String]] = {
+    val (b, a) = (dirsOf(before), dirsOf(after))
+    if (a.startsWith(b)) Some(a.drop(b.size)) else None
+  }
 
   /** [[changedKeys]] between committed versions `from` and `to` of
     * `root`; None when either is not (or no longer) in the log. */
@@ -277,6 +311,44 @@ object TxTable {
     val tag = (qualified(fs(spark, root), root), v)
     val df = readManifest(spark, root, liveDirs(entries), Some(tag))
     snapshots.put(df.queryExecution.logical, tag)
+    df
+  }
+
+  /** An increment that only adds rows to a table: the frame vouched for
+    * is the `target` rows of partitions `parts` ∪ `added`, where `target`
+    * is a whole read of the table at one version ([[snapshotOf]]) and
+    * `added` holds rows of those partitions only. */
+  private[pipeline] final case class Extension(target: DataFrame, parts: Seq[Any], added: DataFrame)
+
+  /** What the builder of a frame vouches for beyond its rows ([[vouch]]):
+    * the partitions the frame covers, for a frame that reads this table
+    * at one version the table's largest merge key once the frame is
+    * committed onto that version, and whether the frame is an
+    * [[Extension]]. */
+  private final case class Vouched(covers: Seq[Any], maxKey: Option[Long], extension: Option[Extension])
+
+  /** Vouched frames by their logical plan, looked up by [[stage]] the way
+    * [[snapshotOf]] looks up a whole read. */
+  private val vouched = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Vouched]())
+
+  /** Register `df` with what its builder knows and the rows cannot show:
+    *   - `covers`: partition values whose full new content `df` is, even
+    *     where it has no row. A rewriting commit of exactly this frame
+    *     drops a covered partition that it stages no row for (a gold day
+    *     whose recompute yields nothing);
+    *   - `maxKey`: the largest merge key of the table once `df` is
+    *     committed onto the one version of it that `df` reads (or, for a
+    *     frame reading no version of it, onto a new table). The publish
+    *     records it as `#maxkey`, like the watermark;
+    *   - `extension`: `df` is that [[Extension]]. [[stage]] on the version
+    *     its target reads writes only the added rows and the publish
+    *     grows the parts' entries.
+    * Returns `df`. A frame derived from it is not vouched for.
+    */
+  private[pipeline] def vouch(df: DataFrame, covers: Seq[Any] = Nil,
+      maxKey: Option[Long] = None, extension: Option[Extension] = None): DataFrame = {
+    vouched.put(df.queryExecution.logical, Vouched(covers, maxKey, extension))
     df
   }
 
@@ -402,49 +474,127 @@ object TxTable {
     * them. Every writer that can create a table stages through here, so
     * every such writer gets the guard.
     *
-    * When `data` reads a TxTable version or carries an [[AuditStamp]],
-    * the staged dir also gets an `_txinfo` file for the publish (see the
-    * header).
+    * A frame vouched to be an [[Extension]] of the version it stages on
+    * is staged as one ([[extensionOf]]): only its added rows are
+    * written, and the publish adds their dir to the entries of its
+    * partitions instead of restaging them.
+    *
+    * When `data` reads a TxTable version, carries an [[AuditStamp]], is
+    * an extension or is vouched for ([[vouch]]), the staged dir also gets
+    * an `_txinfo` file for the publish (see the header).
     */
   def stage(spark: SparkSession, root: String, data: DataFrame, partitionCol: String): String =
     stageOn(spark, fs(spark, root), root, data, partitionCol)._1
 
-  /** [[stage]], also returning the version it staged on (one listing of
-    * the log) and the info it wrote to the staged dir's [[InfoFile]]. */
+  /** [[stage]], also returning the version it staged on and that
+    * version's manifest (one listing of the log, one parse; an empty
+    * manifest for a new table) and the info it wrote to the staged dir's
+    * [[InfoFile]]. */
   private def stageOn(spark: SparkSession, f: FileSystem, root: String, data: DataFrame,
-      partitionCol: String): (String, Long, StagedInfo) = {
+      partitionCol: String): (String, Long, Manifest, StagedInfo) = {
     val base = versions(f, root).lastOption.getOrElse(0L)
     if (base == 0) requireNotFlatTable(spark, root, partitionCol)
-    val dir = writeRun(root, data, partitionCol, base + 1, "")
-    val info = stagedInfo(qualified(f, root), data)
+    val m = manifestIfCommitted(f, root, base)
+    val q = qualified(f, root)
+    val vouch = Option(vouched.get(data.queryExecution.logical))
+    val ext = for {
+      e <- vouch.flatMap(_.extension) if snapshotOf(e.target).contains((q, base))
+      cur <- m
+      x <- extensionOf(base, cur, e, data, partitionCol)
+    } yield x
+    val dir = writeRun(root, ext.fold(data)(_._1), partitionCol, base + 1, "")
+    val info = stagedInfo(q, data, vouch).copy(extend = ext.map(base -> _._2))
     if (info.nonEmpty) {
       val out = f.create(new Path(s"$root/$dir/$InfoFile"), false)
       try out.write(info.lines.mkString("\n").getBytes("UTF-8")) finally out.close()
     }
-    (dir, base, info)
+    (dir, base, m.getOrElse(NoManifest), info)
+  }
+
+  /** Most runs (dirs) an extension leaves in one partition entry, so a
+    * read opens at most this many dirs per partition. On `ingest_hourly`
+    * (4 vCPU) Spark-path reads cost about the same at up to 8 runs per
+    * day as at one, and clearly more from about 11 (CHANGES.md). */
+  private val MaxRuns = 8
+
+  /** Whether an extension onto version `base` restages partition `key`,
+    * whose entry holds `runs` dirs, from the target's rows instead of
+    * growing it: at [[MaxRuns]] dirs, and on the key's turn, the one
+    * version in [[MaxRuns]] that a hash of the key picks. A partition
+    * that grows on every commit thus restages every [[MaxRuns]] commits,
+    * and partitions that grow together restage on different commits, an
+    * even share on each, not all on one. */
+  private def restages(key: String, runs: Int, base: Long): Boolean =
+    runs >= MaxRuns || Math.floorMod(key.hashCode + base, MaxRuns.toLong) == 0
+
+  /** The frame `stage` writes for [[Extension]] `e` of version `base`
+    * (manifest `m`) vouched as `data`, and the keys it extends: the added
+    * rows, plus the target rows of every partition that [[restages]]
+    * (whole). None when a part is null (no literal names its key). */
+  private def extensionOf(base: Long, m: Manifest, e: Extension, data: DataFrame,
+      partitionCol: String): Option[(DataFrame, Set[String])] =
+    if (e.parts.contains(null)) None
+    else {
+      import org.apache.spark.sql.functions.col
+      val keyed = e.parts.map(p => keyOf(data.sparkSession, Literal.create(p)) -> p)
+      val (restage, extend) = keyed.partition { case (k, _) =>
+        m.entries.get(k).exists(entry => restages(k, dirsOf(entry).size, base))
+      }
+      val rows =
+        if (restage.isEmpty) e.added
+        else e.target.filter(col(partitionCol).isin(restage.map(_._2): _*)).unionByName(e.added)
+      // the vouched frame's columns, types and order
+      Some(rows.select(data.schema.fields.toSeq.map(c => col(c.name).cast(c.dataType).as(c.name)): _*) ->
+        extend.map(_._1).toSet)
+    }
+
+  /** The manifest key of the non-null partition value `v`: the string
+    * the partitioned writer names its dir by, escaped as the writer does. */
+  private def keyOf(spark: SparkSession, v: Literal): String = {
+    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName
+    import org.apache.spark.sql.catalyst.expressions.Cast
+    val zone = spark.conf.get("spark.sql.session.timeZone", java.util.TimeZone.getDefault.getID)
+    escapePathName(Cast(v, org.apache.spark.sql.types.StringType, Some(zone)).eval().toString)
   }
 
   /** A staged dir ready to publish: its name, its partitions as manifest
     * entries (`listStaged`) and its info. */
-  private final case class Staged(dir: String, parts: Map[String, String], info: StagedInfo)
+  private final case class Staged(dir: String, parts: Map[String, String], info: StagedInfo) {
+    /** The partitions of `base` a rewriting publish drops: covered, not staged. */
+    def drops(base: Map[String, String]): Set[String] = info.covers.filter(base.contains) -- parts.keySet
+  }
 
-  /** The staged dir's copy of its commit info: `#read` and `#stamp` lines. */
+  /** The staged dir's copy of its commit info: `#read`, `#stamp`,
+    * `#maxkey`, `#extends` and `#covers` lines. */
   private val InfoFile = "_txinfo"
 
-  /** What a staged frame read, and the [[AuditStamp]] it carries as
-    * (micros, the version of this table the stamp dominates, 0 for a new
-    * table) when the publish may record it as the watermark. */
-  private final case class StagedInfo(reads: Map[String, Long], stamp: Option[(Long, Long)]) {
-    def nonEmpty: Boolean = reads.nonEmpty || stamp.nonEmpty
-    def lines: Seq[String] = infoLines(reads) ++ stamp.map { case (us, v) => s"#stamp $us $v" }
+  /** What a staged frame read; the [[AuditStamp]] it carries as (micros,
+    * the version of this table the stamp dominates, 0 for a new table)
+    * when the publish may record it as the watermark; its vouched largest
+    * key as (key, the version it holds on); the version it extends and
+    * the keys it extends ([[extensionOf]]); and the keys it covers
+    * ([[vouch]]). */
+  private final case class StagedInfo(reads: Map[String, Long], stamp: Option[(Long, Long)],
+      maxKey: Option[(Long, Long)] = None, extend: Option[(Long, Set[String])] = None,
+      covers: Set[String] = Set.empty) {
+    def nonEmpty: Boolean = lines.nonEmpty
+    def lines: Seq[String] = infoLines(reads) ++
+      stamp.map { case (us, v) => s"#stamp $us $v" } ++
+      maxKey.map { case (k, v) => s"#maxkey $k $v" } ++
+      extend.toSeq.flatMap { case (v, ks) => ks.toSeq.sorted.map(k => s"#extends $v $k") } ++
+      covers.toSeq.sorted.map(k => s"#covers $k")
+    /** Whether the publish grows `key`'s entry instead of replacing it. */
+    def extendsKey(key: String): Boolean = extend.exists(_._2(key))
     /** The manifest info of a publish that builds on version `v`. */
-    def at(v: Long): CommitInfo = CommitInfo(reads, stamp.collect { case (us, `v`) => us })
+    def at(v: Long): CommitInfo =
+      CommitInfo(reads, stamp.collect { case (us, `v`) => us }, maxKey.collect { case (k, `v`) => k })
   }
 
   /** The stamp qualifies when it is the frame's only one, it dominates
     * this table (`root`) at version v, and the frame reads this table at
-    * exactly v — or, for a stamp over no table, reads it not at all. */
-  private def stagedInfo(root: String, data: DataFrame): StagedInfo = {
+    * exactly v — or, for a stamp over no table, reads it not at all. A
+    * vouched largest key qualifies on the same reads. */
+  private def stagedInfo(root: String, data: DataFrame, vouch: Option[Vouched]): StagedInfo = {
     val read = versionsRead(data)
     val stamps = data.queryExecution.analyzed.collectWithSubqueries {
       case p => p.expressions.flatMap(_.collect { case a: AuditStamp => a })
@@ -454,7 +604,15 @@ object TxTable {
       case Seq(AuditStamp(us, Some((`root`, v)))) if read.get(root).contains(Set(v)) => Some(us -> v)
       case _ => None
     }
-    StagedInfo(sourcesOf(data).filter(_._1.forall(!_.isControl)), stamp)
+    val onVersion = read.get(root) match {
+      case None => Some(0L)
+      case Some(vs) if vs.size == 1 => Some(vs.head)
+      case _ => None
+    }
+    val covers = vouch.fold(Set.empty[String])(_.covers.filter(_ != null).map(c =>
+      keyOf(data.sparkSession, Literal.create(c))).toSet)
+    StagedInfo(sourcesOf(data).filter(_._1.forall(!_.isControl)), stamp,
+      for (vc <- vouch; k <- vc.maxKey; v <- onVersion) yield k -> v, covers = covers)
   }
 
   /** The staged info of `stagedDir` ([[InfoFile]]); empty without one. */
@@ -463,10 +621,19 @@ object TxTable {
     if (!f.exists(p)) StagedInfo(Map.empty, None)
     else {
       val info = readText(f, p).split("\n").toSeq.filter(_.startsWith("#"))
-      StagedInfo(readsOf(info, p), infoField(info, "#stamp").map(l => l.split(" ") match {
-        case Array(us, v) => us.toLong -> v.toLong
-        case _ => throw new java.io.IOException(s"malformed info line in $p: '#stamp $l'")
-      }))
+      def pair(tag: String) = infoField(info, tag).map(l => l.split(" ") match {
+        case Array(a, v) => a.toLong -> v.toLong
+        case _ => throw new java.io.IOException(s"malformed info line in $p: '$tag $l'")
+      })
+      val extend = info.filter(_.startsWith("#extends ")).map { l =>
+        l.split(" ", 3) match {
+          case Array(_, v, key) => v.toLong -> key
+          case _ => throw new java.io.IOException(s"malformed info line in $p: '$l'")
+        }
+      }
+      StagedInfo(readsOf(info, p), pair("#stamp"), pair("#maxkey"),
+        extend.headOption.map { case (v, _) => v -> extend.map(_._2).toSet },
+        info.filter(_.startsWith("#covers ")).map(_.stripPrefix("#covers ")).toSet)
     }
   }
 
@@ -500,16 +667,31 @@ object TxTable {
     */
   def publish(spark: SparkSession, root: String, stagedDir: String, partitionCol: String): Long = {
     val f = fs(spark, root)
-    val changed = listStaged(f, root, stagedDir, partitionCol)
-    require(changed.nonEmpty, s"staged dir $stagedDir has no $partitionCol= partitions")
     val (v, base) = latestManifest(f, root)
-    publishOn(f, root, v, base, Staged(stagedDir, changed, readStagedInfo(f, root, stagedDir)))
+    val s = Staged(stagedDir, listStaged(f, root, stagedDir, partitionCol), readStagedInfo(f, root, stagedDir))
+    require(s.parts.nonEmpty || s.drops(base.entries).nonEmpty,
+      s"staged dir $stagedDir has no $partitionCol= partitions")
+    publishOn(f, root, v, base, s)
   }
 
-  /** [[publish]] onto version `v`, whose manifest is `base`. */
-  private def publishOn(f: FileSystem, root: String, v: Long, base: Manifest, s: Staged): Long =
-    publishManifest(f, root, v, base.entries ++ s.parts, s.info.at(v), 1,
+  /** [[publish]] onto version `v`, whose manifest is `base`: the staged
+    * partitions replace their entries, except that an extension's keys
+    * grow theirs (as an append does), and covered partitions with no
+    * staged row are dropped. An extension of another version than `v`
+    * fails loudly: its slice was read there. */
+  private def publishOn(f: FileSystem, root: String, v: Long, base: Manifest, s: Staged): Long = {
+    s.info.extend.foreach { case (b, _) =>
+      if (b != v) throw new java.io.IOException(
+        s"staged dir ${s.dir} extends version $b of $root, but version $v is the latest; " +
+          s"an extension publishes onto the version its slice read only — restage from version $v")
+    }
+    val (grown, replaced) = s.parts.partition { case (k, _) => s.info.extendsKey(k) }
+    val entries = grow(base.entries -- s.drops(base.entries) ++ replaced, grown)
+    require(entries.nonEmpty, s"publishing ${s.dir} would drop every partition of $root — " +
+      "an empty table has no manifest representation; drop the table root explicitly instead")
+    publishManifest(f, root, v, entries, s.info.at(v), 1,
       s"publish is single-writer by contract; staged data remains at $root/${s.dir}")(identity)
+  }
 
   /** Test-only injection point: fires immediately before every manifest
     * CAS attempt of every writer — deterministic lost-CAS coverage
@@ -524,7 +706,8 @@ object TxTable {
     * would be silently clobbered). On a lost CAS with `attempts` left,
     * re-read the latest manifest and retry at the version after it with
     * `rebase(its entries)`, keeping the reads and dropping the watermark
-    * (it was proven against the lost base only); otherwise throw, naming
+    * and the largest key (both were proven against the lost base only);
+    * otherwise throw, naming
     * the root, the version and `onFailure` (the writer's contract and
     * recovery hint). Returns the committed version.
     */
@@ -538,7 +721,7 @@ object TxTable {
       s"a concurrent writer committed version ${v + 1} at $root first; $onFailure")
     else {
       val (fresh, m) = latestManifest(f, root)
-      publishManifest(f, root, fresh, rebase(m.entries), info.copy(watermark = None),
+      publishManifest(f, root, fresh, rebase(m.entries), info.copy(watermark = None, maxKey = None),
         attempts - 1, onFailure)(rebase)
     }
   }
@@ -548,36 +731,30 @@ object TxTable {
     * the unchanged latest one when `data` is empty (`stageNonEmpty`).
     */
   def commit(spark: SparkSession, root: String, data: DataFrame, partitionCol: String): Long =
-    stageNonEmpty(spark, root, data, partitionCol)(publishOn)
+    stageNonEmpty(spark, root, data, partitionCol, drops = true)(publishOn)
 
   /** The one empty-stage rule of [[commit]] and [[appendCommit]]: stage
-    * `data`, then publish only when at least one partition landed — ONE
+    * `data`, then publish only when at least one partition landed (or,
+    * for a rewriting commit, `drops`, a covered partition goes) — ONE
     * write job instead of the count-then-write pair an emptiness
     * pre-check costs (the count re-evaluates the whole input). An empty
     * staging (a bare dir with write metadata, no partition subdirs) is
-    * deleted at once as debris and the latest version is returned
-    * unchanged; no manifest is written.
+    * deleted at once as debris; with nothing to publish the latest
+    * version is returned unchanged and no manifest is written.
     *
     * One commit lists the log once, lists the staged dir once and parses
     * the manifest it staged on once, handing all three to the publish;
-    * only a lost CAS re-reads the log. When that manifest is gone by the
-    * publish (a concurrent commit and vacuum), the publish builds on the
-    * latest one instead.
+    * only a lost CAS re-reads the log.
     */
   private def stageNonEmpty(spark: SparkSession, root: String, data: DataFrame,
-      partitionCol: String)(publishStaged: (FileSystem, String, Long, Manifest, Staged) => Long): Long = {
+      partitionCol: String, drops: Boolean)(
+      publishStaged: (FileSystem, String, Long, Manifest, Staged) => Long): Long = {
     val f = fs(spark, root)
-    val (stagedDir, v, info) = stageOn(spark, f, root, data, partitionCol)
-    val changed = listStaged(f, root, stagedDir, partitionCol)
-    if (changed.isEmpty) {
-      f.delete(new Path(s"$root/$stagedDir"), true)
-      v
-    } else {
-      val (at, base) =
-        if (v == 0) (v, NoManifest)
-        else manifestIfCommitted(f, root, v).fold(latestManifest(f, root))(v -> _)
-      publishStaged(f, root, at, base, Staged(stagedDir, changed, info))
-    }
+    val (stagedDir, v, base, info) = stageOn(spark, f, root, data, partitionCol)
+    val s = Staged(stagedDir, listStaged(f, root, stagedDir, partitionCol), info)
+    if (s.parts.isEmpty) f.delete(new Path(s"$root/$stagedDir"), true)
+    if (s.parts.isEmpty && (!drops || s.drops(base.entries).isEmpty)) v
+    else publishStaged(f, root, v, base, s)
   }
 
   /** Row-level delete — the takedown/right-to-erasure path: remove every
@@ -683,7 +860,7 @@ object TxTable {
         manifestName(next) + s".${java.util.UUID.randomUUID().toString.take(8)}.tmp")
       val out = f.create(tmp, true)
       val lines = infoLines(info.reads) ++ info.watermark.map(w => s"#watermark $w") ++
-        entries.toSeq.sorted.map { case (k, dir) => s"$k\t$dir" }
+        info.maxKey.map(k => s"#maxkey $k") ++ entries.toSeq.sorted.map { case (k, dir) => s"$k\t$dir" }
       try out.write(lines.mkString("\n").getBytes("UTF-8"))
       finally out.close()
       try {
@@ -748,20 +925,21 @@ object TxTable {
   /** [[appendPublish]] onto version `v`, whose manifest is `base`. */
   private def appendOn(f: FileSystem, root: String, v: Long, base: Manifest, s: Staged): Long = {
     val attempts = 10
-    def grow(cur: Map[String, String]) = cur ++ s.parts.map { case (k, dir) =>
-      k -> cur.get(k).fold(dir)(_ + "\t" + dir)
-    }
-    publishManifest(f, root, v, grow(base.entries), s.info.at(v), attempts,
+    publishManifest(f, root, v, grow(base.entries, s.parts), s.info.at(v), attempts,
       s"append lost all $attempts attempts — the log is too contended; " +
-        s"staged data remains at $root/${s.dir}")(grow)
+        s"staged data remains at $root/${s.dir}")(grow(_, s.parts))
   }
+
+  /** `cur` with each of `parts`' dirs added to its key's dir list. */
+  private def grow(cur: Map[String, String], parts: Map[String, String]): Map[String, String] =
+    cur ++ parts.map { case (k, dir) => k -> cur.get(k).fold(dir)(_ + "\t" + dir) }
 
   /** Stage + blind-append in one call: the O(increment) ingest commit.
     * Same empty-stage rule as [[commit]]: an empty `data` publishes
     * nothing and returns the unchanged latest version. */
   def appendCommit(spark: SparkSession, root: String, data: DataFrame,
       partitionCol: String): Long =
-    stageNonEmpty(spark, root, data, partitionCol)(appendOn)
+    stageNonEmpty(spark, root, data, partitionCol, drops = false)(appendOn)
 
   /** Incremental read: the rows ADDED between `sinceVersion` (exclusive)
     * and `toVersion` (inclusive) — the cheap "new data since version V"
@@ -799,14 +977,13 @@ object TxTable {
       if (sinceVersion == 0L) Map.empty
       else manifestAt(f, root, sinceVersion, " — re-baseline from a full snapshot")
     val added = newEntries.toSeq.flatMap { case (k, entry) =>
-      val newDirs = dirsOf(entry)
-      val oldDirs = oldEntries.get(k).map(dirsOf).getOrElse(Seq.empty)
-      require(newDirs.take(oldDirs.size) == oldDirs,
+      val grown = oldEntries.get(k).fold(Option(dirsOf(entry)))(grownBy(_, entry))
+      require(grown.isDefined,
         s"partition '$k' was REWRITTEN between versions $sinceVersion and " +
-          s"$toVersion (dirs ${oldDirs.mkString(",")} -> ${newDirs.mkString(",")}) " +
+          s"$toVersion (dirs ${dirsOf(oldEntries(k)).mkString(",")} -> ${dirsOf(entry).mkString(",")}) " +
           "— a dir-level delta would double-count its rows; re-baseline from " +
           s"readAt($toVersion)")
-      newDirs.drop(oldDirs.size)
+      grown.get
     }
     val dropped = (oldEntries.keySet -- newEntries.keySet).toSeq.sorted
     require(dropped.isEmpty,
@@ -1081,10 +1258,12 @@ object TxTable {
 }
 
 /** What the log records about one commit besides its entries: the TxTable
-  * versions its staged frame read (qualified root -> version), and the
-  * table's watermark (`max(processed_at)`, epoch micros) when the commit
-  * provably set it. Empty for a manifest without `#` lines. */
-final case class CommitInfo(reads: Map[String, Long], watermark: Option[Long])
+  * versions its staged frame read (qualified root -> version), the
+  * table's watermark (`max(processed_at)`, epoch micros) and its largest
+  * merge key, each when the commit provably set it. Empty for a manifest
+  * without `#` lines. */
+final case class CommitInfo(reads: Map[String, Long], watermark: Option[Long],
+    maxKey: Option[Long] = None)
 
 object CommitInfo {
   val empty: CommitInfo = CommitInfo(Map.empty, None)

@@ -77,8 +77,10 @@ object StreamingPipeline {
     * `TxTable.read`): the merged days are staged invisibly and published
     * by one manifest rename, so a batch killed before the publish leaves
     * the previous version live and its replay from the checkpoint
-    * converges to the same rows. [[Merge.intoPartitions]] reads and
-    * restages only the batch's days: O(days it touches), not O(table); a
+    * converges to the same rows. [[Incremental.silverMerge]] touches only
+    * the batch's days: a batch whose ids are all above silver's largest
+    * one (each batch's id base is above the last) writes only its rows,
+    * as one new run per day, and a replayed batch restages its days; a
     * batch without a valid reading runs its day-set job alone.
     */
   def mergeBatchToSilver(
@@ -137,8 +139,10 @@ object StreamingPipeline {
         // two tiers keep identical semantics (duplicate identical readings
         // stay distinct rows, exactly like distinct reference raw_ids);
         // batch replays are idempotent because the ids above are
-        // replay-stable. No valid reading: nothing to commit.
-        Incremental.silverMerge(TxTable.committed(spark, silverPath), fresh)
+        // replay-stable. The batch's ids lie in its id block, so the merge
+        // needs no job to bound them. No valid reading: nothing to commit.
+        val block = (batchId << 40, (batchId << 40) | ((1L << 40) - 1))
+        Incremental.silverMerge(TxTable.committed(spark, silverPath), fresh, Some(block))
           .foreach { case (_, merged) =>
             commitAndVacuum(spark, silverPath, merged, "reading_date")
             // gold increment inside the SAME batch (reference: staging >>
@@ -285,8 +289,7 @@ object StreamingPipeline {
     * durable sessions [[TxTable]] partitioned by `session_date` =
     * date(session_start) — session identity (user_id, session_start)
     * dedups foreachBatch's at-least-once replays, the raw_id pattern;
-    * [[Merge.intoPartitions]], the silver sinks' body, reads and restages
-    * only the batch's days — then (2) recomputes the per-day session
+    * [[Merge.intoPartitions]] reads and restages only the batch's days — then (2) recomputes the per-day session
     * summary for exactly those days and publishes them through
     * [[graft.pipeline.TxTable]] atomically. Same affected-partition
     * shape as the Power gold, driven by streaming state output instead

@@ -240,13 +240,80 @@ class GoldenE2ESpec extends AnyFunSuite {
       "the delete wrote no newer processed_at: the watermark scan finds no day")
     assert(Incremental.loggedDays(silver, Some(gold)).contains(Seq("2022-04-15")))
     goldStep(lit(Timestamp.valueOf("2022-04-14 20:00:00")))
+    val got = assertGoldIsOneShot(silverRoot, goldRoot)
+    assert(math.abs(got("2022-04-15") - 2.2 * 10.0) < 1e-9, "2022-04-15 recomputed without raw_id 3")
+  }
+
+  /** Gold's (day -> Power) equals one-shot silverToGold over silver,
+    * within a relative 1e-12; returns gold's. */
+  private def assertGoldIsOneShot(silverRoot: String, goldRoot: String): Map[String, Double] = {
     val got = TxTable.read(spark, goldRoot).select(col("reading_date").cast("string"), col("metric_value"))
       .as[(String, Double)].collect().toMap
     val want = SensorPipeline.silverToGold(TxTable.read(spark, silverRoot))
       .select(col("reading_date").cast("string"), col("metric_value")).as[(String, Double)].collect().toMap
     assert(got.keySet == want.keySet && got.forall { case (d, v) => math.abs(v - want(d)) <= math.abs(want(d)) * 1e-12 },
       s"gold $got differs from one-shot silverToGold $want")
-    assert(math.abs(got("2022-04-15") - 2.2 * 10.0) < 1e-9, "2022-04-15 recomputed without raw_id 3")
+    got
+  }
+
+  /** Silver and gold of [[threeDays]] committed at t0 under `root`;
+    * returns the two table roots. */
+  private def threeDayTables(root: String): (String, String) = {
+    val (silverRoot, goldRoot) = (s"$root/silver", s"$root/gold")
+    TxTable.commit(spark, silverRoot,
+      Incremental.silverIncrement(bronzeOf(threeDays, "2022-04-14 13:30:00"), None, t0), "reading_date")
+    TxTable.commit(spark, goldRoot,
+      Incremental.goldAffectedDays(TxTable.read(spark, silverRoot), None, t0), "reading_date")
+    (silverRoot, goldRoot)
+  }
+
+  private def goldStep(silverRoot: String, goldRoot: String): Long = TxTable.commit(spark, goldRoot,
+    Incremental.goldAffectedDays(TxTable.read(spark, silverRoot), TxTable.committed(spark, goldRoot), t1),
+    "reading_date")
+
+  test("gold drops a day whose recompute yields no row: raw_id 3, the only Voltage of a day, re-sent as Current") {
+    val (silverRoot, goldRoot) = threeDayTables(graft.TestTmp.dir("graft-golden-gold-drop"))
+    TxTable.commit(spark, silverRoot, Incremental.silverIncrement(
+      bronzeOf(threeDays, "2022-04-14 13:30:00").unionByName(lateBronze(3L -> "1650028217 Current 2.5")),
+      Some(TxTable.read(spark, silverRoot)), t1), "reading_date")
+    goldStep(silverRoot, goldRoot)
+    assert(assertGoldIsOneShot(silverRoot, goldRoot).keySet == Set("2022-04-14", "2022-04-16"))
+    assert(!TxTable.latest(spark, goldRoot)._2.contains("2022-04-15"), "the day's partition is gone")
+  }
+
+  test("gold drops a day whose silver day a deleteWhere removed whole") {
+    val (silverRoot, goldRoot) = threeDayTables(graft.TestTmp.dir("graft-golden-day-delete"))
+    assert(TxTable.deleteWhere(spark, silverRoot, "reading_date",
+      col("reading_date") === lit("2022-04-16").cast("date")) == 2L)
+    assert(!TxTable.latest(spark, silverRoot)._2.contains("2022-04-16"))
+    goldStep(silverRoot, goldRoot)
+    assert(assertGoldIsOneShot(silverRoot, goldRoot).keySet == Set("2022-04-14", "2022-04-15"))
+  }
+
+  test("append path: silverIncrement runs one job; its commit reads no silver row and writes only the fresh rows") {
+    val (silverRoot, _) = threeDayTables(graft.TestTmp.dir("graft-golden-append"))
+    // three readings with ids above every committed one: two on 2022-04-15, one on a new day
+    val fresh = lateBronze(7L -> "1650028218 Voltage 2.2", 8L -> "1650028219 Current 9.0",
+      9L -> "1650200000 Voltage 4.0")
+    val b2 = bronzeOf(threeDays, "2022-04-14 13:30:00").unionByName(fresh)
+    val before = TxTable.latest(spark, silverRoot)._2
+    val (incr, jobs, records) = graft.JobCount.withRecords(spark)(
+      Incremental.silverIncrement(b2, Some(TxTable.read(spark, silverRoot)), t1))
+    assert(jobs == 1 && records == 0, s"silverIncrement ran $jobs jobs over $records silver records")
+    val (v, _, commitRecords) = graft.JobCount.withRecords(spark)(
+      TxTable.commit(spark, silverRoot, incr, "reading_date"))
+    assert(commitRecords == 0, s"the commit read $commitRecords silver records")
+    val after = TxTable.latest(spark, silverRoot)._2
+    assert(TxTable.grownBy(before("2022-04-15"), after("2022-04-15")).exists(_.size == 1),
+      s"2022-04-15 grows by one run: ${before("2022-04-15")} -> ${after("2022-04-15")}")
+    assert(Seq("2022-04-14", "2022-04-16").forall(d => after(d) == before(d)))
+    val run = after("2022-04-17").takeWhile(_ != '/')
+    val written = spark.read.parquet(s"$silverRoot/$run").count()
+    assert(written == 3L && written <= 2 * 3, s"the commit wrote $written rows for 3 fresh")
+    assert(TxTable.commitInfo(spark, silverRoot, v).get.maxKey.contains(9L))
+    val oneShot = SensorPipeline.bronzeToSilver(b2).drop("processed_at")
+    val got = TxTable.read(spark, silverRoot).drop("processed_at")
+    assert(got.exceptAll(oneShot).isEmpty && oneShot.exceptAll(got).isEmpty)
   }
 
   test("a raw_id re-sent on another day fails unique_raw_id loudly, never a silent duplicate") {

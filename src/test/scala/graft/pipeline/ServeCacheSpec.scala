@@ -237,6 +237,37 @@ class ServeCacheSpec extends AnyFunSuite {
     assertPinnedParity(cache, sRoot, gRoot)
   }
 
+  test("refresh after an append increment reads only the appended rows and the changed gold rows, in one job") {
+    val base = graft.TestTmp.dir("serve-cache-append")
+    val (sRoot, gRoot) = (s"$base/silver", s"$base/gold")
+    def bronze(rows: (Long, String)*) = {
+      Thread.sleep(2) // ingested after every earlier processed_at
+      val at = new java.sql.Timestamp(System.currentTimeMillis())
+      rows.map { case (id, l) => (id, l, at) }.toDF("id", "raw_line", "ingested_at")
+    }
+    def increment(b: DataFrame): Unit = {
+      TxTable.commit(spark, sRoot, Incremental.silverIncrement(b, TxTable.committed(spark, sRoot)), "reading_date")
+      TxTable.commit(spark, gRoot, Incremental.goldAffectedDays(TxTable.read(spark, sRoot),
+        TxTable.committed(spark, gRoot)), "reading_date")
+    }
+    increment(bronze(1L -> "1649941817 Voltage 1.34", 2L -> "1649941817 Current 12.0",
+      3L -> "1650028217 Voltage 2.0", 4L -> "1650028217 Current 10.0"))
+    val cache = ServeCache.fromTxTables(spark, sRoot, gRoot)
+    val before = TxTable.latest(spark, sRoot)._2
+    // later ids: one on 2022-04-15 earlier in the day than its rows, two on a new day
+    increment(bronze(5L -> "1650000000 Current 11.0", 6L -> "1650200000 Voltage 4.0",
+      7L -> "1650200000 Current 9.0"))
+    assert(TxTable.grownBy(before("2022-04-15"), TxTable.latest(spark, sRoot)._2("2022-04-15")).nonEmpty,
+      "the silver increment extended 2022-04-15")
+    val (swapped, jobs, records) = graft.JobCount.withRecords(spark)(cache.refreshIfStale())
+    // 3 appended silver rows and the gold rows of 2022-04-15 and 2022-04-17
+    assert(swapped && jobs == 1 && records == 3 + 2,
+      s"the refresh ran $jobs jobs over $records records")
+    assertPinnedParity(cache, sRoot, gRoot)
+    assert(cache.range(Some("2022-04-15"), Some("2022-04-15")).toOption.get.map(_._2) ===
+      Seq("Power", "Current", "Current", "Voltage"))
+  }
+
   test("bound on refresh: kept plus reloaded rows above maxRows throw and the old snapshot stays") {
     val (sRoot, gRoot) = mkTables(mkFrames()) // 4 silver + 3 gold rows
     val cache = ServeCache.fromTxTables(spark, sRoot, gRoot, maxRows = 7)

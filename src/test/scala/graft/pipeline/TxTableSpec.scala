@@ -417,6 +417,58 @@ class TxTableSpec extends AnyFunSuite {
     assert(snapshot(root) == Set("plain" -> 3.0))
   }
 
+  /** `added` as a vouched extension of `root`'s latest version over
+    * partitions `days`: the whole read's rows of those days ∪ `added`. */
+  private def extension(root: String, days: String*)(added: org.apache.spark.sql.DataFrame) = {
+    val target = TxTable.read(spark, root)
+    TxTable.vouch(target.filter(col("day").isin(days: _*)).unionByName(added),
+      extension = Some(TxTable.Extension(target, days, added)))
+  }
+
+  test("extensions: only the added rows are written; a day restages on its turn or at 8 runs") {
+    val root = graft.TestTmp.dir("txtable-extend") + "/t"
+    TxTable.commit(spark, root, rows("a" -> 0.0, "b" -> 0.0), "day") // v1
+    var want = Set("a" -> 0.0, "b" -> 0.0)
+    def runs(day: String) = TxTable.latest(spark, root)._2(day).split("\t").length
+    /** Extends `days` by one row each at base version `base`; returns their new dirs. */
+    def step(base: Int, days: String*): Map[String, String] = {
+      val before = TxTable.latest(spark, root)._2
+      val added = rows(days.map(_ -> base.toDouble): _*)
+      assert(TxTable.commit(spark, root, extension(root, days: _*)(added), "day") == base + 1)
+      want ++= days.map(_ -> base.toDouble)
+      assert(snapshot(root) == want, s"rows at version ${base + 1}")
+      val after = TxTable.latest(spark, root)._2
+      days.map(d => d -> TxTable.grownBy(before(d), after(d)).fold(after(d))(_.mkString("\t"))).toMap
+    }
+    // "a"'s turn is base versions 7, 15, ...; "b"'s 6, 14, ... (the key's hash)
+    (1 to 5).foreach { base =>
+      val dirs = step(base, "a")
+      assert(runs("a") == base + 1 && spark.read.parquet(s"$root/${dirs("a")}").count() == 1L,
+        s"base $base grows a by its one added row")
+    }
+    step(6, "a", "b")
+    assert(runs("a") == 7 && runs("b") == 1, "b restages on its turn")
+    assert(spark.read.parquet(s"$root/${TxTable.latest(spark, root)._2("b")}").count() == 2L)
+    step(7, "b")
+    assert(runs("a") == 7 && runs("b") == 2, "a is not touched on its turn")
+    step(8, "a")
+    assert(runs("a") == 8)
+    step(9, "a")
+    assert(runs("a") == 1, "at 8 runs a restages")
+
+    // an extension of a version that is no longer the latest is written whole
+    val stale = extension(root, "a")(rows("a" -> 10.0))
+    step(10, "b")
+    TxTable.commit(spark, root, stale, "day")
+    want += "a" -> 10.0
+    assert(runs("a") == 1 && snapshot(root) == want)
+    // ... and a staged extension publishes onto the version it read only
+    val staged = TxTable.stage(spark, root, extension(root, "b")(rows("b" -> 12.0)), "day")
+    step(12, "a")
+    val e = intercept[java.io.IOException](TxTable.publish(spark, root, staged, "day"))
+    assert(e.getMessage.contains("extends version 12"), e.getMessage)
+  }
+
   test("deleteWhere: rows with a NULL partition value are refused, not silently mis-addressed") {
     val root = graft.TestTmp.dir("txdelnull") + "/t"
     val data = Seq((Some("d1"), 1.0), (None, 2.0)).toDF("day", "value")
@@ -565,7 +617,8 @@ class TxTableSpec extends AnyFunSuite {
     val byIngest = graft.TestTmp.dir("txinfo-column") + "/silver"
     val all = bronze.add(Nil)
     TxTable.commit(spark, byIngest, Incremental.silverIncrement(all, None, col("ingested_at")), "reading_date")
-    assert(TxTable.commitInfo(spark, byIngest, 1) == Some(CommitInfo.empty))
+    assert(TxTable.commitInfo(spark, byIngest, 1) == Some(CommitInfo(Map.empty, None, Some(15L))),
+      "no watermark; the largest raw_id does not depend on processed_at")
     assert(TxTable.read(spark, byIngest).select("processed_at").distinct().as[java.sql.Timestamp]
       .collect().toSet == all.select("ingested_at").distinct().as[java.sql.Timestamp].collect().toSet)
   }

@@ -58,20 +58,28 @@ class PrefixConsistencySpec extends AnyFunSuite {
     * later; bronze is append-only with serial ids. */
   private def at(k: Int, minute: Int) = Timestamp.valueOf(f"2022-04-20 ${k + 1}%02d:$minute%02d:00")
 
-  private lazy val bronze = increments.zipWithIndex
+  /** Bronze of a log of increments: serial ids, increment k ingested at
+    * hour k + 1. */
+  private def bronzeOf(log: Seq[Seq[String]]): DataFrame = log.zipWithIndex
     .flatMap { case (lines, k) => lines.map(l => (l, at(k, 0))) }
     .zipWithIndex.map { case ((l, at), i) => (i.toLong + 1, l, at) }
     .toDF("id", "raw_line", "ingested_at")
 
-  /** The batch increments into `root`/silver and `root`/gold: increment k
-    * merges into `target(k)` (silver's latest version by default) and
-    * commits silver, runs `afterSilver(k)`, then commits gold from the
-    * affected days. Checks both tables against the one-shot run. */
+  private lazy val bronze = bronzeOf(increments)
+
+  /** The batch increments of `log` (`count` of them) into `root`/silver
+    * and `root`/gold: increment k merges into `target(k)` (silver's latest
+    * version by default) and commits silver, runs `afterSilver(k)`, then
+    * commits gold from the affected days. Checks both tables against the
+    * one-shot run over the log's distinct ids (a replayed id is one
+    * reading). */
   private def runBatch(root: String, what: String,
+      log: DataFrame = bronze, count: Int = increments.size,
       target: Int => Option[DataFrame] = _ => None,
       afterSilver: Int => Unit = _ => ()): Unit = {
     val (silverRoot, goldRoot) = (s"$root/silver", s"$root/gold")
-    increments.indices.foreach { k =>
+    val bronze = log
+    (0 until count).foreach { k =>
       val soFar = bronze.filter(col("ingested_at") <= lit(at(k, 0)))
       TxTable.commit(spark, silverRoot, Incremental.silverIncrement(
         soFar, target(k).orElse(TxTable.committed(spark, silverRoot)), lit(at(k, 30))), "reading_date")
@@ -79,7 +87,7 @@ class PrefixConsistencySpec extends AnyFunSuite {
       TxTable.commit(spark, goldRoot, Incremental.goldAffectedDays(TxTable.read(spark, silverRoot),
         TxTable.committed(spark, goldRoot), lit(at(k, 45))), "reading_date")
     }
-    val oneShot = SensorPipeline.bronzeToSilver(bronze)
+    val oneShot = SensorPipeline.bronzeToSilver(bronze.dropDuplicates("id"))
     assertSame(TxTable.read(spark, silverRoot), oneShot, s"$what silver")
     assertSameGold(TxTable.read(spark, goldRoot), SensorPipeline.silverToGold(oneShot), s"$what gold")
   }
@@ -127,5 +135,66 @@ class PrefixConsistencySpec extends AnyFunSuite {
     val root = graft.TestTmp.dir("graft-prefix-cached")
     runBatch(root, "checkpoint-driven batch",
       target = k => if (k == 1) Some(TxTable.read(spark, s"$root/silver").localCheckpoint()) else None)
+  }
+
+  /** The dirs of each silver day at the latest version. */
+  private def runs(silverRoot: String): Map[String, Int] =
+    TxTable.latest(spark, silverRoot)._2.map { case (d, e) => d -> e.split("\t").length }
+
+  test("eleven appended increments: days restage on their own turn or at 8 runs == one-shot") {
+    // each increment adds readings with ids above every committed one, so
+    // each silver commit is an extension: to 2022-04-15 every time, to
+    // 2022-04-14 every time but increment 3, the one whose base version
+    // is that day's turn to restage
+    val log = (0 until 11).map(k => (if (k == 3) Nil else Seq(s"${1649941817 + k} Voltage ${1 + k}.5",
+      s"${1649941817 + k} Current ${10 + k}.0")) ++ Seq(s"${1650028217 + k} Voltage 2.$k",
+      s"${1650028217 + k} Current 9.$k"))
+    val root = graft.TestTmp.dir("graft-prefix-runs")
+    val seen = scala.collection.mutable.ArrayBuffer.empty[(Int, Int)]
+    runBatch(root, "run-bound batch", bronzeOf(log), log.size, afterSilver = _ => {
+      val r = runs(s"$root/silver")
+      seen += r("2022-04-14") -> r("2022-04-15")
+    })
+    // a day's turn is one version in 8 (a hash of its key): 2022-04-15's
+    // comes at base versions 2 and 10, where it restages; 2022-04-14's at
+    // 3, when it is not touched, so it grows to 8 runs and the bound
+    // restages it at base version 9
+    assert(seen.map(_._1).toSeq == Seq(1, 2, 3, 3, 4, 5, 6, 7, 8, 1, 2),
+      s"runs of 2022-04-14 per increment: ${seen.map(_._1)}")
+    assert(seen.map(_._2).toSeq == Seq(1, 2, 1, 2, 3, 4, 5, 6, 7, 8, 1),
+      s"runs of 2022-04-15 per increment: ${seen.map(_._2)}")
+  }
+
+  test("an increment that replays a committed raw_id takes the merge restage == one-shot") {
+    val root = graft.TestTmp.dir("graft-prefix-replay")
+    val silverRoot = s"$root/silver"
+    // increment 2 re-sends bronze id 3 (increment 0's third line) unchanged
+    val replay = bronze.filter(col("id") === 3L).withColumn("ingested_at", lit(at(2, 0)))
+    var before = Map.empty[String, String]
+    runBatch(root, "replay batch", bronze.unionByName(replay), afterSilver = k => {
+      val entries = TxTable.latest(spark, silverRoot)._2
+      if (k == 1) before = entries
+      if (k == 2) {
+        val day = "2022-04-15" // raw_id 3's day
+        assert(TxTable.grownBy(before(day), entries(day)).isEmpty && !entries(day).contains("\t"),
+          s"the replayed id's day is restaged whole: ${before(day)} -> ${entries(day)}")
+      }
+    })
+  }
+
+  test("a silver manifest with no #maxkey line (the parent's format) scans once == one-shot") {
+    val root = graft.TestTmp.dir("graft-prefix-nomaxkey")
+    val silverRoot = s"$root/silver"
+    runBatch(root, "parent-format batch", afterSilver = k => {
+      val v = TxTable.latest(spark, silverRoot)._1
+      if (k == 0) {
+        assert(TxTable.commitInfo(spark, silverRoot, v).get.maxKey.nonEmpty)
+        val m = Paths.get(f"$silverRoot/_txlog/$v%08d.manifest")
+        Files.writeString(m, Files.readAllLines(m).toArray.map(_.toString)
+          .filterNot(_.startsWith("#maxkey")).mkString("\n"))
+        assert(TxTable.commitInfo(spark, silverRoot, v).get.maxKey.isEmpty)
+      } else assert(TxTable.commitInfo(spark, silverRoot, v).get.maxKey.nonEmpty,
+        s"increment $k recorded the largest key again")
+    })
   }
 }
